@@ -12,7 +12,7 @@ Two workloads:
      materialized through the noop sink so Catalyst can't prune the
      measured compute.
 
-Env:  SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
+Env:  SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the usable cores),
       BENCH_SKIP_QUERIES=1 to run only the headline pipeline.
 
 The two-parallelism scaling evidence (local[N] vs local[4N]) lives in
@@ -32,7 +32,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 TMP = os.path.join(REPO, ".bench_tmp")
 # Shuffle scratch + violations sink on tmpfs: executor-local-disk
 # stand-in.  This sandbox has ONE virtio disk shared by all 32 cores;

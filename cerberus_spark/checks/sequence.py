@@ -27,15 +27,19 @@ Scale shape (the only thing that matters at 10^12 turns):
   partition-local sort, then pure row-local predicates.
   :func:`sequence_violations` evaluates every rule in the SAME window
   pass (conditional rule-name array -> explode), so adding rules adds
-  zero exchanges.
+  zero exchanges.  The rules themselves are defined once, in
+  :func:`sequence_rules`, over the columns :func:`sequence_window`
+  adds; the pipeline's violations sink evaluates the same list.
 
 Everything is built-in Columns — no Python in the hot path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from cerberus_spark.rules import CompiledRule
 
 #: separator for (prev, cur) transition encoding; \x1f never appears in
 #: role vocabularies
@@ -175,8 +179,9 @@ def sequence_violations(
     (input row, violated rule) with ``rule`` in {'transition',
     'null_state', 'first_state', 'ts_regression'}.
 
-    lag(state), lag(ts) and row_number come from the same window sort;
-    the per-row rule names are collected into a conditional array and
+    lag(state), lag(ts) and row_number come from the same window sort
+    (:func:`sequence_window`); the per-row rule names
+    (:func:`sequence_rules`) are collected into a conditional array and
     exploded, so a row violating two rules yields two output rows and
     clean rows yield none — still exactly one exchange.
 
@@ -197,10 +202,35 @@ def sequence_violations(
     REQUIREMENT: ``order_by`` must sort ``idx_col`` non-decreasing
     within a conversation (e.g. lead with it), or gaps mis-derive.
     """
+    base = sequence_window(df, conv_col, state_col, ts_col, order_by, idx_col)
+    rules = sequence_rules(state_col, ts_col, allowed, allowed_first, idx_col, start)
+    names = F.filter(
+        F.array(*[F.when(r.violated, F.lit(r.rule)) for r in rules]),
+        lambda x: x.isNotNull(),
+    )
+    out = base.withColumn("rule", F.explode(names))
+    if idx_col is not None:
+        gap = next(r.value_col for r in rules if r.rule == "idx_gap")
+        out = out.withColumn(
+            "gap_size", F.when(F.col("rule") == "idx_gap", gap)
+        ).drop("_prev_idx")
+    return out.drop("_prev_ts", "_rn")
+
+
+def sequence_window(
+    df: DataFrame,
+    conv_col: str,
+    state_col: str,
+    ts_col: str,
+    order_by: list[str],
+    idx_col: str | None = None,
+) -> DataFrame:
+    """``df`` plus the window attributes every sequence rule reads:
+    ``prev_state``, ``_prev_ts``, ``_rn`` (and ``_prev_idx`` with
+    ``idx_col``), all from ONE ``partitionBy(conv).orderBy(order_by)``
+    window — one exchange and one sort.  Materialized as plain columns
+    because generators (explode) cannot embed window functions."""
     w = _w(conv_col, order_by)
-    # materialize the window attributes in one Window pass FIRST:
-    # generator expressions (explode) cannot embed window functions,
-    # and as plain attributes the rules below stay a simple projection
     base = (
         df.withColumn("prev_state", F.lag(state_col).over(w))
         .withColumn("_prev_ts", F.lag(ts_col).over(w))
@@ -208,27 +238,49 @@ def sequence_violations(
     )
     if idx_col is not None:
         base = base.withColumn("_prev_idx", F.lag(idx_col).over(w))
+    return base
+
+
+def sequence_rules(
+    state_col: str,
+    ts_col: str,
+    allowed: set[tuple[str, str]],
+    allowed_first: set[str] | None = None,
+    idx_col: str | None = None,
+    start: int = 0,
+) -> list[CompiledRule]:
+    """The sequence rules as compiled rules over the columns
+    :func:`sequence_window` adds — the single definition every sequence
+    consumer evaluates.  Each carries the field it reports and the
+    value it reports: the state for the grammar rules, the timestamp
+    for ``ts_regression``, the index for the density rules and the gap
+    SIZE for ``idx_gap``.  ``idx_col`` adds the density rules (see
+    :func:`sequence_violations`)."""
     prev_state, prev_ts = F.col("prev_state"), F.col("_prev_ts")
     state = F.col(state_col)
     trans_ok = F.concat_ws(_SEP, prev_state, state).isin(
         [a + _SEP + b for a, b in sorted(allowed)]
     )
-    checks = [
-        F.when(
+    state_value = F.coalesce(state, F.lit(""))
+    rules = [
+        CompiledRule(
+            state_col,
+            "transition",
             prev_state.isNotNull() & state.isNotNull() & ~trans_ok,
-            F.lit("transition"),
+            state_value,
         ),
-        F.when(state.isNull(), F.lit("null_state")),
-        F.when(F.col(ts_col) < prev_ts, F.lit("ts_regression")),
+        CompiledRule(state_col, "null_state", state.isNull(), state_value),
+        CompiledRule(ts_col, "ts_regression", F.col(ts_col) < prev_ts, F.col(ts_col)),
     ]
     if allowed_first is not None:
-        checks.append(
-            F.when(
+        rules.append(
+            CompiledRule(
+                state_col,
+                "first_state",
                 (F.col("_rn") == 1) & ~state.isin(sorted(allowed_first)),
-                F.lit("first_state"),
+                state_value,
             )
         )
-    gap = None
     if idx_col is not None:
         idx, prev_idx = F.col(idx_col).cast("long"), F.col("_prev_idx").cast("long")
         s = F.lit(start).cast("long")
@@ -243,31 +295,30 @@ def sequence_violations(
             .when((idx >= s) & (prev_idx >= s), F.greatest(F.lit(0).cast("long"), idx - prev_idx - 1))
             .otherwise(F.lit(0).cast("long"))
         )
-        checks += [
+        rules += [
             # null-safe: contiguity_report's per-(conv, idx) grouping
             # treats NULL as one index value, so duplicate NULL indexes
             # ARE duplicates here too (idx == prev_idx alone is NULL
             # when idx is NULL and would silently pass them); _rn > 1
             # distinguishes "first row of the conv" from "predecessor
             # had a NULL index"
-            F.when(
-                (F.col("_rn") > 1) & idx.eqNullSafe(prev_idx), F.lit("dup_idx")
+            CompiledRule(
+                idx_col,
+                "dup_idx",
+                (F.col("_rn") > 1) & idx.eqNullSafe(prev_idx),
+                F.col(idx_col),
             ),
             # first row of its index only: contiguity_report counts
             # DISTINCT below-start indexes, not rows (its per-idx dedup)
-            F.when(
+            CompiledRule(
+                idx_col,
+                "below_start",
                 (idx < s) & (prev_idx.isNull() | (idx != prev_idx)),
-                F.lit("below_start"),
+                F.col(idx_col),
             ),
-            F.when(gap > 0, F.lit("idx_gap")),
+            CompiledRule(idx_col, "idx_gap", gap > 0, gap),
         ]
-    rules = F.filter(F.array(*checks), lambda x: x.isNotNull())
-    out = base.withColumn("rule", F.explode(rules))
-    if idx_col is not None:
-        out = out.withColumn(
-            "gap_size", F.when(F.col("rule") == "idx_gap", gap)
-        ).drop("_prev_idx")
-    return out.drop("_prev_ts", "_rn")
+    return rules
 
 
 def reindex_turns(

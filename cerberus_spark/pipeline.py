@@ -3,48 +3,52 @@ transcript table — few, fat Catalyst plans, not many thin ones.
 
 This is the north-rule workload — the batch analog of the reference's
 entire event loop (classify -> enrich -> aggregate -> dedup -> report,
-cmd/cerberus/main.go:153-211 + internal/monitor/monitor.go:197-408),
-re-expressed over one scan-friendly source as FIVE materialized
-outputs:
+cmd/cerberus/main.go:153-211 + internal/monitor/monitor.go:197-408).
+The reference runs each event through that loop once;
+:func:`run_full_validation` reads the table in four independent tasks:
 
-  1. all_violations     — rule violations ∪ uniqueness dups ∪
-                          referential orphans, one normalized sink
-                          (conv_id, turn_idx, field, rule, value)
-  2. rule_summary       — (field, rule) violation counts
-  3. partition_summary  — mapInPandas lineage (monitor.go:514-584 analog)
-  4. drift              — role + text-length KL/PSI vs baseline, one job
-  5. sequence family    — flag-gated (``sequence_checks=True``, ON in
-                          bench.py): role-transition / ordering /
-                          null-state violations into the SAME sink
-                          (one extra conv-keyed window shuffle) plus
-                          the per-conversation ``conversation_health``
-                          gate as a sixth output
-                          (median split computed in-plan, no collect)
+  1. violations sink   — :func:`all_violations`: rule violations ∪
+                         uniqueness dups ∪ referential orphans (∪ the
+                         sequence family with ``sequence_checks``) as
+                         one normalized sink (conv_id, turn_idx, field,
+                         rule, value), from ONE scan and ONE conv-keyed
+                         exchange; the column stats ride its scan as an
+                         ``Observation``
+  2. partition summary — per-partition pass/fail + input files over the
+                         plain ``_passed`` boolean (monitor.go:514-584
+                         analog)
+  3. drift             — role / tool / text-length KL+PSI vs baseline;
+                         the self-baseline splits on the median ts
+                         in-plan and bins everything in one
+                         grouping-sets scan
+  4. rollups           — (field, rule) counts and, with
+                         ``sequence_checks``, the per-conversation
+                         ``conversation_health`` gate, both read back
+                         FROM the sink (one extra per-conv row count)
 
-Job count matters: every Spark action pays driver-side planning +
-scheduling that does NOT parallelize — with 9 separate actions the
-Amdahl term capped measured N->4N scaling efficiency at ~0.55; 5 fat
-actions lifted it past the >=0.8 criterion, and submitting those 5
-from a driver-side thread pool (run_full_validation) overlaps the
-remaining planning with execution — sf0.1 headline wall 4.6s -> ~2.6s
-(~410k turns/s on local[32], best-of-5) at zero plan change.  Per-step scale
-shape: rule eval is scan + codegen (shuffle-free), uniqueness shuffles
-|distinct keys| after map-side partial agg, referential is broadcast
-(map-side only), drift shuffles histogram-sized data.  Nothing
+Measured with ``perfbench/run.py --workload validate_turns --trace 1``
+(149k turns, ``sequence_checks=True``, local[4] on a 4-core VM): 18
+Spark jobs and 5.0 input scans per run (sink 1, partition summary 1,
+drift 2, health 1).  The tasks go to a driver-side thread pool so each
+action's planning and scheduling overlaps the others' execution.
+Shapes: rules are scan + codegen'd predicates, referential is a
+broadcast join (map-side), uniqueness and the sequence rules share the
+one window sort, drift shuffles histogram-sized data, and nothing
 collects more than summary rows to the driver.
 """
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cerberus_spark.checks.drift import categorical_histogram, drift_report, numeric_histogram
-from cerberus_spark.checks.referential import referential_violations
-from cerberus_spark.checks.sequence import conversation_report, sequence_violations
-from cerberus_spark.checks.uniqueness import uniqueness_violations
+from cerberus_spark.checks.referential import referential_flag
+from cerberus_spark.checks.sequence import conversation_report, sequence_rules, sequence_window
+from cerberus_spark.rules import CompiledRule, CompiledRuleSet, compile_schema
 from cerberus_spark.sources.catalog import tool_catalog
 from cerberus_spark.validation import validate
 
@@ -93,39 +97,37 @@ TRANSCRIPT_TRANSITIONS: set[tuple[str, str]] = {
 TRANSCRIPT_FIRST_ROLES: set[str] = {"system", "user"}
 
 
+def _sequence_checks(df: DataFrame) -> tuple[DataFrame, list[CompiledRule]]:
+    """``df`` with the transcript conv window attached, and the sequence
+    rules over it (grammar, ordering, null state and index density)
+    renamed ``seq_<rule>`` for the violations sink."""
+    windowed = sequence_window(df, "conv_id", "role", "ts", TRANSCRIPT_ORDER, "turn_idx")
+    rules = sequence_rules(
+        "role", "ts", TRANSCRIPT_TRANSITIONS, TRANSCRIPT_FIRST_ROLES, "turn_idx"
+    )
+    return windowed, [replace(r, rule=f"seq_{r.rule}") for r in rules]
+
+
+def _violation_rows(df: DataFrame, rules: list[CompiledRule]) -> DataFrame:
+    """One sink row per (row, violated rule): (conv_id, turn_idx, field,
+    rule, value).  Every row pays only the OR'd plain boolean; the
+    struct array is built for the failing rows alone."""
+    checks = CompiledRuleSet(rules)
+    v = F.explode(F.array_compact(F.array(*checks.violation_structs()))).alias("v")
+    return (
+        df.filter(checks.any_violated())
+        .select(*KEY_COLS, v)
+        .select(*KEY_COLS, "v.field", "v.rule", "v.value")
+    )
+
+
 def sequence_violation_rows(df: DataFrame) -> DataFrame:
-    """:func:`cerberus_spark.checks.sequence.sequence_violations` over
-    the transcript grammar — WITH the index-density rules derived from
-    the same window pass (``idx_col``) — normalized to the
-    violations-sink shape (conv_id, turn_idx, field, rule, value) so
-    the whole sequence family lands in the SAME audit sink as
-    rule/uniqueness/referential rows.  One window shuffle keyed by
-    conversation — the only new exchange the flag adds to the headline
-    job (the density terms ride it; no separate contiguity shuffle)."""
-    seq = sequence_violations(
-        df,
-        "conv_id",
-        "role",
-        "ts",
-        TRANSCRIPT_ORDER,
-        TRANSCRIPT_TRANSITIONS,
-        TRANSCRIPT_FIRST_ROLES,
-        idx_col="turn_idx",
-    )
-    is_ts = F.col("rule") == "ts_regression"
-    is_gap = F.col("rule") == "idx_gap"
-    is_idx = F.col("rule").isin("idx_gap", "dup_idx", "below_start")
-    return seq.select(
-        "conv_id",
-        "turn_idx",
-        F.when(is_ts, "ts").when(is_idx, "turn_idx").otherwise("role").alias("field"),
-        F.concat(F.lit("seq_"), F.col("rule")).alias("rule"),
-        F.when(is_gap, F.col("gap_size").cast("string"))
-        .when(is_idx, F.col("turn_idx").cast("string"))
-        .when(is_ts, F.col("ts").cast("string"))
-        .otherwise(F.coalesce(F.col("role"), F.lit("")))
-        .alias("value"),
-    )
+    """The sequence family alone (:func:`sequence_rules` over the
+    transcript grammar, index density included) in the violations-sink
+    shape: the rows :func:`all_violations` adds with
+    ``sequence_checks=True``.  One window shuffle keyed by
+    conversation."""
+    return _violation_rows(*_sequence_checks(df))
 
 
 def conversation_health(df: DataFrame) -> DataFrame:
@@ -211,21 +213,43 @@ def all_violations(
     violations in ONE normalized DataFrame (conv_id, turn_idx, field,
     rule, value) — the single violations sink the audit table ingests.
 
-    ``sequence_checks`` unions in the role-transition / ordering /
-    null-state family (:func:`sequence_violation_rows`) — one extra
-    window shuffle keyed by conversation."""
-    res = validate(df, rules or TRANSCRIPT_RULES, key_cols=KEY_COLS)
-    uniq = uniqueness_violations(df, KEY_COLS).select(
-        *KEY_COLS,
-        F.lit("(conv_id,turn_idx)").alias("field"),
-        F.lit("unique").alias("rule"),
-        F.col("n_dup").cast("string").alias("value"),
-    )
-    ref = referential_violations(df, "tool", tool_catalog(spark), "tool", KEY_COLS)
-    out = res.violations().unionAll(uniq).unionAll(ref)
+    One scan and one hash exchange on the conversation key:
+
+    - referential: a broadcast left join to the distinct tool catalog
+      flags orphans in place (:func:`referential_flag`);
+    - sequence (``sequence_checks``): the conv window of
+      :func:`sequence_violation_rows`;
+    - uniqueness: ``count(1)`` over (conv_id, turn_idx), which reuses
+      the conv window's exchange and sort; the first row of a
+      duplicated key reports it, as the ``groupBy`` of
+      :func:`uniqueness_violations` does (NULL keys group alike);
+    - one filter on the OR of every predicate, then the violation
+      structs of the surviving rows are exploded.
+
+    Rows equal, as a multiset, the union of the standalone checks
+    (pytest-locked on clean and dirty input)."""
+    ruleset = compile_schema(rules or TRANSCRIPT_RULES, df.schema)
+    checked = referential_flag(df, "tool", tool_catalog(spark), "tool", "_orphan")
+    checks = ruleset.rules + [CompiledRule("tool", "referential", F.col("_orphan"))]
     if sequence_checks:
-        out = out.unionAll(sequence_violation_rows(df))
-    return out
+        checked, seq = _sequence_checks(checked)
+        checks += seq
+    key_w = Window.partitionBy(*KEY_COLS).orderBy(
+        *[c for c in TRANSCRIPT_ORDER if c not in KEY_COLS]
+    )
+    whole_key = key_w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    checked = checked.withColumn("_key_n", F.count(F.lit(1)).over(whole_key)).withColumn(
+        "_key_rn", F.row_number().over(key_w)
+    )
+    checks.append(
+        CompiledRule(
+            "(conv_id,turn_idx)",
+            "unique",
+            (F.col("_key_n") > 1) & (F.col("_key_rn") == 1),
+            F.col("_key_n"),
+        )
+    )
+    return _violation_rows(checked, checks)
 
 
 def drift_reports(df: DataFrame, baseline: DataFrame | None = None) -> DataFrame:
@@ -320,15 +344,15 @@ def drift_reports(df: DataFrame, baseline: DataFrame | None = None) -> DataFrame
     )
 
 
-def transcript_stats(df: DataFrame) -> DataFrame:
-    """Per-column stats in ONE aggregation job (north_star: null rate,
-    cardinality sketches, quantiles): null counts + HLL distinct per
-    column, plus text-length percentile sketch — all partial-aggregated
-    map-side, unpivoted with a struct explode (no extra scan per
-    column)."""
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+#: columns profiled by :func:`transcript_stats`
+STATS_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+
+def _stats_aggs() -> list[Column]:
+    """The one aggregate list behind the column stats: row count, null
+    count and HLL distinct per column, text-length quantile sketch."""
     aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in cols:
+    for c in STATS_COLS:
         aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__nulls_{c}"))
         aggs.append(F.approx_count_distinct(c).alias(f"__nd_{c}"))
     aggs.append(
@@ -336,19 +360,43 @@ def transcript_stats(df: DataFrame) -> DataFrame:
             F.length("text"), F.array(F.lit(0.5), F.lit(0.95), F.lit(0.99)), F.lit(2000)
         ).alias("__tl_q")
     )
-    wide = df.agg(*aggs)
+    return aggs
+
+
+def transcript_stats(df: DataFrame) -> DataFrame:
+    """Per-column stats in ONE aggregation job (north_star: null rate,
+    cardinality sketches, quantiles): null counts + HLL distinct per
+    column, plus text-length percentile sketch — all partial-aggregated
+    map-side, unpivoted with a struct explode (no extra scan per
+    column)."""
+    wide = df.agg(*_stats_aggs())
     structs = [
         F.struct(
             F.lit(c).alias("column_name"),
             (F.col(f"__nulls_{c}") / F.col("__rows")).alias("null_rate"),
             F.col(f"__nd_{c}").alias("approx_distinct"),
         )
-        for c in cols
+        for c in STATS_COLS
     ]
     return wide.select(
         F.explode(F.array(*structs)).alias("p"),
         F.col("__tl_q").alias("text_len_q50_q95_q99"),
     ).select("p.*", "text_len_q50_q95_q99")
+
+
+def _stats_rows(wide: dict[str, Any]) -> list[Row]:
+    """:func:`transcript_stats`'s rows from its aggregates, as an
+    ``Observation`` returns them."""
+    n = wide["__rows"]
+    return [
+        Row(
+            column_name=c,
+            null_rate=wide[f"__nulls_{c}"] / n if n else None,
+            approx_distinct=wide[f"__nd_{c}"],
+            text_len_q50_q95_q99=wide["__tl_q"],
+        )
+        for c in STATS_COLS
+    ]
 
 
 def full_validation(
@@ -393,32 +441,38 @@ def run_full_validation(
     sink_dir: str | None = None,
     rules: dict | None = None,
     sequence_checks: bool = False,
-) -> None:
-    """Materialize every check (the benched unit of work): 5 actions,
-    submitted from a small driver-side thread pool.
+) -> list[Row]:
+    """Materialize every check (the benched unit of work), submitted
+    from a small driver-side thread pool, and return the column stats:
+    the rows of :func:`transcript_stats`.
 
-    The actions are independent (the sink->summary chain stays ordered
-    inside its task), so overlapping them hides the serialized
-    driver-side planning/scheduling each one pays — the Amdahl term
-    that capped measured N->4N scaling; concurrent actions from threads
-    are a supported Spark pattern (one scheduler, shared executors) and
-    the plans are unchanged.  The self-drift histogram collect also
-    moves into its task, so its driver-side KL math overlaps the other
-    jobs instead of serializing before them.
+    The tasks are the violations sink, the partition summary, drift
+    and, with ``sink_dir``, the rollups of the sink.  They are
+    independent (the sink->rollup chain stays ordered), so overlapping
+    them hides the driver-side planning and scheduling each action
+    pays; concurrent actions from threads are a supported Spark pattern
+    (one scheduler, shared executors).  The self-drift histogram
+    collect runs inside its task, so its driver-side KL math overlaps
+    the other jobs too.
+
+    The column stats have no job of their own: their aggregates are one
+    ``Observation`` on the scan of the violations sink's write.
 
     With ``sink_dir`` the violations land in a real parquet sink and
-    the (field, rule) summary is derived FROM the sink — the production
-    shape (audit table then rollup), which also avoids re-running the
-    whole rule cascade just to count it.  Without it, every output goes
-    to the noop sink and the summary recomputes from source.
+    the (field, rule) summary and the conversation health gate derive
+    FROM the sink — the production shape (audit table then rollup), so
+    the rule cascade and the sequence window each run once.  Without
+    it, every output goes to the noop sink and the rollups recompute
+    from source.
     """
+    import threading
     from concurrent.futures import ThreadPoolExecutor
 
-    violations = all_violations(spark, df, rules, sequence_checks=sequence_checks)
+    stats = Observation()
+    violations = all_violations(
+        spark, df.observe(stats, *_stats_aggs()), rules, sequence_checks=sequence_checks
+    )
     annotated = validate(df, rules or TRANSCRIPT_RULES, key_cols=KEY_COLS)
-
-    import threading
-
     sink_written = threading.Event()
 
     def violations_task() -> None:
@@ -439,11 +493,8 @@ def run_full_validation(
             )
 
     def rollups_task() -> None:
-        # summary + health derive FROM the sink (audit table -> rollup,
-        # the production shape): the rule cascade and the sequence
-        # window pass each ran exactly once, into the sink.  Gated on
-        # the write, in their own thread so they share only the WAIT
-        # with the violations task, not its thread.
+        # gated on the write, in its own thread so it shares only the
+        # WAIT with the violations task, not its thread
         sink_written.wait()
         sunk = spark.read.parquet(f"{sink_dir}/violations")
         materialize(
@@ -457,7 +508,6 @@ def run_full_validation(
     tasks = [
         violations_task,
         lambda: materialize(annotated.partition_summary()),
-        lambda: materialize(transcript_stats(df)),
         lambda: materialize(drift_reports(df, baseline)),
     ]
     if sink_dir:
@@ -469,3 +519,4 @@ def run_full_validation(
         futures = [pool.submit(t) for t in tasks]
         for f in futures:
             f.result()  # propagate the first failure
+    return _stats_rows(stats.get)

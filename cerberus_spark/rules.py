@@ -5,9 +5,11 @@ cascades (reference: internal/monitor/monitor.go:80-188 — allowed port
 sets, bitmask tests, value equality, enum dispatch, prefix matching,
 byte-range predicates).  We generalize those shapes into a declarative,
 Cerberus-style rule vocabulary and compile each rule ONCE on the driver
-into a Spark ``Column`` predicate; a single ``select`` then evaluates
-every rule for every row columnarly inside whole-stage codegen — no
-per-row Python, no shuffle.
+into a Spark ``Column`` predicate, evaluated columnarly for every row —
+no per-row Python, no shuffle.  ``CompiledRuleSet.any_violated`` ORs
+the predicates into one plain boolean that stays inside whole-stage
+codegen; the per-rule violation structs are built only for the rows it
+flags.
 
 Rule vocabulary (per field):
     type:         logical type name; checked against the DataFrame
@@ -73,6 +75,8 @@ from __future__ import annotations
 import math
 import re
 from dataclasses import dataclass, field as dc_field
+from functools import reduce
+from operator import or_
 from typing import Any, Callable
 
 import pandas as pd
@@ -152,10 +156,6 @@ VCHECKS: dict[str, Callable[[pd.Series], pd.Series]] = {
 }
 
 
-def register_vcheck(name: str, fn: Callable[[pd.Series], pd.Series]) -> None:
-    VCHECKS[name] = fn
-
-
 # ---------------------------------------------------------------------------
 # compiled form
 # ---------------------------------------------------------------------------
@@ -189,6 +189,15 @@ class CompiledRuleSet:
                 )
             )
         return out
+
+    def any_violated(self) -> Column:
+        """Plain boolean: the row violates at least one rule.  A NULL
+        predicate counts as not violated, as in
+        :meth:`violation_structs`.  Cheap to evaluate on every row, so
+        callers filter on it before building the struct array."""
+        if not self.rules:
+            return F.lit(False)
+        return F.coalesce(reduce(or_, (r.violated for r in self.rules)), F.lit(False))
 
 
 def _null_gate(col: Column, pred: Column) -> Column:
@@ -810,17 +819,4 @@ def python_validate(
                                         seen.append(f"items.{sub}.{rname}")
                 for rule in seen:
                     out.append((path, rule, v))
-    return out
-
-
-def python_validate_frame(
-    rows: list[dict[str, Any]], schema: dict[str, dict[str, Any]]
-) -> list[dict[str, Any]]:
-    """Validate many rows; returns normalized violation dicts (without keys)."""
-    out = []
-    for row in rows:
-        for fname, rule, value in python_validate(row, schema):
-            rec = dict(row)
-            rec["_field"], rec["_rule"], rec["_value"] = fname, rule, value
-            out.append(rec)
     return out

@@ -20,13 +20,15 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession tuned for ``local[parallelism]``.
+    """Build (or fetch) a SparkSession tuned for ``local[parallelism]``;
+    ``parallelism`` defaults to ``$SPARK_GRAFT_CPUS``, else the cores
+    this process may run on.
 
     On a real cluster the same configs apply; only ``master`` changes
     (spark-submit supplies it, so we honor an externally-set master).
     """
     if parallelism is None:
-        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         # ~2x cores: enough tasks to keep all threads busy through
         # stragglers without tiny-partition overhead at bench scale.

@@ -3,19 +3,23 @@ one columnar pass and expose violations / summaries / lineage.
 
 The reference funnels every event through a serialized rule cascade
 under a global mutex (internal/monitor/monitor.go:197-408, mutex at
-:198-199).  Here the whole rule set evaluates as ONE ``select`` inside
-whole-stage codegen, partition-parallel; violation rows are the analog
-of its CommunicationPattern findings (internal/models/types.go:97-108)
-and per-partition summaries are the analog of its periodic stats report
-(monitor.go:514-584) — but deterministic and lossless (we do not port
-its lossy alert channels, monitor.go:391-394).
+:198-199).  Here the rule set compiles to two columns, evaluated
+partition-parallel with no shuffle: ``_passed``, the negated OR of the
+plain rule predicates, which stays inside whole-stage codegen (a
+filter or count on it never builds a struct), and ``_violations``, the
+per-rule struct array, whose ``array_compact`` is a higher-order
+function and so runs outside codegen — it is built only for the rows
+that fail.  Violation rows are the analog of its CommunicationPattern
+findings (internal/models/types.go:97-108) and per-partition summaries
+are the analog of its periodic stats report (monitor.go:514-584) — but
+deterministic and lossless (we do not port its lossy alert channels,
+monitor.go:391-394).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,10 +48,12 @@ class ValidationResult:
         return self.ruleset.schema_errors
 
     def violations(self) -> DataFrame:
-        """Normalized violation rows: (*keys, field, rule, value)."""
+        """Normalized violation rows: (*keys, field, rule, value).  The
+        struct array is built only for the rows that fail."""
         v = F.explode(F.col(VIOLATIONS_COL)).alias("v")
         return (
-            self.annotated.select(*self.key_cols, v)
+            self.failed()
+            .select(*self.key_cols, v)
             .select(
                 *self.key_cols,
                 F.col("v.field").alias("field"),
@@ -84,21 +90,13 @@ class ValidationResult:
         ok = row["passed"] or 0
         return {"rows": rows, "passed": ok, "failed": rows - ok}
 
-    def partition_summary(self, impl: str = "native") -> DataFrame:
-        """Per-partition pass/fail + lineage.
+    def partition_summary(self) -> DataFrame:
+        """Per-partition pass/fail + lineage: ``groupBy(spark_partition_id())``
+        over the plain ``_passed`` boolean, entirely JVM-side and never
+        building the violation structs.
 
         Partition ids alone are plan-dependent, so lineage keys include
         the stable input file path(s) seen by each partition.
-
-        - ``impl="native"`` (default): ``groupBy(spark_partition_id())``
-          — stays entirely JVM-side (partial agg per partition is
-          trivially one group), no Arrow transfer of per-row data.
-        - ``impl="arrow"``: ``mapInPandas`` + ``TaskContext.partitionId``
-          — the pattern to reach for when the per-partition computation
-          needs real Python (custom metrics); kept tested as the
-          extension template.  Shipping (bool, file-string) per row
-          through Arrow costs ~80 bytes/row of pipe bandwidth that the
-          native form avoids.
         """
         # reuse a pre-captured _file column when the caller tagged the
         # scan already (e.g. checkpoint-resume semi-joins the scan
@@ -108,44 +106,16 @@ class ValidationResult:
         ann = self.annotated
         if "_file" not in ann.columns:
             ann = ann.withColumn("_file", F.input_file_name())
-        if impl == "native":
-            return (
-                ann.select(PASSED_COL, "_file")
-                .withColumn("partition_id", F.spark_partition_id())
-                .groupBy("partition_id")
-                .agg(
-                    F.sort_array(F.collect_set("_file")).alias("files"),
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum(F.when(F.col(PASSED_COL), 1).otherwise(0)).alias("n_pass"),
-                )
-                .withColumn("n_fail", F.col("rows") - F.col("n_pass"))
+        return (
+            ann.select(PASSED_COL, "_file")
+            .withColumn("partition_id", F.spark_partition_id())
+            .groupBy("partition_id")
+            .agg(
+                F.sort_array(F.collect_set("_file")).alias("files"),
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(F.when(F.col(PASSED_COL), 1).otherwise(0)).alias("n_pass"),
             )
-        src = ann.select(PASSED_COL, "_file")
-
-        def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-            rows = 0
-            ok = 0
-            files: set[str] = set()
-            for pdf in batches:
-                rows += len(pdf)
-                ok += int(pdf[PASSED_COL].sum())
-                files.update(x for x in pdf["_file"].unique() if x)
-            yield pd.DataFrame(
-                {
-                    "partition_id": [pid],
-                    "files": [sorted(files)],
-                    "rows": [rows],
-                    "n_pass": [ok],
-                    "n_fail": [rows - ok],
-                }
-            )
-
-        return src.mapInPandas(
-            summarize,
-            schema="partition_id int, files array<string>, rows long, n_pass long, n_fail long",
+            .withColumn("n_fail", F.col("rows") - F.col("n_pass"))
         )
 
 
@@ -189,7 +159,7 @@ class ValidationSession:
         else:
             arr = F.array().cast("array<struct<field:string,rule:string,value:string>>")
         annotated = df.withColumn(VIOLATIONS_COL, arr).withColumn(
-            PASSED_COL, F.size(F.col(VIOLATIONS_COL)) == 0
+            PASSED_COL, ~ruleset.any_violated()
         )
         return ValidationResult(annotated, key_cols, ruleset)
 

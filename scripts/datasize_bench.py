@@ -79,16 +79,32 @@ def _run_size_inprocess(data_path: str, runs: int) -> dict:
 from bench import read_cpu_ticks, steal_pct  # noqa: E402
 
 
+def git_revision() -> str | None:
+    """HEAD's commit, with ``-dirty`` appended when tracked files differ
+    from it; None outside a git checkout."""
+    try:
+        out = subprocess.run(
+            ["git", "-C", REPO, "describe", "--always", "--dirty", "--abbrev=40"],
+            capture_output=True, text=True, timeout=10,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return out.stdout.strip() or None
+
+
 def run_size(n_convs: int, runs: int) -> dict:
     data_path = os.path.join(TMP, f"transcripts_{n_convs}")
     # resume: a completed size leaves a result file — reuse it so a
-    # crash at size N never forces re-measuring sizes 1..N-1
+    # crash at size N never forces re-measuring sizes 1..N-1, but only
+    # when it measured the same code (a clean checkout of the same
+    # revision) with the same number of runs
     result_path = data_path.rstrip("/") + ".result.json"
-    if os.path.exists(result_path):
+    rev = git_revision()
+    key = {"n_convs": n_convs, "runs": runs, "revision": rev}
+    if os.path.exists(result_path) and rev and not rev.endswith("-dirty"):
         with open(result_path) as f:
             size = json.load(f)
-        if "steal_pct" in size:
-            size["n_convs"] = n_convs
+        if "steal_pct" in size and size.get("cache_key") == key:
             return size
     if not os.path.exists(os.path.join(data_path, "_SUCCESS")):
         # generate in a subprocess so the gateway JVM dies before timing
@@ -109,6 +125,7 @@ def run_size(n_convs: int, runs: int) -> dict:
     size = json.loads(out.stdout.strip().splitlines()[-1])
     size["n_convs"] = n_convs
     size["steal_pct"] = steal_pct(t0, t1)
+    size["cache_key"] = key
     with open(result_path, "w") as f:  # resume-complete record (incl. steal)
         json.dump(size, f)
     return size

@@ -9,15 +9,21 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from cerberus_spark.checks.referential import referential_violations
+from cerberus_spark.checks.uniqueness import uniqueness_violations
 from cerberus_spark.pipeline import (
+    KEY_COLS,
     TRANSCRIPT_RULES,
     all_violations,
     drift_reports,
     full_validation,
     run_full_validation,
+    sequence_violation_rows,
+    transcript_stats,
 )
 from cerberus_spark.rules import python_validate
-from cerberus_spark.sources.catalog import TOOLS
+from cerberus_spark.sources.catalog import TOOLS, tool_catalog
+from cerberus_spark.validation import validate
 from cerberus_spark.sources.transcripts import generate_transcripts, py_rows
 
 N_CONVS = 700
@@ -343,3 +349,62 @@ def test_sequence_rows_dirty_input_partition_invariant(spark):
         ).collect()
     }
     assert rolled == {c: tuple(r) for c, r in health.items()}
+
+
+def _dirty_keys(spark):
+    """:func:`_dirty_transcripts` plus a duplicated key whose conv_id is
+    NULL: a window count over (conv_id, turn_idx) must group NULL keys
+    exactly as the uniqueness ``groupBy`` does."""
+    ts = __import__("datetime").datetime
+    extra = spark.createDataFrame(
+        [
+            (None, 0, "system", "n0", None, ts(2026, 1, 3, 0, 0, 0)),
+            (None, 0, "user", "n1", "search", ts(2026, 1, 3, 0, 0, 1)),
+        ],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    return _dirty_transcripts(spark).unionByName(extra)
+
+
+def _standalone_union(spark, df, sequence_checks):
+    """The union of the standalone checks the one-pass sink replaces."""
+    uniq = uniqueness_violations(df, KEY_COLS).select(
+        *KEY_COLS,
+        F.lit("(conv_id,turn_idx)").alias("field"),
+        F.lit("unique").alias("rule"),
+        F.col("n_dup").cast("string").alias("value"),
+    )
+    out = (
+        validate(df, TRANSCRIPT_RULES, key_cols=KEY_COLS)
+        .violations()
+        .unionAll(uniq)
+        .unionAll(referential_violations(df, "tool", tool_catalog(spark), "tool", KEY_COLS))
+    )
+    if sequence_checks:
+        out = out.unionAll(sequence_violation_rows(df))
+    return out
+
+
+@pytest.mark.parametrize("sequence_checks", [True, False])
+@pytest.mark.parametrize("data", ["generator", "dirty"])
+def test_all_violations_equals_standalone_union(spark, transcripts, data, sequence_checks):
+    """The one-pass sink equals, as a multiset, the union of the
+    standalone rule, uniqueness, referential (and sequence) checks —
+    on generator data and on dirty keys (duplicate and NULL turn_idx,
+    a duplicated NULL conv_id)."""
+    df = transcripts if data == "generator" else _dirty_keys(spark)
+    got = Counter(map(tuple, all_violations(spark, df, sequence_checks=sequence_checks).collect()))
+    want = Counter(map(tuple, _standalone_union(spark, df, sequence_checks).collect()))
+    assert got == want and sum(want.values()) > 0
+    n_unique = sum(n for r, n in want.items() if r[3] == "unique")
+    assert n_unique > 0 and (data == "generator" or (None, 0, "(conv_id,turn_idx)", "unique", "2") in want)
+
+
+def test_run_full_validation_returns_column_stats(spark, transcripts, tmp_path):
+    """The column stats observed on the sink write equal the standalone
+    :func:`transcript_stats` job's rows."""
+    got = run_full_validation(
+        spark, transcripts, sink_dir=str(tmp_path / "sink"), sequence_checks=True
+    )
+    assert got == transcript_stats(transcripts).collect()

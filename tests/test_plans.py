@@ -134,10 +134,59 @@ def test_referential_is_broadcast_anti_join(spark, transcripts_parquet):
 
 
 def test_whole_stage_codegen_covers_rule_eval(spark, transcripts_parquet):
+    """The rule filter over ``_passed`` (the OR of the plain rule
+    predicates) runs inside whole-stage codegen: no higher-order
+    function in its condition pushes it out."""
     res = validate(transcripts_parquet, TRANSCRIPT_RULES)
-    plan = plan_of(res.annotated)
+    plan = plan_of(res.failed().select("conv_id"))
     # formatted mode marks codegen'd operators with [codegen id : N]
-    assert "codegen id" in plan, plan
+    filters = re.findall(r"\(\d+\) Filter( \[codegen id : \d+\])?\nInput .*\nCondition : (.*)", plan)
+    rule_filters = [cg for cg, cond in filters if "RLIKE(conv_id" in cond]
+    assert len(rule_filters) == 1 and rule_filters[0], plan
+
+
+def plan_ops(plan: str) -> list[tuple[int, str]]:
+    """(depth, operator name) for each line of a formatted plan's tree."""
+    tree = plan.split("== Physical Plan ==")[1].strip().split("\n\n")[0]
+    out = []
+    for line in tree.splitlines():
+        name = line.lstrip(" :|+-")
+        out.append((len(line) - len(name), name.rsplit(" (", 1)[0].strip()))
+    return out
+
+
+def without_broadcast_side(ops: list[tuple[int, str]]) -> list[str]:
+    """Operator names of ``ops`` minus every BroadcastExchange subtree."""
+    out, cut = [], None
+    for depth, name in ops:
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if name == "BroadcastExchange" else None
+        if cut is None:
+            out.append(name)
+    return out
+
+
+@pytest.mark.parametrize("sequence_checks", [True, False])
+def test_all_violations_one_scan_one_exchange(spark, transcripts_parquet, sequence_checks):
+    """The violations sink is one projection over one scan of the fact
+    table and ONE hash exchange on the conversation key: the catalog
+    reaches it by broadcast, the uniqueness count reuses the conv
+    window's exchange and sort, and no check aggregates or sort-merge
+    joins the fact side."""
+    from cerberus_spark.pipeline import all_violations
+
+    plan = plan_of(all_violations(spark, transcripts_parquet, sequence_checks=sequence_checks))
+    ops = plan_ops(plan)
+    fact = without_broadcast_side(ops)
+    assert [n for _, n in ops].count("Scan parquet") == 1, plan
+    assert "BroadcastHashJoin LeftOuter BuildRight" in fact, plan
+    assert fact.count("Exchange") == 1 and fact.count("Sort") == 1, plan
+    # the conv window's key with sequence checks, else the unique key
+    key = r"conv_id#\d+, " if sequence_checks else r"conv_id#\d+, turn_idx#\d+, "
+    assert re.search(r"Arguments: hashpartitioning\(" + key + r"\d+\)", plan), plan
+    assert "HashAggregate" not in fact, plan
+    assert "SortMergeJoin" not in plan, plan
 
 
 def test_broadcast_join_for_small_dim(spark, sf_dir="/root/testdata/sf0.001"):
