@@ -32,9 +32,10 @@ Spark jobs and 5.0 input scans per run (sink 1, partition summary 1,
 drift 2, health 1).  The tasks go to a driver-side thread pool so each
 action's planning and scheduling overlaps the others' execution.
 Shapes: rules are scan + codegen'd predicates, referential is a
-broadcast join (map-side), uniqueness and the sequence rules share the
-one window sort, drift shuffles histogram-sized data, and nothing
-collects more than summary rows to the driver.
+broadcast join (map-side), uniqueness shares the sequence rules' one
+window sort (without ``sequence_checks`` it is a key-only groupBy
+instead), drift shuffles histogram-sized data, and nothing collects
+more than summary rows to the driver.
 """
 
 from __future__ import annotations
@@ -48,6 +49,7 @@ from pyspark.sql import functions as F
 from cerberus_spark.checks.drift import categorical_histogram, drift_report, numeric_histogram
 from cerberus_spark.checks.referential import referential_flag
 from cerberus_spark.checks.sequence import conversation_report, sequence_rules, sequence_window
+from cerberus_spark.checks.uniqueness import uniqueness_violations
 from cerberus_spark.rules import CompiledRule, CompiledRuleSet, compile_schema
 from cerberus_spark.sources.catalog import tool_catalog
 from cerberus_spark.validation import validate
@@ -203,6 +205,19 @@ def materialize(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def uniqueness_rows(df: DataFrame) -> DataFrame:
+    """Duplicated (conv_id, turn_idx) keys in the violations-sink shape,
+    one row per key with its count: :func:`uniqueness_violations`, a
+    key-only ``groupBy`` (map-side partial counts, then an exchange of
+    key tuples alone)."""
+    return uniqueness_violations(df, KEY_COLS).select(
+        *KEY_COLS,
+        F.lit("(conv_id,turn_idx)").alias("field"),
+        F.lit("unique").alias("rule"),
+        F.col("n_dup").cast("string").alias("value"),
+    )
+
+
 def all_violations(
     spark: SparkSession,
     df: DataFrame,
@@ -213,42 +228,42 @@ def all_violations(
     violations in ONE normalized DataFrame (conv_id, turn_idx, field,
     rule, value) — the single violations sink the audit table ingests.
 
-    One scan and one hash exchange on the conversation key:
+    The row checks share one scan: a broadcast left join to the
+    distinct tool catalog flags referential orphans in place
+    (:func:`referential_flag`), one filter on the OR of every predicate
+    keeps the failing rows, and only those build and explode their
+    violation structs.
 
-    - referential: a broadcast left join to the distinct tool catalog
-      flags orphans in place (:func:`referential_flag`);
-    - sequence (``sequence_checks``): the conv window of
-      :func:`sequence_violation_rows`;
-    - uniqueness: ``count(1)`` over (conv_id, turn_idx), which reuses
-      the conv window's exchange and sort; the first row of a
-      duplicated key reports it, as the ``groupBy`` of
-      :func:`uniqueness_violations` does (NULL keys group alike);
-    - one filter on the OR of every predicate, then the violation
-      structs of the surviving rows are exploded.
+    Uniqueness depends on whether a conversation window runs:
+
+    - ``sequence_checks``: the conv window of
+      :func:`sequence_violation_rows` already hash-shuffles whole rows
+      by conv_id and sorts them by (conv_id, turn_idx, ts, ...).  A
+      ``count(1)`` over (conv_id, turn_idx) reuses that exchange and
+      sort, and one row per duplicated key reports it (NULL keys group
+      alike, as in ``groupBy``).  One scan, one exchange.
+    - otherwise nothing shuffles the rows, so uniqueness stays the
+      key-only :func:`uniqueness_rows` over a second, key-pruned scan:
+      cheaper than hash-shuffling and sorting every full row just to
+      count keys.
 
     Rows equal, as a multiset, the union of the standalone checks
     (pytest-locked on clean and dirty input)."""
     ruleset = compile_schema(rules or TRANSCRIPT_RULES, df.schema)
     checked = referential_flag(df, "tool", tool_catalog(spark), "tool", "_orphan")
     checks = ruleset.rules + [CompiledRule("tool", "referential", F.col("_orphan"))]
-    if sequence_checks:
-        checked, seq = _sequence_checks(checked)
-        checks += seq
-    key_w = Window.partitionBy(*KEY_COLS).orderBy(
-        *[c for c in TRANSCRIPT_ORDER if c not in KEY_COLS]
+    if not sequence_checks:
+        return _violation_rows(checked, checks).unionAll(uniqueness_rows(df))
+    checked, seq = _sequence_checks(checked)
+    # which row of a duplicated key reports it does not matter (the
+    # sink row is the key and its count); ordering by ts keeps the
+    # required sort a prefix of the conv window's, so no second Sort
+    key = Window.partitionBy(*KEY_COLS)
+    checked = checked.withColumn("_key_n", F.count(F.lit(1)).over(key)).withColumn(
+        "_key_rn", F.row_number().over(key.orderBy("ts"))
     )
-    whole_key = key_w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    checked = checked.withColumn("_key_n", F.count(F.lit(1)).over(whole_key)).withColumn(
-        "_key_rn", F.row_number().over(key_w)
-    )
-    checks.append(
-        CompiledRule(
-            "(conv_id,turn_idx)",
-            "unique",
-            (F.col("_key_n") > 1) & (F.col("_key_rn") == 1),
-            F.col("_key_n"),
-        )
-    )
+    unique = (F.col("_key_n") > 1) & (F.col("_key_rn") == 1)
+    checks += seq + [CompiledRule("(conv_id,turn_idx)", "unique", unique, F.col("_key_n"))]
     return _violation_rows(checked, checks)
 
 
@@ -348,12 +363,27 @@ def drift_reports(df: DataFrame, baseline: DataFrame | None = None) -> DataFrame
 STATS_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
+#: the fields of a :func:`transcript_stats` row after ``column_name``,
+#: each the alias of its :func:`_stats_aggs` aggregate (``{c}`` is the
+#: profiled column).  The Spark unpivot and the observed rows of
+#: :func:`run_full_validation` both read this one mapping.
+_STATS_FIELDS = {
+    "null_rate": "__null_rate_{c}",
+    "approx_distinct": "__nd_{c}",
+    "text_len_q50_q95_q99": "__tl_q",
+}
+
+
 def _stats_aggs() -> list[Column]:
-    """The one aggregate list behind the column stats: row count, null
-    count and HLL distinct per column, text-length quantile sketch."""
-    aggs = [F.count(F.lit(1)).alias("__rows")]
+    """The one aggregate list behind the column stats: null rate and
+    HLL distinct per column, text-length quantile sketch."""
+    aggs = []
     for c in STATS_COLS:
-        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__nulls_{c}"))
+        aggs.append(
+            F.try_divide(F.count_if(F.col(c).isNull()), F.count(F.lit(1))).alias(
+                f"__null_rate_{c}"
+            )
+        )
         aggs.append(F.approx_count_distinct(c).alias(f"__nd_{c}"))
     aggs.append(
         F.percentile_approx(
@@ -365,36 +395,25 @@ def _stats_aggs() -> list[Column]:
 
 def transcript_stats(df: DataFrame) -> DataFrame:
     """Per-column stats in ONE aggregation job (north_star: null rate,
-    cardinality sketches, quantiles): null counts + HLL distinct per
+    cardinality sketches, quantiles): null rate + HLL distinct per
     column, plus text-length percentile sketch — all partial-aggregated
     map-side, unpivoted with a struct explode (no extra scan per
     column)."""
-    wide = df.agg(*_stats_aggs())
     structs = [
         F.struct(
             F.lit(c).alias("column_name"),
-            (F.col(f"__nulls_{c}") / F.col("__rows")).alias("null_rate"),
-            F.col(f"__nd_{c}").alias("approx_distinct"),
+            *[F.col(a.format(c=c)).alias(k) for k, a in _STATS_FIELDS.items()],
         )
         for c in STATS_COLS
     ]
-    return wide.select(
-        F.explode(F.array(*structs)).alias("p"),
-        F.col("__tl_q").alias("text_len_q50_q95_q99"),
-    ).select("p.*", "text_len_q50_q95_q99")
+    return df.agg(*_stats_aggs()).select(F.explode(F.array(*structs)).alias("p")).select("p.*")
 
 
 def _stats_rows(wide: dict[str, Any]) -> list[Row]:
     """:func:`transcript_stats`'s rows from its aggregates, as an
     ``Observation`` returns them."""
-    n = wide["__rows"]
     return [
-        Row(
-            column_name=c,
-            null_rate=wide[f"__nulls_{c}"] / n if n else None,
-            approx_distinct=wide[f"__nd_{c}"],
-            text_len_q50_q95_q99=wide["__tl_q"],
-        )
+        Row(column_name=c, **{k: wide[a.format(c=c)] for k, a in _STATS_FIELDS.items()})
         for c in STATS_COLS
     ]
 

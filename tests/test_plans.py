@@ -167,25 +167,43 @@ def without_broadcast_side(ops: list[tuple[int, str]]) -> list[str]:
     return out
 
 
-@pytest.mark.parametrize("sequence_checks", [True, False])
-def test_all_violations_one_scan_one_exchange(spark, transcripts_parquet, sequence_checks):
-    """The violations sink is one projection over one scan of the fact
-    table and ONE hash exchange on the conversation key: the catalog
-    reaches it by broadcast, the uniqueness count reuses the conv
-    window's exchange and sort, and no check aggregates or sort-merge
-    joins the fact side."""
+def test_all_violations_one_scan_one_exchange(spark, transcripts_parquet):
+    """With the sequence checks, the violations sink is one projection
+    over one scan of the fact table and ONE hash exchange on the
+    conversation key: the catalog reaches it by broadcast, the
+    uniqueness window reuses the conv window's exchange and sort, and
+    no check aggregates or sort-merge joins the fact side."""
     from cerberus_spark.pipeline import all_violations
 
-    plan = plan_of(all_violations(spark, transcripts_parquet, sequence_checks=sequence_checks))
+    plan = plan_of(all_violations(spark, transcripts_parquet, sequence_checks=True))
     ops = plan_ops(plan)
     fact = without_broadcast_side(ops)
     assert [n for _, n in ops].count("Scan parquet") == 1, plan
     assert "BroadcastHashJoin LeftOuter BuildRight" in fact, plan
     assert fact.count("Exchange") == 1 and fact.count("Sort") == 1, plan
-    # the conv window's key with sequence checks, else the unique key
-    key = r"conv_id#\d+, " if sequence_checks else r"conv_id#\d+, turn_idx#\d+, "
-    assert re.search(r"Arguments: hashpartitioning\(" + key + r"\d+\)", plan), plan
+    assert re.search(r"Arguments: hashpartitioning\(conv_id#\d+, \d+\)", plan), plan
     assert "HashAggregate" not in fact, plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+def test_all_violations_without_sequence_shuffles_keys_only(spark, transcripts_parquet):
+    """Without the sequence checks no window runs, so no full row is
+    shuffled or sorted: the row checks stream map-side over one scan
+    (catalog by broadcast), and the only fact-side exchange carries
+    (conv_id, turn_idx) partial counts from a key-pruned scan."""
+    from cerberus_spark.pipeline import all_violations
+
+    plan = plan_of(all_violations(spark, transcripts_parquet, sequence_checks=False))
+    fact = without_broadcast_side(plan_ops(plan))
+    assert "BroadcastHashJoin LeftOuter BuildRight" in fact, plan
+    assert fact.count("Scan parquet") == 2, plan
+    schemas = sorted(re.findall(r"ReadSchema: struct<([^>]*)>", plan), key=len)
+    assert schemas[0] == "conv_id:string,turn_idx:int", plan
+    assert fact.count("Exchange") == 1, plan
+    i = fact.index("Exchange")
+    assert fact[i - 1] == fact[i + 1] == "HashAggregate", plan
+    assert re.search(r"Arguments: hashpartitioning\(conv_id#\d+, turn_idx#\d+, \d+\)", plan), plan
+    assert "Sort" not in fact and "Window" not in fact, plan
     assert "SortMergeJoin" not in plan, plan
 
 
