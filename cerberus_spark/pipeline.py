@@ -11,12 +11,14 @@ The reference runs each event through that loop once;
                          uniqueness dups ∪ referential orphans (∪ the
                          sequence family with ``sequence_checks``) as
                          one normalized sink (conv_id, turn_idx, field,
-                         rule, value), from ONE scan and ONE conv-keyed
-                         exchange; the column stats ride its scan as an
-                         ``Observation``
+                         rule, value); with ``sequence_checks`` from
+                         ONE scan and ONE conv-keyed exchange, without
+                         them one scan plus a key-only uniqueness
+                         groupBy
   2. partition summary — per-partition pass/fail + input files over the
                          plain ``_passed`` boolean (monitor.go:514-584
-                         analog)
+                         analog); the column stats ride its scan as an
+                         ``Observation``
   3. drift             — role / tool / text-length KL+PSI vs baseline;
                          the self-baseline splits on the median ts
                          in-plan and bins everything in one
@@ -205,7 +207,7 @@ def materialize(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def uniqueness_rows(df: DataFrame) -> DataFrame:
+def _uniqueness_rows(df: DataFrame) -> DataFrame:
     """Duplicated (conv_id, turn_idx) keys in the violations-sink shape,
     one row per key with its count: :func:`uniqueness_violations`, a
     key-only ``groupBy`` (map-side partial counts, then an exchange of
@@ -243,7 +245,7 @@ def all_violations(
       sort, and one row per duplicated key reports it (NULL keys group
       alike, as in ``groupBy``).  One scan, one exchange.
     - otherwise nothing shuffles the rows, so uniqueness stays the
-      key-only :func:`uniqueness_rows` over a second, key-pruned scan:
+      key-only :func:`_uniqueness_rows` over a second, key-pruned scan:
       cheaper than hash-shuffling and sorting every full row just to
       count keys.
 
@@ -253,7 +255,7 @@ def all_violations(
     checked = referential_flag(df, "tool", tool_catalog(spark), "tool", "_orphan")
     checks = ruleset.rules + [CompiledRule("tool", "referential", F.col("_orphan"))]
     if not sequence_checks:
-        return _violation_rows(checked, checks).unionAll(uniqueness_rows(df))
+        return _violation_rows(checked, checks).unionAll(_uniqueness_rows(df))
     checked, seq = _sequence_checks(checked)
     # which row of a duplicated key reports it does not matter (the
     # sink row is the key and its count); ordering by ts keeps the
@@ -475,7 +477,10 @@ def run_full_validation(
     the other jobs too.
 
     The column stats have no job of their own: their aggregates are one
-    ``Observation`` on the scan of the violations sink's write.
+    ``Observation`` on the partition summary's scan.  That is one scan
+    of every row in both sink shapes; the sink without
+    ``sequence_checks`` scans twice, and an observation there would
+    ride (and widen) its key-pruned uniqueness scan too.
 
     With ``sink_dir`` the violations land in a real parquet sink and
     the (field, rule) summary and the conversation health gate derive
@@ -487,11 +492,11 @@ def run_full_validation(
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
+    violations = all_violations(spark, df, rules, sequence_checks=sequence_checks)
     stats = Observation()
-    violations = all_violations(
-        spark, df.observe(stats, *_stats_aggs()), rules, sequence_checks=sequence_checks
+    annotated = validate(
+        df.observe(stats, *_stats_aggs()), rules or TRANSCRIPT_RULES, key_cols=KEY_COLS
     )
-    annotated = validate(df, rules or TRANSCRIPT_RULES, key_cols=KEY_COLS)
     sink_written = threading.Event()
 
     def violations_task() -> None:

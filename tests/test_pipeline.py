@@ -401,10 +401,12 @@ def test_all_violations_equals_standalone_union(spark, transcripts, data, sequen
     assert n_unique > 0 and (data == "generator" or (None, 0, "(conv_id,turn_idx)", "unique", "2") in want)
 
 
-def test_run_full_validation_returns_column_stats(spark, transcripts, tmp_path):
-    """The column stats observed on the sink write equal the standalone
-    :func:`transcript_stats` job's rows."""
+@pytest.mark.parametrize("sequence_checks", [True, False])
+def test_run_full_validation_returns_column_stats(spark, transcripts, tmp_path, sequence_checks):
+    """The column stats observed on the partition summary's scan equal
+    the standalone :func:`transcript_stats` job's rows, in both sink
+    shapes."""
     got = run_full_validation(
-        spark, transcripts, sink_dir=str(tmp_path / "sink"), sequence_checks=True
+        spark, transcripts, sink_dir=str(tmp_path / "sink"), sequence_checks=sequence_checks
     )
     assert got == transcript_stats(transcripts).collect()
