@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cerberus_spark.sources.tables import local_table
+
 #: string columns whose approx cardinality exceeds gate_margin * cap
 #: are never exact-counted (collect_set memory guard)
 GATE_MARGIN = 2.0
@@ -149,9 +151,7 @@ def suggestion_rows(
         if p.get("len_lo") is not None:
             rows.append((f, "minlength", str(int(p["len_lo"]))))
             rows.append((f, "maxlength", str(int(p["len_hi"]))))
-    return spark.createDataFrame(
-        rows or [], "field string, rule string, value string"
-    )
+    return local_table(spark, rows, "field string, rule string, value string")
 
 
 def suggest_bin_edges(

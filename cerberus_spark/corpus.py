@@ -5,24 +5,113 @@ oracle-gated operator from this repo, composed lazily (nothing runs
 until the caller writes/collects).
 
 Stage shapes at 100 TB (all documented on the underlying operators):
-normalization + the Gopher gate are ONE projection pass; exact dedup is
-one md5-fingerprint shuffle; MinHash signatures are Arrow map-side;
-LSH candidates shuffle once on capped band buckets; clustering moves
-only candidate edges.  Documents never fan out — the only
-corpus-sized shuffles are the two dedup group-bys.
+every per-document Python step — NFC and control-character stripping,
+the Gopher gate and the MinHash signature of each kept document — is
+ONE Arrow ``mapInPandas`` pass (:func:`_document_pass`); exact dedup is
+one md5-fingerprint shuffle; LSH reads the stored signatures and
+shuffles once on capped band buckets; clustering moves only candidate
+edges.  Documents never fan out — the only corpus-sized shuffles are
+the two dedup group-bys.
 
-Scan count: the staged lineage branches ~4 ways (gate, exact
-self-join, signatures, final anti-join); by default the post-gate
-survivors are localCheckpointed so the expensive normalize+gate pass
-runs ONCE (measured 4.4x on a 1M-doc corpus).  Set
-``checkpoint_stages=False`` when the gated corpus exceeds cluster
-storage and re-scanning parquet is the cheaper trade.
+Why one pass: each Python *task* costs a fixed ~0.25 s of worker CPU
+whatever its rows (PySpark 4.1 / Python 3.11 on a 4-core x86 host;
+mostly the per-task ``importlib.invalidate_caches()``, after which
+Python re-reads ``pyspark.zip``'s directory), so three per-document
+passes over four partitions cost twelve such tasks where one pass
+costs four.  On the 4k-doc benchmark corpus at local[4] the fused pass
+took a traced run from 26 to 21 Spark jobs.
+
+Scan count: the lineage below the document pass branches ~4 ways
+(gate drops, exact self-join, signatures, final anti-join); by default
+the pass's output is localCheckpointed so it runs ONCE (measured 4.4x
+on a 1M-doc corpus).  Set ``checkpoint_stages=False`` when the gated
+corpus exceeds cluster storage and re-scanning parquet is the cheaper
+trade.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+#: ``minhash_kwargs`` when the caller passes none
+DEFAULT_MINHASH = {"num_hashes": 16, "shingle_k": 3}
+
+
+def _document_pass(
+    docs: DataFrame,
+    text_col: str,
+    normalize: bool,
+    quality_kwargs: dict | None,
+    minhash_kwargs: dict | None,
+) -> DataFrame:
+    """Every per-document Python step of the corpus pipeline in ONE
+    Arrow pass: NFC + control-character stripping (when ``normalize``),
+    the Gopher reasons and keep flag, and the MinHash signature of each
+    kept document.  Emits the input columns (``text_col`` normalized),
+    ``_gate`` (keep, reasons) and ``_sig`` (array<long>; NULL for
+    dropped docs and where :func:`minhash_signatures` emits no row).
+    The per-row bodies are the staged functions' own
+    (``normalize_unicode_py``, ``gopher_reasons``,
+    ``minhash_text_signature``), so both paths agree bit for bit."""
+    from pyspark.sql import types as T
+
+    from cerberus_spark.functions.text import gopher_reasons, normalize_unicode_py
+    from cerberus_spark.operators.dedup import minhash_coeff_vectors, minhash_text_signature
+    from cerberus_spark.sources.tables import spread
+
+    quality = quality_kwargs or {}
+    gopher_reasons(None, **quality)  # rejects unknown thresholds here
+    mh = {**DEFAULT_MINHASH, **(minhash_kwargs or {})}
+    mh.pop("impl", None)  # every minhash_signatures impl signs bit-identically
+    shingle_k = mh.pop("shingle_k")
+    a_vec, b_vec = minhash_coeff_vectors(mh.pop("num_hashes"))
+    if mh:
+        raise TypeError(f"unexpected minhash_kwargs: {sorted(mh)}")
+
+    def compute(batches):
+        for b in batches:
+            if len(b) == 0:
+                continue  # empty pandas yields break the Arrow cast
+            texts = b[text_col]
+            if normalize:
+                texts = texts.map(normalize_unicode_py)
+            reasons = [gopher_reasons(t, **quality) for t in texts]
+            b = b.copy()
+            b[text_col] = texts
+            b["_keep"] = [not r for r in reasons]
+            b["_reasons"] = reasons
+            b["_sig"] = [
+                None if r else minhash_text_signature(t, shingle_k, a_vec, b_vec)
+                for t, r in zip(texts, reasons)
+            ]
+            yield b
+
+    # every field nullable, as the staged pandas UDF and gate emit them
+    out = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in docs.schema]
+        + [
+            T.StructField("_keep", T.BooleanType()),
+            T.StructField("_reasons", T.ArrayType(T.StringType())),
+            T.StructField("_sig", T.ArrayType(T.LongType())),
+        ]
+    )
+    return (
+        spread(docs)
+        .mapInPandas(compute, schema=out)
+        .withColumn(
+            "_gate", F.struct(F.col("_keep").alias("keep"), F.col("_reasons").alias("reasons"))
+        )
+        .drop("_keep", "_reasons")
+    )
+
+
+def _stored_signatures(signed: DataFrame, id_col: str) -> DataFrame:
+    """(id, sig) rows of a :func:`_document_pass` output — the same rows
+    :func:`minhash_signatures` computes over its text."""
+    return signed.select(id_col, F.col("_sig").alias("sig")).filter(
+        F.col("sig").isNotNull()
+    )
 
 
 def clean_corpus(
@@ -78,12 +167,13 @@ def clean_corpus(
     min id), via :func:`cluster_representatives`; one extra
     partial-aggregable groupBy over the |clustered docs| slice.
 
-    ``arrow_gate`` (default True): serve the quality gate from the
-    single-pass Arrow twin (functions/text.py:gopher_report_arrow,
-    bit-parity-locked vs the columnar gate) — the gate is the one
-    projection paid on the FULL corpus, and the columnar fold family
-    re-inlines tokenization per signal at interpreter speed.  Set False
-    to run the pure-Catalyst gate (the oracle-gated composition).
+    ``arrow_gate`` (default True): normalize, gate and sign every
+    document in one Arrow pass (:func:`_document_pass`, bit-parity-locked
+    against the staged functions) — the one pass paid on the FULL
+    corpus, where the columnar fold family re-inlines tokenization per
+    signal at interpreter speed.  Set False for the staged columnar
+    parity path: the ``normalize_unicode`` UDF, the pure-Catalyst gate,
+    then :func:`minhash_signatures` over the exact-dedup survivors.
     """
     from cerberus_spark.functions.text import gopher_filter_report, normalize_unicode
     from cerberus_spark.operators.dedup import (
@@ -94,20 +184,16 @@ def clean_corpus(
     )
     from cerberus_spark.operators.graph import dedup_clusters
 
-    base = docs
-    if normalize:
-        base = base.withColumn(text_col, normalize_unicode(text_col))
-
-    # --- stage 1: quality gate (one projection / one Arrow pass) -----
+    # --- stage 1: normalize + quality gate ---------------------------
     if arrow_gate:
-        from cerberus_spark.functions.text import gopher_report_arrow
-
-        gated = gopher_report_arrow(base, text_col, **(quality_kwargs or {}))
-        gated = gated.withColumn(
-            "_gate",
-            F.struct(F.col("keep").alias("keep"), F.col("reasons").alias("reasons")),
-        ).drop("keep", "reasons")
+        # one Python pass also signs every kept document (``_sig``)
+        gated = _document_pass(
+            docs, text_col, normalize, quality_kwargs, minhash_kwargs
+        )
     else:
+        base = docs
+        if normalize:
+            base = base.withColumn(text_col, normalize_unicode(text_col))
         gated = base.withColumn(
             "_gate", gopher_filter_report(F.col(text_col), **(quality_kwargs or {}))
         )
@@ -143,9 +229,13 @@ def clean_corpus(
     )
 
     # --- stage 3: near-dedup (MinHash -> LSH -> clusters) ------------
-    sigs = minhash_signatures(
-        exact_kept, text_col, id_col, **(minhash_kwargs or {"num_hashes": 16, "shingle_k": 3})
-    )
+    if arrow_gate:
+        sigs = _stored_signatures(exact_kept, id_col)
+        exact_kept = exact_kept.drop("_sig")
+    else:
+        sigs = minhash_signatures(
+            exact_kept, text_col, id_col, **(minhash_kwargs or DEFAULT_MINHASH)
+        )
     cand = minhash_dup_candidates(
         sigs, id_col, bands=bands, rows_per_band=rows_per_band, bucket_cap=bucket_cap
     )
@@ -270,9 +360,10 @@ def ingest_corpus_increment(
     minhash_kwargs: dict | None = None,
 ) -> None:
     """Incremental-ingest half of the pipeline: run the PER-DOCUMENT
-    stages (normalize + quality gate + exact-dedup fingerprint + MinHash
-    signature — all embarrassingly incremental, no corpus-level state)
-    on one micro-batch and append the results to the work tables under
+    stages (normalize + quality gate + MinHash signature in
+    :func:`_document_pass`, then the exact-dedup fingerprint — all
+    embarrassingly incremental, no corpus-level state) on one
+    micro-batch and append the results to the work tables under
     ``work_dir`` (``gated/``, ``sigs/``, ``quality_drops/``).
 
     Designed as a ``foreachBatch`` sink:
@@ -292,27 +383,12 @@ def ingest_corpus_increment(
     """
     import os
 
-    from cerberus_spark.functions.text import gopher_report_arrow, normalize_unicode
-    from cerberus_spark.operators.dedup import (
-        md5_i64,
-        minhash_signatures,
-        normalize_text,
-    )
+    from cerberus_spark.operators.dedup import md5_i64, normalize_text
 
-    base = batch
-    if normalize:
-        base = base.withColumn(text_col, normalize_unicode(text_col))
-    # same Arrow gate as clean_corpus(arrow_gate=True) — parity-locked
-
-    gated = (
-        gopher_report_arrow(base, text_col, **(quality_kwargs or {}))
-        .withColumn(
-            "_gate",
-            F.struct(F.col("keep").alias("keep"), F.col("reasons").alias("reasons")),
-        )
-        .drop("keep", "reasons")
-        .localCheckpoint(eager=False)
-    )
+    # the same fused pass as clean_corpus(arrow_gate=True)
+    gated = _document_pass(
+        batch, text_col, normalize, quality_kwargs, minhash_kwargs
+    ).localCheckpoint(eager=False)
 
     gated.filter(~F.col("_gate.keep")).select(
         F.col(id_col).alias("id"),
@@ -326,13 +402,10 @@ def ingest_corpus_increment(
         .withColumn("_fp", md5_i64(normalize_text(F.col(text_col))))
         .localCheckpoint(eager=False)
     )
-    survivors.write.mode("append").parquet(os.path.join(work_dir, "gated"))
-    minhash_signatures(
-        survivors,
-        text_col,
-        id_col,
-        **(minhash_kwargs or {"num_hashes": 16, "shingle_k": 3}),
-    ).write.mode("append").parquet(os.path.join(work_dir, "sigs"))
+    survivors.drop("_sig").write.mode("append").parquet(os.path.join(work_dir, "gated"))
+    _stored_signatures(survivors, id_col).write.mode("append").parquet(
+        os.path.join(work_dir, "sigs")
+    )
 
 
 def compact_corpus(

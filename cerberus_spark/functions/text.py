@@ -8,8 +8,15 @@ to the same regexp_extract/when machinery.
 
 from __future__ import annotations
 
+import re
+import unicodedata
+from collections import Counter
+from math import floor
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from cerberus_spark.operators.dedup import _normalize_py
 
 # Small fixed stopword inventories (public knowledge) used for both the
 # quality score and the n-gram language-ID heuristic.
@@ -493,22 +500,24 @@ def normalize_unicode(col, form: str = "NFC", strip_controls: bool = True):
 
     def _norm(s):  # (pd.Series) -> pd.Series; hints omitted — Spark 4
         # resolves string annotations and pandas isn't module-level here
-        import re
-        import unicodedata
-
-        # category Cc is exactly U+0000-001F + U+007F-009F; keep \t\n\r
-        ctrl = re.compile("[\x00-\x08\x0b\x0c\x0e-\x1f\x7f-\x9f]") if strip_controls else None
-
-        def one(v):
-            if v is None:
-                return None
-            out = unicodedata.normalize(form, v)
-            return ctrl.sub("", out) if ctrl else out
-
-        return s.map(one)
+        return s.map(lambda v: normalize_unicode_py(v, form, strip_controls))
 
     udf = F.pandas_udf(_norm, "string")
     return udf(F.col(col) if isinstance(col, str) else col)
+
+
+# category Cc is exactly U+0000-001F + U+007F-009F; keep \t\n\r
+_CONTROL_RE = re.compile("[\x00-\x08\x0b\x0c\x0e-\x1f\x7f-\x9f]")
+
+
+def normalize_unicode_py(text, form: str = "NFC", strip_controls: bool = True):
+    """One text of :func:`normalize_unicode` (NULL in -> NULL out) —
+    the per-row body shared with ``clean_corpus``'s fused document
+    pass."""
+    if text is None:
+        return None
+    out = unicodedata.normalize(form, text)
+    return _CONTROL_RE.sub("", out) if strip_controls else out
 
 
 def gopher_filter_report(
@@ -586,7 +595,6 @@ def repetition_metrics(
     """
     import pandas as pd
 
-    from cerberus_spark.operators.dedup import _normalize_py
     from cerberus_spark.sources.tables import spread
 
     ks = tuple(char_ks)
@@ -598,9 +606,6 @@ def repetition_metrics(
         #   python "".split(" ") is also [""], so n >= 1 for non-null
         if text is None:
             return (None,) * (3 + 2 * len(ks))
-        from collections import Counter
-        from math import floor
-
         words = _normalize_py(text).split(" ")
         n = len(words)
         wc = Counter(words)
@@ -686,9 +691,8 @@ def _py_quality_milli(text: str) -> int:
     return length_ok + punct_part + sw_part
 
 
-def gopher_report_arrow(
-    df,
-    text_col: str,
+def gopher_reasons(
+    text,
     min_tokens: int = 50,
     max_tokens: int = 100_000,
     max_dup_word_milli: int = 300,
@@ -697,74 +701,69 @@ def gopher_report_arrow(
     min_quality_milli: int = 500,
     max_top_ngram_char_milli: dict[int, int] | None = None,
     max_dup_ngram_char_milli: dict[int, int] | None = None,
-):
+) -> list[str]:
+    """The failed-gate names of ONE text under :func:`gopher_filter_report`'s
+    thresholds, in its order (``[]`` = keep; a NULL text trips no
+    predicate and keeps, as in Cerberus where absent means not-invalid).
+    The per-row body of :func:`gopher_report_arrow` and of
+    ``clean_corpus``'s fused document pass."""
+    if text is None:
+        return []
+    out = []
+    ntok = _py_token_count_ws(text)
+    if ntok < min_tokens:
+        out.append("too_short")
+    if ntok > max_tokens:
+        out.append("too_long")
+    words = _normalize_py(text).split(" ")
+    n = len(words)
+    wc = Counter(words)
+    if floor(1000 * (n - len(wc)) / n) > max_dup_word_milli:
+        out.append("dup_words")
+    if floor(1000 * max(wc.values()) / n) > max_top_word_milli:
+        out.append("top_word_dominates")
+    if n >= 2:
+        g2 = [words[i] + " " + words[i + 1] for i in range(n - 1)]
+        if floor(1000 * (len(g2) - len(set(g2))) / len(g2)) > max_dup_2gram_milli:
+            out.append("dup_2grams")
+    if _py_quality_milli(text) < min_quality_milli:
+        out.append("low_quality")
+    total = len(" ".join(words))
+    for k, thr in sorted((max_top_ngram_char_milli or {}).items()):
+        if n >= k and total > 0:
+            gc = Counter(" ".join(words[i : i + k]) for i in range(n - k + 1))
+            tc = max(gc.values())
+            tl = max(len(g) for g, c in gc.items() if c == tc)
+            if floor(1000 * tc * tl / total) > thr:
+                out.append(f"top_{k}gram_chars")
+    for k, thr in sorted((max_dup_ngram_char_milli or {}).items()):
+        if n >= k and total > 0:
+            gc = Counter(" ".join(words[i : i + k]) for i in range(n - k + 1))
+            d = sum(c * len(g) for g, c in gc.items() if c > 1)
+            if floor(1000 * d / total) > thr:
+                out.append(f"dup_{k}gram_chars")
+    return out
+
+
+def gopher_report_arrow(df, text_col: str, **thresholds):
     """Arrow twin of :func:`gopher_filter_report` for the corpus-scan
     hot path: every signal (token budget, repetition millis, quality
     score, optional k-gram character caps) computed from ONE pass per
-    document instead of per-signal interpreted folds (the same
-    CollapseProject economics as :func:`repetition_metrics` — and the
-    quality gate is exactly the projection `clean_corpus` pays on the
-    FULL corpus).  Emits all input columns plus ``keep`` boolean and
-    ``reasons`` array<string> (same names, order and NULL semantics as
-    the columnar gate — a NULL text trips no predicate and keeps, as in
-    Cerberus where absent means not-invalid; bit-parity is
-    pytest-locked).
+    document (:func:`gopher_reasons`, whose keywords are the
+    ``thresholds``) instead of per-signal interpreted folds (the same
+    CollapseProject economics as :func:`repetition_metrics`).  Emits all
+    input columns plus ``keep`` boolean and ``reasons`` array<string>
+    (same names, order and NULL semantics as the columnar gate;
+    bit-parity is pytest-locked).
     """
-    import pandas as pd
-
-    from cerberus_spark.operators.dedup import _normalize_py
-
-    top_ks = dict(sorted((max_top_ngram_char_milli or {}).items()))
-    dup_ks = dict(sorted((max_dup_ngram_char_milli or {}).items()))
-
-    def reasons_for(text):
-        if text is None:
-            return []
-        from collections import Counter
-        from math import floor
-
-        out = []
-        ntok = _py_token_count_ws(text)
-        if ntok < min_tokens:
-            out.append("too_short")
-        if ntok > max_tokens:
-            out.append("too_long")
-        words = _normalize_py(text).split(" ")
-        n = len(words)
-        wc = Counter(words)
-        if floor(1000 * (n - len(wc)) / n) > max_dup_word_milli:
-            out.append("dup_words")
-        if floor(1000 * max(wc.values()) / n) > max_top_word_milli:
-            out.append("top_word_dominates")
-        if n >= 2:
-            g2 = [words[i] + " " + words[i + 1] for i in range(n - 1)]
-            if floor(1000 * (len(g2) - len(set(g2))) / len(g2)) > max_dup_2gram_milli:
-                out.append("dup_2grams")
-        if _py_quality_milli(text) < min_quality_milli:
-            out.append("low_quality")
-        total = len(" ".join(words))
-        for k, thr in top_ks.items():
-            if n >= k and total > 0:
-                gc = Counter(" ".join(words[i : i + k]) for i in range(n - k + 1))
-                tc = max(gc.values())
-                tl = max(len(g) for g, c in gc.items() if c == tc)
-                if floor(1000 * tc * tl / total) > thr:
-                    out.append(f"top_{k}gram_chars")
-        for k, thr in dup_ks.items():
-            if n >= k and total > 0:
-                gc = Counter(" ".join(words[i : i + k]) for i in range(n - k + 1))
-                d = sum(c * len(g) for g, c in gc.items() if c > 1)
-                if floor(1000 * d / total) > thr:
-                    out.append(f"dup_{k}gram_chars")
-        return out
-
+    gopher_reasons(None, **thresholds)  # rejects unknown thresholds here
     in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
 
     def compute(batches):
         for b in batches:
             if len(b) == 0:
                 continue  # empty pandas yields break the Arrow cast
-            rs = [reasons_for(t) for t in b[text_col]]
+            rs = [gopher_reasons(t, **thresholds) for t in b[text_col]]
             b = b.copy()
             b["reasons"] = rs
             b["keep"] = [len(r) == 0 for r in rs]

@@ -19,6 +19,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 from pyspark.sql import Column, DataFrame, Window
@@ -220,42 +221,63 @@ def minhash_signatures(
     return barrier.select(F.col(id_col), F.array(*sig_cols).alias("sig"))
 
 
+def minhash_text_signature(
+    text: str | None, shingle_k: int, a_vec, b_vec
+) -> list[int] | None:
+    """MinHash signature of ONE text — the columnar pipeline's
+    normalize/shingle/md5 steps, numpy for the (a·h+b) mod P minima
+    (``a_vec``/``b_vec``: int64 arrays of :func:`minhash_coeffs`).
+    None where the columnar path emits no row: NULL text, or fewer
+    than ``shingle_k`` words.  The per-row body of the Arrow
+    :func:`minhash_signatures` and of ``clean_corpus``'s fused document
+    pass."""
+    import numpy as np
+
+    if text is None:
+        return None
+    words = _normalize_py(text).split(" ")
+    if len(words) < shingle_k:
+        return None
+    shingles = {
+        " ".join(words[i : i + shingle_k]) for i in range(len(words) - shingle_k + 1)
+    }
+    hs = np.fromiter(
+        (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % MINHASH_P for s in shingles),
+        dtype=np.int64,
+        count=len(shingles),
+    )
+    return ((hs[:, None] * a_vec + b_vec) % MINHASH_P).min(axis=0).tolist()
+
+
+def minhash_coeff_vectors(num_hashes: int):
+    """(a_vec, b_vec) int64 arrays of :func:`minhash_coeffs`."""
+    import numpy as np
+
+    coeffs = minhash_coeffs(num_hashes)
+    return (
+        np.array([a for a, _ in coeffs], dtype=np.int64),
+        np.array([b for _, b in coeffs], dtype=np.int64),
+    )
+
+
 def _minhash_signatures_arrow(
     df: DataFrame, text_col: str, id_col: str, num_hashes: int, shingle_k: int
 ) -> DataFrame:
-    """Arrow-batched twin of the columnar MinHash (same normalize/
-    shingle/md5 pipeline, numpy for the (a·h+b) mod P minima)."""
-    import hashlib
-
-    import numpy as np
+    """Arrow-batched twin of the columnar MinHash
+    (:func:`minhash_text_signature` per row)."""
     import pandas as pd
 
-    coeffs = minhash_coeffs(num_hashes)
-    a_vec = np.array([a for a, _ in coeffs], dtype=np.int64)
-    b_vec = np.array([b for _, b in coeffs], dtype=np.int64)
-    k = shingle_k
+    a_vec, b_vec = minhash_coeff_vectors(num_hashes)
     id_field = df.schema[id_col]
 
     def compute(batches):
         for pdf in batches:
             ids, sigs = [], []
             for rid, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                words = _normalize_py(text).split(" ")
-                if len(words) < k:
-                    continue
-                shingles = {" ".join(words[i : i + k]) for i in range(len(words) - k + 1)}
-                hs = np.fromiter(
-                    (
-                        int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % MINHASH_P
-                        for s in shingles
-                    ),
-                    dtype=np.int64,
-                    count=len(shingles),
-                )
-                sigs.append(((hs[:, None] * a_vec + b_vec) % MINHASH_P).min(axis=0).tolist())
-                ids.append(rid)
+                sig = minhash_text_signature(text, shingle_k, a_vec, b_vec)
+                if sig is not None:
+                    ids.append(rid)
+                    sigs.append(sig)
             if ids:  # empty frames infer float64 cols -> Arrow cast error
                 yield pd.DataFrame(
                     {id_col: pd.Series(ids, dtype=object), "sig": pd.Series(sigs, dtype=object)}

@@ -38,6 +38,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cerberus_spark.sources.tables import local_table
+
 #: SparkContext.setCheckpointDir is context-GLOBAL: the (set dir ->
 #: eager checkpoint) pair below must not interleave across threads, or
 #: one call's checkpoint files land under (and are later reclaimed
@@ -241,7 +243,7 @@ def _driver_components(sym: DataFrame, edges: DataFrame, src: str) -> DataFrame:
     schema = T.StructType(
         [T.StructField("id", id_t, False), T.StructField("cluster_id", id_t, False)]
     )
-    return edges.sparkSession.createDataFrame(rows, schema)
+    return local_table(edges.sparkSession, rows, schema)
 
 
 def dedup_clusters(

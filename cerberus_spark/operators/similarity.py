@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cerberus_spark.sources.tables import local_table
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ via zip_with + aggregate — whole-stage codegen, no UDF."""
@@ -281,8 +283,8 @@ def train_centroids(
             T.StructField("centroid", T.ArrayType(T.DoubleType(), False), False),
         ]
     )
-    return vectors.sparkSession.createDataFrame(
-        [(j, [float(x) for x in cent[j]]) for j in range(k)], schema
+    return local_table(
+        vectors.sparkSession, [(j, [float(x) for x in cent[j]]) for j in range(k)], schema
     )
 
 

@@ -54,6 +54,7 @@ from cerberus_spark.checks.sequence import conversation_report, sequence_rules, 
 from cerberus_spark.checks.uniqueness import uniqueness_violations
 from cerberus_spark.rules import CompiledRule, CompiledRuleSet, compile_schema
 from cerberus_spark.sources.catalog import tool_catalog
+from cerberus_spark.sources.tables import local_table
 from cerberus_spark.validation import validate
 
 #: north-rule transcript rule set (Cerberus-style rule dicts)
@@ -356,9 +357,7 @@ def drift_reports(df: DataFrame, baseline: DataFrame | None = None) -> DataFrame
         return kl, psi
 
     rows = [(name, *kl_psi(pairs)) for name, pairs in hists.items()]
-    return df.sparkSession.createDataFrame(
-        rows, "column_name string, kl double, psi double"
-    )
+    return local_table(df.sparkSession, rows, "column_name string, kl double, psi double")
 
 
 #: columns profiled by :func:`transcript_stats`

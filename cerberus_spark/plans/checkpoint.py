@@ -20,6 +20,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cerberus_spark.sources.tables import local_table
+
 AUDIT_SCHEMA = (
     "run_id string, unit string, rows long, n_pass long, n_fail long, "
     "finished_ts timestamp, status string"
@@ -37,7 +39,7 @@ class AuditLog:
 
     def read(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], AUDIT_SCHEMA)
+            return local_table(self.spark, [], AUDIT_SCHEMA)
         return self.spark.read.parquet(self.path)
 
     def completed_units(self) -> DataFrame:

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cerberus_spark.sources.tables import local_table
+
 TOOLS: list[tuple[str, str, bool]] = [
     ("search", "retrieval", False),
     ("calculator", "math", False),
@@ -20,6 +22,4 @@ TOOLS: list[tuple[str, str, bool]] = [
 
 
 def tool_catalog(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        TOOLS, schema="tool string, category string, deprecated boolean"
-    )
+    return local_table(spark, TOOLS, "tool string, category string, deprecated boolean")

@@ -620,3 +620,89 @@ def test_transcript_job_cli_incremental(spark, tmp_path):
     assert rc == 0
     kept = spark.read.parquet(f"{sink}/kept")
     assert {r.conv for r in kept.select("conv").distinct().collect()} == {"A", "E"}
+
+
+#: the fused document pass's edge cases: NULL text, docs shorter than
+#: shingle_k words, decomposed input and C0/C1 control characters
+EDGE_DOCS = [
+    (1, BASE),
+    (2, None),
+    (3, "two words"),
+    (4, BASE.replace("engine", "café")),          # decomposed é
+    (5, BASE.replace("engine", "café")),           # composed: dup of 4 after NFC
+    (6, BASE.replace("engine", "en\x07gine\x85")),      # C0 BEL, C1 NEL: dup of 1 after strip
+    (7, BASE.replace("engine", "motor") + " \x1b[0m"),  # near dup of 1, ESC
+    (8, ("spam " * 80).strip()),
+    (9, "a short\x0b text\x9f here"),
+]
+
+#: a gate that keeps every document, so every one is signed
+KEEP_ALL = {
+    "min_tokens": 0,
+    "max_dup_word_milli": 1000,
+    "max_top_word_milli": 1000,
+    "max_dup_2gram_milli": 1000,
+    "min_quality_milli": 0,
+}
+
+
+@pytest.fixture(scope="module")
+def edge_docs(spark):
+    return spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("normalize", [True, False])
+def test_document_pass_equals_staged_functions(spark, edge_docs, normalize):
+    """The fused pass's text and ``_gate`` equal the Arrow gate over
+    ``normalize_unicode``, and its signatures equal both
+    ``minhash_signatures`` impls bit for bit."""
+    from cerberus_spark.corpus import _document_pass, _stored_signatures
+    from cerberus_spark.functions.text import gopher_report_arrow, normalize_unicode
+    from cerberus_spark.operators.dedup import minhash_signatures
+
+    staged_in = edge_docs.withColumn("text", normalize_unicode("text")) if normalize else edge_docs
+    fused = _document_pass(edge_docs, "text", normalize, None, None)
+    got = {r.doc_id: (r.text, r._gate.keep, list(r._gate.reasons)) for r in fused.collect()}
+    want = {
+        r.doc_id: (r.text, r.keep, list(r.reasons))
+        for r in gopher_report_arrow(staged_in, "text").collect()
+    }
+    assert got == want
+    assert got[4][0] == got[5][0] if normalize else got[4][0] != got[5][0]
+
+    mh = {"num_hashes": 16, "shingle_k": 3}
+    signed = _document_pass(edge_docs, "text", normalize, KEEP_ALL, mh)
+    sigs = {r.doc_id: list(r.sig) for r in _stored_signatures(signed, "doc_id").collect()}
+    assert sorted(sigs) == [1, 4, 5, 6, 7, 8, 9]  # no NULL text, no 2-word doc
+    for impl in ("arrow", "columnar"):
+        ref = minhash_signatures(staged_in, "text", "doc_id", impl=impl, **mh)
+        assert sigs == {r.doc_id: list(r.sig) for r in ref.collect()}, impl
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {},
+        {"normalize": False},
+        {"lm_filter": {"keep_buckets": ("head", "middle")}},
+        {"survivor_policy": "longest"},
+    ],
+    ids=["default", "no_normalize", "lm_filter", "longest"],
+)
+def test_clean_corpus_fused_equals_staged(spark, edge_docs, kw):
+    """One Arrow pass per document (the default) and the staged
+    composition (``arrow_gate=False``: normalize, gate and MinHash as
+    separate passes) give the same kept, dropped and report rows."""
+    docs = edge_docs.union(
+        spark.createDataFrame([(10, BASE + " plus a longer tail")], "doc_id long, text string")
+    )
+    common = {"minhash_kwargs": {"num_hashes": 32, "shingle_k": 3}, "bands": 8, "rows_per_band": 4}
+    fused = clean_corpus(docs, **common, **kw)
+    staged = clean_corpus(docs, arrow_gate=False, **common, **kw)
+    for name in ("kept", "dropped", "report"):
+        assert fused[name].schema == staged[name].schema, name
+        got = sorted(fused[name].collect(), key=repr)
+        assert got == sorted(staged[name].collect(), key=repr), name
+    stages = {r.stage for r in fused["dropped"].collect()}
+    assert {"quality", "near_dup"} <= stages
+    assert ("exact_dup" in stages) == kw.get("normalize", True)  # docs 4/5 and 1/6

@@ -626,3 +626,97 @@ def test_clean_transcripts_report_plan_shape(spark):
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
                  "FlatMapGroupsInPandas"):
         assert node not in plan, plan
+
+
+#: physical nodes that run Python: each costs one Python worker task
+#: per partition
+PYTHON_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")
+
+
+def python_nodes(df) -> list[str]:
+    return [n for _, n in plan_ops(plan_of(df)) if n in PYTHON_NODES]
+
+
+def python_task_nodes(df) -> list[str]:
+    """:func:`python_nodes` plus ``Scan ExistingRDD``: a
+    ``createDataFrame(list)`` table, read by one Python task per
+    partition (a local checkpoint plans the same node, JVM-only)."""
+    return [n for _, n in plan_ops(plan_of(df)) if n in PYTHON_NODES + ("Scan ExistingRDD",)]
+
+
+@pytest.mark.parametrize("sequence_checks", [True, False])
+def test_all_violations_runs_no_python(spark, transcripts_parquet, sequence_checks):
+    """The violations sink and the catalog it broadcasts are JVM-only:
+    no Python UDF and no Python-RDD table in the plan."""
+    from cerberus_spark.pipeline import all_violations
+
+    out = all_violations(spark, transcripts_parquet, sequence_checks=sequence_checks)
+    assert python_task_nodes(out) == [], plan_of(out)
+
+
+def test_local_tables_run_no_python(spark, transcripts_parquet):
+    """Small tables built in Python reach the JVM as Arrow: a
+    LocalTableScan, never a Python task."""
+    from cerberus_spark.pipeline import drift_reports
+
+    for out in (tool_catalog(spark), drift_reports(transcripts_parquet)):
+        assert python_task_nodes(out) == [], plan_of(out)
+        assert "LocalTableScan" in plan_of(out), plan_of(out)
+
+
+def _lock_docs(spark):
+    return spark.range(8).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("document number "), F.col("id").cast("string")).alias("text"),
+    )
+
+
+def test_clean_corpus_document_stage_is_one_python_pass(spark):
+    """Normalize, quality gate and MinHash run as ONE Arrow pass per
+    document: the quality drops (the per-document stage alone) plan
+    exactly one Python node, and with the default checkpoint nothing
+    downstream of it runs Python."""
+    from cerberus_spark.corpus import clean_corpus
+
+    docs = _lock_docs(spark)
+    unckpt = clean_corpus(docs, checkpoint_stages=False)["dropped"]
+    quality = unckpt.filter(F.col("stage") == "quality")
+    assert python_nodes(quality) == ["MapInPandas"], plan_of(quality)
+    outs = clean_corpus(docs)
+    for name in ("kept", "dropped", "report"):
+        assert python_nodes(outs[name]) == [], (name, plan_of(outs[name]))
+
+
+def test_ingest_corpus_increment_is_one_python_pass(spark, tmp_path, monkeypatch):
+    """Every table ``ingest_corpus_increment`` writes derives from one
+    Python pass per document (checkpoints lifted so the plans show
+    their full lineage; nothing is written)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from cerberus_spark.corpus import ingest_corpus_increment
+
+    docs = _lock_docs(spark)
+    written = {}
+    monkeypatch.setattr(type(docs), "localCheckpoint", lambda self, eager=True: self)
+    monkeypatch.setattr(
+        DataFrameWriter,
+        "parquet",
+        lambda self, path, *a, **k: written.__setitem__(path.rsplit("/", 1)[1], self._df),
+    )
+    ingest_corpus_increment(docs, str(tmp_path))
+    assert sorted(written) == ["gated", "quality_drops", "sigs"]
+    for name, out in written.items():
+        assert python_nodes(out) == ["MapInPandas"], (name, plan_of(out))
+
+
+def test_spread_runs_no_job(spark):
+    """Deciding whether to repartition must not execute the plan: on
+    a plan with a shuffle, counting output partitions would run it."""
+    from cerberus_spark.sources.tables import spread
+
+    agg = spark.range(100).groupBy((F.col("id") % 7).alias("k")).agg(F.count("*").alias("n"))
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    spread(agg)
+    spread(spark.range(10).coalesce(1))
+    assert scheduler.nextJobId() == before
