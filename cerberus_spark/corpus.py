@@ -1,36 +1,46 @@
 """Corpus cleaning pipeline: the training-data counterpart of
 ``pipeline.run_full_validation`` — normalize → quality-gate → exact
 dedup → near-dedup → keep/drop report, each stage an already
-oracle-gated operator from this repo, composed lazily (nothing runs
-until the caller writes/collects).
+oracle-gated operator from this repo.  ``kept``, ``dropped`` and
+``report`` come back lazy, but the call itself runs the candidate-pair
+pipeline once: clustering picks its regime from the size of the
+candidate graph.
 
-Stage shapes at 100 TB (all documented on the underlying operators):
-every per-document Python step — NFC and control-character stripping,
-the Gopher gate and the MinHash signature of each kept document — is
-ONE Arrow ``mapInPandas`` pass (:func:`_document_pass`); exact dedup is
-one md5-fingerprint shuffle; LSH reads the stored signatures and
-shuffles once on capped band buckets; clustering moves only candidate
-edges.  Documents never fan out — the only corpus-sized shuffles are
-the two dedup group-bys.
+Every document is decided once.  Stage shapes at 100 TB (all
+documented on the underlying operators): every per-document Python
+step — NFC and control-character stripping, the Gopher gate and the
+MinHash signature of each kept document — is ONE Arrow ``mapInPandas``
+pass (:func:`_document_pass`); ONE fingerprint-keyed window then gives
+every gate-kept document its md5 fingerprint and its exact-dup keeper
+(:func:`_exact_verdict`), the only corpus-sized shuffle; LSH reads the
+keepers' stored signatures and shuffles once on capped band buckets;
+clustering moves only candidate edges, and a small candidate graph is
+clustered on the driver from one bounded collect.  Documents never fan
+out.
 
 Why one pass: each Python *task* costs a fixed ~0.25 s of worker CPU
 whatever its rows (PySpark 4.1 / Python 3.11 on a 4-core x86 host;
 mostly the per-task ``importlib.invalidate_caches()``, after which
 Python re-reads ``pyspark.zip``'s directory), so three per-document
 passes over four partitions cost twelve such tasks where one pass
-costs four.  On the 4k-doc benchmark corpus at local[4] the fused pass
-took a traced run from 26 to 21 Spark jobs.
+costs four.
 
-Scan count: the lineage below the document pass branches ~4 ways
-(gate drops, exact self-join, signatures, final anti-join); by default
-the pass's output is localCheckpointed so it runs ONCE (measured 4.4x
+Scan count: by default the verdict (document pass plus window) is
+localCheckpointed, so it runs ONCE and the LSH input, ``kept``,
+``dropped`` and ``report`` are all filters of it — none of them
+re-derives a fingerprint (re-running the branches measured 4.4x slower
 on a 1M-doc corpus).  Set ``checkpoint_stages=False`` when the gated
 corpus exceeds cluster storage and re-scanning parquet is the cheaper
-trade.
+trade.  On the 4k-doc benchmark corpus at local[4], one warm
+``clean_corpus`` call plus writing its three outputs is 9 Spark jobs:
+4 in the call (the window's exchange, the two LSH exchanges, the
+bounded edge collect) and 5 for the three writes.  It was 21 when the
+fingerprint join re-ran for each of four consumers and the clusters
+took five jobs of their own.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -114,6 +124,44 @@ def _stored_signatures(signed: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def _fingerprint(text: Column) -> Column:
+    """Exact-dup fingerprint of a document's text (NULL for NULL text)."""
+    from cerberus_spark.operators.dedup import md5_i64, normalize_text
+
+    return md5_i64(normalize_text(text))
+
+
+def _exact_verdict(docs: DataFrame, id_col: str, fp: Column) -> DataFrame:
+    """``docs`` plus ``_fp`` (``fp``) and ``_keep_id``, the exact-dup
+    keeper: the smallest id among the documents sharing a fingerprint,
+    from ONE fingerprint-keyed window.  A NULL fingerprint (a quality
+    drop, or NULL text) keys the document by its own id, so it is its
+    own keeper, never a dup, and such documents spread over the
+    partitions instead of piling into one NULL key."""
+    fp_col = F.col("_fp")
+    key = Window.partitionBy(fp_col, F.when(fp_col.isNull(), F.col(id_col)))
+    return docs.withColumn("_fp", fp).withColumn("_keep_id", F.min(id_col).over(key))
+
+
+def _exact_drops(tagged: DataFrame, id_col: str) -> DataFrame:
+    """(id, stage, reason) of every exact dup in an
+    :func:`_exact_verdict` output."""
+    return tagged.filter(F.col(id_col) != F.col("_keep_id")).select(
+        F.col(id_col).alias("id"),
+        F.lit("exact_dup").alias("stage"),
+        F.concat(F.lit("dup_of_"), F.col("_keep_id").cast("string")).alias("reason"),
+    )
+
+
+def _near_dup_losers(clusters: DataFrame) -> DataFrame:
+    """(id, stage, reason) of every near-dup cluster loser."""
+    return clusters.select(
+        F.col("id"),
+        F.lit("near_dup").alias("stage"),
+        F.concat(F.lit("cluster_"), F.col("cluster_id").cast("string")).alias("reason"),
+    )
+
+
 def clean_corpus(
     docs: DataFrame,
     text_col: str = "text",
@@ -139,6 +187,10 @@ def clean_corpus(
       the quality gate, not an exact dup, not a near-dup cluster loser;
     - ``dropped``: (id, stage, reason) one row per dropped document;
     - ``report``: (stage, reason, n_docs) aggregate drop causes.
+
+    Every input document is in exactly one of ``kept`` and ``dropped``.
+    A document with NULL text passes the gate and has no fingerprint
+    and no signature, so it is kept and is never anyone's dup.
 
     ``lm_filter`` (optional, default off) appends the CCNet-style LM
     quality stage AFTER dedup (and substring removal, so scores see
@@ -176,12 +228,7 @@ def clean_corpus(
     then :func:`minhash_signatures` over the exact-dedup survivors.
     """
     from cerberus_spark.functions.text import gopher_filter_report, normalize_unicode
-    from cerberus_spark.operators.dedup import (
-        md5_i64,
-        minhash_dup_candidates,
-        minhash_signatures,
-        normalize_text,
-    )
+    from cerberus_spark.operators.dedup import minhash_dup_candidates, minhash_signatures
     from cerberus_spark.operators.graph import dedup_clusters
 
     # --- stage 1: normalize + quality gate ---------------------------
@@ -197,35 +244,27 @@ def clean_corpus(
         gated = base.withColumn(
             "_gate", gopher_filter_report(F.col(text_col), **(quality_kwargs or {}))
         )
+    # --- stage 2: exact dedup, decided with the gate -----------------
+    gate_keep = F.col("_gate.keep")
+    gated = _exact_verdict(
+        gated, id_col, F.when(gate_keep, _fingerprint(F.col(text_col)))
+    )
     if checkpoint_stages:
-        # the lineage BRANCHES below (kept vs quality_drops, then the
-        # exact-dedup self-join, signatures, and the final anti-join):
-        # without a checkpoint the normalize+gate expressions re-execute
-        # once per branch (~4 scans — measured 200s -> 45.6s, 4.4x, on a
-        # 1M-doc corpus at local[32]).  Same localCheckpoint pattern as
-        # connected_components' edge cache; disable when the gated
-        # corpus exceeds cluster storage and re-scanning parquet is the
-        # cheaper trade.
+        # every output below is a filter of this one frame (gate drops,
+        # exact drops, the LSH input, kept): without a checkpoint the
+        # document pass and the fingerprint window re-execute once per
+        # branch (~4 scans — measured 200s -> 45.6s, 4.4x, on a 1M-doc
+        # corpus at local[32]).  Disable when the gated corpus exceeds
+        # cluster storage and re-scanning parquet is the cheaper trade.
         gated = gated.localCheckpoint(eager=False)
-    quality_drops = gated.filter(~F.col("_gate.keep")).select(
+    quality_drops = gated.filter(~gate_keep).select(
         F.col(id_col).alias("id"),
         F.lit("quality").alias("stage"),
         F.explode("_gate.reasons").alias("reason"),
     )
-    survivors = gated.filter(F.col("_gate.keep")).drop("_gate")
-
-    # --- stage 2: exact dedup (one fingerprint shuffle) --------------
-    fp = md5_i64(normalize_text(F.col(text_col)))
-    with_fp = survivors.withColumn("_fp", fp)
-    keepers = with_fp.groupBy("_fp").agg(F.min(id_col).alias("_keep_id"))
-    exact_tagged = with_fp.join(keepers, "_fp")
-    exact_drops = exact_tagged.filter(F.col(id_col) != F.col("_keep_id")).select(
-        F.col(id_col).alias("id"),
-        F.lit("exact_dup").alias("stage"),
-        F.concat(F.lit("dup_of_"), F.col("_keep_id").cast("string")).alias("reason"),
-    )
-    exact_kept = exact_tagged.filter(F.col(id_col) == F.col("_keep_id")).drop(
-        "_fp", "_keep_id"
+    exact_drops = _exact_drops(gated, id_col)
+    exact_kept = gated.filter(gate_keep & (F.col(id_col) == F.col("_keep_id"))).drop(
+        "_gate", "_fp", "_keep_id"
     )
 
     # --- stage 3: near-dedup (MinHash -> LSH -> clusters) ------------
@@ -239,12 +278,9 @@ def clean_corpus(
     cand = minhash_dup_candidates(
         sigs, id_col, bands=bands, rows_per_band=rows_per_band, bucket_cap=bucket_cap
     )
+    # runs the candidate pipeline now, once; a small graph comes back
+    # as a driver-built local table, a big one over checkpointed labels
     clusters = dedup_clusters(cand)
-    if checkpoint_stages:
-        # clusters is |clustered docs|-sized and feeds BOTH the final
-        # anti-join and the drop report — checkpoint so the whole
-        # signature+LSH chain doesn't re-run per consumer
-        clusters = clusters.localCheckpoint(eager=False)
     if survivor_policy == "longest":
         from cerberus_spark.operators.graph import cluster_representatives
 
@@ -263,11 +299,7 @@ def clean_corpus(
         loser_rows = clusters.filter(~F.col("keep"))
     else:
         raise ValueError(f"unknown survivor_policy: {survivor_policy!r}")
-    losers = loser_rows.select(
-        F.col("id"),
-        F.lit("near_dup").alias("stage"),
-        F.concat(F.lit("cluster_"), F.col("cluster_id").cast("string")).alias("reason"),
-    )
+    losers = _near_dup_losers(loser_rows)
     kept = exact_kept.join(
         losers.select(F.col("id").alias(id_col)), id_col, "left_anti"
     )
@@ -372,7 +404,7 @@ def ingest_corpus_increment(
             lambda df, bid: ingest_corpus_increment(df, work_dir)
         ).trigger(availableNow=True).start()
 
-    The corpus-LEVEL stages (exact-dup group-by, LSH banding,
+    The corpus-LEVEL stages (exact-dup window, LSH banding,
     clustering) run over the ACCUMULATED tables in
     :func:`compact_corpus` — splitting the corpus across micro-batches
     therefore loses no duplicate pairs (test:
@@ -382,8 +414,6 @@ def ingest_corpus_increment(
     driver's restart semantics is sink policy, not pipeline logic.
     """
     import os
-
-    from cerberus_spark.operators.dedup import md5_i64, normalize_text
 
     # the same fused pass as clean_corpus(arrow_gate=True)
     gated = _document_pass(
@@ -399,7 +429,7 @@ def ingest_corpus_increment(
     survivors = (
         gated.filter(F.col("_gate.keep"))
         .drop("_gate")
-        .withColumn("_fp", md5_i64(normalize_text(F.col(text_col))))
+        .withColumn("_fp", _fingerprint(F.col(text_col)))
         .localCheckpoint(eager=False)
     )
     survivors.drop("_sig").write.mode("append").parquet(os.path.join(work_dir, "gated"))
@@ -423,7 +453,7 @@ def compact_corpus(
     ``{kept, dropped, report}`` dict as :func:`clean_corpus` and, for
     the same total input, the same rows — signatures and fingerprints
     are per-document, so WHEN they were computed cannot change the
-    group-bys they feed.  Run after ingest completes (availableNow) or
+    decisions they feed.  Run after ingest completes (availableNow) or
     periodically on a schedule (kept/dropped are snapshots of the
     corpus ingested so far).
     """
@@ -432,19 +462,14 @@ def compact_corpus(
     from cerberus_spark.operators.dedup import minhash_dup_candidates
     from cerberus_spark.operators.graph import dedup_clusters
 
-    gated = spark.read.parquet(os.path.join(work_dir, "gated"))
+    # the stored fingerprints decide the exact dups in one window,
+    # checkpointed so its branches (exact drops, LSH input, kept) read it once
+    gated = _exact_verdict(
+        spark.read.parquet(os.path.join(work_dir, "gated")), id_col, F.col("_fp")
+    ).localCheckpoint(eager=False)
     quality_drops = spark.read.parquet(os.path.join(work_dir, "quality_drops"))
-
-    keepers = gated.groupBy("_fp").agg(F.min(id_col).alias("_keep_id"))
-    exact_tagged = gated.join(keepers, "_fp")
-    exact_drops = exact_tagged.filter(F.col(id_col) != F.col("_keep_id")).select(
-        F.col(id_col).alias("id"),
-        F.lit("exact_dup").alias("stage"),
-        F.concat(F.lit("dup_of_"), F.col("_keep_id").cast("string")).alias("reason"),
-    )
-    exact_kept = exact_tagged.filter(F.col(id_col) == F.col("_keep_id")).drop(
-        "_fp", "_keep_id"
-    )
+    exact_drops = _exact_drops(gated, id_col)
+    exact_kept = gated.filter(F.col(id_col) == F.col("_keep_id")).drop("_fp", "_keep_id")
 
     sigs = spark.read.parquet(os.path.join(work_dir, "sigs")).join(
         exact_kept.select(id_col), id_col, "left_semi"
@@ -452,12 +477,7 @@ def compact_corpus(
     cand = minhash_dup_candidates(
         sigs, id_col, bands=bands, rows_per_band=rows_per_band, bucket_cap=bucket_cap
     )
-    clusters = dedup_clusters(cand).localCheckpoint(eager=False)
-    losers = clusters.filter(~F.col("keep")).select(
-        F.col("id"),
-        F.lit("near_dup").alias("stage"),
-        F.concat(F.lit("cluster_"), F.col("cluster_id").cast("string")).alias("reason"),
-    )
+    losers = _near_dup_losers(dedup_clusters(cand).filter(~F.col("keep")))
     kept = exact_kept.join(
         losers.select(F.col("id").alias(id_col)), id_col, "left_anti"
     )

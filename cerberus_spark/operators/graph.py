@@ -34,9 +34,11 @@ from __future__ import annotations
 
 import threading
 import uuid
+from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cerberus_spark.sources.tables import local_table
 
@@ -94,17 +96,42 @@ def connected_components(
     Candidate-pair graphs are typically ORDERS smaller than the corpus
     (capped LSH buckets emit few edges), while each distributed
     label-propagation round costs a fixed multi-job overhead that
-    dwarfs the work on a small graph.  When the materialized edge list
-    has ≤ threshold edges (one cheap count on the already-checkpointed
-    edges), components are solved with a driver-side union-find in
-    milliseconds and shipped back as a DataFrame — byte-identical
-    labels (min id per component).  Graphs over the threshold run the
-    distributed iteration unchanged; ``None`` disables the fast path.
-    Memory honesty: the fast path collects up to 2×threshold symmetric
-    edge Rows — as PYTHON OBJECTS that is roughly a few hundred bytes
-    per edge, so the 500k default costs the driver a few hundred MB
-    peak, not tens; raise it only with driver heap to match.
+    dwarfs the work on a small graph.  The edges are read with ONE
+    bounded collect (``limit(threshold + 1)``, no count first); when
+    at most ``threshold`` come back, a driver-side union-find labels
+    them in milliseconds and the result ships back as an Arrow
+    ``LocalTableScan`` — the same labels (min id per component) and
+    schema.  On the 493-edge candidate graph of the 4k-doc benchmark
+    corpus (local[4], candidates already materialized), the call is
+    ONE Spark job, the collect, where checkpointing, counting and
+    collecting the edges took 4; ``dedup_clusters`` then reads its
+    local table in 1 job where its csize groupBy and join took 3.
+    Graphs over the threshold run the distributed
+    iteration over the same checkpointed edges, so the upstream
+    pipeline still runs once; ``None`` disables the fast path.  Memory
+    honesty: the fast path collects up to threshold + 1 edge Rows — as
+    PYTHON OBJECTS that is roughly a few hundred bytes per edge, so the
+    500k default costs the driver a few hundred MB peak, not tens;
+    raise it only with driver heap to match.
     """
+    comps = _components(edges, src, dst, max_iters, checkpoint_dir, driver_threshold)
+    if isinstance(comps, DataFrame):
+        return comps.select("id", F.col("lbl").alias("cluster_id"))
+    return local_table(edges.sparkSession, list(comps.items()), _label_schema(edges, src, dst))
+
+
+def _components(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    max_iters: int,
+    checkpoint_dir: str | None,
+    driver_threshold: int | None,
+) -> dict | DataFrame:
+    """Component labels (min id per component) of ``edges``: a
+    ``{node: label}`` dict when the edge list fits ``driver_threshold``,
+    else the distributed iteration's (id, lbl) DataFrame.  See
+    :func:`connected_components` for both regimes."""
     spark = edges.sparkSession
     label_dirs: list[str] = []
     # per-invocation namespace: the reclaim logic below deletes
@@ -136,20 +163,25 @@ def connected_components(
         while len(label_dirs) > 1:
             _hadoop_rm(spark, label_dirs.pop(0))
 
-    # checkpoint the symmetric edge list FIRST so the (possibly very
-    # expensive) upstream candidate-pair pipeline materializes exactly
-    # once; labels then derive from the checkpointed edges
-    sym, edges_dir = _ckpt(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))),
-        "edges",
-    )
-    if driver_threshold is not None and sym.count() <= 2 * driver_threshold:
-        out = _driver_components(sym, edges, src)
-        if ns is not None:
-            _hadoop_rm(spark, ns)  # result is driver-local: drop the
-            # whole per-call namespace, not just the edges copy
-        return out
+    # the (possibly very expensive) upstream candidate-pair pipeline
+    # must run exactly once whichever regime wins: the edges are
+    # checkpointed before anything reads them.  Locally the checkpoint
+    # is lazy — the bounded collect below fills its blocks, and the
+    # iteration reads the same blocks if the graph is too big
+    pairs = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    if ns is None:
+        pairs, edges_dir = pairs.localCheckpoint(eager=False), None
+    else:
+        pairs, edges_dir = _ckpt(pairs, "edges")
+    if driver_threshold is not None:
+        rows = pairs.limit(driver_threshold + 1).collect()
+        if len(rows) <= driver_threshold:
+            if ns is not None:
+                _hadoop_rm(spark, ns)  # result is driver-local: drop the
+                # whole per-call namespace, not just the edges copy
+            return _union_find(rows)
+        del rows
+    sym = pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
     labels, d = _ckpt(
         sym.select(F.col("a").alias("id")).distinct().withColumn("lbl", F.col("id")),
         "labels_init",
@@ -194,15 +226,15 @@ def connected_components(
         if changed == 0:
             if edges_dir is not None:
                 _hadoop_rm(spark, edges_dir)  # labels stand alone now
-            return labels.select("id", F.col("lbl").alias("cluster_id"))
+            return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} iterations"
     )
 
 
-def _driver_components(sym: DataFrame, edges: DataFrame, src: str) -> DataFrame:
-    """Union-find over a collected small edge list; labels = min id per
-    component — the exact fixpoint the distributed iteration reaches."""
+def _union_find(edge_rows: list) -> dict:
+    """{node: smallest id in its component} over collected (a, b)
+    edge rows — the exact fixpoint the distributed iteration reaches."""
     parent: dict = {}
 
     def find(x):
@@ -213,12 +245,7 @@ def _driver_components(sym: DataFrame, edges: DataFrame, src: str) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    # one collect, NOT toLocalIterator: the threshold already bounds the
-    # edge list driver-side, and toLocalIterator pays one sequential
-    # job round PER PARTITION (measured 2x slower end-to-end)
-    edge_rows = sym.collect()
-    for row in edge_rows:
-        a, b = row[0], row[1]
+    for a, b in edge_rows:
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -228,22 +255,22 @@ def _driver_components(sym: DataFrame, edges: DataFrame, src: str) -> DataFrame:
             # union by MIN so the root is always the smallest id seen
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    # free the collected Rows before building output tuples so peak
-    # driver footprint is ~one copy of the graph, not two
-    del edge_rows
-
     # full path compression in place (parent values only ever move
-    # closer to the root), then the dict items ARE the output rows
+    # closer to the root)
     for x in parent:
         parent[x] = find(x)
-    rows = list(parent.items())
-    from pyspark.sql import types as T
+    return parent
 
+
+def _label_schema(edges: DataFrame, src: str, dst: str) -> T.StructType:
+    """(id, cluster_id) as the distributed iteration types them: ``id``
+    as nullable as either endpoint column, ``cluster_id`` (a ``min``)
+    nullable — so both regimes return the same schema."""
     id_t = edges.schema[src].dataType
-    schema = T.StructType(
-        [T.StructField("id", id_t, False), T.StructField("cluster_id", id_t, False)]
+    id_nullable = edges.schema[src].nullable or edges.schema[dst].nullable
+    return T.StructType(
+        [T.StructField("id", id_t, id_nullable), T.StructField("cluster_id", id_t, True)]
     )
-    return local_table(edges.sparkSession, rows, schema)
 
 
 def dedup_clusters(
@@ -255,19 +282,26 @@ def dedup_clusters(
 ) -> DataFrame:
     """(id, cluster_id, csize, keep) per clustered doc: components over
     the candidate pairs, cluster size, and the canonical-survivor flag
-    (smallest id in the cluster — the row a dedup pass would keep)."""
-    cc = connected_components(
-        edges, src, dst,
-        checkpoint_dir=checkpoint_dir,
-        driver_threshold=driver_threshold,
+    (smallest id in the cluster — the row a dedup pass would keep).
+    In the driver regime of :func:`connected_components` the one
+    union-find also sizes the clusters: a local table, no groupBy."""
+    comps = _components(edges, src, dst, 20, checkpoint_dir, driver_threshold)
+    if isinstance(comps, DataFrame):
+        cc = comps.select("id", F.col("lbl").alias("cluster_id"))
+        sizes = cc.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("csize"))
+        return cc.join(sizes, "cluster_id").select(
+            "id",
+            "cluster_id",
+            "csize",
+            (F.col("id") == F.col("cluster_id")).alias("keep"),
+        )
+    sizes = Counter(comps.values())
+    rows = [(i, c, sizes[c], i == c) for i, c in comps.items()]
+    # csize is a count (NOT NULL), keep compares with a nullable label
+    schema = _label_schema(edges, src, dst).add("csize", T.LongType(), False).add(
+        "keep", T.BooleanType(), True
     )
-    sizes = cc.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("csize"))
-    return cc.join(sizes, "cluster_id").select(
-        "id",
-        "cluster_id",
-        "csize",
-        (F.col("id") == F.col("cluster_id")).alias("keep"),
-    )
+    return local_table(edges.sparkSession, rows, schema)
 
 
 def cluster_representatives(

@@ -55,7 +55,7 @@ from cerberus_spark.checks.uniqueness import uniqueness_violations
 from cerberus_spark.rules import CompiledRule, CompiledRuleSet, compile_schema
 from cerberus_spark.sources.catalog import tool_catalog
 from cerberus_spark.sources.tables import local_table
-from cerberus_spark.validation import validate
+from cerberus_spark.validation import PASSED_COL, partition_summary
 
 #: north-rule transcript rule set (Cerberus-style rule dicts)
 TRANSCRIPT_RULES: dict[str, dict[str, Any]] = {
@@ -253,6 +253,13 @@ def all_violations(
     Rows equal, as a multiset, the union of the standalone checks
     (pytest-locked on clean and dirty input)."""
     ruleset = compile_schema(rules or TRANSCRIPT_RULES, df.schema)
+    return _all_violations(spark, df, ruleset, sequence_checks)
+
+
+def _all_violations(
+    spark: SparkSession, df: DataFrame, ruleset: CompiledRuleSet, sequence_checks: bool
+) -> DataFrame:
+    """:func:`all_violations` over an already compiled rule set."""
     checked = referential_flag(df, "tool", tool_catalog(spark), "tool", "_orphan")
     checks = ruleset.rules + [CompiledRule("tool", "referential", F.col("_orphan"))]
     if not sequence_checks:
@@ -419,6 +426,13 @@ def _stats_rows(wide: dict[str, Any]) -> list[Row]:
     ]
 
 
+def _passed_summary(df: DataFrame, ruleset: CompiledRuleSet) -> DataFrame:
+    """:meth:`ValidationResult.partition_summary` of ``validate(df)``,
+    from the plain ``_passed`` boolean alone: the summary never reads
+    the violation-struct array, so it is not built."""
+    return partition_summary(df.withColumn(PASSED_COL, ~ruleset.any_violated()))
+
+
 def full_validation(
     spark: SparkSession,
     df: DataFrame,
@@ -436,16 +450,15 @@ def full_validation(
     ``rules`` overrides the default transcript rule set;
     ``sequence_checks`` adds the sequence family to the violations
     sink plus the per-conversation ``conversation_health`` gate."""
-    violations = all_violations(spark, df, rules, sequence_checks=sequence_checks)
+    ruleset = compile_schema(rules or TRANSCRIPT_RULES, df.schema)
+    violations = _all_violations(spark, df, ruleset, sequence_checks)
     res_summary = violations.groupBy("field", "rule").agg(
         F.count(F.lit(1)).alias("n_violations")
     )
-    # partition summary needs the annotated frame (pass/fail per row)
-    annotated = validate(df, rules or TRANSCRIPT_RULES, key_cols=KEY_COLS)
     out = {
         "all_violations": violations,
         "rule_summary": res_summary,
-        "partition_summary": annotated.partition_summary(),
+        "partition_summary": _passed_summary(df, ruleset),
         "column_stats": transcript_stats(df),
         "drift": drift_reports(df, baseline),
     }
@@ -491,11 +504,10 @@ def run_full_validation(
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
-    violations = all_violations(spark, df, rules, sequence_checks=sequence_checks)
+    ruleset = compile_schema(rules or TRANSCRIPT_RULES, df.schema)
+    violations = _all_violations(spark, df, ruleset, sequence_checks)
     stats = Observation()
-    annotated = validate(
-        df.observe(stats, *_stats_aggs()), rules or TRANSCRIPT_RULES, key_cols=KEY_COLS
-    )
+    summary = _passed_summary(df.observe(stats, *_stats_aggs()), ruleset)
     sink_written = threading.Event()
 
     def violations_task() -> None:
@@ -530,7 +542,7 @@ def run_full_validation(
 
     tasks = [
         violations_task,
-        lambda: materialize(annotated.partition_summary()),
+        lambda: materialize(summary),
         lambda: materialize(drift_reports(df, baseline)),
     ]
     if sink_dir:

@@ -91,32 +91,38 @@ class ValidationResult:
         return {"rows": rows, "passed": ok, "failed": rows - ok}
 
     def partition_summary(self) -> DataFrame:
-        """Per-partition pass/fail + lineage: ``groupBy(spark_partition_id())``
-        over the plain ``_passed`` boolean, entirely JVM-side and never
-        building the violation structs.
+        """Per-partition pass/fail + lineage: :func:`partition_summary`
+        over the annotated frame."""
+        return partition_summary(self.annotated)
 
-        Partition ids alone are plan-dependent, so lineage keys include
-        the stable input file path(s) seen by each partition.
-        """
-        # reuse a pre-captured _file column when the caller tagged the
-        # scan already (e.g. checkpoint-resume semi-joins the scan
-        # against a file listing — input_file_name() is illegal above a
-        # plan with two file sources, so it must be captured below the
-        # join and carried through)
-        ann = self.annotated
-        if "_file" not in ann.columns:
-            ann = ann.withColumn("_file", F.input_file_name())
-        return (
-            ann.select(PASSED_COL, "_file")
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(
-                F.sort_array(F.collect_set("_file")).alias("files"),
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.when(F.col(PASSED_COL), 1).otherwise(0)).alias("n_pass"),
-            )
-            .withColumn("n_fail", F.col("rows") - F.col("n_pass"))
+
+def partition_summary(annotated: DataFrame) -> DataFrame:
+    """Per-partition pass/fail + lineage of a frame carrying the
+    ``_passed`` boolean (``_violations`` is never read):
+    ``groupBy(spark_partition_id())``, entirely JVM-side and never
+    building the violation structs.
+
+    Partition ids alone are plan-dependent, so lineage keys include
+    the stable input file path(s) seen by each partition.
+    """
+    # reuse a pre-captured _file column when the caller tagged the
+    # scan already (e.g. checkpoint-resume semi-joins the scan
+    # against a file listing — input_file_name() is illegal above a
+    # plan with two file sources, so it must be captured below the
+    # join and carried through)
+    if "_file" not in annotated.columns:
+        annotated = annotated.withColumn("_file", F.input_file_name())
+    return (
+        annotated.select(PASSED_COL, "_file")
+        .withColumn("partition_id", F.spark_partition_id())
+        .groupBy("partition_id")
+        .agg(
+            F.sort_array(F.collect_set("_file")).alias("files"),
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.when(F.col(PASSED_COL), 1).otherwise(0)).alias("n_pass"),
         )
+        .withColumn("n_fail", F.col("rows") - F.col("n_pass"))
+    )
 
 
 class ValidationSession:

@@ -706,3 +706,47 @@ def test_clean_corpus_fused_equals_staged(spark, edge_docs, kw):
     stages = {r.stage for r in fused["dropped"].collect()}
     assert {"quality", "near_dup"} <= stages
     assert ("exact_dup" in stages) == kw.get("normalize", True)  # docs 4/5 and 1/6
+
+
+#: two NULL-text documents among a keeper, its exact and near dups and
+#: a gate failure
+NULL_TEXT_DOCS = [
+    (1, BASE),
+    (2, None),
+    (3, BASE),
+    (4, BASE.replace("engine", "motor")),
+    (5, None),
+    (6, "tiny"),
+]
+
+
+@pytest.mark.parametrize("checkpoint_stages", [True, False])
+@pytest.mark.parametrize("arrow_gate", [True, False])
+def test_null_text_docs_are_kept(spark, tmp_path, arrow_gate, checkpoint_stages):
+    """The gate keeps a NULL-text document, and it has no fingerprint
+    and no signature, so it is never a dup: it lands in ``kept``.
+    Every document is in exactly one of ``kept`` and ``dropped``, and
+    the incremental pipeline agrees with the batch one."""
+    from cerberus_spark.corpus import compact_corpus, ingest_corpus_increment
+
+    docs = spark.createDataFrame(NULL_TEXT_DOCS, "doc_id long, text string")
+    kw = {"minhash_kwargs": {"num_hashes": 32, "shingle_k": 3}}
+    outs = clean_corpus(
+        docs, arrow_gate=arrow_gate, checkpoint_stages=checkpoint_stages,
+        bands=8, rows_per_band=4, **kw,
+    )
+    kept = sorted(r.doc_id for r in outs["kept"].collect())
+    dropped = {(r.id, r.stage, r.reason) for r in outs["dropped"].collect()}
+    dropped_ids = {d[0] for d in dropped}
+    assert kept == [1, 2, 5]
+    assert not set(kept) & dropped_ids
+    assert set(kept) | dropped_ids == {d[0] for d in NULL_TEXT_DOCS}
+    assert {(3, "exact_dup", "dup_of_1"), (4, "near_dup", "cluster_1")} <= dropped
+
+    work = str(tmp_path / "work")
+    for part in (F.col("doc_id") % 2 == 0, F.col("doc_id") % 2 == 1):
+        ingest_corpus_increment(docs.filter(part), work, **kw)
+    inc = compact_corpus(spark, work, bands=8, rows_per_band=4)
+    assert sorted(r.doc_id for r in inc["kept"].collect()) == kept
+    assert {(r.id, r.stage, r.reason) for r in inc["dropped"].collect()} == dropped
+    assert sorted(inc["report"].collect()) == sorted(outs["report"].collect())

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from cerberus_spark.operators.graph import connected_components, dedup_clusters
 
@@ -241,3 +242,49 @@ def test_driver_fast_path_checkpoint_cleanup(spark, tmp_path):
     }
     assert got == {1: 1, 2: 1, 3: 1}
     assert not any(os.scandir(ckdir)), "edges checkpoint not reclaimed"
+
+
+def _random_edges(spark, seed, nullable):
+    import random
+
+    rng = random.Random(seed)
+    pairs = [(rng.randrange(60), rng.randrange(60)) for _ in range(80)]
+    edges = _edges(spark, pairs)
+    if not nullable:
+        edges = edges.select(*(F.coalesce(c, F.lit(0)).alias(c) for c in edges.columns))
+        assert not any(f.nullable for f in edges.schema)
+    return edges
+
+
+@pytest.mark.parametrize("nullable", [True, False])
+@pytest.mark.parametrize("seed", [0, 1])
+def test_dedup_clusters_regimes_agree(spark, seed, nullable):
+    """The driver union-find and the distributed iteration
+    (``driver_threshold=1``) give equal rows and an equal schema,
+    nullability included."""
+    edges = _random_edges(spark, seed, nullable)
+    fast = dedup_clusters(edges)
+    slow = dedup_clusters(edges, driver_threshold=1)
+    assert fast.schema == slow.schema
+    assert sorted(fast.collect()) == sorted(slow.collect())
+    cc_fast = connected_components(edges)
+    cc_slow = connected_components(edges, driver_threshold=1)
+    assert cc_fast.schema == cc_slow.schema
+
+
+def test_over_threshold_runs_upstream_once(spark):
+    """Over ``driver_threshold`` the bounded collect and the iteration
+    read the same checkpointed edges: every upstream row is computed
+    once."""
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tick(x):
+        seen.add(1)
+        return x
+
+    pairs = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)]
+    edges = _edges(spark, pairs).withColumn("id_a", tick("id_a"))
+    got = {r.id: (r.cluster_id, r.csize) for r in dedup_clusters(edges, driver_threshold=2).collect()}
+    assert got[4] == (1, 4) and got[12] == (10, 3) and got[21] == (20, 2)
+    assert seen.value == len(pairs)

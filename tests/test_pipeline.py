@@ -85,9 +85,13 @@ def test_run_full_validation_sink_layout(spark, transcripts, tmp_path):
 
 
 def test_partition_summary_covers_all_rows(spark, transcripts):
+    """The pipeline's partition summary, built from ``_passed`` alone,
+    equals ``validate``'s."""
     outs = full_validation(spark, transcripts)
     ps = outs["partition_summary"].agg(F.sum("rows").alias("n")).collect()[0]
     assert ps["n"] == transcripts.count()
+    want = validate(transcripts, TRANSCRIPT_RULES, key_cols=KEY_COLS).partition_summary()
+    assert sorted(outs["partition_summary"].collect()) == sorted(want.collect())
 
 
 def test_validate_job_end_to_end_with_resume(spark, transcripts, tmp_path):

@@ -709,14 +709,69 @@ def test_ingest_corpus_increment_is_one_python_pass(spark, tmp_path, monkeypatch
         assert python_nodes(out) == ["MapInPandas"], (name, plan_of(out))
 
 
-def test_spread_runs_no_job(spark):
+def test_spread_runs_no_job(spark, count_jobs):
     """Deciding whether to repartition must not execute the plan: on
     a plan with a shuffle, counting output partitions would run it."""
     from cerberus_spark.sources.tables import spread
 
     agg = spark.range(100).groupBy((F.col("id") % 7).alias("k")).agg(F.count("*").alias("n"))
-    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
-    before = scheduler.nextJobId()
-    spread(agg)
-    spread(spark.range(10).coalesce(1))
-    assert scheduler.nextJobId() == before
+    with count_jobs() as jobs:
+        spread(agg)
+        spread(spark.range(10).coalesce(1))
+    assert jobs.n == 0
+
+
+def _dup_docs(spark):
+    """Documents that pass the default gate, with exact and near dups
+    and one gate failure: every stage of ``clean_corpus`` has work."""
+    words = [f"w{i:03d}" for i in range(400)]
+    base = [" ".join(words[i * 60 : i * 60 + 60]) for i in range(6)]
+    rows = [(i, t) for i, t in enumerate(base)]
+    rows += [(10 + i, base[i]) for i in range(3)]  # exact dups
+    rows += [(20 + i, base[i].replace(words[i * 60 + 5], "swapped")) for i in range(3)]  # near
+    rows += [(30, "too short")]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_clean_corpus_job_budget(spark, tmp_path, count_jobs):
+    """Every document is decided once, before the one checkpoint, and
+    a small candidate graph is clustered from one collect: running
+    ``clean_corpus`` and writing its three outputs stays within 10
+    Spark jobs (21 when each output re-derived the exact-dup verdict
+    and the clusters took five jobs of their own)."""
+    from cerberus_spark.corpus import clean_corpus
+
+    docs = _dup_docs(spark)
+    kw = {"minhash_kwargs": {"num_hashes": 32, "shingle_k": 3}, "bands": 8, "rows_per_band": 4}
+    with count_jobs() as jobs:
+        outs = clean_corpus(docs, **kw)
+        for name in ("kept", "dropped", "report"):
+            outs[name].write.parquet(str(tmp_path / name))
+    stages = {r.stage for r in spark.read.parquet(str(tmp_path / "dropped")).collect()}
+    assert stages == {"quality", "exact_dup", "near_dup"}
+    assert jobs.n <= 10, jobs.n
+
+
+def test_clean_corpus_outputs_read_the_verdict(spark):
+    """After the document checkpoint the outputs only filter it: no
+    fingerprint (md5) and no Exchange or Window on ``_fp`` in the plans
+    of ``kept``, ``dropped`` or ``report``."""
+    from cerberus_spark.corpus import clean_corpus
+
+    outs = clean_corpus(_dup_docs(spark))
+    for name in ("kept", "dropped", "report"):
+        plan = plan_of(outs[name])
+        assert "md5" not in plan, (name, plan)
+        assert "hashpartitioning(_fp" not in plan, (name, plan)
+        assert "Window" not in [n for _, n in plan_ops(plan)], (name, plan)
+
+
+def test_dedup_clusters_driver_regime_is_local_table(spark):
+    """A graph under ``driver_threshold`` is clustered on the driver:
+    the result is a local table, with no Exchange left to run."""
+    from cerberus_spark.operators.graph import dedup_clusters
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
+    plan = plan_of(dedup_clusters(edges))
+    assert "LocalTableScan" in plan, plan
+    assert n_exchanges(plan) == 0, plan
