@@ -4976,7 +4976,7 @@ SELECT rep.conv, n_turns, n_dup_idx, n_missing, n_below_start,
        (n_dup_idx = 0 AND n_missing = 0 AND n_below_start = 0
         AND coalesce(n_transition, 0) = 0 AND coalesce(n_null_state, 0) = 0
         AND coalesce(n_ts_regression, 0) = 0 AND coalesce(n_first_state, 0) = 0) AS keep
-FROM rep LEFT JOIN counts ON rep.conv = counts.conv
+FROM rep LEFT JOIN counts ON rep.conv IS NOT DISTINCT FROM counts.conv
 """
     out["lineitem_contiguity"] = """
 SELECT l_orderkey AS conv,

@@ -40,8 +40,8 @@ TMP = os.path.join(REPO, ".bench_tmp")
 # local SSDs (IO bandwidth scales with executors).  Measured r5: the
 # conv-window stage serialized on the shared ext4 scratch (~15 s at 32
 # cores at 57M turns) vs ~5 s with spark.local.dir on /dev/shm at
-# near-zero physical disk writes — see scripts/profile_scaling.py and
-# BASELINE.md §BENCH.
+# near-zero physical disk writes — see BASELINE.md §BENCH
+# (`perfbench/run.py --trace 1` times each layer today).
 SHM = "/dev/shm" if os.path.isdir("/dev/shm") else TMP
 SHM_SCRATCH = os.path.join(SHM, "cerberus_bench_scratch")
 

@@ -396,23 +396,18 @@ REPORT_COUNT_COLS = [
 
 
 def assemble_conversation_report(rep: DataFrame, counts: DataFrame) -> DataFrame:
-    """Final assembly of :func:`conversation_report`: join the
-    contiguity report (``n_rows`` already renamed ``n_turns``) with
-    per-conv sequence-rule counts (columns ``n_transition`` /
-    ``n_null_state`` / ``n_ts_regression`` / ``n_first_state``) and
-    derive ``keep``.  Exposed so callers that already MATERIALIZED the
-    per-row sequence violations (e.g. the pipeline's audit sink) can
-    roll the health gate up from those rows instead of paying the
-    window pass twice — same output by construction."""
-    return finalize_conversation_report(rep.join(counts, "conv", "left"))
-
-
-def finalize_conversation_report(joined: DataFrame) -> DataFrame:
-    """Shared tail of the health gate: null-fill every violation
-    counter (a conversation absent from a counts side has zero
-    violations), derive the composite ``keep``, and fix the column
-    order.  ``joined`` must carry ``conv``, ``n_turns`` and the
-    :data:`REPORT_COUNT_COLS` (possibly NULL)."""
+    """Final assembly of :func:`conversation_report`: left-join the
+    per-conv ``rep`` (``conv``, ``n_turns`` and any of the
+    :data:`REPORT_COUNT_COLS`) with per-conv ``counts`` (the rest of
+    them), null-fill every counter (a conversation absent from a counts
+    side has zero violations), derive ``keep`` and fix the column
+    order.  The join is null-safe: a NULL conversation id is one
+    conversation, as in the ``groupBy`` that built both sides.
+    Exposed so callers that already MATERIALIZED the per-row sequence
+    violations (e.g. the pipeline's audit sink) can roll the health
+    gate up from those rows instead of paying the window pass twice —
+    same output by construction."""
+    joined = rep.join(counts, rep["conv"].eqNullSafe(counts["conv"]), "left").drop(counts["conv"])
     joined = joined.fillna(0, subset=REPORT_COUNT_COLS)
     keep = F.lit(True)
     for c in REPORT_COUNT_COLS:

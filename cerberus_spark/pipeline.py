@@ -4,18 +4,20 @@ transcript table — few, fat Catalyst plans, not many thin ones.
 This is the north-rule workload — the batch analog of the reference's
 entire event loop (classify -> enrich -> aggregate -> dedup -> report,
 cmd/cerberus/main.go:153-211 + internal/monitor/monitor.go:197-408).
-The reference runs each event through that loop once;
-:func:`run_full_validation` reads the table in four independent tasks:
+The reference runs each event through that loop once and reports from
+it; :func:`run_full_validation` is the one orchestration here (bench,
+``perfbench``, ``jobs/validate_job.py`` and the tests all call it) and
+reads the table in four independent tasks:
 
   1. violations sink   — :func:`all_violations`: rule violations ∪
                          uniqueness dups ∪ referential orphans (∪ the
                          sequence family with ``sequence_checks``) as
-                         one normalized sink (conv_id, turn_idx, field,
-                         rule, value); with ``sequence_checks`` from
-                         ONE scan and ONE conv-keyed exchange, without
-                         them one scan plus a key-only uniqueness
-                         groupBy
-  2. partition summary — per-partition pass/fail + input files over the
+                         one normalized parquet sink (conv_id,
+                         turn_idx, field, rule, value); with
+                         ``sequence_checks`` from ONE scan and ONE
+                         conv-keyed exchange, without them one scan
+                         plus a key-only uniqueness groupBy
+  2. partition summary — pass/fail per (partition, input file) over the
                          plain ``_passed`` boolean (monitor.go:514-584
                          analog); the column stats ride its scan as an
                          ``Observation``
@@ -25,19 +27,23 @@ The reference runs each event through that loop once;
                          grouping-sets scan
   4. rollups           — (field, rule) counts and, with
                          ``sequence_checks``, the per-conversation
-                         ``conversation_health`` gate, both read back
-                         FROM the sink (one extra per-conv row count)
+                         ``conversation_health`` gate (parquet, next to
+                         the violations), both read back FROM the sink
+                         (one extra per-conv row count)
 
-Measured with ``perfbench/run.py --workload validate_turns --trace 1``
-(149k turns, ``sequence_checks=True``, local[4] on a 4-core VM): 18
-Spark jobs and 5.0 input scans per run (sink 1, partition summary 1,
-drift 2, health 1).  The tasks go to a driver-side thread pool so each
-action's planning and scheduling overlaps the others' execution.
-Shapes: rules are scan + codegen'd predicates, referential is a
-broadcast join (map-side), uniqueness shares the sequence rules' one
-window sort (without ``sequence_checks`` it is a key-only groupBy
-instead), drift shuffles histogram-sized data, and nothing collects
-more than summary rows to the driver.
+Row-sized outputs go to the sink; summary-sized ones come back to the
+driver as rows.  Measured with ``perfbench/run.py --workload
+validate_turns --trace 1`` (149k turns, ``sequence_checks=True``,
+local[4] on a 4-core VM): 17 Spark jobs and 5.0 input scans per run
+(sink 1, partition summary 1, drift 2, health 1).  On the 700-conv
+test input at local[8]: 14 jobs, 18 with ``sequence_checks``; the CLI
+adds 4 (one write per summary table).  The tasks go to a driver-side
+thread pool so each action's planning and scheduling overlaps the
+others' execution.  Shapes: rules are scan + codegen'd predicates,
+referential is a broadcast join (map-side), uniqueness shares the
+sequence rules' one window sort (without ``sequence_checks`` it is a
+key-only groupBy instead), drift shuffles histogram-sized data, and
+nothing collects more than summary rows to the driver.
 """
 
 from __future__ import annotations
@@ -50,7 +56,12 @@ from pyspark.sql import functions as F
 
 from cerberus_spark.checks.drift import categorical_histogram, drift_report, numeric_histogram
 from cerberus_spark.checks.referential import referential_flag
-from cerberus_spark.checks.sequence import conversation_report, sequence_rules, sequence_window
+from cerberus_spark.checks.sequence import (
+    assemble_conversation_report,
+    conversation_report,
+    sequence_rules,
+    sequence_window,
+)
 from cerberus_spark.checks.uniqueness import uniqueness_violations
 from cerberus_spark.rules import CompiledRule, CompiledRuleSet, compile_schema
 from cerberus_spark.sources.catalog import tool_catalog
@@ -161,8 +172,6 @@ def conversation_health_from_violations(df: DataFrame, viol: DataFrame) -> DataF
     per-conv row count (map-side partial agg, no window sort).
     Output equal to :func:`conversation_health` by construction
     (shared assembly; equality pytest-locked)."""
-    from cerberus_spark.checks.sequence import finalize_conversation_report
-
     density = (
         viol.filter(F.col("rule").startswith("seq_"))
         .groupBy(F.col("conv_id").alias("conv"))
@@ -191,12 +200,8 @@ def conversation_health_from_violations(df: DataFrame, viol: DataFrame) -> DataF
             ],
         )
     )
-    joined = (
-        df.groupBy(F.col("conv_id").alias("conv"))
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .join(density, "conv", "left")
-    )
-    return finalize_conversation_report(joined)
+    turns = df.groupBy(F.col("conv_id").alias("conv")).agg(F.count(F.lit(1)).alias("n_turns"))
+    return assemble_conversation_report(turns, density)
 
 
 def materialize(df: DataFrame) -> None:
@@ -433,60 +438,45 @@ def _passed_summary(df: DataFrame, ruleset: CompiledRuleSet) -> DataFrame:
     return partition_summary(df.withColumn(PASSED_COL, ~ruleset.any_violated()))
 
 
-def full_validation(
-    spark: SparkSession,
-    df: DataFrame,
-    baseline: DataFrame | None = None,
-    rules: dict | None = None,
-    sequence_checks: bool = False,
-) -> dict[str, DataFrame]:
-    """Build every check's result DataFrame for a transcript table.
-    All entries are lazy EXCEPT ``drift`` when ``baseline`` is None:
-    the self-drift fallback runs its single histogram scan (and the
-    driver-side KL/PSI math on the histogram-sized collect) at build
-    time — pass an explicit baseline for a fully lazy dict.
-    ``baseline`` defaults to the older half of ``df`` by median
-    timestamp — in production it is the frozen snapshot table;
-    ``rules`` overrides the default transcript rule set;
-    ``sequence_checks`` adds the sequence family to the violations
-    sink plus the per-conversation ``conversation_health`` gate."""
-    ruleset = compile_schema(rules or TRANSCRIPT_RULES, df.schema)
-    violations = _all_violations(spark, df, ruleset, sequence_checks)
-    res_summary = violations.groupBy("field", "rule").agg(
-        F.count(F.lit(1)).alias("n_violations")
-    )
-    out = {
-        "all_violations": violations,
-        "rule_summary": res_summary,
-        "partition_summary": _passed_summary(df, ruleset),
-        "column_stats": transcript_stats(df),
-        "drift": drift_reports(df, baseline),
-    }
-    if sequence_checks:
-        out["conversation_health"] = conversation_health(df)
-    return out
+#: the summary-sized outputs :func:`run_full_validation` returns as
+#: driver rows, each with its schema (DDL) for writing them back out
+SUMMARY_SCHEMAS = {
+    "column_stats": "column_name string, null_rate double, approx_distinct long, "
+    "text_len_q50_q95_q99 array<int>",
+    "rule_summary": "field string, rule string, n_violations long",
+    "partition_summary": "partition_id int, file string, rows long, n_pass long, n_fail long",
+    "drift": "column_name string, kl double, psi double",
+}
 
 
 def run_full_validation(
     spark: SparkSession,
     df: DataFrame,
+    sink_dir: str,
     baseline: DataFrame | None = None,
-    sink_dir: str | None = None,
     rules: dict | None = None,
     sequence_checks: bool = False,
-) -> list[Row]:
-    """Materialize every check (the benched unit of work), submitted
-    from a small driver-side thread pool, and return the column stats:
-    the rows of :func:`transcript_stats`.
+) -> dict[str, list[Row]]:
+    """Run every check (the benched unit of work and the CLI's one
+    call), submitted from a small driver-side thread pool.
+
+    Row-sized outputs land as parquet under ``sink_dir``:
+    ``violations`` and, with ``sequence_checks``, the per-conversation
+    ``conversation_health`` gate.  Summary-sized outputs come back as
+    driver rows, keyed as in :data:`SUMMARY_SCHEMAS`: ``column_stats``
+    (the rows of :func:`transcript_stats`), ``rule_summary`` (the
+    (field, rule) counts), ``partition_summary`` (pass/fail per
+    partition and input file) and ``drift`` (KL/PSI per column).
+    ``baseline`` defaults to the older half of ``df`` by median
+    timestamp; ``rules`` overrides :data:`TRANSCRIPT_RULES`.
 
     The tasks are the violations sink, the partition summary, drift
-    and, with ``sink_dir``, the rollups of the sink.  They are
-    independent (the sink->rollup chain stays ordered), so overlapping
-    them hides the driver-side planning and scheduling each action
-    pays; concurrent actions from threads are a supported Spark pattern
-    (one scheduler, shared executors).  The self-drift histogram
-    collect runs inside its task, so its driver-side KL math overlaps
-    the other jobs too.
+    and the rollups of the sink.  They are independent (the
+    sink->rollup chain stays ordered), so overlapping them hides the
+    driver-side planning and scheduling each action pays; concurrent
+    actions from threads are a supported Spark pattern (one scheduler,
+    shared executors).  The self-drift histogram collect runs inside
+    its task, so its driver-side KL math overlaps the other jobs too.
 
     The column stats have no job of their own: their aggregates are one
     ``Observation`` on the partition summary's scan.  That is one scan
@@ -494,12 +484,9 @@ def run_full_validation(
     ``sequence_checks`` scans twice, and an observation there would
     ride (and widen) its key-pruned uniqueness scan too.
 
-    With ``sink_dir`` the violations land in a real parquet sink and
-    the (field, rule) summary and the conversation health gate derive
-    FROM the sink — the production shape (audit table then rollup), so
-    the rule cascade and the sequence window each run once.  Without
-    it, every output goes to the noop sink and the rollups recompute
-    from source.
+    The (field, rule) summary and the conversation health gate derive
+    FROM the written sink (audit table, then rollup), so the rule
+    cascade and the sequence window each run once.
     """
     import threading
     from concurrent.futures import ThreadPoolExecutor
@@ -509,49 +496,40 @@ def run_full_validation(
     stats = Observation()
     summary = _passed_summary(df.observe(stats, *_stats_aggs()), ruleset)
     sink_written = threading.Event()
+    out: dict[str, list[Row]] = {}
 
     def violations_task() -> None:
-        if sink_dir:
-            try:
-                violations.write.mode("overwrite").parquet(f"{sink_dir}/violations")
-            finally:
-                # ALWAYS release the rollup task — on write failure it
-                # reads the missing path and fails loudly too, instead
-                # of deadlocking the pool
-                sink_written.set()
-        else:
-            materialize(violations)
-            materialize(
-                violations.groupBy("field", "rule").agg(
-                    F.count(F.lit(1)).alias("n_violations")
-                )
-            )
+        try:
+            violations.write.mode("overwrite").parquet(f"{sink_dir}/violations")
+        finally:
+            # ALWAYS release the rollup task — on write failure it
+            # reads the missing path and fails loudly too, instead of
+            # deadlocking the pool
+            sink_written.set()
 
     def rollups_task() -> None:
         # gated on the write, in its own thread so it shares only the
         # WAIT with the violations task, not its thread
         sink_written.wait()
         sunk = spark.read.parquet(f"{sink_dir}/violations")
-        materialize(
-            sunk.groupBy("field", "rule").agg(
-                F.count(F.lit(1)).alias("n_violations")
-            )
+        out["rule_summary"] = (
+            sunk.groupBy("field", "rule").agg(F.count(F.lit(1)).alias("n_violations")).collect()
         )
         if sequence_checks:
-            materialize(conversation_health_from_violations(df, sunk))
+            conversation_health_from_violations(df, sunk).write.mode("overwrite").parquet(
+                f"{sink_dir}/conversation_health"
+            )
 
-    tasks = [
-        violations_task,
-        lambda: materialize(summary),
-        lambda: materialize(drift_reports(df, baseline)),
-    ]
-    if sink_dir:
-        tasks.append(rollups_task)
-    if sequence_checks and not sink_dir:
-        # no sink to roll up from: pay the recompute in its own task
-        tasks.append(lambda: materialize(conversation_health(df)))
+    def summary_task() -> None:
+        out["partition_summary"] = summary.collect()
+
+    def drift_task() -> None:
+        out["drift"] = drift_reports(df, baseline).collect()
+
+    tasks = [violations_task, summary_task, drift_task, rollups_task]
     with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
         futures = [pool.submit(t) for t in tasks]
         for f in futures:
             f.result()  # propagate the first failure
-    return _stats_rows(stats.get)
+    out["column_stats"] = _stats_rows(stats.get)
+    return out

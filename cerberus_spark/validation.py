@@ -97,27 +97,24 @@ class ValidationResult:
 
 
 def partition_summary(annotated: DataFrame) -> DataFrame:
-    """Per-partition pass/fail + lineage of a frame carrying the
+    """Pass/fail per (partition, input file) of a frame carrying the
     ``_passed`` boolean (``_violations`` is never read):
-    ``groupBy(spark_partition_id())``, entirely JVM-side and never
-    building the violation structs.
+    ``groupBy(spark_partition_id(), file)``, entirely JVM-side and
+    never building the violation structs.
 
-    Partition ids alone are plan-dependent, so lineage keys include
-    the stable input file path(s) seen by each partition.
+    Partition ids alone are plan-dependent, so each row also carries
+    the stable input file path; per-file counts are exact sums even
+    when Spark packs several small files into one partition.
     """
     # reuse a pre-captured _file column when the caller tagged the
     # scan already (e.g. checkpoint-resume semi-joins the scan
     # against a file listing — input_file_name() is illegal above a
     # plan with two file sources, so it must be captured below the
     # join and carried through)
-    if "_file" not in annotated.columns:
-        annotated = annotated.withColumn("_file", F.input_file_name())
+    file = F.col("_file") if "_file" in annotated.columns else F.input_file_name()
     return (
-        annotated.select(PASSED_COL, "_file")
-        .withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
+        annotated.groupBy(F.spark_partition_id().alias("partition_id"), file.alias("file"))
         .agg(
-            F.sort_array(F.collect_set("_file")).alias("files"),
             F.count(F.lit(1)).alias("rows"),
             F.sum(F.when(F.col(PASSED_COL), 1).otherwise(0)).alias("n_pass"),
         )

@@ -20,13 +20,25 @@ executors; the same invocation works on YARN/K8s/standalone — only
 Locally (this sandbox) the same file runs under plain python with
 --master local[N] resolved by cerberus_spark.session.get_spark.
 
-Design notes at scale:
-- rule dicts compile ONCE on the driver to Column trees; nothing is
-  shipped per-row (SURVEY.md §7);
-- with --resume, completed input files are anti-joined out via the
-  audit log (checkpoint-resume, cerberus_spark.plans.checkpoint);
-- violations/summary/drift land in the sink; per-partition lineage
-  rows include stable input file ids, not plan-dependent partition ids.
+The job is a thin CLI over ``pipeline.run_full_validation``, the same
+call the benchmark measures.  Before it: argument parsing,
+``--expect-schema`` (metadata only), ``--suggest-rules`` (bootstrap,
+then exit) and, with ``--resume``, a semi-join of the scan against the
+input files the audit log has not completed.  After it, the sink holds:
+
+    <sink>/violations           (conv_id, turn_idx, field, rule, value);
+                                seq_* rows with --sequence-checks
+    <sink>/conversation_health  per-conversation gate, --sequence-checks only
+    <sink>/rule_summary         (field, rule, n_violations)
+    <sink>/partition_summary    (partition_id, file, rows, n_pass, n_fail)
+    <sink>/drift                (column_name, kl, psi)
+    <sink>/column_stats         null rate, approx distinct, text-length quantiles
+
+With ``--resume`` the audit log records the partition summary's rows
+per input file, and ``input_turns`` is the rows this run validated.
+On a 700-conversation input at local[8] the job launches 18 Spark jobs
+(22 with ``--sequence-checks``, 24 with ``--resume``):
+``run_full_validation``'s plus one write per summary table.
 """
 
 from __future__ import annotations
@@ -54,8 +66,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--sequence-checks",
         action="store_true",
-        help="also run turn-contiguity + role-grammar + ts-monotonicity "
-        "checks (checks.sequence); violations land in <sink>/sequence",
+        help="also run the sequence family (turn-index density, role "
+        "grammar, ts order) as seq_* rows in <sink>/violations, and "
+        "write the per-conversation gate to <sink>/conversation_health",
     )
     p.add_argument(
         "--expect-schema",
@@ -91,7 +104,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from cerberus_spark import pipeline
     from cerberus_spark.plans.checkpoint import AuditLog, input_units, normalize_unit
-    from cerberus_spark.validation import validate
+    from cerberus_spark.sources.tables import local_table
 
     rules = pipeline.TRANSCRIPT_RULES
     if args.rules:
@@ -125,8 +138,6 @@ def main(argv: list[str] | None = None) -> int:
                           "n_fields": len(suggested)}))
         return 0
 
-    audit = None
-    resume_tagged = None
     if args.resume:
         audit = AuditLog(spark, args.resume)
         units = input_units(args.input, spark)
@@ -141,74 +152,47 @@ def main(argv: list[str] | None = None) -> int:
         # the ORIGINAL scan; the scheme-stripped form is only the audit
         # join key.  input_file_name() is captured ONCE here, directly
         # above the parquet relation — Spark forbids it above a plan
-        # with two file sources, and the audit step below needs it.
+        # with two file sources, and the partition summary needs it.
         tagged = df.withColumn("_file", F.input_file_name()).withColumn(
             "_unit", normalize_unit(F.col("_file"))
         )
-        # pending side is one row per FILE -> broadcast
-        resume_tagged = tagged.join(
+        # pending side is one row per FILE -> broadcast; keep _file:
+        # the partition summary (and so the audit) reuses it instead
+        # of re-calling input_file_name()
+        df = tagged.join(
             F.broadcast(todo.select(F.col("unit").alias("_unit"))),
             "_unit",
             "left_semi",
         ).drop("_unit")
-        # keep _file: downstream lineage (partition_summary, audit)
-        # reuses it instead of re-calling input_file_name()
-        df = resume_tagged
 
     baseline = spark.read.parquet(args.baseline) if args.baseline else None
 
     t0 = time.perf_counter()
-    outs = pipeline.full_validation(spark, df, baseline, rules=rules)
-    outs["all_violations"].write.mode("overwrite").parquet(f"{args.sink}/violations")
-    outs["partition_summary"].write.mode("overwrite").parquet(f"{args.sink}/partition_summary")
-    outs["drift"].write.mode("overwrite").parquet(f"{args.sink}/drift")
-    sunk = spark.read.parquet(f"{args.sink}/violations")
-    (
-        sunk.groupBy("field", "rule")
-        .agg(F.count(F.lit(1)).alias("n_violations"))
-        .write.mode("overwrite")
-        .parquet(f"{args.sink}/rule_summary")
+    outs = pipeline.run_full_validation(
+        spark,
+        df,
+        sink_dir=args.sink,
+        baseline=baseline,
+        rules=rules,
+        sequence_checks=args.sequence_checks,
     )
-    if args.sequence_checks:
-        from cerberus_spark.checks.sequence import (
-            contiguity_violations,
-            sequence_violations,
-        )
-
-        # transcript grammar: conversations open with 'system'; every
-        # turn may hand off to any in-domain role (the per-field
-        # `allowed` rule already flags out-of-domain roles, so the
-        # grammar here only pins the opening turn and ts order — teams
-        # tighten `allowed_transitions` per corpus)
-        roles = ["system", "user", "assistant", "tool"]
-        seq = sequence_violations(
-            df,
-            "conv_id",
-            "role",
-            "ts",
-            ["turn_idx", "ts"],
-            allowed={(a, b) for a in roles for b in roles},
-            allowed_first={"system"},
-        ).select("conv_id", "turn_idx", "prev_state", "rule")
-        seq.write.mode("overwrite").parquet(f"{args.sink}/sequence")
-        contiguity_violations(df, "conv_id", "turn_idx").write.mode(
-            "overwrite"
-        ).parquet(f"{args.sink}/contiguity")
+    tables = {
+        name: local_table(spark, outs[name], ddl)
+        for name, ddl in pipeline.SUMMARY_SCHEMAS.items()
+    }
+    for name, table in tables.items():
+        table.write.mode("overwrite").parquet(f"{args.sink}/{name}")
     wall = time.perf_counter() - t0
 
-    if audit is not None:
-        res = validate(resume_tagged, rules)
+    if args.resume:
         per_file = (
-            res.annotated.groupBy(normalize_unit(F.col("_file")).alias("unit"))
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.when(F.col("_passed"), 1).otherwise(0)).alias("n_pass"),
-            )
-            .withColumn("n_fail", F.col("rows") - F.col("n_pass"))
+            tables["partition_summary"]
+            .groupBy(normalize_unit(F.col("file")).alias("unit"))
+            .agg(*[F.sum(c).alias(c) for c in ("rows", "n_pass", "n_fail")])
         )
         audit.record(per_file)
 
-    n = spark.read.parquet(args.input).count()
+    n = sum(r["rows"] for r in outs["partition_summary"])
     print(json.dumps({"status": "ok", "input_turns": n, "wall_sec": round(wall, 3)}))
     return 0
 

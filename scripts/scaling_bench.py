@@ -57,10 +57,10 @@ def _run_level_inprocess(parallelism: int, data_path: str, runs: int = 7) -> dic
     # per-executor local SSDs, i.e. disk bandwidth scales WITH
     # executor count.  On the shared disk the r5 window stage held
     # ~15 s at 32 cores vs ~5 s with spark.local.dir on /dev/shm at
-    # near-zero physical writes (scripts/profile_scaling.py, BASELINE
-    # §BENCH r5 note) — the ext4 scratch was serializing IO the engine
-    # parallelizes, exactly the class of exogenous artifact (like
-    # hypervisor steal) the criterion is not meant to measure.
+    # near-zero physical writes (BASELINE §BENCH r5 note) — the ext4
+    # scratch was serializing IO the engine parallelizes, exactly the
+    # class of exogenous artifact (like hypervisor steal) the
+    # criterion is not meant to measure.
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else TMP
     local_dir = os.path.join(shm, f"cerberus_scaling_local_{parallelism}")
     # HEAP SCALES WITH THE CORE BUDGET (constant GB/core): on a real
@@ -152,8 +152,8 @@ throughput).  Shuffle partitions scale ~2x cores; shuffle scratch
 executor-local-disk stand-in (this sandbox has ONE shared virtio disk;
 a real cluster's shuffle/sink IO bandwidth scales with executor count
 — on the shared ext4 scratch the window stage serialized at 32 cores,
-~15 s vs ~5 s on tmpfs at near-zero physical writes, see
-`scripts/profile_scaling.py`).  Best of 7 runs after two warmup
+~15 s vs ~5 s on tmpfs at near-zero physical writes, BASELINE.md
+§BENCH r5 note).  Best of 7 runs after two warmup
 passes.  Best-of is the right statistic here: this VM
 measures 3-16% hypervisor CPU steal that arrives in bursts (spread
 between runs of the identical job is 2-3x), and steal load is

@@ -1,11 +1,19 @@
 from __future__ import annotations
 
+import os
+import sys
 from contextlib import contextmanager
 from types import SimpleNamespace
 
 import pytest
 
-from cerberus_spark.session import get_spark
+#: the checkout these tests run from: ``jobs``, ``__spark_entry__`` and
+#: the package import from here
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
+
+from cerberus_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")

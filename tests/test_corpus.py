@@ -69,9 +69,7 @@ def test_clean_corpus_normalization_unifies_dups(spark):
 
 def test_corpus_job_cli(spark, corpus, tmp_path):
     import json
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from jobs.corpus_job import main
 
     inp = str(tmp_path / "docs")
@@ -277,9 +275,6 @@ def test_clean_corpus_lm_filter_stage(spark):
 
 
 def test_corpus_job_cli_lm_filter(spark, tmp_path):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from jobs.corpus_job import main
 
     # reuse the lm fixture shape: 9 distinct docs, varying rare-token
@@ -484,9 +479,7 @@ def test_clean_transcripts_partition_invariance(spark):
 
 def test_transcript_job_cli(spark, tmp_path):
     import json
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from jobs.transcript_job import main
 
     df = _transcript_fixture(spark)
@@ -520,9 +513,6 @@ def test_transcript_job_cli(spark, tmp_path):
 
 
 def test_transcript_job_cli_bad_grammar(tmp_path):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from jobs.transcript_job import main
 
     grammar = tmp_path / "grammar.json"
@@ -596,9 +586,7 @@ def test_transcript_job_cli_incremental(spark, tmp_path):
     """--incremental CLI path: stream-ingest + compact writes the same
     sink layout and keeps the same conversations as batch mode."""
     import json
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from jobs.transcript_job import main
 
     df = _transcript_fixture(spark)

@@ -204,11 +204,9 @@ def test_validate_nested_pair_null_props_parity(spark, tmp_path):
     must fire the TOP-LEVEL ('p','required') — not ('p.k','required')
     — in BOTH engines.  Regression for the oracle's p_present proxy."""
     import datetime as dt
-    import sys
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry
 
     T0 = dt.datetime(2026, 1, 1)
@@ -250,11 +248,8 @@ def test_perplexity_buckets_pair_null_lang_parity(spark, tmp_path):
     NULL-group document must appear WITH a NULL bucket in BOTH engines
     (quantile_buckets' documented passthrough) — not silently drop out
     of the oracle via a NULL-blind threshold join."""
-    import sys
-
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry
 
     rows = [
@@ -282,3 +277,43 @@ def test_perplexity_buckets_pair_null_lang_parity(spark, tmp_path):
     assert got == want, (got, want)
     null_rows = [(d, l, b) for d, l, b in got if l is None]
     assert null_rows == [(9, None, None)]  # present, unbucketed — both engines
+
+
+def test_conversation_gate_pair_null_user_parity(spark, tmp_path):
+    """Cross-engine parity of the conversation_gate contract pair when
+    user_id is NULL: both engines treat the NULL user as one
+    conversation and join its sequence counts to its contiguity row
+    null-safely, so its violations are counted, not zeroed."""
+    import datetime as dt
+
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    T0 = dt.datetime(2026, 1, 1)
+    rows = [
+        (1, T0, None, "view", 1.0, '{"k": 0}'),
+        (2, T0 + dt.timedelta(seconds=1), None, "purchase", 1.0, '{"k": 0}'),
+        (3, T0 + dt.timedelta(seconds=2), None, "purchase", 1.0, '{"k": 2}'),
+        (4, T0, 10, "view", 1.0, '{"k": 0}'),
+        (5, T0 + dt.timedelta(seconds=1), 10, "click", 1.0, '{"k": 1}'),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+    sf_dir = str(tmp_path)
+    df.coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/events.parquet")
+
+    got = sorted(
+        map(tuple, entry.queries()["conversation_gate"](spark, sf_dir).collect()), key=repr
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet/*.parquet'"
+    )
+    want = sorted(con.execute(entry.oracle_sql()["conversation_gate"]).fetchall(), key=repr)
+    assert got == want, (got, want)
+    # NULL user: dup k 0, missing k 1, purchase -> purchase disallowed
+    assert (None, 3, 1, 1, 0, 1, 0, 0, 0, False) in got

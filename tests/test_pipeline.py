@@ -16,11 +16,11 @@ from cerberus_spark.pipeline import (
     TRANSCRIPT_RULES,
     all_violations,
     drift_reports,
-    full_validation,
     run_full_validation,
     sequence_violation_rows,
     transcript_stats,
 )
+from cerberus_spark.plans.checkpoint import normalize_unit
 from cerberus_spark.rules import python_validate
 from cerberus_spark.sources.catalog import TOOLS, tool_catalog
 from cerberus_spark.validation import validate
@@ -84,22 +84,20 @@ def test_run_full_validation_sink_layout(spark, transcripts, tmp_path):
     assert sunk.count() > 0
 
 
-def test_partition_summary_covers_all_rows(spark, transcripts):
-    """The pipeline's partition summary, built from ``_passed`` alone,
-    equals ``validate``'s."""
-    outs = full_validation(spark, transcripts)
-    ps = outs["partition_summary"].agg(F.sum("rows").alias("n")).collect()[0]
-    assert ps["n"] == transcripts.count()
+def test_partition_summary_covers_all_rows(spark, transcripts, tmp_path):
+    """The partition summary rows ``run_full_validation`` returns,
+    built from ``_passed`` alone, cover every row and equal
+    ``validate``'s."""
+    got = run_full_validation(spark, transcripts, sink_dir=str(tmp_path / "sink"))
+    parts = got["partition_summary"]
+    assert sum(r["rows"] for r in parts) == transcripts.count()
     want = validate(transcripts, TRANSCRIPT_RULES, key_cols=KEY_COLS).partition_summary()
-    assert sorted(outs["partition_summary"].collect()) == sorted(want.collect())
+    assert sorted(parts) == sorted(want.collect())
 
 
 def test_validate_job_end_to_end_with_resume(spark, transcripts, tmp_path):
     """Drive jobs/validate_job.py main() twice: first run validates and
     records the audit; second run anti-joins everything out."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from jobs.validate_job import main
 
     inp = str(tmp_path / "input")
@@ -122,13 +120,10 @@ def test_validate_job_end_to_end_with_resume(spark, transcripts, tmp_path):
 
 
 def test_validate_job_sequence_checks_flag(spark, transcripts, tmp_path):
-    """--sequence-checks lands grammar/order violations in
-    <sink>/sequence and index-density violations in <sink>/contiguity;
-    the duplicated turn-1 rows injected by the generator must surface
-    as contiguity dups."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
+    """--sequence-checks lands the sequence family as seq_* rows in
+    <sink>/violations and the per-conversation gate in
+    <sink>/conversation_health; the generator's 'critic' roles break
+    the grammar and its duplicated turn-1 rows surface as dup indexes."""
     from jobs.validate_job import main
 
     inp = str(tmp_path / "input")
@@ -137,11 +132,100 @@ def test_validate_job_sequence_checks_flag(spark, transcripts, tmp_path):
 
     rc = main(["--input", inp, "--sink", sink, "--sequence-checks"])
     assert rc == 0
-    seq = spark.read.parquet(f"{sink}/sequence")
-    # generator critic roles are outside the in-domain transition set
-    assert seq.filter(F.col("rule") == "transition").count() > 0
-    cont = spark.read.parquet(f"{sink}/contiguity")
-    assert cont.filter(F.col("n_dup_idx") > 0).count() > 0
+    v = spark.read.parquet(f"{sink}/violations")
+    assert v.filter(F.col("rule") == "seq_transition").count() > 0
+    health = spark.read.parquet(f"{sink}/conversation_health")
+    assert health.filter(F.col("n_dup_idx") > 0).count() > 0
+
+
+@pytest.mark.parametrize("sequence_checks", [True, False])
+def test_validate_job_equals_run_full_validation(spark, transcripts, tmp_path, sequence_checks):
+    """The CLI is a thin caller of ``run_full_validation``: its
+    violations equal the pipeline's sink as a multiset, and its summary
+    tables hold the rows the pipeline returns."""
+    from cerberus_spark.pipeline import SUMMARY_SCHEMAS
+    from jobs.validate_job import main
+
+    inp = str(tmp_path / "input")
+    transcripts.write.mode("overwrite").parquet(inp)
+    cli, rfv = str(tmp_path / "cli"), str(tmp_path / "rfv")
+    flags = ["--sequence-checks"] if sequence_checks else []
+    assert main(["--input", inp, "--sink", cli, *flags]) == 0
+    got = run_full_validation(
+        spark, spark.read.parquet(inp), sink_dir=rfv, sequence_checks=sequence_checks
+    )
+
+    def bag(rows):  # repr: column_stats rows hold lists
+        return Counter(repr(tuple(r)) for r in rows)
+
+    def rows(path):
+        return bag(spark.read.parquet(path).collect())
+
+    assert rows(f"{cli}/violations") == rows(f"{rfv}/violations")
+    if sequence_checks:
+        assert rows(f"{cli}/conversation_health") == rows(f"{rfv}/conversation_health")
+    for name in SUMMARY_SCHEMAS:
+        if name != "drift":
+            assert rows(f"{cli}/{name}") == bag(got[name]), name
+    # the self-drift KL/PSI sums floats in histogram collect order
+    drift = {r["column_name"]: r for r in spark.read.parquet(f"{cli}/drift").collect()}
+    assert set(drift) == {r["column_name"] for r in got["drift"]} == {"role", "text_len", "tool"}
+    for r in got["drift"]:
+        for k in ("kl", "psi"):
+            assert abs(drift[r["column_name"]][k] - r[k]) < 1e-9, (r, drift[r["column_name"]])
+
+
+def test_validate_job_resume_audit_exact_per_file(spark, transcripts, tmp_path):
+    """The --resume audit records exact per-file rows/n_pass/n_fail,
+    equal to a direct per-file groupBy, even when several input files
+    are read into one partition."""
+    from jobs.validate_job import main
+
+    inp = str(tmp_path / "input")
+    transcripts.repartition(4).write.mode("overwrite").parquet(inp)
+    audit = str(tmp_path / "audit")
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try:
+        assert spark.read.parquet(inp).rdd.getNumPartitions() == 1
+        assert main(["--input", inp, "--sink", str(tmp_path / "sink"), "--resume", audit]) == 0
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+    got = {
+        r["unit"]: (r["rows"], r["n_pass"], r["n_fail"])
+        for r in spark.read.parquet(audit).collect()
+    }
+    ann = validate(spark.read.parquet(inp), TRANSCRIPT_RULES, key_cols=KEY_COLS).annotated
+    want = {
+        r["unit"]: (r["rows"], r["n_pass"], r["rows"] - r["n_pass"])
+        for r in ann.groupBy(normalize_unit(F.input_file_name()).alias("unit"))
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.col("_passed").cast("long")).alias("n_pass"),
+        )
+        .collect()
+    }
+    assert got == want and len(want) == 4
+    assert sum(n_fail for _, _, n_fail in want.values()) > 0
+
+
+def test_validate_job_job_budget(spark, transcripts, tmp_path, count_jobs):
+    """The CLI launches at most 4 Spark jobs beyond
+    ``run_full_validation``'s on the same input: the writes of the
+    summary tables, no check, no second cascade and no count."""
+    from jobs.validate_job import main
+
+    inp = str(tmp_path / "input")
+    transcripts.write.mode("overwrite").parquet(inp)
+    for flags in ([], ["--sequence-checks"]):
+        seq = bool(flags)
+        run_full_validation(spark, spark.read.parquet(inp), sink_dir=str(tmp_path / "warm"),
+                            sequence_checks=seq)
+        with count_jobs() as rfv:
+            run_full_validation(spark, spark.read.parquet(inp), sink_dir=str(tmp_path / "rfv"),
+                                sequence_checks=seq)
+        with count_jobs() as cli:
+            assert main(["--input", inp, "--sink", str(tmp_path / "cli"), *flags]) == 0
+        assert cli.n - rfv.n <= 4, (flags, cli.n, rfv.n)
 
 
 def test_singlepass_drift_matches_two_sided(spark, transcripts):
@@ -182,9 +266,6 @@ def test_transcript_stats_shape(spark, transcripts):
 def test_validate_job_expect_schema_gate(spark, transcripts, tmp_path):
     """--expect-schema fails fast (rc 2, no sink output) on contract
     drift and passes through on a matching/widened contract."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from jobs.validate_job import main
 
     inp = str(tmp_path / "input")
@@ -209,9 +290,7 @@ def test_validate_job_suggest_rules_bootstrap(spark, transcripts, tmp_path):
     """--suggest-rules profiles the input and writes a rules JSON the
     job can consume on the next run via --rules (the bootstrap loop)."""
     import json
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from jobs.validate_job import main
 
     inp = str(tmp_path / "input")
@@ -236,34 +315,34 @@ def test_validate_job_suggest_rules_bootstrap(spark, transcripts, tmp_path):
     assert v.filter(F.col("rule") == "allowed").count() == 0
 
 
-def test_pipeline_sequence_checks_flag(spark, transcripts):
-    """sequence_checks=True unions the sequence family into the
-    violations sink (rules prefixed 'seq_') and adds the
-    conversation_health output; counts equal the standalone
-    (oracle-gated) operators' — composition, not new math.  Flag off:
-    neither appears, so pre-r5 consumers see the unchanged shape."""
+def test_pipeline_sequence_checks_flag(spark, transcripts, tmp_path):
+    """sequence_checks=True adds the sequence family to the violations
+    sink (rules prefixed 'seq_') and writes the conversation_health
+    gate next to it; counts equal the standalone (oracle-gated)
+    operators' — composition, not new math.  Flag off: neither
+    appears."""
     from cerberus_spark import pipeline
 
-    outs = pipeline.full_validation(spark, transcripts, sequence_checks=True)
-    seq_rows = outs["all_violations"].filter(F.col("rule").startswith("seq_"))
+    sink = str(tmp_path / "seq")
+    got = pipeline.run_full_validation(spark, transcripts, sink_dir=sink, sequence_checks=True)
+    seq_rows = spark.read.parquet(f"{sink}/violations").filter(F.col("rule").startswith("seq_"))
     standalone = pipeline.sequence_violation_rows(transcripts)
     n_seq = standalone.count()
     assert n_seq > 0  # generator's 'critic' roles break the grammar
     assert seq_rows.count() == n_seq
     assert set(seq_rows.columns) == {"conv_id", "turn_idx", "field", "rule", "value"}
+    assert sum(r["n_violations"] for r in got["rule_summary"] if r["rule"].startswith("seq_")) == n_seq
 
-    health = outs["conversation_health"]
+    health = spark.read.parquet(f"{sink}/conversation_health")
     assert {"conv", "n_turns", "n_transition", "keep"} <= set(health.columns)
     assert health.count() == transcripts.select("conv_id").distinct().count()
     assert health.filter(~F.col("keep")).count() > 0
 
-    outs0 = pipeline.full_validation(spark, transcripts)
-    assert "conversation_health" not in outs0
-    assert (
-        outs0["all_violations"].filter(F.col("rule").startswith("seq_")).count() == 0
-    )
-    # the benched unit (thread-pooled) runs green with the flag on
-    pipeline.run_full_validation(spark, transcripts, sequence_checks=True)
+    sink0 = str(tmp_path / "plain")
+    got0 = pipeline.run_full_validation(spark, transcripts, sink_dir=sink0)
+    assert not (tmp_path / "plain" / "conversation_health").exists()
+    assert spark.read.parquet(f"{sink0}/violations").filter(F.col("rule").startswith("seq_")).count() == 0
+    assert not any(r["rule"].startswith("seq_") for r in got0["rule_summary"])
 
 
 def test_conversation_health_from_sink_equals_direct(spark, transcripts, tmp_path):
@@ -356,14 +435,17 @@ def test_sequence_rows_dirty_input_partition_invariant(spark):
 
 
 def _dirty_keys(spark):
-    """:func:`_dirty_transcripts` plus a duplicated key whose conv_id is
-    NULL: a window count over (conv_id, turn_idx) must group NULL keys
-    exactly as the uniqueness ``groupBy`` does."""
+    """:func:`_dirty_transcripts` plus a NULL-conv_id conversation with
+    a duplicated key: a window count over (conv_id, turn_idx) must
+    group NULL keys exactly as the uniqueness ``groupBy`` does.  Its
+    third turn (idx 2 after a gap, a user -> tool transition, ts back
+    to the first turn's) breaks the density, grammar and ts rules."""
     ts = __import__("datetime").datetime
     extra = spark.createDataFrame(
         [
             (None, 0, "system", "n0", None, ts(2026, 1, 3, 0, 0, 0)),
             (None, 0, "user", "n1", "search", ts(2026, 1, 3, 0, 0, 1)),
+            (None, 2, "tool", "n2", "search", ts(2026, 1, 3, 0, 0, 0)),
         ],
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp",
@@ -409,8 +491,36 @@ def test_all_violations_equals_standalone_union(spark, transcripts, data, sequen
 def test_run_full_validation_returns_column_stats(spark, transcripts, tmp_path, sequence_checks):
     """The column stats observed on the partition summary's scan equal
     the standalone :func:`transcript_stats` job's rows, in both sink
-    shapes."""
+    shapes; every returned output round-trips through its
+    ``SUMMARY_SCHEMAS`` table."""
+    from cerberus_spark.pipeline import SUMMARY_SCHEMAS
+    from cerberus_spark.sources.tables import local_table
+
     got = run_full_validation(
         spark, transcripts, sink_dir=str(tmp_path / "sink"), sequence_checks=sequence_checks
     )
-    assert got == transcript_stats(transcripts).collect()
+    assert got["column_stats"] == transcript_stats(transcripts).collect()
+    assert set(got) == set(SUMMARY_SCHEMAS)
+    for name, ddl in SUMMARY_SCHEMAS.items():
+        assert local_table(spark, got[name], ddl).collect() == got[name], name
+
+
+def test_conversation_health_null_conv(spark, tmp_path):
+    """A NULL conv_id is one conversation: the direct gate, the rollup
+    from the sink and ``run_full_validation``'s conversation_health all
+    count its violations (null-safe joins), and agree on every conv."""
+    from cerberus_spark import pipeline
+
+    dirty = _dirty_keys(spark)
+    want = (None, 3, 1, 1, 0, 1, 0, 1, 0, False)
+    direct = {r.conv: tuple(r) for r in pipeline.conversation_health(dirty).collect()}
+    assert direct[None] == want
+    viol = all_violations(spark, dirty, sequence_checks=True)
+    rolled = {
+        r.conv: tuple(r)
+        for r in pipeline.conversation_health_from_violations(dirty, viol).collect()
+    }
+    sink = str(tmp_path / "sink")
+    run_full_validation(spark, dirty, sink_dir=sink, sequence_checks=True)
+    sunk = {r.conv: tuple(r) for r in spark.read.parquet(f"{sink}/conversation_health").collect()}
+    assert rolled == direct == sunk
