@@ -1379,7 +1379,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is derived from the part dim (0.5 * p_retailprice per unit —
     same column reference pattern as Q9's ps_supplycost, still a
     per-part broadcast attribute).  The LIKE lands on the tiny part
-    dim scan; the fact side joins it broadcast."""
+    dim scan; the fact side joins it broadcast.  Each row's amount is
+    rounded to integer cents before the sum, so the sum is exact in any
+    order (a double sum depends on the partitioning); the oracle does
+    the same."""
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_partkey",
@@ -1407,9 +1410,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nat), F.col("s_nationkey") == F.col("_nk"))
         .join(orders, li.l_orderkey == orders.o_orderkey)
     )
+    cents = F.round(amount * 100).cast("long")
     return j.groupBy(
         "nation", F.year("o_orderdate").alias("o_year")
-    ).agg(F.round(F.sum(amount), 2).alias("sum_profit"))
+    ).agg((F.sum(cents) / 100).alias("sum_profit"))
 
 
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1577,19 +1581,16 @@ def q_normalize_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite Gopher-style keep/drop gate (functions/text.py:
-    gopher_filter_report): one projection pass assembles the token
-    budget, repetition permilles, and quality score into
+    gopher_report_arrow): one Arrow pass per document assembles the
+    token budget, repetition permilles, and quality score into
     (keep, reasons) — the oracle SQL is built from the SAME permille
     expressions as the individually gated doc_quality/doc_repetition
-    pairs, reason order fixed by the checks list."""
-    from cerberus_spark.functions.text import gopher_filter_report
+    pairs, reason order fixed by gopher_reasons."""
+    from cerberus_spark.functions.text import gopher_report_arrow
 
     docs = spread(_t(spark, sf_dir, "documents"))
-    rep = gopher_filter_report(F.col("text"))
-    return docs.select(
-        "doc_id",
-        rep.getField("keep").alias("keep"),
-        F.array_join(rep.getField("reasons"), ",").alias("reasons"),
+    return gopher_report_arrow(docs, "text").select(
+        "doc_id", "keep", F.array_join("reasons", ",").alias("reasons")
     )
 
 
@@ -1597,9 +1598,8 @@ def q_ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher character-coverage n-gram rules at k=3: permille of
     normalized-text characters covered by the most frequent 3-gram and
     by all duplicated 3-grams (ties on count take the longest gram in
-    BOTH engines).  r4: served by the single-pass Arrow scan
-    (repetition_metrics, bit-parity-locked vs the columnar folds —
-    the SQL twin replays via unnest+count)."""
+    BOTH engines).  Served by the single-pass Arrow scan
+    (repetition_metrics); the SQL twin replays via unnest+count."""
     from cerberus_spark.functions.text import repetition_metrics
 
     docs = _t(spark, sf_dir, "documents")
@@ -2393,9 +2393,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-vectorized simhash (bit-identical to the columnar
-    simhash64 Column fn — asserted in tests; ~4x faster because the
-    60-bit HOF tree is interpreted in Catalyst)."""
+    """Arrow-vectorized 60-bit simhash over word 2-shingles; docs with
+    NULL text or under 2 words get 0 in both engines."""
     from cerberus_spark.operators.dedup import simhash_rows
 
     docs = spread(_t(spark, sf_dir, "documents"))
@@ -2487,11 +2486,9 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style within-document repetition filters: duplicate-word,
-    top-word, and duplicate-2-gram permille.  r4: served by the
-    single-pass Arrow scan (functions/text.py:repetition_metrics,
-    pytest-locked bit-identical to the columnar folds, 36x faster at
-    sf0.1 — interpreted HOF folds re-inline the tokenize pipeline per
-    metric); the columnar family remains the gate-composition path."""
+    top-word, and duplicate-2-gram permille, served by the single-pass
+    Arrow scan (functions/text.py:repetition_metrics).  NULL text gives
+    a row of NULL metrics in both engines."""
     from cerberus_spark.functions.text import repetition_metrics
 
     docs = _t(spark, sf_dir, "documents")
@@ -2817,7 +2814,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 _ALLOWED_SQL = ", ".join(f"'{t}'" for t in ALLOWED_EVENT_TYPES)
 
 # normalized words / k-shingles of documents.text (must mirror
-# cerberus_spark.operators.dedup.normalize_text / word_shingles)
+# cerberus_spark.operators.dedup.normalize_text and the Arrow passes'
+# shingling, minhash_text_signature)
 _WORDS = "string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')"
 
 
@@ -3380,7 +3378,8 @@ FROM vals GROUP BY event_type
         "validate_extended": """
 WITH base AS (
   SELECT event_id,
-         TRY_CAST(json_extract_string(props, '$.k') AS INT) AS k,
+         CASE WHEN json_valid(props)
+              THEN TRY_CAST(json_extract_string(props, '$.k') AS INT) END AS k,
          props IS NOT NULL AS has_pm,
          (user_id % 2 = 0) AS has_beta,
          CAST(user_id % 100 AS INT) AS vnum
@@ -3407,7 +3406,8 @@ WITH base AS (
   SELECT event_id,
          CASE WHEN event_type <> 'purchase' AND props IS NOT NULL
               THEN 1 ELSE 0 END AS p_present,
-         TRY_CAST(json_extract_string(props, '$.k') AS INT) AS k
+         CASE WHEN json_valid(props)
+              THEN TRY_CAST(json_extract_string(props, '$.k') AS INT) END AS k
   FROM events
 )
 SELECT event_id, 'p' AS field, 'required' AS rule, NULL::VARCHAR AS value
@@ -4176,8 +4176,9 @@ GROUP BY 1
 """,
         "q9_product_profit": """
 SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INTEGER) AS o_year,
-       round(sum(l.l_extendedprice * (1 - l.l_discount)
-                 - 0.5 * p.p_retailprice * l.l_quantity), 2) AS sum_profit
+       sum(CAST(round((l.l_extendedprice * (1 - l.l_discount)
+                       - 0.5 * p.p_retailprice * l.l_quantity) * 100) AS BIGINT))
+         / 100 AS sum_profit
 FROM lineitem l
 JOIN part p ON l.l_partkey = p.p_partkey
 JOIN supplier s ON l.l_suppkey = s.s_suppkey
@@ -4685,6 +4686,8 @@ SELECT tr.doc_id, any_value(tr.n_sh)::BIGINT AS n_shingles,
 FROM tr LEFT JOIN ev ON tr.shh = ev.shh
 GROUP BY tr.doc_id HAVING count(ev.shh) > 0
 """
+    # every document keeps its row: NULL text unnests to no words, so
+    # its word counts come from a LEFT join and stay NULL
     out["doc_repetition"] = f"""
 WITH w AS (SELECT doc_id, {_WORDS} AS w FROM documents),
 ex AS (SELECT doc_id, s FROM w, unnest(w.w) AS t(s)),
@@ -4698,11 +4701,11 @@ wc AS (
          len(list_distinct(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]))) AS nd2
   FROM w
 )
-SELECT wc.doc_id,
+SELECT g.doc_id,
        CAST(floor(1000 * (n - nd) / n) AS BIGINT) AS dup_word_milli,
        CAST(floor(1000 * topc / n) AS BIGINT) AS top_word_milli,
        CASE WHEN n2 > 0 THEN CAST(floor(1000 * (n2 - nd2) / n2) AS BIGINT) END AS dup_2gram_milli
-FROM wc JOIN g ON wc.doc_id = g.doc_id
+FROM g LEFT JOIN wc ON wc.doc_id = g.doc_id
 """
     out["normalize_nfc"] = (
         "SELECT doc_id, md5(nfc_normalize(text)) AS nfc_md5 FROM documents"
@@ -4740,7 +4743,9 @@ SELECT g.doc_id, top.topm AS top_3gram_char_milli, dup.dupm AS dup_3gram_char_mi
 FROM g LEFT JOIN top USING (doc_id) LEFT JOIN dup USING (doc_id)
 """
     # same permille/quality expressions as the doc_quality and
-    # doc_repetition pairs; reason order mirrors the Spark checks list
+    # doc_repetition pairs; reason order mirrors gopher_reasons.  NULL
+    # text trips no rule and keeps (its metrics are NULL); DuckDB joins
+    # an empty list to NULL where Spark gives '', hence the coalesce
     out["gopher_gate"] = f"""
 WITH w AS (SELECT doc_id, text, {_WORDS} AS w FROM documents),
 ex AS (SELECT doc_id, s FROM w, unnest(w.w) AS t(s)),
@@ -4754,24 +4759,24 @@ wc AS (
          len(list_distinct(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]))) AS nd2
   FROM w
 ), m AS (
-  SELECT wc.doc_id,
+  SELECT g.doc_id,
          CAST(floor(1000 * (n - nd) / n) AS BIGINT) AS dupw,
          CAST(floor(1000 * topc / n) AS BIGINT) AS topw,
          CASE WHEN n2 > 0 THEN CAST(floor(1000 * (n2 - nd2) / n2) AS BIGINT) END AS dup2
-  FROM wc JOIN g ON wc.doc_id = g.doc_id
+  FROM g LEFT JOIN wc ON wc.doc_id = g.doc_id
 ), q AS (
   SELECT doc_id, ({n_tok_ws})::BIGINT AS ntok, {quality} AS qual FROM documents
 ), r AS (
   SELECT q.doc_id,
-         array_to_string(list_filter([
+         coalesce(array_to_string(list_filter([
            CASE WHEN ntok < 50 THEN 'too_short' END,
            CASE WHEN ntok > 100000 THEN 'too_long' END,
            CASE WHEN dupw > 300 THEN 'dup_words' END,
            CASE WHEN topw > 200 THEN 'top_word_dominates' END,
            CASE WHEN dup2 > 200 THEN 'dup_2grams' END,
            CASE WHEN qual < 500 THEN 'low_quality' END
-         ], x -> x IS NOT NULL), ',') AS reasons
-  FROM q JOIN m ON q.doc_id = m.doc_id
+         ], x -> x IS NOT NULL), ','), '') AS reasons
+  FROM q LEFT JOIN m ON q.doc_id = m.doc_id
 )
 SELECT doc_id, (reasons = '') AS keep, reasons FROM r
 """

@@ -32,7 +32,6 @@ from cerberus_spark.rules import (
     apply_validator_flags,
     compile_schema,
     CompiledRuleSet,
-    python_validate,
 )
 from cerberus_spark.validation import ValidationSession, ValidationResult
 
@@ -42,7 +41,6 @@ __all__ = [
     "apply_validator_flags",
     "compile_schema",
     "CompiledRuleSet",
-    "python_validate",
     "ValidationSession",
     "ValidationResult",
     "__version__",

@@ -61,9 +61,9 @@ def _document_pass(
     kept document.  Emits the input columns (``text_col`` normalized),
     ``_gate`` (keep, reasons) and ``_sig`` (array<long>; NULL for
     dropped docs and where :func:`minhash_signatures` emits no row).
-    The per-row bodies are the staged functions' own
+    The per-row bodies are those of the standalone Arrow operators
     (``normalize_unicode_py``, ``gopher_reasons``,
-    ``minhash_text_signature``), so both paths agree bit for bit."""
+    ``minhash_text_signature``), so both agree bit for bit."""
     from pyspark.sql import types as T
 
     from cerberus_spark.functions.text import gopher_reasons, normalize_unicode_py
@@ -73,7 +73,6 @@ def _document_pass(
     quality = quality_kwargs or {}
     gopher_reasons(None, **quality)  # rejects unknown thresholds here
     mh = {**DEFAULT_MINHASH, **(minhash_kwargs or {})}
-    mh.pop("impl", None)  # every minhash_signatures impl signs bit-identically
     shingle_k = mh.pop("shingle_k")
     a_vec, b_vec = minhash_coeff_vectors(mh.pop("num_hashes"))
     if mh:
@@ -97,7 +96,7 @@ def _document_pass(
             ]
             yield b
 
-    # every field nullable, as the staged pandas UDF and gate emit them
+    # every field nullable, as normalize_unicode and gopher_report_arrow emit them
     out = T.StructType(
         [T.StructField(f.name, f.dataType) for f in docs.schema]
         + [
@@ -177,7 +176,6 @@ def clean_corpus(
     winnow_w: int = 8,
     min_run: int = 50,
     checkpoint_stages: bool = True,
-    arrow_gate: bool = True,
     survivor_policy: str = "min_id",
     lm_filter: dict | None = None,
 ) -> dict[str, DataFrame]:
@@ -191,6 +189,12 @@ def clean_corpus(
     Every input document is in exactly one of ``kept`` and ``dropped``.
     A document with NULL text passes the gate and has no fingerprint
     and no signature, so it is kept and is never anyone's dup.
+
+    Normalization (``normalize``), the quality gate (``quality_kwargs``:
+    the keywords of :func:`gopher_reasons`) and the MinHash signature
+    (``minhash_kwargs``: ``num_hashes``, ``shingle_k``) of every
+    document run in one Arrow pass (:func:`_document_pass`), the one
+    pass paid on the FULL corpus.  Only gate-kept documents are signed.
 
     ``lm_filter`` (optional, default off) appends the CCNet-style LM
     quality stage AFTER dedup (and substring removal, so scores see
@@ -218,32 +222,12 @@ def clean_corpus(
     copy wins (max post-normalization ``length(text_col)``, ties to
     min id), via :func:`cluster_representatives`; one extra
     partial-aggregable groupBy over the |clustered docs| slice.
-
-    ``arrow_gate`` (default True): normalize, gate and sign every
-    document in one Arrow pass (:func:`_document_pass`, bit-parity-locked
-    against the staged functions) — the one pass paid on the FULL
-    corpus, where the columnar fold family re-inlines tokenization per
-    signal at interpreter speed.  Set False for the staged columnar
-    parity path: the ``normalize_unicode`` UDF, the pure-Catalyst gate,
-    then :func:`minhash_signatures` over the exact-dedup survivors.
     """
-    from cerberus_spark.functions.text import gopher_filter_report, normalize_unicode
-    from cerberus_spark.operators.dedup import minhash_dup_candidates, minhash_signatures
+    from cerberus_spark.operators.dedup import minhash_dup_candidates
     from cerberus_spark.operators.graph import dedup_clusters
 
-    # --- stage 1: normalize + quality gate ---------------------------
-    if arrow_gate:
-        # one Python pass also signs every kept document (``_sig``)
-        gated = _document_pass(
-            docs, text_col, normalize, quality_kwargs, minhash_kwargs
-        )
-    else:
-        base = docs
-        if normalize:
-            base = base.withColumn(text_col, normalize_unicode(text_col))
-        gated = base.withColumn(
-            "_gate", gopher_filter_report(F.col(text_col), **(quality_kwargs or {}))
-        )
+    # --- stage 1: normalize + quality gate + MinHash signature --------
+    gated = _document_pass(docs, text_col, normalize, quality_kwargs, minhash_kwargs)
     # --- stage 2: exact dedup, decided with the gate -----------------
     gate_keep = F.col("_gate.keep")
     gated = _exact_verdict(
@@ -268,13 +252,8 @@ def clean_corpus(
     )
 
     # --- stage 3: near-dedup (MinHash -> LSH -> clusters) ------------
-    if arrow_gate:
-        sigs = _stored_signatures(exact_kept, id_col)
-        exact_kept = exact_kept.drop("_sig")
-    else:
-        sigs = minhash_signatures(
-            exact_kept, text_col, id_col, **(minhash_kwargs or DEFAULT_MINHASH)
-        )
+    sigs = _stored_signatures(exact_kept, id_col)
+    exact_kept = exact_kept.drop("_sig")
     cand = minhash_dup_candidates(
         sigs, id_col, bands=bands, rows_per_band=rows_per_band, bucket_cap=bucket_cap
     )
@@ -415,7 +394,7 @@ def ingest_corpus_increment(
     """
     import os
 
-    # the same fused pass as clean_corpus(arrow_gate=True)
+    # the same fused pass as clean_corpus
     gated = _document_pass(
         batch, text_col, normalize, quality_kwargs, minhash_kwargs
     ).localCheckpoint(eager=False)

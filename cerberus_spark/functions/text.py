@@ -1,6 +1,7 @@
 """Text-analysis functions for training-data pipelines: token counting,
-quality scoring, language ID — all pure Catalyst expressions (regex +
-arithmetic), deterministic, and reproducible in ANSI SQL for the
+quality scoring, language ID as pure Catalyst expressions (regex +
+arithmetic), and the Gopher repetition signals and gate as one Arrow
+pass per document — all deterministic and reproducible in SQL for the
 oracle.  The reference's string scalar family (DNS label parsing,
 HTTP method/path extraction, internal/utils/converter.go:121-191) maps
 to the same regexp_extract/when machinery.
@@ -190,167 +191,6 @@ def lang_id(col: Column) -> Column:
     return best.otherwise(F.lit("und"))
 
 
-# ---------------------------------------------------------------------------
-# Within-document repetition (Gopher-style quality filters)
-# ---------------------------------------------------------------------------
-# Heavily templated / boilerplate documents are the classic LLM-corpus
-# junk class; the public Gopher/RefinedWeb rules filter on the fraction
-# of repeated words and n-grams WITHIN each document.  Everything below
-# is per-row array arithmetic — zero shuffles, embarrassingly parallel,
-# the scale-right shape for a 100 TB corpus scan (the linear fold for
-# the top-word count is a higher-order function: interpreted, not
-# codegen'd, but still O(words) per row with no exchange).
-
-
-def _norm_words(col: Column) -> Column:
-    from cerberus_spark.operators.dedup import normalize_text
-
-    return F.split(normalize_text(col), " ")
-
-
-def dup_word_milli(col: Column) -> Column:
-    """Permille of word occurrences that are repeats of an earlier
-    word: 1000 * (n_words - n_distinct_words) / n_words, floored."""
-    w = _norm_words(col)
-    n = F.size(w)
-    nd = F.size(F.array_distinct(w))
-    return F.when(n > 0, F.floor(F.lit(1000) * (n - nd) / n)).cast("long")
-
-
-def top_word_milli(col: Column) -> Column:
-    """Permille of word occurrences taken by the single most frequent
-    word (a doc where one word is >20% of tokens is boilerplate).
-
-    Linear fold over the SORTED word array: equal words are adjacent,
-    so the longest run is the max frequency — no explode, no shuffle.
-    """
-    w = F.array_sort(_norm_words(col))
-    n = F.size(w)
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best"),
-    )
-
-    def step(acc: Column, x: Column) -> Column:
-        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1).cast("long"))
-        return F.struct(
-            x.alias("prev"), run.alias("run"), F.greatest(acc["best"], run).alias("best")
-        )
-
-    best = F.aggregate(w, init, step, lambda acc: acc["best"])
-    return F.when(n > 0, F.floor(F.lit(1000) * best / n)).cast("long")
-
-
-def dup_2gram_milli(col: Column) -> Column:
-    """Permille of word 2-grams that are repeats (Gopher's duplicate
-    n-gram fraction, k=2): 1000 * (n_2grams - n_distinct_2grams) /
-    n_2grams, floored; NULL when the doc has fewer than 2 words."""
-    w = _norm_words(col)
-    n = F.size(w)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - 2, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.element_at(w, i + 1), F.element_at(w, i + 2)),
-    )
-    n2 = n - 1
-    nd2 = F.size(F.array_distinct(grams))
-    return F.when(n2 > 0, F.floor(F.lit(1000) * (n2 - nd2) / n2)).cast("long")
-
-
-def _word_ngrams(w: Column, k: int) -> Column:
-    """Space-joined word k-grams of a word array (empty array when the
-    doc has fewer than k words)."""
-    n = F.size(w)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: F.array_join(F.slice(w, i, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def top_ngram_char_milli(col: Column, k: int) -> Column:
-    """Permille of normalized-text CHARACTERS covered by the most
-    frequent word k-gram (count × gram char length / total chars) —
-    the Gopher top-n-gram character rule (k=2..4 in the paper, e.g.
-    top-2-gram > 20%% ⇒ drop).  Ties on count take the LONGEST gram
-    (deterministic, and the larger coverage is the honest answer).
-    NULL when the doc has fewer than k words.
-
-    One linear fold over the SORTED gram array — per-row arithmetic,
-    zero shuffles, same scan shape as the rest of the family.
-    """
-    w = _norm_words(col)
-    grams = F.array_sort(_word_ngrams(w, k))
-    total = F.length(F.array_join(w, " "))
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best_run"),
-        F.lit(0).cast("long").alias("best_len"),
-    )
-
-    def step(acc: Column, x: Column) -> Column:
-        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1).cast("long"))
-        better = (run > acc["best_run"]) | (
-            (run == acc["best_run"]) & (F.length(x) > acc["best_len"])
-        )
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.when(better, run).otherwise(acc["best_run"]).alias("best_run"),
-            F.when(better, F.length(x).cast("long"))
-            .otherwise(acc["best_len"])
-            .alias("best_len"),
-        )
-
-    cover = F.aggregate(grams, init, step, lambda a: a["best_run"] * a["best_len"])
-    return F.when(
-        (F.size(grams) > 0) & (total > 0), F.floor(F.lit(1000) * cover / total)
-    ).cast("long")
-
-
-def dup_ngram_char_milli(col: Column, k: int) -> Column:
-    """Permille of normalized-text characters covered by word k-grams
-    occurring MORE THAN ONCE — the Gopher duplicate-n-gram character
-    rule (k=5..10 in the paper).  Overlapping occurrences are counted
-    per occurrence (Σ count×len over duplicated grams), the standard
-    SQL-replayable approximation of the paper's character-coverage
-    union; it upper-bounds the exact union, so thresholds are
-    conservative.  NULL when the doc has fewer than k words.
-
-    Same zero-shuffle fold shape as :func:`top_ngram_char_milli`.
-    """
-    w = _norm_words(col)
-    grams = F.array_sort(_word_ngrams(w, k))
-    total = F.length(F.array_join(w, " "))
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("dupchars"),
-    )
-
-    def step(acc: Column, x: Column) -> Column:
-        same = x == acc["prev"]
-        flushed = F.when(
-            ~F.coalesce(same, F.lit(False)) & (acc["run"] > 1),
-            acc["dupchars"] + acc["run"] * F.length(acc["prev"]),
-        ).otherwise(acc["dupchars"])
-        run = F.when(same, acc["run"] + 1).otherwise(F.lit(1).cast("long"))
-        return F.struct(x.alias("prev"), run.alias("run"), flushed.alias("dupchars"))
-
-    def finish(acc: Column) -> Column:
-        return F.when(
-            acc["run"] > 1, acc["dupchars"] + acc["run"] * F.length(acc["prev"])
-        ).otherwise(acc["dupchars"])
-
-    dupchars = F.aggregate(grams, init, step, finish)
-    return F.when(
-        (F.size(grams) > 0) & (total > 0), F.floor(F.lit(1000) * dupchars / total)
-    ).cast("long")
-
-
 def unigram_logprob_scores(
     df,
     text_col: str,
@@ -520,54 +360,67 @@ def normalize_unicode_py(text, form: str = "NFC", strip_controls: bool = True):
     return _CONTROL_RE.sub("", out) if strip_controls else out
 
 
-def gopher_filter_report(
-    col: Column,
-    min_tokens: int = 50,
-    max_tokens: int = 100_000,
-    max_dup_word_milli: int = 300,
-    max_top_word_milli: int = 200,
-    max_dup_2gram_milli: int = 200,
-    min_quality_milli: int = 500,
-    max_top_ngram_char_milli: dict[int, int] | None = None,
-    max_dup_ngram_char_milli: dict[int, int] | None = None,
-) -> Column:
-    """Composite Gopher-style keep/drop decision as a struct column
-    ``(keep boolean, reasons array<string>)`` — the standard documented
-    quality gate assembled from this module's individually oracle-gated
-    signals (token budget, word/2-gram repetition permilles, integer
-    quality score).  Thresholds default to the published Gopher-rule
-    ballpark and are parameters, not policy.
+# ---------------------------------------------------------------------------
+# Within-document repetition (Gopher-style quality filters)
+# ---------------------------------------------------------------------------
+# Heavily templated / boilerplate documents are the classic LLM-corpus
+# junk class; the public Gopher/RefinedWeb rules filter on the fraction
+# of repeated words and n-grams WITHIN each document.  Every signal is
+# per-document Python over one Counter, run in one Arrow pass per
+# document: zero shuffles, and one tokenization however many signals
+# (Catalyst's higher-order array folds are interpreted, and
+# CollapseProject re-inlines the tokenization once per signal).  The
+# DuckDB doc_repetition, ngram_repetition and gopher_gate contract
+# pairs replay every signal in SQL.
 
-    The full published rule set also caps CHARACTER coverage of top
-    n-grams (k=2..4) and duplicated n-grams (k=5..10): pass
-    ``max_top_ngram_char_milli={2: 200, 3: 180, 4: 160}`` and/or
-    ``max_dup_ngram_char_milli={5: 150, ..., 10: 100}`` to enable those
-    gates (reasons ``top_{k}gram_chars`` / ``dup_{k}gram_chars``).
-    Off by default: each enabled k adds one fold pass per row.
 
-    Pure Catalyst composition — evaluating the report costs the same
-    single projection pass as any one signal; ``reasons`` names every
-    failed gate so corpus triage can aggregate drop causes
-    (``explode(reasons)`` → groupBy) instead of re-running filters.
-    """
-    ntok = token_count_ws(col)
-    checks = [
-        ("too_short", ntok < min_tokens),
-        ("too_long", ntok > max_tokens),
-        ("dup_words", dup_word_milli(col) > max_dup_word_milli),
-        ("top_word_dominates", top_word_milli(col) > max_top_word_milli),
-        ("dup_2grams", dup_2gram_milli(col) > max_dup_2gram_milli),
-        ("low_quality", quality_score_milli(col) < min_quality_milli),
-    ]
-    for k, thr in sorted((max_top_ngram_char_milli or {}).items()):
-        checks.append((f"top_{k}gram_chars", top_ngram_char_milli(col, k) > thr))
-    for k, thr in sorted((max_dup_ngram_char_milli or {}).items()):
-        checks.append((f"dup_{k}gram_chars", dup_ngram_char_milli(col, k) > thr))
-    reasons = F.array_compact(
-        F.array(*[F.when(pred, F.lit(name)) for name, pred in checks])
-    )
-    return F.struct(
-        (F.size(reasons) == 0).alias("keep"), reasons.alias("reasons")
+def _repetition(words: list[str], top_ks=(), dup_ks=()):
+    """Repetition signals of ONE document's normalized words
+    (``_normalize_py(text).split(" ")``, so at least one word, as
+    Spark's ``split("", " ")`` gives ``[""]``):
+
+    - ``dup_word``: permille of word occurrences that repeat an earlier
+      word, floored;
+    - ``top_word``: permille of occurrences taken by the most frequent
+      word;
+    - ``dup_2gram``: permille of word 2-grams that repeat (Gopher's
+      duplicate n-gram fraction at k=2); None under 2 words;
+    - ``top[k]``: permille of the text's characters covered by the most
+      frequent word k-gram (count x gram length / total chars; ties on
+      count take the LONGEST gram), for each k in ``top_ks``;
+    - ``dup[k]``: permille of characters covered by k-grams occurring
+      more than once, summed per occurrence (the SQL-replayable
+      approximation of Gopher's coverage union, which it upper-bounds,
+      so caps are conservative), for each k in ``dup_ks``.
+
+    Returns ``(dup_word, top_word, dup_2gram, top, dup)``; ``top`` and
+    ``dup`` hold only the asked-for k that the document has k words
+    for.  Only the asked-for k-grams are counted, so the gate pays
+    nothing for caps it does not set."""
+    n = len(words)
+    wc = Counter(words)
+    dup_2 = None
+    if n >= 2:
+        g2 = [words[i] + " " + words[i + 1] for i in range(n - 1)]
+        dup_2 = floor(1000 * (len(g2) - len(set(g2))) / len(g2))
+    top, dup = {}, {}
+    total = len(" ".join(words)) if top_ks or dup_ks else 0
+    for k in sorted({*top_ks, *dup_ks}):
+        if n < k or total == 0:
+            continue
+        gc = Counter(" ".join(words[i : i + k]) for i in range(n - k + 1))
+        if k in top_ks:
+            tc = max(gc.values())
+            tl = max(len(g) for g, c in gc.items() if c == tc)
+            top[k] = floor(1000 * tc * tl / total)
+        if k in dup_ks:
+            dup[k] = floor(1000 * sum(c * len(g) for g, c in gc.items() if c > 1) / total)
+    return (
+        floor(1000 * (n - len(wc)) / n),
+        floor(1000 * max(wc.values()) / n),
+        dup_2,
+        top,
+        dup,
     )
 
 
@@ -579,20 +432,11 @@ def repetition_metrics(
 ):
     """ALL the repetition signals in ONE Arrow pass:
     (id, dup_word_milli, top_word_milli, dup_2gram_milli
-    [, top_{k}gram_char_milli, dup_{k}gram_char_milli per k]).
-
-    The columnar functions above stay the oracle/compositional path
-    (pure Catalyst, usable inside ``gopher_filter_report``); this is
-    the corpus-scan hot path: higher-order array folds are interpreted
-    (never codegen'd) and CollapseProject re-inlines the
-    normalize+split+sort pipeline once PER METRIC, so a 3-signal scan
-    pays ~3× the tokenization plus interpreted fold overhead.  One
-    vectorized pandas batch computes every signal from one Counter per
-    document — measured 36× faster on the 5k-doc sf0.1 corpus, 18.3s → 0.50s for the 5-signal scan (see
-    BASELINE.md §Corpus-cleaning).  Bit-parity with the columnar
-    functions is pytest-locked (same ASCII-whitespace normalization,
-    same Spark ``split`` edge semantics, same tie rules).
-    """
+    [, top_{k}gram_char_milli, dup_{k}gram_char_milli per k]), each
+    from :func:`_repetition`.  NULL text gives NULL metrics, as does a
+    document with fewer words than a metric's gram (measured 36x faster
+    than Catalyst folds on the 5k-doc sf0.1 corpus, 18.3s -> 0.50s for
+    the 5-signal scan, BASELINE.md §Corpus-cleaning)."""
     import pandas as pd
 
     from cerberus_spark.sources.tables import spread
@@ -600,36 +444,12 @@ def repetition_metrics(
     ks = tuple(char_ks)
 
     def one(text):
-        # mirror the COLUMNAR semantics exactly:
-        # - NULL text -> every metric NULL (F.size(NULL) is NULL)
-        # - normalize_text("") == "" and Spark split("", " ") == [""] —
-        #   python "".split(" ") is also [""], so n >= 1 for non-null
         if text is None:
             return (None,) * (3 + 2 * len(ks))
-        words = _normalize_py(text).split(" ")
-        n = len(words)
-        wc = Counter(words)
-        dup_w = floor(1000 * (n - len(wc)) / n)
-        top_w = floor(1000 * max(wc.values()) / n)
-        if n >= 2:
-            g2 = [words[i] + " " + words[i + 1] for i in range(n - 1)]
-            dup_2 = floor(1000 * (len(g2) - len(set(g2))) / len(g2))
-        else:
-            dup_2 = None
+        dup_w, top_w, dup_2, top, dup = _repetition(_normalize_py(text).split(" "), ks, ks)
         out = [dup_w, top_w, dup_2]
-        total = len(" ".join(words))
         for k in ks:
-            if n < k or total == 0:
-                out += [None, None]
-                continue
-            gc = Counter(
-                " ".join(words[i : i + k]) for i in range(n - k + 1)
-            )
-            top_cnt = max(gc.values())
-            top_len = max(len(g) for g, c in gc.items() if c == top_cnt)
-            out.append(floor(1000 * top_cnt * top_len / total))
-            dupchars = sum(c * len(g) for g, c in gc.items() if c > 1)
-            out.append(floor(1000 * dupchars / total))
+            out += [top.get(k), dup.get(k)]
         return tuple(out)
 
     names = ["dup_word_milli", "top_word_milli", "dup_2gram_milli"]
@@ -702,10 +522,20 @@ def gopher_reasons(
     max_top_ngram_char_milli: dict[int, int] | None = None,
     max_dup_ngram_char_milli: dict[int, int] | None = None,
 ) -> list[str]:
-    """The failed-gate names of ONE text under :func:`gopher_filter_report`'s
-    thresholds, in its order (``[]`` = keep; a NULL text trips no
-    predicate and keeps, as in Cerberus where absent means not-invalid).
-    The per-row body of :func:`gopher_report_arrow` and of
+    """The failed-gate names of ONE text, in this order: ``too_short``,
+    ``too_long`` (whitespace token budget), ``dup_words``,
+    ``top_word_dominates``, ``dup_2grams`` (the :func:`_repetition`
+    permilles), ``low_quality`` (the integer quality score), then
+    ``top_{k}gram_chars`` and ``dup_{k}gram_chars`` for each capped k.
+    ``[]`` = keep; a NULL text trips no predicate and keeps, as in
+    Cerberus where absent means not-invalid.
+
+    Thresholds default to the published Gopher-rule ballpark and are
+    parameters, not policy.  The character-coverage caps are off by
+    default: pass ``max_top_ngram_char_milli={2: 200, 3: 180, 4: 160}``
+    and/or ``max_dup_ngram_char_milli={5: 150, ..., 10: 100}`` to
+    enable them; each enabled k counts that k's grams once more per
+    document.  The per-row body of :func:`gopher_report_arrow` and of
     ``clean_corpus``'s fused document pass."""
     if text is None:
         return []
@@ -715,47 +545,37 @@ def gopher_reasons(
         out.append("too_short")
     if ntok > max_tokens:
         out.append("too_long")
-    words = _normalize_py(text).split(" ")
-    n = len(words)
-    wc = Counter(words)
-    if floor(1000 * (n - len(wc)) / n) > max_dup_word_milli:
+    top_caps = max_top_ngram_char_milli or {}
+    dup_caps = max_dup_ngram_char_milli or {}
+    dup_w, top_w, dup_2, top, dup = _repetition(
+        _normalize_py(text).split(" "), top_caps, dup_caps
+    )
+    if dup_w > max_dup_word_milli:
         out.append("dup_words")
-    if floor(1000 * max(wc.values()) / n) > max_top_word_milli:
+    if top_w > max_top_word_milli:
         out.append("top_word_dominates")
-    if n >= 2:
-        g2 = [words[i] + " " + words[i + 1] for i in range(n - 1)]
-        if floor(1000 * (len(g2) - len(set(g2))) / len(g2)) > max_dup_2gram_milli:
-            out.append("dup_2grams")
+    if dup_2 is not None and dup_2 > max_dup_2gram_milli:
+        out.append("dup_2grams")
     if _py_quality_milli(text) < min_quality_milli:
         out.append("low_quality")
-    total = len(" ".join(words))
-    for k, thr in sorted((max_top_ngram_char_milli or {}).items()):
-        if n >= k and total > 0:
-            gc = Counter(" ".join(words[i : i + k]) for i in range(n - k + 1))
-            tc = max(gc.values())
-            tl = max(len(g) for g, c in gc.items() if c == tc)
-            if floor(1000 * tc * tl / total) > thr:
-                out.append(f"top_{k}gram_chars")
-    for k, thr in sorted((max_dup_ngram_char_milli or {}).items()):
-        if n >= k and total > 0:
-            gc = Counter(" ".join(words[i : i + k]) for i in range(n - k + 1))
-            d = sum(c * len(g) for g, c in gc.items() if c > 1)
-            if floor(1000 * d / total) > thr:
-                out.append(f"dup_{k}gram_chars")
+    # a k the document is too short for has no value and never trips
+    for k, thr in sorted(top_caps.items()):
+        if top.get(k, thr) > thr:
+            out.append(f"top_{k}gram_chars")
+    for k, thr in sorted(dup_caps.items()):
+        if dup.get(k, thr) > thr:
+            out.append(f"dup_{k}gram_chars")
     return out
 
 
 def gopher_report_arrow(df, text_col: str, **thresholds):
-    """Arrow twin of :func:`gopher_filter_report` for the corpus-scan
-    hot path: every signal (token budget, repetition millis, quality
-    score, optional k-gram character caps) computed from ONE pass per
-    document (:func:`gopher_reasons`, whose keywords are the
-    ``thresholds``) instead of per-signal interpreted folds (the same
-    CollapseProject economics as :func:`repetition_metrics`).  Emits all
-    input columns plus ``keep`` boolean and ``reasons`` array<string>
-    (same names, order and NULL semantics as the columnar gate;
-    bit-parity is pytest-locked).
-    """
+    """Composite Gopher-style keep/drop gate in ONE Arrow pass per
+    document: :func:`gopher_reasons` (whose keywords are the
+    ``thresholds``) over ``text_col``.  Emits all input columns plus
+    ``reasons`` array<string> (every failed gate, so corpus triage can
+    ``explode(reasons)`` -> groupBy instead of re-running filters) and
+    ``keep`` boolean.  A per-row pass: zero exchanges.  The DuckDB
+    gopher_gate pair replays the default gate in SQL."""
     gopher_reasons(None, **thresholds)  # rejects unknown thresholds here
     in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
 

@@ -14,7 +14,6 @@ from cerberus_spark.operators.dedup import (
     sequence_minhash,
     sequence_neardup_candidates,
     sequence_neardup_pairs,
-    simhash64,
 )
 from cerberus_spark.operators.graph import cluster_representatives, dedup_clusters
 from cerberus_spark.operators.similarity import train_centroids
@@ -36,7 +35,6 @@ __all__ = [
     "sequence_minhash",
     "sequence_neardup_candidates",
     "sequence_neardup_pairs",
-    "simhash64",
     "cluster_representatives",
     "dedup_clusters",
     "train_centroids",

@@ -10,8 +10,9 @@ bit-for-bit; Spark's xxhash64/hash are seeded differently from other
 engines, so we never use them for cross-engine-checked results).
 
 Scale notes:
-- shingling/minhashing is per-row columnar work (higher-order array
-  functions -> codegen), no shuffle;
+- shingling, MinHash and SimHash are per-row work in one Arrow pass
+  (vectorized Python: Catalyst evaluates higher-order array functions
+  interpreted, not codegen'd), no shuffle;
 - LSH banding turns O(n²) pair generation into a groupBy on band
   signatures — one shuffle whose key cardinality is ~n·bands/row;
 - candidate verification joins only within buckets.
@@ -44,9 +45,9 @@ def normalize_text(col: Column) -> Column:
 
 
 # Java regex \s (and DuckDB's RE2 \s) is ASCII-only; Python's is
-# Unicode-aware.  The vectorized Python twins below must split on the
+# Unicode-aware.  The vectorized Python passes below must split on the
 # SAME set or texts containing U+00A0/U+2028 etc. shingle differently
-# than the columnar path and the oracle.
+# than normalize_text and the oracle.
 _ASCII_WS = " \t\n\x0b\f\r"
 _ASCII_WS_RE = re.compile(f"[{_ASCII_WS}]+")
 
@@ -167,68 +168,52 @@ def minhash_signatures(
     id_col: str,
     num_hashes: int = 16,
     shingle_k: int = 3,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(id, sig: array<long>) — sig[j] = min over shingles of
     (a_j·md5_i64(shingle) + b_j) mod P.
 
     One md5 per shingle (the expensive op), then ``num_hashes`` cheap
     multiply-add derivations — the classic universal-hash MinHash
-    construction.  Deterministic across engines (md5-derived; never
-    Spark-seeded hash/xxhash64), and BIT-IDENTICAL between the two
-    impls (tests/test_dedup.py asserts it):
-
-    - ``impl="arrow"`` (default): Arrow-batched ``mapInPandas`` —
-      shingling + hashlib.md5 in vectorized Python.  ~15x faster than
-      the columnar form because Catalyst evaluates higher-order array
-      functions interpreted, not codegen'd.
-    - ``impl="columnar"``: pure Catalyst expressions (zero Python), for
-      plans that must stay whole-JVM (e.g. inside a larger codegen'd
-      select).  A shuffle-FREE Generate barrier
-      (plans.barrier.evaluate_once) between the shingle-hash array and
-      the per-seed minima stops CollapseProject from inlining the md5
-      work ``num_hashes`` times — previously a repartition (a real
-      exchange of the whole corpus) did this job.
+    construction, deterministic across engines (md5-derived; never
+    Spark-seeded hash/xxhash64).  One Arrow-batched ``mapInPandas``
+    pass of :func:`minhash_text_signature` per row; documents with NULL
+    text or fewer than ``shingle_k`` words emit no row.  The DuckDB
+    minhash_signatures pair replays it in SQL.
     """
-    if impl == "arrow":
-        return _minhash_signatures_arrow(df, text_col, id_col, num_hashes, shingle_k)
-    sh = word_shingles(F.col(text_col), shingle_k).alias("sh")
-    hs = F.transform(
-        F.col("sh"),
-        lambda s: F.pmod(
-            F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-            F.lit(MINHASH_P),
-        ),
-    ).alias("hs")
+    import pandas as pd
+    from pyspark.sql import types as T
 
-    def deriver(a: int, b: int):
-        # factory (not default-arg lambda): F.transform inspects the
-        # callable's arity, so the lambda must take exactly one param
-        return lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(MINHASH_P))
+    from cerberus_spark.sources.tables import spread
 
-    sig_cols = [
-        F.array_min(F.transform(F.col("hs"), deriver(a, b))).alias(f"h{j}")
-        for j, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    from cerberus_spark.plans.barrier import evaluate_once
+    a_vec, b_vec = minhash_coeff_vectors(num_hashes)
 
-    base = df.select(F.col(id_col), sh).filter(F.size("sh") > 0)
-    # Generate barrier: materializes hs ONCE with no data movement
-    # (CollapseProject would otherwise substitute the md5-transform
-    # into all num_hashes array_min expressions, multiplying the md5
-    # work by num_hashes)
-    barrier = evaluate_once(base, "hs", hs).drop("sh")
-    return barrier.select(F.col(id_col), F.array(*sig_cols).alias("sig"))
+    def compute(batches):
+        for pdf in batches:
+            ids, sigs = [], []
+            for rid, text in zip(pdf[id_col], pdf[text_col]):
+                sig = minhash_text_signature(text, shingle_k, a_vec, b_vec)
+                if sig is not None:
+                    ids.append(rid)
+                    sigs.append(sig)
+            if ids:  # empty frames infer float64 cols -> Arrow cast error
+                yield pd.DataFrame(
+                    {id_col: pd.Series(ids, dtype=object), "sig": pd.Series(sigs, dtype=object)}
+                )
+
+    out_schema = T.StructType(
+        [df.schema[id_col], T.StructField("sig", T.ArrayType(T.LongType()), False)]
+    )
+    return spread(df.select(id_col, text_col)).mapInPandas(compute, schema=out_schema)
 
 
 def minhash_text_signature(
     text: str | None, shingle_k: int, a_vec, b_vec
 ) -> list[int] | None:
-    """MinHash signature of ONE text — the columnar pipeline's
-    normalize/shingle/md5 steps, numpy for the (a·h+b) mod P minima
-    (``a_vec``/``b_vec``: int64 arrays of :func:`minhash_coeffs`).
-    None where the columnar path emits no row: NULL text, or fewer
-    than ``shingle_k`` words.  The per-row body of the Arrow
+    """MinHash signature of ONE text: :func:`normalize_text`'s
+    normalization, distinct ``shingle_k``-word shingles, one md5 each,
+    numpy for the (a·h+b) mod P minima (``a_vec``/``b_vec``: int64
+    arrays of :func:`minhash_coeffs`).  None for NULL text or fewer
+    than ``shingle_k`` words.  The per-row body of
     :func:`minhash_signatures` and of ``clean_corpus``'s fused document
     pass."""
     import numpy as np
@@ -258,39 +243,6 @@ def minhash_coeff_vectors(num_hashes: int):
         np.array([a for a, _ in coeffs], dtype=np.int64),
         np.array([b for _, b in coeffs], dtype=np.int64),
     )
-
-
-def _minhash_signatures_arrow(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int, shingle_k: int
-) -> DataFrame:
-    """Arrow-batched twin of the columnar MinHash
-    (:func:`minhash_text_signature` per row)."""
-    import pandas as pd
-
-    a_vec, b_vec = minhash_coeff_vectors(num_hashes)
-    id_field = df.schema[id_col]
-
-    def compute(batches):
-        for pdf in batches:
-            ids, sigs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                sig = minhash_text_signature(text, shingle_k, a_vec, b_vec)
-                if sig is not None:
-                    ids.append(rid)
-                    sigs.append(sig)
-            if ids:  # empty frames infer float64 cols -> Arrow cast error
-                yield pd.DataFrame(
-                    {id_col: pd.Series(ids, dtype=object), "sig": pd.Series(sigs, dtype=object)}
-                )
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [id_field, T.StructField("sig", T.ArrayType(T.LongType()), False)]
-    )
-    from cerberus_spark.sources.tables import spread
-
-    return spread(df.select(id_col, text_col)).mapInPandas(compute, schema=out_schema)
 
 
 def minhash_dup_candidates(
@@ -396,13 +348,11 @@ def bucket_pairs(buckets: DataFrame, count_alias: str) -> DataFrame:
 def shingle_hash_rows(
     df: DataFrame, text_col: str, id_col: str, k: int = 3
 ) -> DataFrame:
-    """Exploded (id, n_sh, shingle) rows with shingle = 63-bit md5 —
-    Arrow-batched (same normalize/shingle/md5 as the columnar path;
-    Catalyst's interpreted higher-order functions lose to vectorized
-    Python by ~10x on shingling, and this runs the subtree once even
-    when consumed twice by a self-join)."""
-    import hashlib
-
+    """Exploded (id, n_sh, shingle) rows with shingle = 63-bit md5 of
+    each distinct k-word shingle (:func:`minhash_text_signature`'s
+    shingling) — Arrow-batched: Catalyst's interpreted higher-order
+    functions lose to vectorized Python by ~10x on shingling, and this
+    runs the subtree once even when consumed twice by a self-join."""
     import pandas as pd
 
     id_field = df.schema[id_col]
@@ -450,7 +400,6 @@ def ngram_jaccard_pairs(
     id_col: str,
     k: int = 3,
     threshold: float = 0.8,
-    impl: str = "arrow",
     df_cap: int | None = None,
 ) -> DataFrame:
     """Exact Jaccard over k-word shingles for all pairs sharing ≥1
@@ -474,17 +423,9 @@ def ngram_jaccard_pairs(
     recomputed after the drop); documents whose shingles are all hot
     no longer pair — the standard recall trade of stop-word removal.
     """
-    if impl == "arrow":
-        # n_sh rides along on every exploded row, so the sizes join
-        # disappears: one self-join + one aggregation total
-        ex = shingle_hash_rows(df, text_col, id_col, k)
-    else:
-        base = df.select(
-            F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-        ).filter(F.size("sh") > 0)
-        ex = base.select(
-            "id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle_s")
-        ).select("id", "n_sh", md5_i64(F.col("shingle_s")).alias("shingle"))
+    # n_sh rides along on every exploded row, so the sizes join
+    # disappears: one self-join + one aggregation total
+    ex = shingle_hash_rows(df, text_col, id_col, k)
     if df_cap is not None:
         # Explicit shingle-keyed exchange: the consumers below (hot-set
         # agg, anti-join, self-join sides) all need this distribution,
@@ -536,39 +477,6 @@ def ngram_jaccard_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash64(col: Column, shingle_k: int = 2, n_bits: int = 60) -> Column:
-    """SimHash (60-bit by default, fits md5_i64's range) over word
-    shingles, pure columnar.
-
-    For each bit b: result bit b = 1 iff
-    Σ_shingles (bit b of md5_i64(shingle) ? +1 : −1) > 0.
-    aggregate() over the shingle array accumulates an n_bits-long
-    counter array against a LITERAL bitmask array (bit tests are
-    Column-vs-Column bitwiseAND — no per-bit shift-by-column, which
-    Spark lacks), then zip_with folds counters back into one long.
-    Deterministic, engine-portable (md5-based).
-    """
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(n_bits)])
-    sh = word_shingles(col, shingle_k)
-    hashes = F.transform(sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"))
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), n_bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                masks,
-                lambda m: F.when(h.bitwiseAND(m) != 0, F.lit(1)).otherwise(F.lit(-1)).cast("long"),
-            ),
-            lambda a, d: a + d,
-        ),
-    )
-    bits = F.zip_with(
-        counts, masks, lambda c, m: F.when(c > 0, m).otherwise(F.lit(0).cast("long"))
-    )
-    return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, x: acc.bitwiseOR(x))
-
-
 def simhash_rows(
     df: DataFrame,
     text_col: str,
@@ -576,15 +484,13 @@ def simhash_rows(
     shingle_k: int = 2,
     n_bits: int = 60,
 ) -> DataFrame:
-    """(id, simhash) rows via Arrow-batched vectorized Python —
-    BIT-IDENTICAL to the columnar :func:`simhash64` (same normalize/
-    shingle/md5; tests assert equality), ~4x faster because Catalyst
-    evaluates the 60-bit aggregate/zip_with tree interpreted while
-    numpy does the ±1 bit-count matrix in one shot.  Docs with NULL
-    text or fewer than ``shingle_k`` words get simhash 0, exactly like
-    the columnar empty-shingle fold."""
-    import hashlib
-
+    """(id, simhash) rows: 60-bit (by default, fits md5_i64's range)
+    SimHash over distinct word shingles, via Arrow-batched vectorized
+    Python.  Bit b of the result is 1 iff Σ_shingles (bit b of
+    md5_i64(shingle) ? +1 : −1) > 0; numpy does the ±1 bit-count
+    matrix in one shot.  Deterministic and engine-portable
+    (md5-based; the DuckDB simhash pair replays it).  Docs with NULL
+    text or fewer than ``shingle_k`` words get simhash 0."""
     import pandas as pd
 
     k = shingle_k
@@ -637,7 +543,7 @@ def simhash_rows(
 
 
 def simhash_hamming(a: Column, b: Column) -> Column:
-    """Hamming distance between two simhash64 values."""
+    """Hamming distance between two :func:`simhash_rows` values."""
     return F.bit_count(a.bitwiseXOR(b))
 
 
@@ -649,7 +555,6 @@ def simhash_candidates(
     n_bits: int = 60,
     bands: int = 6,
     max_hamming: int = 5,
-    impl: str = "arrow",
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs via banded hamming-neighbor search:
@@ -687,20 +592,9 @@ def simhash_candidates(
     mask = (1 << width) - 1
     words_n = F.size(F.split(normalize_text(F.col(text_col)), " "))
     eligible = df.filter(words_n >= shingle_k)
-    if impl == "arrow":
-        sigs = simhash_rows(eligible, text_col, id_col, shingle_k, n_bits).select(
-            F.col(id_col).alias("id"), F.col("simhash").alias("sh")
-        )
-    else:
-        sigs = eligible.select(
-            F.col(id_col).alias("id"),
-            simhash64(F.col(text_col), shingle_k, n_bits).alias("sh"),
-        )
-        # shuffle barrier: the columnar simhash is an expensive
-        # interpreted higher-order-function tree; without the Exchange,
-        # CollapseProject would inline it into every one of the
-        # `bands`+1 consumers below (same trick as columnar MinHash)
-        sigs = sigs.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    sigs = simhash_rows(eligible, text_col, id_col, shingle_k, n_bits).select(
+        F.col(id_col).alias("id"), F.col("simhash").alias("sh")
+    )
     band_structs = [
         F.struct(
             F.lit(b).alias("band_idx"),

@@ -5,12 +5,14 @@ stringified values.
 
 Usage: python scripts/oracle_check.py [sf_dir] [query ...]
 
-Env: ORACLE_CHECK_CPUS / ORACLE_CHECK_SHUFFLE override the session's
-parallelism and shuffle-partition count (default 16 / 2x cores).  Runs
-at a perverse layout (odd core count, non-power-of-2 shuffle) prove the
-contract's partition-count invariance: different partitionings mean
-different float summation orders and different shuffle layouts, so any
-pair that only matched DuckDB by summation-order luck fails here.
+Env: the session's cores are ``get_spark``'s: ``SPARK_GRAFT_CPUS``, else
+the cores this process may run on.  ORACLE_CHECK_SHUFFLE overrides the
+shuffle-partition count (default 2x cores) and ORACLE_CHECK_NO_AQE=1
+disables adaptive execution.  Runs at a perverse layout (odd core
+count, non-power-of-2 shuffle) prove the contract's partition-count
+invariance: different partitionings mean different float summation
+orders and different shuffle layouts, so any pair that only matched
+DuckDB by summation-order luck fails here.
 """
 
 from __future__ import annotations
@@ -49,7 +51,6 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    cpus = int(os.environ.get("ORACLE_CHECK_CPUS", "16"))
     shuffle = os.environ.get("ORACLE_CHECK_SHUFFLE")
     extra = (
         {"spark.sql.adaptive.enabled": "false"}
@@ -57,7 +58,6 @@ def main() -> int:
         else None
     )
     spark = get_spark(
-        parallelism=cpus,
         driver_memory="12g",
         shuffle_partitions=int(shuffle) if shuffle else None,
         extra_conf=extra,

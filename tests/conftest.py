@@ -38,3 +38,33 @@ def count_jobs(spark):
         jobs.n = scheduler.nextJobId() - before
 
     return counting
+
+
+@pytest.fixture
+def contract_pair(spark, tmp_path):
+    """``contract_pair(name, table, df)`` writes ``df`` as the contract
+    table ``table`` under a temporary scale-factor directory, runs the
+    contract query ``name`` on Spark and its oracle SQL on DuckDB over
+    it, asserts both return the same column names and returns
+    ``(spark_rows, duckdb_rows)``: tuples in the Spark query's column
+    order, sorted."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    def run(name, table, df):
+        sf_dir = str(tmp_path)
+        df.coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/{table}.parquet")
+        out = entry.queries()[name](spark, sf_dir)
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW {table} AS SELECT * FROM '{sf_dir}/{table}.parquet/*.parquet'"
+        )
+        res = con.execute(entry.oracle_sql()[name])
+        cols = [d[0] for d in res.description]
+        assert sorted(out.columns) == sorted(cols), (out.columns, cols)
+        order = [cols.index(c) for c in out.columns]
+        want = [tuple(r[i] for i in order) for r in res.fetchall()]
+        return sorted(map(tuple, out.collect()), key=repr), sorted(want, key=repr)
+
+    return run

@@ -165,19 +165,6 @@ def test_corpus_job_cli_incremental(spark, corpus, tmp_path):
     assert kept == {r.doc_id for r in batch["kept"].collect()}
 
 
-def test_clean_corpus_arrow_gate_equals_columnar_gate(spark, corpus):
-    """arrow_gate=True (the hot path) and the pure-Catalyst gate must
-    produce identical kept/dropped outputs."""
-    a = clean_corpus(corpus, arrow_gate=True)
-    c = clean_corpus(corpus, arrow_gate=False)
-    assert sorted(r.doc_id for r in a["kept"].collect()) == sorted(
-        r.doc_id for r in c["kept"].collect()
-    )
-    assert {(r.id, r.stage, r.reason) for r in a["dropped"].collect()} == {
-        (r.id, r.stage, r.reason) for r in c["dropped"].collect()
-    }
-
-
 def test_clean_corpus_survivor_policy_longest(spark, corpus):
     # doc 3 (near dup of 1, one word swapped, same length as BASE) vs a
     # LONGER near-dup with a higher id: keep-longest must keep the long
@@ -642,8 +629,8 @@ def edge_docs(spark):
 @pytest.mark.parametrize("normalize", [True, False])
 def test_document_pass_equals_staged_functions(spark, edge_docs, normalize):
     """The fused pass's text and ``_gate`` equal the Arrow gate over
-    ``normalize_unicode``, and its signatures equal both
-    ``minhash_signatures`` impls bit for bit."""
+    ``normalize_unicode``, and its signatures equal
+    ``minhash_signatures``' bit for bit."""
     from cerberus_spark.corpus import _document_pass, _stored_signatures
     from cerberus_spark.functions.text import gopher_report_arrow, normalize_unicode
     from cerberus_spark.operators.dedup import minhash_signatures
@@ -662,9 +649,30 @@ def test_document_pass_equals_staged_functions(spark, edge_docs, normalize):
     signed = _document_pass(edge_docs, "text", normalize, KEEP_ALL, mh)
     sigs = {r.doc_id: list(r.sig) for r in _stored_signatures(signed, "doc_id").collect()}
     assert sorted(sigs) == [1, 4, 5, 6, 7, 8, 9]  # no NULL text, no 2-word doc
-    for impl in ("arrow", "columnar"):
-        ref = minhash_signatures(staged_in, "text", "doc_id", impl=impl, **mh)
-        assert sigs == {r.doc_id: list(r.sig) for r in ref.collect()}, impl
+    ref = minhash_signatures(staged_in, "text", "doc_id", **mh)
+    assert sigs == {r.doc_id: list(r.sig) for r in ref.collect()}
+
+
+def _staged_document_pass(docs, text_col, normalize, quality_kwargs, minhash_kwargs):
+    """``corpus._document_pass`` composed from the standalone Arrow
+    operators, one pass each: ``normalize_unicode``, then
+    ``gopher_report_arrow``, then ``minhash_signatures`` over the
+    gate-kept documents, joined back by ``doc_id``."""
+    from cerberus_spark.corpus import DEFAULT_MINHASH
+    from cerberus_spark.functions.text import gopher_report_arrow, normalize_unicode
+    from cerberus_spark.operators.dedup import minhash_signatures
+
+    if normalize:
+        docs = docs.withColumn(text_col, normalize_unicode(text_col))
+    gated = gopher_report_arrow(docs, text_col, **(quality_kwargs or {}))
+    sigs = minhash_signatures(
+        gated.filter("keep"), text_col, "doc_id", **{**DEFAULT_MINHASH, **(minhash_kwargs or {})}
+    )
+    return (
+        gated.join(sigs.withColumnRenamed("sig", "_sig"), "doc_id", "left")
+        .withColumn("_gate", F.struct("keep", "reasons"))
+        .select(*docs.columns, "_sig", "_gate")
+    )
 
 
 @pytest.mark.parametrize(
@@ -677,21 +685,23 @@ def test_document_pass_equals_staged_functions(spark, edge_docs, normalize):
     ],
     ids=["default", "no_normalize", "lm_filter", "longest"],
 )
-def test_clean_corpus_fused_equals_staged(spark, edge_docs, kw):
+def test_clean_corpus_fused_equals_staged(spark, edge_docs, monkeypatch, kw):
     """One Arrow pass per document (the default) and the staged
-    composition (``arrow_gate=False``: normalize, gate and MinHash as
-    separate passes) give the same kept, dropped and report rows."""
+    composition of the standalone operators (normalize, gate and
+    MinHash as separate passes) give the same kept, dropped and report
+    rows."""
+    import cerberus_spark.corpus as corpus
+
     docs = edge_docs.union(
         spark.createDataFrame([(10, BASE + " plus a longer tail")], "doc_id long, text string")
     )
     common = {"minhash_kwargs": {"num_hashes": 32, "shingle_k": 3}, "bands": 8, "rows_per_band": 4}
-    fused = clean_corpus(docs, **common, **kw)
-    staged = clean_corpus(docs, arrow_gate=False, **common, **kw)
+    fused = {k: sorted(v.collect(), key=repr) for k, v in clean_corpus(docs, **common, **kw).items()}
+    monkeypatch.setattr(corpus, "_document_pass", _staged_document_pass)
+    staged = clean_corpus(docs, **common, **kw)
     for name in ("kept", "dropped", "report"):
-        assert fused[name].schema == staged[name].schema, name
-        got = sorted(fused[name].collect(), key=repr)
-        assert got == sorted(staged[name].collect(), key=repr), name
-    stages = {r.stage for r in fused["dropped"].collect()}
+        assert fused[name] == sorted(staged[name].collect(), key=repr), name
+    stages = {r.stage for r in fused["dropped"]}
     assert {"quality", "near_dup"} <= stages
     assert ("exact_dup" in stages) == kw.get("normalize", True)  # docs 4/5 and 1/6
 
@@ -709,8 +719,8 @@ NULL_TEXT_DOCS = [
 
 
 @pytest.mark.parametrize("checkpoint_stages", [True, False])
-@pytest.mark.parametrize("arrow_gate", [True, False])
-def test_null_text_docs_are_kept(spark, tmp_path, arrow_gate, checkpoint_stages):
+@pytest.mark.parametrize("normalize", [True, False])
+def test_null_text_docs_are_kept(spark, tmp_path, normalize, checkpoint_stages):
     """The gate keeps a NULL-text document, and it has no fingerprint
     and no signature, so it is never a dup: it lands in ``kept``.
     Every document is in exactly one of ``kept`` and ``dropped``, and
@@ -718,10 +728,9 @@ def test_null_text_docs_are_kept(spark, tmp_path, arrow_gate, checkpoint_stages)
     from cerberus_spark.corpus import compact_corpus, ingest_corpus_increment
 
     docs = spark.createDataFrame(NULL_TEXT_DOCS, "doc_id long, text string")
-    kw = {"minhash_kwargs": {"num_hashes": 32, "shingle_k": 3}}
+    kw = {"normalize": normalize, "minhash_kwargs": {"num_hashes": 32, "shingle_k": 3}}
     outs = clean_corpus(
-        docs, arrow_gate=arrow_gate, checkpoint_stages=checkpoint_stages,
-        bands=8, rows_per_band=4, **kw,
+        docs, checkpoint_stages=checkpoint_stages, bands=8, rows_per_band=4, **kw
     )
     kept = sorted(r.doc_id for r in outs["kept"].collect())
     dropped = {(r.id, r.stage, r.reason) for r in outs["dropped"].collect()}

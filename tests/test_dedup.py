@@ -10,8 +10,8 @@ from cerberus_spark.operators.dedup import (
     minhash_dup_candidates,
     minhash_signatures,
     ngram_jaccard_pairs,
-    simhash64,
     simhash_hamming,
+    simhash_rows,
     word_shingles,
 )
 
@@ -76,7 +76,7 @@ def test_ngram_jaccard(spark, docs_df):
 
 
 def test_simhash_distance(spark, docs_df):
-    sh = docs_df.select("doc_id", simhash64(F.col("text")).alias("h"))
+    sh = simhash_rows(docs_df, "text", "doc_id").select("doc_id", F.col("simhash").alias("h"))
     a = sh.alias("a")
     b = sh.alias("b")
     d = (
@@ -94,47 +94,25 @@ def test_simhash_distance(spark, docs_df):
     assert dist[(0, 1)] <= 12
 
 
-def test_minhash_arrow_columnar_bit_identical(spark, docs_df):
-    """The Arrow (mapInPandas) and pure-Catalyst MinHash impls must
-    produce byte-identical signatures — same normalize/shingle/md5.
-    DOCS includes a non-ASCII-whitespace document: Python's \\s is
-    Unicode-aware while Java's is ASCII-only, so the Arrow path must
-    split on the ASCII set or doc 6 shingles differently."""
-    arrow = {
-        r.doc_id: r.sig
-        for r in minhash_signatures(docs_df, "text", "doc_id", 16, impl="arrow").collect()
-    }
-    columnar = {
-        r.doc_id: r.sig
-        for r in minhash_signatures(docs_df, "text", "doc_id", 16, impl="columnar").collect()
-    }
-    assert arrow == columnar and len(arrow) > 0
-    assert 6 in arrow  # the unicode-ws doc made it through both paths
-
-
-def test_ngram_jaccard_arrow_columnar_identical(spark, docs_df):
-    """Same cross-impl guarantee for the shingle-hash explode path."""
-    a = ngram_jaccard_pairs(docs_df, "text", "doc_id", k=3, threshold=0.1, impl="arrow")
-    c = ngram_jaccard_pairs(docs_df, "text", "doc_id", k=3, threshold=0.1, impl="columnar")
-    pa = sorted((r.id_a, r.id_b, round(r.jaccard, 9)) for r in a.collect())
-    pc = sorted((r.id_a, r.id_b, round(r.jaccard, 9)) for r in c.collect())
-    assert pa == pc and len(pa) > 0
-
-
-def test_simhash_arrow_columnar_bit_identical(spark, docs_df):
-    """Arrow simhash_rows must equal the columnar simhash64 Column fn
-    bit-for-bit (incl. the unicode-whitespace doc and a null text)."""
-    from cerberus_spark.operators.dedup import simhash_rows
-
-    with_null = docs_df.union(
-        spark.createDataFrame([(99, None)], "doc_id long, text string")
-    )
-    arrow = {r.doc_id: r.simhash for r in simhash_rows(with_null, "text", "doc_id").collect()}
-    columnar = {
-        r.doc_id: r.sh
-        for r in with_null.select("doc_id", simhash64(F.col("text"), 2).alias("sh")).collect()
-    }
-    assert arrow == columnar and len(arrow) == 8
+@pytest.mark.parametrize("name", ["minhash_signatures", "ngram_jaccard", "simhash"])
+def test_dedup_pair_edge_parity(spark, contract_pair, name):
+    """The Spark contract query and its DuckDB oracle agree on DOCS plus
+    a NULL-text document: DOCS holds exact dups, a near dup, a 2-word
+    doc (under the 3-word shingle) and a non-ASCII-whitespace doc
+    (Python's \\s is Unicode-aware, Java's and RE2's are ASCII-only, so
+    the Arrow passes must split on the ASCII set)."""
+    docs = spark.createDataFrame(DOCS + [(99, None)], "doc_id long, text string")
+    got, want = contract_pair(name, "documents", docs)
+    assert got == want, (got, want)
+    if name == "minhash_signatures":
+        # (doc_id, h_idx, h_val): no row for NULL text or doc 4's 2 words
+        assert {r[0] for r in got} == {0, 1, 2, 3, 5, 6}
+    elif name == "ngram_jaccard":
+        assert {(r[0], r[1]) for r in got} >= {(0, 1), (0, 3), (0, 5), (3, 5)}
+    else:
+        # one row per doc; NULL text and doc 4 sign 0
+        assert {r[0] for r in got} == {0, 1, 2, 3, 4, 5, 6, 99}
+        assert (99, 0) in got
 
 
 def test_simhash_candidates_banded(spark, docs_df):

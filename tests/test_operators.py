@@ -216,6 +216,7 @@ def test_validate_nested_pair_null_props_parity(spark, tmp_path):
         (3, T0, 10, "purchase", 1.0, '{"k": 42}'),   # p nulled by design
         (4, T0, 10, None, 1.0, '{"k": 42}'),         # NULL event_type
         (5, T0, 10, "view", 1.0, '{"k": 2}'),        # nested min
+        (6, T0, 10, "view", 1.0, "{bad"),            # malformed -> k NULL
     ]
     df = spark.createDataFrame(
         rows,
@@ -240,6 +241,34 @@ def test_validate_nested_pair_null_props_parity(spark, tmp_path):
     assert got == want, (got, want)
     assert (2, "p", "required") in got      # the latent path, now pinned
     assert (2, "p.k", "required") not in got
+    # malformed JSON: Spark parses a struct of NULL fields; the oracle's
+    # json_valid guard gives the same NULL k instead of raising
+    assert (6, "p.k", "required") in got
+
+
+def test_validate_extended_pair_malformed_props_parity(spark, contract_pair):
+    """Cross-engine parity of the validate_extended contract pair on
+    NULL and malformed props: Spark's from_json gives no map to check,
+    and the oracle's json_valid guard gives a NULL ``k`` instead of
+    DuckDB raising on the malformed row."""
+    import datetime as dt
+
+    T0 = dt.datetime(2026, 1, 1)
+    rows = [
+        (1, T0, 10, "view", 1.0, '{"k": 42}'),
+        (2, T0, 11, "view", 1.0, '{"k": 2}'),      # valuesrules.min
+        (3, T0, 12, "view", 1.0, None),
+        (4, T0, 13, "view", 1.0, "{bad"),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+    got, want = contract_pair("validate_extended", "events", df)
+    assert got == want, (got, want)
+    assert (2, "pm", "valuesrules.min") in got
+    assert not [r for r in got if r[0] in (3, 4) and r[1] == "pm"]
 
 
 def test_perplexity_buckets_pair_null_lang_parity(spark, tmp_path):
@@ -279,16 +308,12 @@ def test_perplexity_buckets_pair_null_lang_parity(spark, tmp_path):
     assert null_rows == [(9, None, None)]  # present, unbucketed — both engines
 
 
-def test_conversation_gate_pair_null_user_parity(spark, tmp_path):
+def test_conversation_gate_pair_null_user_parity(spark, contract_pair):
     """Cross-engine parity of the conversation_gate contract pair when
     user_id is NULL: both engines treat the NULL user as one
     conversation and join its sequence counts to its contiguity row
     null-safely, so its violations are counted, not zeroed."""
     import datetime as dt
-
-    import duckdb
-
-    import __spark_entry__ as entry
 
     T0 = dt.datetime(2026, 1, 1)
     rows = [
@@ -303,17 +328,7 @@ def test_conversation_gate_pair_null_user_parity(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     )
-    sf_dir = str(tmp_path)
-    df.coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/events.parquet")
-
-    got = sorted(
-        map(tuple, entry.queries()["conversation_gate"](spark, sf_dir).collect()), key=repr
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet/*.parquet'"
-    )
-    want = sorted(con.execute(entry.oracle_sql()["conversation_gate"]).fetchall(), key=repr)
+    got, want = contract_pair("conversation_gate", "events", df)
     assert got == want, (got, want)
     # NULL user: dup k 0, missing k 1, purchase -> purchase disallowed
     assert (None, 3, 1, 1, 0, 1, 0, 0, 0, False) in got

@@ -21,10 +21,10 @@ from cerberus_spark.pipeline import (
     transcript_stats,
 )
 from cerberus_spark.plans.checkpoint import normalize_unit
-from cerberus_spark.rules import python_validate
 from cerberus_spark.sources.catalog import TOOLS, tool_catalog
 from cerberus_spark.validation import validate
 from cerberus_spark.sources.transcripts import generate_transcripts, py_rows
+from python_validate import python_validate
 
 N_CONVS = 700
 

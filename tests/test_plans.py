@@ -372,15 +372,20 @@ def test_merge_intervals_single_shuffle_no_join(spark):
 
 
 def test_gopher_gate_is_shuffle_free_projection(spark):
-    """The composite quality gate must stay a per-row projection —
-    zero exchanges regardless of how many signals it composes."""
-    from cerberus_spark.functions.text import gopher_filter_report
+    """The composite quality gate must stay one per-row Python pass —
+    zero exchanges and one MapInPandas, however many signals and
+    k-gram caps it composes."""
+    from cerberus_spark.functions.text import gopher_report_arrow
 
     df = spark.range(10).select(
         F.concat(F.lit("doc text sample "), F.col("id").cast("string")).alias("text")
     )
-    plan = plan_of(df.select(gopher_filter_report(F.col("text")).alias("rep")))
-    assert "Exchange" not in plan, plan
+    out = gopher_report_arrow(
+        df, "text", max_top_ngram_char_milli={2: 200}, max_dup_ngram_char_milli={5: 150}
+    )
+    plan = plan_of(out)
+    assert n_exchanges(plan) == 0, plan
+    assert python_nodes(out) == ["MapInPandas"], plan
 
 
 def test_normalize_phase_is_shuffle_free_projection(spark):
@@ -488,6 +493,21 @@ def test_q21_no_expand_two_phase_distincts(spark):
 
     plan = plan_of(entry.q21_waiting_suppliers(spark, SF_DIR))
     assert "Expand" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["q3_top_revenue_orders", "q10_returned_items", "q18_large_orders", "q21_waiting_suppliers"],
+)
+def test_global_top_k_plans_take_ordered(spark, name):
+    """Global top-k shapes (``row_number()`` over an unpartitioned
+    window, filtered to ``rk <= k``): Spark's window group-limit rewrite
+    plans a ``TakeOrderedAndProject`` under the window, so the window
+    ranks k rows, not every row on one partition."""
+    import __spark_entry__ as entry
+
+    plan = plan_of(getattr(entry, name)(spark, SF_DIR))
+    assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_q17_avg_subquery_decorrelated_to_broadcast(spark):

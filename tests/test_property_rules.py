@@ -11,8 +11,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from cerberus_spark.rules import python_validate
 from cerberus_spark.validation import validate
+from python_validate import python_validate
 
 # --- strategies ------------------------------------------------------------
 

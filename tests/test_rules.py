@@ -5,8 +5,9 @@ from __future__ import annotations
 
 import pytest
 
-from cerberus_spark.rules import SchemaError, compile_schema, python_validate
+from cerberus_spark.rules import SchemaError, compile_schema
 from cerberus_spark.validation import validate
+from python_validate import python_validate
 
 ROWS = [
     # (conv_id, turn_idx, role, text, tool, score)
@@ -400,7 +401,7 @@ def test_validator_flags_update_and_require_all(spark):
     required; update drops required entirely (and wins over
     require_all) — identically in the Spark compiler and the python
     twin, because both consume the same apply_validator_flags rewrite."""
-    from cerberus_spark.rules import apply_validator_flags, python_validate
+    from cerberus_spark.rules import apply_validator_flags
     from cerberus_spark.validation import validate
 
     schema = {"a": {"type": "string"}, "b": {"type": "integer", "required": True}}

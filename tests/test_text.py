@@ -348,7 +348,7 @@ def test_normalize_unicode_bad_form_raises(spark):
 
 
 def test_gopher_filter_report(spark):
-    from cerberus_spark.functions.text import gopher_filter_report
+    from cerberus_spark.functions.text import gopher_report_arrow
 
     good = (
         "this is a reasonably long and varied document about the engine "
@@ -361,19 +361,14 @@ def test_gopher_filter_report(spark):
     repeats = ("spam " * 80).strip()
     rows = [(0, good), (1, "tiny"), (2, repeats)]
     df = spark.createDataFrame(rows, "id int, t string")
-    got = {
-        r.id: (r.rep.keep, list(r.rep.reasons))
-        for r in df.select("id", gopher_filter_report(F.col("t")).alias("rep")).collect()
-    }
+    rep = gopher_report_arrow(df, "t")
+    got = {r.id: (r.keep, list(r.reasons)) for r in rep.collect()}
     assert got[0] == (True, [])
     assert got[1][0] is False and "too_short" in got[1][1]
     assert got[2][0] is False
     assert {"dup_words", "top_word_dominates"} <= set(got[2][1])
     # triage shape: reasons explode/aggregate without re-running filters
-    counts = (
-        df.select(F.explode(gopher_filter_report(F.col("t")).getField("reasons")).alias("r"))
-        .groupBy("r").count().collect()
-    )
+    counts = rep.select(F.explode("reasons").alias("r")).groupBy("r").count().collect()
     assert {r.r for r in counts} >= {"too_short", "dup_words"}
 
 
@@ -400,10 +395,7 @@ def _py_ngram_millis(text: str, k: int):
 
 
 def test_ngram_char_millis_match_python_twin(spark):
-    from cerberus_spark.functions.text import (
-        dup_ngram_char_milli,
-        top_ngram_char_milli,
-    )
+    from cerberus_spark.functions.text import repetition_metrics
 
     texts = [
         "the cat sat on the mat the cat sat on the rug",   # repeated 3-grams
@@ -415,146 +407,66 @@ def test_ngram_char_millis_match_python_twin(spark):
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id long, t string")
     got = {
-        r.id: (r.top, r.dup)
-        for r in df.select(
-            "id",
-            top_ngram_char_milli(F.col("t"), 3).alias("top"),
-            dup_ngram_char_milli(F.col("t"), 3).alias("dup"),
-        ).collect()
+        r.id: (r.top_3gram_char_milli, r.dup_3gram_char_milli)
+        for r in repetition_metrics(df, "t", "id", char_ks=(3,)).collect()
     }
     for i, t in enumerate(texts):
         assert got[i] == _py_ngram_millis(t, 3), (i, t, got[i], _py_ngram_millis(t, 3))
 
 
 def test_ngram_char_millis_hand_checked(spark):
-    from cerberus_spark.functions.text import (
-        dup_ngram_char_milli,
-        top_ngram_char_milli,
-    )
+    from cerberus_spark.functions.text import repetition_metrics
 
     # "a b a b a b": 2-grams = [a b, b a, a b, b a, a b]; top = "a b" x3
     # (len 3); total chars = len("a b a b a b") = 11
     # top = floor(1000*9/11) = 818; dup = (3+2)*3 = 15 chars -> floor(15000/11) = 1363
-    df = spark.createDataFrame([("a b a b a b",)], "t string")
-    r = df.select(
-        top_ngram_char_milli(F.col("t"), 2).alias("top"),
-        dup_ngram_char_milli(F.col("t"), 2).alias("dup"),
-    ).collect()[0]
-    assert r.top == 818
-    assert r.dup == 1363
+    df = spark.createDataFrame([(0, "a b a b a b")], "id long, t string")
+    r = repetition_metrics(df, "t", "id", char_ks=(2,)).collect()[0]
+    assert r.top_2gram_char_milli == 818
+    assert r.dup_2gram_char_milli == 1363
 
 
 def test_gopher_gate_ngram_char_rules(spark):
     """Enabling the character-coverage n-gram caps adds the
     corresponding reasons; defaults leave the gate unchanged."""
-    from cerberus_spark.functions.text import gopher_filter_report
+    from cerberus_spark.functions.text import gopher_report_arrow
 
     # 60 tokens, one 3-gram repeated 20x -> massive 3-gram char coverage
     spam = "the cat sat " * 20
     df = spark.createDataFrame([(spam,)], "t string")
-    base = df.select(gopher_filter_report(F.col("t")).alias("r")).collect()[0].r
-    gated = (
-        df.select(
-            gopher_filter_report(
-                F.col("t"),
-                max_top_ngram_char_milli={3: 180},
-                max_dup_ngram_char_milli={5: 150},
-            ).alias("r")
-        )
-        .collect()[0]
-        .r
-    )
+    base = gopher_report_arrow(df, "t").collect()[0]
+    gated = gopher_report_arrow(
+        df, "t", max_top_ngram_char_milli={3: 180}, max_dup_ngram_char_milli={5: 150}
+    ).collect()[0]
     assert "top_3gram_chars" not in base.reasons
     assert "top_3gram_chars" in gated.reasons
     assert "dup_5gram_chars" in gated.reasons
 
 
-def test_repetition_metrics_arrow_bit_identical_to_columnar(spark):
-    """The single-pass Arrow repetition scan must be BIT-identical to
-    the columnar fold family on edge cases (empty, blank, null, short,
-    repeated) AND on real testdata documents — same normalization, same
-    Spark split("") semantics, same tie rules."""
-    from cerberus_spark.functions.text import (
-        dup_2gram_milli,
-        dup_ngram_char_milli,
-        dup_word_milli,
-        repetition_metrics,
-        top_ngram_char_milli,
-        top_word_milli,
-    )
-
-    edge = [
-        (0, "the cat sat on the mat the cat sat"),
-        (1, ""),
-        (2, "   "),
-        (3, None),
-        (4, "one"),
-        (5, "a b"),
-        (6, ("spam ham " * 40).strip()),
-        (7, "Mixed   CASE \t and   spacing  mixed case and spacing"),
-    ]
-    df = spark.createDataFrame(edge, "doc_id long, text string").unionByName(
-        spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-        .limit(200)
-        .select((F.col("doc_id") + 1000).alias("doc_id"), "text")
-    )
-    t = F.col("text")
-    cols = df.select(
-        "doc_id",
-        dup_word_milli(t).alias("dup_word_milli"),
-        top_word_milli(t).alias("top_word_milli"),
-        dup_2gram_milli(t).alias("dup_2gram_milli"),
-        top_ngram_char_milli(t, 3).alias("top_3gram_char_milli"),
-        dup_ngram_char_milli(t, 3).alias("dup_3gram_char_milli"),
-    )
-    want = {r.doc_id: r.asDict() for r in cols.collect()}
-    got = {
-        r.doc_id: r.asDict()
-        for r in repetition_metrics(df, "text", "doc_id", char_ks=(3,)).collect()
-    }
-    assert got == want
+#: empty, blank, NULL, one word and two words, then repeated and
+#: mixed-case text; every engine must agree on each
+REPETITION_EDGE_DOCS = [
+    (0, ""),
+    (1, " \t "),
+    (2, None),
+    (3, "one"),
+    (4, "a b"),
+    (5, "the cat sat on the mat the cat sat"),
+    (6, ("spam ham " * 40).strip()),
+    (7, "Mixed   CASE \t and   spacing  mixed case and spacing"),
+]
 
 
-def test_gopher_report_arrow_bit_identical_to_columnar(spark):
-    """Arrow gate twin must reproduce the columnar gate's keep flag and
-    reasons list EXACTLY (same order, same NULL-keeps semantics) on
-    edge cases and real documents, with the k-gram caps enabled."""
-    from cerberus_spark.functions.text import (
-        gopher_filter_report,
-        gopher_report_arrow,
-    )
-
-    edge = [
-        (0, "the cat sat on the mat " * 10),
-        (1, ""),
-        (2, " \t "),
-        (3, None),
-        (4, "word " * 60),
-        (5, ("spam " * 80).strip()),
-        (6, "a b " * 100),
-    ]
-    df = spark.createDataFrame(edge, "doc_id long, text string").unionByName(
-        spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-        .limit(150)
-        .select((F.col("doc_id") + 1000).alias("doc_id"), "text")
-    )
-    kw = dict(
-        max_top_ngram_char_milli={2: 200, 3: 180},
-        max_dup_ngram_char_milli={5: 150},
-    )
-    rep = gopher_filter_report(F.col("text"), **kw)
-    want = {
-        r.doc_id: (r.keep, list(r.reasons))
-        for r in df.select(
-            "doc_id",
-            rep.getField("keep").alias("keep"),
-            rep.getField("reasons").alias("reasons"),
-        ).collect()
-    }
-    got = {
-        r.doc_id: (r.keep, list(r.reasons))
-        for r in gopher_report_arrow(df, "text", **kw).select(
-            "doc_id", "keep", "reasons"
-        ).collect()
-    }
-    assert got == want
+@pytest.mark.parametrize("name", ["doc_repetition", "ngram_repetition", "gopher_gate"])
+def test_repetition_pair_edge_parity(spark, contract_pair, name):
+    """The Arrow repetition scan and gate agree with their DuckDB
+    oracles on the edge rows, and each engine keeps the NULL-text
+    document: NULL metrics, and a gate that keeps it."""
+    docs = spark.createDataFrame(REPETITION_EDGE_DOCS, "doc_id long, text string")
+    got, want = contract_pair(name, "documents", docs)
+    assert got == want, (got, want)
+    assert [r[0] for r in got] == [d for d, _ in REPETITION_EDGE_DOCS]
+    null_row = {"doc_repetition": (2, None, None, None),
+                "ngram_repetition": (2, None, None),
+                "gopher_gate": (2, True, "")}[name]
+    assert null_row in got

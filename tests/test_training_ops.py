@@ -355,11 +355,7 @@ def test_contamination_plan_broadcasts_eval_side(spark):
 
 
 def test_repetition_metrics_hand_checked(spark):
-    from cerberus_spark.functions.text import (
-        dup_2gram_milli,
-        dup_word_milli,
-        top_word_milli,
-    )
+    from cerberus_spark.functions.text import repetition_metrics
 
     df = spark.createDataFrame(
         [
@@ -370,15 +366,16 @@ def test_repetition_metrics_hand_checked(spark):
         ],
         "id long, text string",
     )
-    t = F.col("text")
     rows = {
         r.id: r
-        for r in df.select(
+        for r in repetition_metrics(df, "text", "id")
+        .select(
             "id",
-            dup_word_milli(t).alias("dw"),
-            top_word_milli(t).alias("tw"),
-            dup_2gram_milli(t).alias("d2"),
-        ).collect()
+            F.col("dup_word_milli").alias("dw"),
+            F.col("top_word_milli").alias("tw"),
+            F.col("dup_2gram_milli").alias("d2"),
+        )
+        .collect()
     }
     # doc 1: dup words 3/8=375; top word 'the' 3/8=375; 2-grams 7 total,
     # 6 distinct ('the cat' repeats) -> 142
@@ -389,18 +386,10 @@ def test_repetition_metrics_hand_checked(spark):
 
 
 def test_repetition_metrics_are_shuffle_free(spark):
-    from cerberus_spark.functions.text import (
-        dup_2gram_milli,
-        dup_word_milli,
-        top_word_milli,
-    )
+    from cerberus_spark.functions.text import repetition_metrics
 
     df = spark.range(100).withColumn("text", F.concat_ws(" ", F.lit("a"), F.col("id").cast("string")))
-    out = df.select(
-        dup_word_milli(F.col("text")).alias("a"),
-        top_word_milli(F.col("text")).alias("b"),
-        dup_2gram_milli(F.col("text")).alias("c"),
-    )
+    out = repetition_metrics(df, "text", "id", char_ks=(2, 3))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 

@@ -6,9 +6,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cerberus_spark.rules import python_validate
 from cerberus_spark.sources.transcripts import generate_transcripts, py_rows
 from cerberus_spark.validation import validate
+from python_validate import python_validate
 
 N_CONVS = 800
 
