@@ -613,25 +613,21 @@ def clean_transcripts(
     return {"kept": kept, "dropped": dropped, "report": report}
 
 
-def ingest_transcript_increment(
-    batch: DataFrame, work_dir: str, batch_id: int | None = None
-) -> None:
+def ingest_transcript_increment(batch: DataFrame, work_dir: str, batch_id: int) -> None:
     """Incremental-ingest half of the transcript pipeline: store one
     micro-batch of turns under ``<work_dir>/turns``.
 
-    With ``batch_id`` (pass foreachBatch's second argument), the batch
-    lands in its own ``batch_id=<n>`` partition directory with
-    OVERWRITE semantics — a foreachBatch retry (at-least-once on
-    failure) rewrites the same directory instead of appending a
-    duplicate copy, so ingest is idempotent per batch.  Unlike the
-    document pipeline (whose exact-dedup stage absorbs duplicated
-    docs), duplicated TURNS corrupt the health gate — two copies of
-    every turn manufacture self-transitions no grammar allows and
-    quarantine every conversation — so transcript ingest must be
-    idempotent, not merely at-least-once.  Without ``batch_id`` the
-    batch appends flat (caller manages retries).
-    :func:`compact_transcripts` drops the ``batch_id`` partition
-    column it induces.
+    The batch lands in its own ``batch_id=<n>`` partition directory
+    (pass foreachBatch's second argument) with OVERWRITE semantics — a
+    foreachBatch retry (at-least-once on failure) rewrites the same
+    directory instead of appending a duplicate copy, so ingest is
+    idempotent per batch.  Unlike the document pipeline (whose
+    exact-dedup stage absorbs duplicated docs), duplicated TURNS
+    corrupt the health gate — two copies of every turn manufacture
+    self-transitions no grammar allows and quarantine every
+    conversation — so transcript ingest must be idempotent, not merely
+    at-least-once.  :func:`compact_transcripts` drops the ``batch_id``
+    partition column it induces.
 
     Deliberately storage-only — unlike :func:`ingest_corpus_increment`
     (whose normalize / quality-gate / fingerprint / signature stages
@@ -651,13 +647,9 @@ def ingest_transcript_increment(
     """
     import os
 
-    turns = os.path.join(work_dir, "turns")
-    if batch_id is None:
-        batch.write.mode("append").parquet(turns)
-    else:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(turns, f"batch_id={int(batch_id)}")
-        )
+    batch.write.mode("overwrite").parquet(
+        os.path.join(work_dir, "turns", f"batch_id={int(batch_id)}")
+    )
 
 
 def compact_transcripts(
@@ -681,12 +673,30 @@ def compact_transcripts(
     completes (availableNow) or on a schedule (outputs are snapshots
     of the corpus ingested so far).  The ``batch_id`` partition column
     induced by per-batch ingest directories is dropped — it is ingest
-    bookkeeping, not an input column."""
+    bookkeeping, not an input column.
+
+    Raises ``ValueError`` when ``<work_dir>/turns`` holds files outside
+    ``batch_id=<n>`` directories (a flat append from an older ingest):
+    partition discovery reads only the ``batch_id`` directories, so the
+    flat turns would be dropped without a word."""
     import os
 
-    turns = spark.read.parquet(os.path.join(work_dir, "turns"))
-    if "batch_id" in turns.columns:
-        turns = turns.drop("batch_id")
+    turns_dir = os.path.join(work_dir, "turns")
+    path = spark._jvm.org.apache.hadoop.fs.Path(turns_dir)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(path):
+        entries = [(st.getPath().getName(), st.isDirectory()) for st in fs.listStatus(path)]
+        stray = sorted(
+            name
+            for name, is_dir in entries
+            if not name.startswith(("_", ".")) and not (is_dir and name.startswith("batch_id="))
+        )
+        if stray:
+            raise ValueError(
+                f"{turns_dir} holds {stray} outside batch_id=<n> directories; "
+                "move them into a batch_id=<n> directory or delete them"
+            )
+    turns = spark.read.parquet(turns_dir).drop("batch_id")
     return clean_transcripts(
         turns, conv_col, order_cols, state_col, ts_col,
         allowed, allowed_first, **clean_kwargs,

@@ -575,7 +575,7 @@ def gopher_report_arrow(df, text_col: str, **thresholds):
     ``reasons`` array<string> (every failed gate, so corpus triage can
     ``explode(reasons)`` -> groupBy instead of re-running filters) and
     ``keep`` boolean.  A per-row pass: zero exchanges.  The DuckDB
-    gopher_gate pair replays the default gate in SQL."""
+    gopher_gate pair replays the gate in SQL."""
     gopher_reasons(None, **thresholds)  # rejects unknown thresholds here
     in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
 

@@ -1,7 +1,6 @@
-"""Physical-plan helpers: skew handling, lineage, checkpoint/resume."""
+"""Physical-plan helpers: skew handling, checkpoint/resume."""
 
 from cerberus_spark.plans.skew import salted_repartition, two_stage_agg
-from cerberus_spark.plans.lineage import with_lineage
 from cerberus_spark.plans.checkpoint import AuditLog
 
-__all__ = ["salted_repartition", "two_stage_agg", "with_lineage", "AuditLog"]
+__all__ = ["salted_repartition", "two_stage_agg", "AuditLog"]

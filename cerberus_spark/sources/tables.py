@@ -87,8 +87,3 @@ def local_table(spark: SparkSession, rows, schema: StructType | str) -> DataFram
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    for t in TABLES:
-        load_table(spark, t, sf_dir).createOrReplaceTempView(t)

@@ -569,6 +569,21 @@ def test_incremental_transcripts_match_batch(spark, tmp_path):
     assert "batch_id" not in inc["kept"].columns
 
 
+def test_compact_transcripts_rejects_flat_files(spark, tmp_path):
+    """A parquet file written flat next to a ``batch_id=<n>`` directory
+    (the layout of an ingest without batch ids) is skipped by partition
+    discovery, so compaction refuses it by name instead of silently
+    dropping its turns."""
+    from cerberus_spark.corpus import compact_transcripts, ingest_transcript_increment
+
+    df = _transcript_fixture(spark)
+    work = str(tmp_path / "work")
+    ingest_transcript_increment(df, work, 0)
+    df.coalesce(1).write.mode("append").parquet(f"{work}/turns")
+    with pytest.raises(ValueError, match="outside batch_id=<n> directories"):
+        compact_transcripts(spark, work, "conv", ["idx"], "tok", "ts", {("s", "c")})
+
+
 def test_transcript_job_cli_incremental(spark, tmp_path):
     """--incremental CLI path: stream-ingest + compact writes the same
     sink layout and keeps the same conversations as batch mode."""

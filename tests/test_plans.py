@@ -436,151 +436,6 @@ def test_sequence_fingerprints_single_shuffle_no_python(spark):
         assert node not in plan, plan
 
 
-# ---------------------------------------------------------------------------
-# relational planner shapes (TPC-H-style contract queries, r5 additions)
-# ---------------------------------------------------------------------------
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_q7_dims_broadcast_single_fact_shuffle_join(spark):
-    """Q7 shape: supplier/customer/nation(x2) must all be broadcast —
-    the only non-broadcast join allowed is the fact-fact
-    lineitem<->orders equi join (shuffle on the order key)."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(entry.q7_volume_shipping(spark, SF_DIR))
-    assert plan.count("BroadcastHashJoin") >= 4, plan
-    assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") <= 1, plan
-    assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
-
-
-def test_q10_aggregates_before_customer_join(spark):
-    """Q10 shape: per-customer revenue reduces lineitem rows BEFORE the
-    customer join — the broadcast join's streamed side must be the
-    aggregate, so the join input is |custkeys|, not |lineitems|."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(entry.q10_returned_items(spark, SF_DIR))
-    # formatted-mode node ids: children are numbered before parents.
-    # The required sandwich is orders-join -> revenue aggregate ->
-    # customer-join: the aggregate sits ABOVE the orders join (id
-    # greater than the innermost join) and BELOW the customer join (id
-    # smaller than the outermost join), so the dim join's input is
-    # |custkeys|, not |lineitems|.
-    agg_ids = [int(m) for m in re.findall(r"\((\d+)\) HashAggregate", plan)]
-    bhj_ids = [int(m) for m in re.findall(r"\((\d+)\) BroadcastHashJoin", plan)]
-    assert agg_ids and len(bhj_ids) == 2, plan
-    assert min(bhj_ids) < min(agg_ids) < max(agg_ids) < max(bhj_ids), plan
-
-
-def test_q11_global_scalar_is_broadcast_not_cartesian(spark):
-    """Q11 shape: the HAVING-against-global-total threshold is a 1-row
-    broadcast (BroadcastNestedLoopJoin over a single aggregate row),
-    never a CartesianProduct or a second correlated scan."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(entry.q11_important_parts(spark, SF_DIR))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
-
-
-def test_q21_no_expand_two_phase_distincts(spark):
-    """Q21 shape: each per-order distinct-supplier count is a single
-    distinct aggregate (two-phase HashAggregate) — the Expand operator
-    (multi-distinct rewrite, |rows| x |aggs| blowup) must not appear."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(entry.q21_waiting_suppliers(spark, SF_DIR))
-    assert "Expand" not in plan, plan
-
-
-@pytest.mark.parametrize(
-    "name",
-    ["q3_top_revenue_orders", "q10_returned_items", "q18_large_orders", "q21_waiting_suppliers"],
-)
-def test_global_top_k_plans_take_ordered(spark, name):
-    """Global top-k shapes (``row_number()`` over an unpartitioned
-    window, filtered to ``rk <= k``): Spark's window group-limit rewrite
-    plans a ``TakeOrderedAndProject`` under the window, so the window
-    ranks k rows, not every row on one partition."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(getattr(entry, name)(spark, SF_DIR))
-    assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_q17_avg_subquery_decorrelated_to_broadcast(spark):
-    """Q17 shape: the per-part AVG 'subquery' runs ONCE as an aggregate
-    joined back by broadcast — no correlated re-scan, no NLJ."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(entry.q17_small_quantity_revenue(spark, SF_DIR))
-    assert "NestedLoop" not in plan.replace("BroadcastNestedLoopJoin", ""), plan
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-
-
-def test_q8_widest_dim_chain_single_fact_shuffle(spark):
-    """Q8 shape: part/customer/supplier/nation(x2)/region all reach the
-    fact by broadcast (hash or left-semi); the only shuffle join
-    allowed is lineitem<->orders."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(entry.q8_market_share(spark, SF_DIR))
-    assert plan.count("BroadcastHashJoin") >= 4, plan
-    assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") <= 1, plan
-    assert "CartesianProduct" not in plan, plan
-
-
-def test_q9_like_filter_pushed_to_part_scan(spark):
-    """Q9 shape: the p_name LIKE lands on the part dim scan as a
-    pushed StringContains — never a post-join filter over fact rows —
-    and part joins the fact broadcast."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(entry.q9_product_profit(spark, SF_DIR))
-    assert "StringContains(p_name,widget)" in plan, plan
-    assert plan.count("BroadcastHashJoin") >= 3, plan
-    assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") <= 1, plan
-
-
-def test_q15_scalar_max_is_one_row_broadcast(spark):
-    """Q15 shape: the MAX-revenue 'subquery' reduces the per-supplier
-    aggregate to one broadcast row — no CartesianProduct, no second
-    correlated pass (exactly one aggregate pair over the fact scan)."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(entry.q15_top_supplier(spark, SF_DIR))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
-
-
-def test_q19_implied_per_side_filters_reach_both_scans(spark):
-    """Q19 shape: the cross-side disjunction itself cannot push through
-    the join, but its per-side implications must — brand IN and size
-    range on the part scan, the quantity envelope on the lineitem
-    scan."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(entry.q19_disjunctive_revenue(spark, SF_DIR))
-    assert re.search(r"PushedFilters:.*In\(p_brand", plan), plan
-    assert re.search(r"PushedFilters:.*GreaterThanOrEqual\(l_quantity,1\.0\)", plan), plan
-    assert re.search(r"PushedFilters:.*LessThanOrEqual\(l_quantity,30\.0\)", plan), plan
-    assert "BroadcastHashJoin" in plan, plan
-
-
-def test_q20_semi_join_chain_all_broadcast(spark):
-    """Q20 shape: the nested IN/EXISTS chain decorrelates to broadcast
-    (semi) joins only — zero shuffle joins; the sole exchanges are the
-    (supplier, part) aggregate's."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(entry.q20_dominant_promo_suppliers(spark, SF_DIR))
-    assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") == 0, plan
-    assert "CartesianProduct" not in plan, plan
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-
-
 def test_sequence_minhash_single_shuffle_reuses_window_partitioning(spark):
     """Conversation MinHash shuffles the corpus ONCE: the signature
     groupBy(key) rides the lag-window's hash(key) exchange (no second

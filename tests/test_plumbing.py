@@ -1,6 +1,10 @@
-"""Multimodal plumbing, checkpoint/resume, skew helpers, streaming."""
+"""Multimodal plumbing, checkpoint/resume, skew helpers, streaming, and
+the contract table's cross-engine lint."""
 
 from __future__ import annotations
+
+import inspect
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -279,3 +283,36 @@ def test_real_decode_env_gate_raises(spark, monkeypatch):
 
     with _pytest.raises((NotImplementedError, Py4JJavaError, Exception)):
         resize_images(media, 8, 8).collect()
+
+
+# Pairs whose sum is of log, ratio or distance terms: there is no
+# integer-cents form, so both engines round the double sum instead.
+_ROUNDED_SUM_PAIRS = {
+    "drift_event_type": "KL/PSI: sum of p*ln(p/q) terms",
+    "drift_value": "KL/PSI: sum of p*ln(p/q) terms",
+    "windowed_drift": "per-window KL/PSI: sum of p*ln(p/q) terms",
+    "windowed_drift_value": "per-window KL/PSI: sum of p*ln(p/q) terms",
+    "chi2_drift": "chi-square/G: sum of (o-e)^2/e and o*ln(o/e) terms",
+    "windowed_chi2": "per-window chi-square/G: sum of (o-e)^2/e and o*ln(o/e) terms",
+    "w1_drift": "Wasserstein-1: sum of CDF gaps times bin widths",
+    "embedding_drift": "centroid cosine: dot product over vector norms",
+}
+_ROUNDED_SUM = re.compile(r"round\(\s*(?:F\.)?sum\(", re.IGNORECASE)
+
+
+def test_contract_pairs_sum_money_in_integer_cents():
+    """Every contract pair has an oracle, and no pair rounds a double
+    sum: a double sum depends on the summation order, so its rounding
+    can differ between engines and partitionings.  Money sums add
+    ``round(value * 100)`` as a long and divide by 100 at the end."""
+    import __spark_entry__ as entry
+
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    assert queries.keys() == oracles.keys()
+    rounded = {
+        name
+        for name, fn in queries.items()
+        if _ROUNDED_SUM.search(inspect.getsource(fn)) or _ROUNDED_SUM.search(oracles[name])
+    }
+    assert rounded - _ROUNDED_SUM_PAIRS.keys() == set()
+    assert _ROUNDED_SUM_PAIRS.keys() - rounded == set()  # no stale exemption

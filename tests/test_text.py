@@ -470,3 +470,21 @@ def test_repetition_pair_edge_parity(spark, contract_pair, name):
                 "ngram_repetition": (2, None, None),
                 "gopher_gate": (2, True, "")}[name]
     assert null_row in got
+
+
+def test_gopher_gate_pair_keeps_and_drops_at_sf001():
+    """The gopher_gate pair's thresholds keep some sf0.01 documents and
+    drop others, so the contract compares both the keep and the drop
+    path (the default gate drops all 500)."""
+    import os
+
+    import duckdb
+
+    import __spark_entry__ as entry
+    from cerberus_spark.sources.tables import DEFAULT_SF_DIR
+
+    docs = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01", "documents.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+    sql = f"SELECT DISTINCT keep FROM ({entry.oracle_sql()['gopher_gate']})"
+    assert {k for (k,) in con.execute(sql).fetchall()} == {True, False}
