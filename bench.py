@@ -15,9 +15,7 @@ Two workloads:
 Env:  SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the usable cores),
       BENCH_SKIP_QUERIES=1 to run only the headline pipeline.
 
-The two-parallelism scaling evidence (local[N] vs local[4N]) lives in
-scripts/scaling_bench.py -> BASELINE.md §BENCH; this file stays
-single-config so per-round numbers are comparable.
+This file stays single-config so per-round numbers are comparable.
 """
 
 from __future__ import annotations

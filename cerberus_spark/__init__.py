@@ -27,7 +27,7 @@ PySpark API and the reference repo's observable behavior.
 
 __version__ = "0.1.0"
 
-from cerberus_spark.normalize import normalize_documents, normalize_then_validate
+from cerberus_spark.normalize import normalize_documents
 from cerberus_spark.rules import (
     apply_validator_flags,
     compile_schema,
@@ -37,7 +37,6 @@ from cerberus_spark.validation import ValidationSession, ValidationResult
 
 __all__ = [
     "normalize_documents",
-    "normalize_then_validate",
     "apply_validator_flags",
     "compile_schema",
     "CompiledRuleSet",

@@ -1,7 +1,7 @@
 """Distributed-only checks: uniqueness, referential integrity, column
 stats, distribution drift, sequence structure."""
 
-from cerberus_spark.checks.uniqueness import uniqueness_violations, duplicate_rows
+from cerberus_spark.checks.uniqueness import uniqueness_violations
 from cerberus_spark.checks.referential import referential_orphans, referential_violations
 from cerberus_spark.checks.stats import column_profile, numeric_quantiles
 from cerberus_spark.checks.drift import (
@@ -13,12 +13,11 @@ from cerberus_spark.checks.drift import (
     windowed_numeric_histograms,
     windowed_drift_report,
 )
-from cerberus_spark.checks.diff import diff_summary, row_fingerprint, table_diff
+from cerberus_spark.checks.diff import row_fingerprint, table_diff
 from cerberus_spark.checks.schema_diff import assert_schema, schema_diff
 from cerberus_spark.checks.sequence import (
     contiguity_report,
     contiguity_violations,
-    order_violations,
     reindex_turns,
     sequence_violations,
     transition_violations,
@@ -26,10 +25,8 @@ from cerberus_spark.checks.sequence import (
 
 __all__ = [
     "uniqueness_violations",
-    "duplicate_rows",
     "contiguity_report",
     "contiguity_violations",
-    "order_violations",
     "reindex_turns",
     "sequence_violations",
     "transition_violations",
@@ -47,6 +44,5 @@ __all__ = [
     "schema_diff",
     "assert_schema",
     "table_diff",
-    "diff_summary",
     "row_fingerprint",
 ]

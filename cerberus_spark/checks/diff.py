@@ -13,7 +13,6 @@ Scale shape:
   concatenated non-key columns — so the full-outer join shuffles
   8-byte-ish rows, never the payload;
 - one shuffle per side on the key (co-partitioned by the join);
-- the summary is a |4|-row aggregate of the classification column;
 - ``table_diff`` keeps the classification lazy — callers filter
   ``change != 'unchanged'`` and the filter lands before any further
   wide op.
@@ -59,12 +58,3 @@ def table_diff(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
         .otherwise(F.lit("changed"))
     )
     return j.select(*keys, change.alias("change"))
-
-
-def diff_summary(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
-    """(change, n) — the 4-row promotion-gate summary."""
-    return (
-        table_diff(old, new, keys)
-        .groupBy("change")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )

@@ -21,8 +21,8 @@ Scale shape (the only thing that matters at 10^12 turns):
 - :func:`contiguity_report` is ONE hash-partitioned groupBy with
   map-side partial aggregation — shuffle volume is |convs|, not
   |turns|; no window, no sort.
-- The windowed checks (:func:`order_violations`,
-  :func:`transition_violations`, :func:`sequence_violations`) share a
+- The windowed checks (:func:`transition_violations`,
+  :func:`sequence_violations`) share a
   single ``Window.partitionBy(conv).orderBy(order)`` — ONE shuffle +
   partition-local sort, then pure row-local predicates.
   :func:`sequence_violations` evaluates every rule in the SAME window
@@ -103,18 +103,6 @@ def contiguity_violations(
 
 def _w(conv_col: str, order_by: list[str]) -> Window:
     return Window.partitionBy(conv_col).orderBy(*order_by)
-
-
-def order_violations(
-    df: DataFrame, conv_col: str, ts_col: str, order_by: list[str]
-) -> DataFrame:
-    """Rows whose ``ts_col`` regresses below the previous row's in
-    ``order_by`` order: input row + ``prev_ts``.  One shuffle."""
-    w = _w(conv_col, order_by)
-    return (
-        df.withColumn("prev_ts", F.lag(ts_col).over(w))
-        .filter(F.col(ts_col) < F.col("prev_ts"))
-    )
 
 
 def transition_violations(

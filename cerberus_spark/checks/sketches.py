@@ -1,21 +1,15 @@
-"""Mergeable sketches: cardinality (Apache DataSketches HLL, built into
-Spark 3.5+) and quantiles (fixed-bin histogram states) — the
-re-aggregatable answer to count-distinct and percentile rollups.
+"""Mergeable sketches: quantiles (fixed-bin histogram states) and
+frequent items (top-k with an undercount bound) — the re-aggregatable
+answer to percentile and heavy-hitter rollups.
 
-Exact ``count_distinct`` cannot be rolled up (distinct-of-day can't be
-summed into distinct-of-month), so warehouse rollups either rescan raw
-data or store sketches.  HLL register state merges by taking per-bucket
-maxima — associative and order-insensitive — so per-partition partials,
-per-day groups, and multi-table unions all combine without rescanning;
+Exact percentiles and exact top-k cannot be rolled up (the p95 of each
+day does not give the p95 of the month), so warehouse rollups either
+rescan raw data or store sketches.  Both states here merge
+associatively and order-insensitively, so per-partition partials,
+per-day groups and multi-table unions all combine without rescanning;
 this is the reference's periodic-stats report (S12,
 internal/monitor/monitor.go:514-584) done the way a 100 TB warehouse
 has to.
-
-No DuckDB oracle on purpose: the sketch binary is library-specific.
-The proof is the pytest invariant instead — the union of group sketches
-yields EXACTLY the same estimate as one direct global sketch (register
-merge is deterministic), and the estimate lands within HLL's published
-error envelope of the exact count.
 """
 
 from __future__ import annotations
@@ -155,8 +149,8 @@ def histogram_quantile(
 def topk_group_sketches(
     df: DataFrame, key_cols: list[str], item_col: str, k: int = 16
 ) -> DataFrame:
-    """Mergeable frequent-items summary per key group (the third
-    sketch next to HLL cardinality and histogram quantiles): the k
+    """Mergeable frequent-items summary per key group (the sketch next
+    to the histogram quantiles): the k
     highest-count items with lower-bound counts, plus a single
     undercount bound ``err``.
 
@@ -244,41 +238,3 @@ def topk_rollup(
         .drop("_errd", "_err0")
     )
     return out if keys else out.drop("_g")
-
-
-def topk_guaranteed(state: Column | str, threshold: int) -> Column:
-    """Items whose true count PROVABLY reaches ``threshold``
-    (lo >= threshold) — pure Catalyst filter over a sketch row."""
-    s = F.col(state) if isinstance(state, str) else state
-    return F.filter(s, lambda x: x.getField("lo") >= F.lit(threshold))
-
-
-def hll_group_sketches(
-    df: DataFrame, key_cols: list[str], value_col: str, lgk: int = 12
-) -> DataFrame:
-    """One HLL sketch (binary) + its estimate per key group.
-    ``lgk`` trades memory (2^lgk registers) for accuracy (~1.6%/sqrt(2^lgk/2048))."""
-    return df.groupBy(*key_cols).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lgk)).alias("sketch"),
-        F.hll_sketch_estimate(
-            F.hll_sketch_agg(F.col(value_col), F.lit(lgk))
-        ).cast("long").alias("estimate"),
-    )
-
-
-def hll_rollup(
-    sketches: DataFrame, key_cols: list[str] | None = None
-) -> DataFrame:
-    """Merge group sketches up a level WITHOUT touching raw data:
-    union the binary sketches, re-estimate.  Empty ``key_cols`` -> one
-    global row."""
-    keys = key_cols or []
-    agg = [
-        F.hll_union_agg(F.col("sketch")).alias("sketch"),
-        F.hll_sketch_estimate(F.hll_union_agg(F.col("sketch")))
-        .cast("long")
-        .alias("estimate"),
-    ]
-    if keys:
-        return sketches.groupBy(*keys).agg(*agg)
-    return sketches.agg(*agg)

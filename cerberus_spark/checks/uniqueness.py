@@ -64,21 +64,3 @@ def uniqueness_violations(
         .agg(F.count(F.lit(1)).alias("n_dup"))
         .filter(F.col("n_dup") > 1)
     )
-
-
-def duplicate_rows(df: DataFrame, keys: list[str], order_by: list[str] | None = None) -> DataFrame:
-    """Full rows that are duplicates beyond the first occurrence.
-
-    Needs row identity, so it is a window over key-partitions; the
-    partition-by keys reuse the same hash shuffle as the count.  With
-    ``order_by`` the kept row is deterministic (first in that order).
-    """
-    from pyspark.sql import Window
-
-    order = order_by or keys
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c) for c in order])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > 1)
-        .drop("_rn")
-    )

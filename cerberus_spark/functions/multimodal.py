@@ -1,10 +1,9 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata; decode / feature-extract / resize /
-frame-sample as Arrow-batched ``mapInPandas`` stages.
+columns with typed metadata; decode + feature-extract as an
+Arrow-batched ``mapInPandas`` stage.
 
-The media codec libraries are not available in this container, so the
-DECODE step is stubbed (deterministic fake features derived from the
-byte payload) behind ``CERBERUS_SPARK_REAL_DECODE`` — but the
+No media codec library is a dependency, so the DECODE step is a stub
+(deterministic fake features derived from the byte payload) — but the
 Spark-side plumbing (schemas, batch iteration, partition sizing,
 UDF signatures) is real and tested.
 """
@@ -19,25 +18,19 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, mime string, width int, "
-    "height int, duration_ms int"
-)
-
 FEATURE_DIM = 16
 FEATURES_SCHEMA = f"media_id long, kind string, n_bytes long, features array<float>"
 
 
 def _fake_decode(payload: bytes, kind: str) -> np.ndarray:
     """Deterministic stand-in for a real decoder: features are a
-    normalized digest of the bytes.  Replace with PIL/ffmpeg behind the
-    env flag when the libs exist."""
+    normalized digest of the bytes."""
     h = hashlib.sha256(payload if payload is not None else b"").digest()
     v = np.frombuffer(h[: FEATURE_DIM * 2], dtype=np.uint16).astype(np.float32)
     return v / np.float32(65535.0)
 
 
-def extract_features(media: DataFrame, batch_rows_hint: int = 1024) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction.
 
     Arrow batches stream per partition; each batch is processed
@@ -45,16 +38,8 @@ def extract_features(media: DataFrame, batch_rows_hint: int = 1024) -> DataFrame
     ``spark.sql.files.maxPartitionBytes`` (binary payloads dominate row
     width, so partitions are byte-bounded, not row-bounded).
     """
-    import os
-
-    real = os.environ.get("CERBERUS_SPARK_REAL_DECODE", "") == "1"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if real:
-            raise NotImplementedError(
-                "real media decode requires PIL/ffmpeg — not present in this "
-                "container; unset CERBERUS_SPARK_REAL_DECODE"
-            )
         for pdf in batches:
             feats = [
                 _fake_decode(p, k).tolist()
@@ -87,107 +72,4 @@ def synthesize_media(spark, n: int, partitions: int | None = None) -> DataFrame:
         (F.pmod(F.col("id"), F.lit(640)) + 1).cast("int").alias("width"),
         (F.pmod(F.col("id"), F.lit(480)) + 1).cast("int").alias("height"),
         (F.pmod(F.col("id"), F.lit(90000))).cast("int").alias("duration_ms"),
-    )
-
-
-def _fake_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Deterministic byte-derived (height, width) uint8 'image' — the
-    decode stand-in; the RESIZE math below runs on whatever the decoder
-    yields, fake or real."""
-    seed = hashlib.sha256(payload if payload is not None else b"").digest()
-    stream = np.frombuffer(
-        (seed * ((width * height) // len(seed) + 1))[: width * height], dtype=np.uint8
-    )
-    return stream.reshape(height, width)
-
-
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Resize every image row to (out_w, out_h) — nearest-neighbor
-    index sampling in NumPy (real resize math; only the pixel DECODE is
-    the env-gated stub).  Output: media_id, width, height (= the new
-    geometry), payload (row-major resized bytes).
-
-    Arrow mapInPandas, no shuffle; non-image rows are dropped (resize
-    is image-only — audio/video go through :func:`sample_frames` /
-    feature extraction).
-    """
-    import os
-
-    real = os.environ.get("CERBERUS_SPARK_REAL_DECODE", "") == "1"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if real:
-            raise NotImplementedError(
-                "real image decode requires PIL — not present in this "
-                "container; unset CERBERUS_SPARK_REAL_DECODE"
-            )
-        for pdf in batches:
-            pdf = pdf[pdf["kind"] == "image"]
-            if len(pdf) == 0:
-                continue  # empty pandas yields break the Arrow cast
-            out = []
-            for p, w, h in zip(pdf["payload"], pdf["width"], pdf["height"]):
-                px = _fake_pixels(p, int(w), int(h))
-                yi = (np.arange(out_h) * px.shape[0] // out_h).astype(np.int64)
-                xi = (np.arange(out_w) * px.shape[1] // out_w).astype(np.int64)
-                out.append(px[np.ix_(yi, xi)].tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": [out_w] * len(pdf),
-                    "height": [out_h] * len(pdf),
-                    "payload": out,
-                }
-            )
-
-    return media.mapInPandas(
-        run, schema="media_id long, width int, height int, payload binary"
-    )
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Sample one frame per ``every_ms`` of duration from every video
-    row — one OUTPUT ROW PER FRAME (media_id, frame_idx, ts_ms,
-    payload), the shape a caption/embedding stage consumes.
-
-    The frame decode is the env-gated stub (frame bytes derived from
-    payload + index); the fan-out plumbing — a mapInPandas that yields
-    MORE rows than it consumes, batch-wise — is the real contract, and
-    the per-row expansion is bounded by duration/every_ms (documented:
-    at 100 TB, size partitions by bytes so the expansion stays
-    in-memory per task).
-    """
-    import os
-
-    real = os.environ.get("CERBERUS_SPARK_REAL_DECODE", "") == "1"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if real:
-            raise NotImplementedError(
-                "real frame extraction requires ffmpeg — not present in "
-                "this container; unset CERBERUS_SPARK_REAL_DECODE"
-            )
-        for pdf in batches:
-            pdf = pdf[pdf["kind"] == "video"]
-            if len(pdf) == 0:
-                continue
-            ids, idxs, tss, frames = [], [], [], []
-            for mid, p, dur in zip(pdf["media_id"], pdf["payload"], pdf["duration_ms"]):
-                n = max(1, int(dur) // every_ms)
-                for i in range(n):
-                    ids.append(mid)
-                    idxs.append(i)
-                    tss.append(i * every_ms)
-                    frames.append(
-                        hashlib.sha256(
-                            (p or b"") + i.to_bytes(4, "little")
-                        ).digest()
-                    )
-            if ids:
-                yield pd.DataFrame(
-                    {"media_id": ids, "frame_idx": idxs, "ts_ms": tss, "payload": frames}
-                )
-
-    return media.mapInPandas(
-        run, schema="media_id long, frame_idx int, ts_ms int, payload binary"
     )

@@ -21,9 +21,7 @@ migrating from Cerberus needs the same phase table-side:
   deliberately map to this registry, not per-row Python.
 
 The whole phase is ONE ``select`` — zero shuffles, codegen'd, the same
-scan-shape as rule evaluation; ``normalize_then_validate`` chains it
-with the rule compiler the way ``validator.normalized`` feeds
-``validator.validate``.
+scan-shape as rule evaluation.
 """
 
 from __future__ import annotations
@@ -46,11 +44,6 @@ COERCERS: dict[str, object] = {
     "upper": F.upper,
     "strip": F.trim,
 }
-
-#: normalization-phase rule names (validation rules may coexist in the
-#: same dicts — they are simply ignored here, exactly as Cerberus runs
-#: one phase at a time)
-NORMALIZATION_RULES = {"rename", "default", "coerce"}
 
 
 def _coerce_chain(col: Column, spec) -> Column:
@@ -140,25 +133,3 @@ def normalize_documents(
             out.append(col.alias(name))
             seen.add(name)
     return df.select(*out)
-
-
-def normalize_then_validate(
-    df: DataFrame,
-    schema: dict,
-    key_cols: list[str],
-    purge_unknown: bool = False,
-):
-    """The full Cerberus lifecycle: normalization phase, then the rule
-    compiler over the SAME schema dicts (normalization rule names are
-    stripped before compilation; ``rename`` moves the validation rules
-    to the new field name).  Returns (normalized_df, ValidationResult).
-    """
-    from cerberus_spark.validation import validate
-
-    vschema = {}
-    for field, rules in schema.items():
-        vrules = {k: v for k, v in rules.items() if k not in NORMALIZATION_RULES}
-        if vrules:
-            vschema[rules.get("rename", field)] = vrules
-    norm = normalize_documents(df, schema, keys=tuple(key_cols), purge_unknown=purge_unknown)
-    return norm, validate(norm, vschema, key_cols=key_cols)

@@ -16,7 +16,6 @@ from cerberus_spark.operators.dedup import (
     sequence_neardup_pairs,
 )
 from cerberus_spark.operators.graph import cluster_representatives, dedup_clusters
-from cerberus_spark.operators.similarity import train_centroids
 from cerberus_spark.operators.topk import top_k_per_group
 from cerberus_spark.operators.sessionize import sessionize
 
@@ -37,7 +36,6 @@ __all__ = [
     "sequence_neardup_pairs",
     "cluster_representatives",
     "dedup_clusters",
-    "train_centroids",
     "top_k_per_group",
     "sessionize",
 ]

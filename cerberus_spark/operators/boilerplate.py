@@ -20,10 +20,8 @@ Scale shape (the 100 TB plan):
   frequency, ties on unit) — the same guard as the LSH df_cap;
 - removal: broadcast LEFT ANTI hash join — the corpus itself never
   shuffles to be filtered;
-- reassembly (document wrapper only): ONE shuffle on the doc id with
-  order restored from the carried position, never a global sort.
-  Consumers that operate on units directly (turn-level transcript
-  filters) skip this shuffle entirely.
+- reassembly: ONE shuffle on the doc id with order restored from the
+  carried position, never a global sort.
 """
 
 from __future__ import annotations
@@ -53,17 +51,6 @@ def hot_units(
         # TakeOrdered (distributed top-k), deterministic total order
         hot = hot.orderBy(F.col("n_groups").desc(), F.col("unit").asc()).limit(cap)
     return hot
-
-
-def filter_hot_units(df: DataFrame, hot: DataFrame, unit_col: str) -> DataFrame:
-    """Drop rows whose ``unit_col`` is in the hot set: broadcast LEFT
-    ANTI join, so the (huge) unit table is filtered map-side without a
-    shuffle."""
-    return df.join(
-        F.broadcast(hot.select(F.col("unit").alias(unit_col))),
-        on=unit_col,
-        how="left_anti",
-    )
 
 
 def remove_boilerplate(

@@ -86,21 +86,3 @@ def contamination_report(
             ),
         )
     )
-
-
-def decontaminate(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    eval_df: DataFrame,
-    shingle_k: int = 3,
-    max_contam_milli: int = 0,
-) -> DataFrame:
-    """Drop training docs whose eval overlap exceeds
-    ``max_contam_milli`` permille (default 0: any shared shingle
-    drops the doc).  Broadcast anti-join against the (small) report —
-    the corpus itself is never shuffled."""
-    bad = contamination_report(df, text_col, id_col, eval_df, shingle_k).filter(
-        F.col("contam_milli") > max_contam_milli
-    )
-    return df.join(F.broadcast(bad.select(id_col)), id_col, "left_anti")

@@ -636,25 +636,6 @@ def simhash_candidates(
     )
 
 
-def bucket_size_histogram(pairs_src: DataFrame, key_cols: list[str]) -> DataFrame:
-    """(bucket_size, n_buckets) audit for any candidate-bucket keying
-    (LSH band signatures, winnowing fingerprints, deletion variants):
-    how many buckets exist at each membership size.
-
-    The no-silent-caps companion: run it with the SAME keying as the
-    capped candidate generator to see exactly what a ``bucket_cap``
-    drops — ``sum(size·(size−1)/2)`` above the cap is the pair volume
-    the cap saved.  Two tiny aggregates (|buckets| then |sizes| rows),
-    both map-side partial.
-    """
-    return (
-        pairs_src.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .groupBy("bucket_size")
-        .agg(F.count(F.lit(1)).alias("n_buckets"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # ordered-sequence (conversation-level) exact dedup
 # ---------------------------------------------------------------------------

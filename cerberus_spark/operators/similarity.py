@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cerberus_spark.sources.tables import local_table
-
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ via zip_with + aggregate — whole-stage codegen, no UDF."""
@@ -173,118 +171,6 @@ def cosine_neardup_pairs(
             ).alias("sim"),
         )
         .filter(F.col("sim") >= threshold)
-    )
-
-
-def train_centroids(
-    vectors: DataFrame,
-    n_centroids: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_size: int = 16_384,
-    n_iters: int = 10,
-    round_to: int = 6,
-) -> DataFrame:
-    """Deterministic IVF coarse-quantizer training: (centroid_id,
-    centroid) ready for :func:`ivf_assign` / :func:`ivf_topk` /
-    :func:`cosine_neardup_pairs` — the engine's ANN family is
-    self-contained with this (no caller-supplied centroids needed).
-
-    The standard IVF recipe: train the quantizer on a bounded SAMPLE,
-    assign the full corpus distributed (assignment — the 100 TB part —
-    stays :func:`ivf_assign`'s broadcast equi-join).  Every step is
-    deterministic across partitionings and runs, with no RNG:
-
-    1. sample = global top-``sample_size`` rows by (md5(id), id,
-       vector) — a deterministic pseudo-random SET
-       (TakeOrderedAndProject: per-partition top-N then merge, never a
-       full sort shuffle).  The vector is the FINAL tiebreak so the
-       sample is a total order even when ``id_col`` is not unique
-       (duplicate ids straddling the limit boundary would otherwise
-       pick partition-dependent winners); rows identical in (id,
-       vector) are interchangeable, so determinism survives any
-       duplication;
-    2. rows are collected and processed in (id, vector)-sorted order,
-       unit-normalized (spherical k-means — the cosine objective);
-    3. init = farthest-point (maxmin k-center): first centroid is the
-       min-id sample vector, each next the point with the smallest
-       ROUNDED max-cosine to the chosen set, ties to min id;
-    4. Lloyd rounds: assign by rounded cosine (ties to lowest centroid
-       index — :func:`ivf_assign`'s exact rule), recompute means in
-       fixed id order, renormalize; an emptied cluster keeps its
-       previous centroid; stop early when assignments fix.
-
-    Driver memory is ``sample_size × dim`` doubles — the explicit
-    bound; raise ``sample_size`` only with driver heap to match.
-    Components are rounded to ``round_to`` so downstream rounded-
-    argmax assignment is bit-stable cross-engine.
-    """
-    import numpy as np
-
-    from cerberus_spark.operators.dedup import md5_i64
-
-    sample_rows = (
-        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .filter(F.col("v").isNotNull())
-        .orderBy(
-            md5_i64(F.col("id").cast("string")).asc(),
-            F.col("id").asc(),
-            F.col("v").asc(),
-        )
-        .limit(sample_size)
-        .collect()
-    )
-    sample_rows.sort(key=lambda r: (r.id, tuple(r.v)))
-    if not sample_rows:
-        raise ValueError("train_centroids: no non-null, non-zero sample vectors")
-    mat = np.asarray([r.v for r in sample_rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1)
-    mat = mat[norms > 0]
-    n = mat.shape[0]
-    if n == 0:
-        raise ValueError("train_centroids: no non-null, non-zero sample vectors")
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    k = min(n_centroids, n)
-
-    # farthest-point init on the unit sphere (min max-cosine = max
-    # angular distance to the chosen set); rounded before the argmin
-    # so float noise never flips a pick
-    chosen = [0]  # min-id sample vector
-    max_cos = np.round(mat @ mat[0], round_to)
-    for _ in range(1, k):
-        nxt = int(np.argmin(max_cos))  # np.argmin takes the FIRST min: min id
-        chosen.append(nxt)
-        max_cos = np.maximum(max_cos, np.round(mat @ mat[nxt], round_to))
-    cent = mat[chosen].copy()
-
-    assign = None
-    for _ in range(n_iters):
-        sims = np.round(mat @ cent.T, round_to)
-        # argmax with ties to the LOWEST centroid index — ivf_assign's rule
-        new_assign = np.argmax(sims, axis=1)
-        if assign is not None and np.array_equal(new_assign, assign):
-            break
-        assign = new_assign
-        for j in range(k):
-            members = mat[assign == j]
-            if len(members) == 0:
-                continue  # emptied cluster keeps its previous centroid
-            m = members.sum(axis=0)  # fixed id order -> deterministic sum
-            nrm = np.linalg.norm(m)
-            if nrm > 0:
-                cent[j] = m / nrm
-    cent = np.round(cent, round_to)
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("centroid_id", T.LongType(), False),
-            T.StructField("centroid", T.ArrayType(T.DoubleType(), False), False),
-        ]
-    )
-    return local_table(
-        vectors.sparkSession, [(j, [float(x) for x in cent[j]]) for j in range(k)], schema
     )
 
 

@@ -1,14 +1,12 @@
-"""File-based dimension-table ingest: IANA-style service/port CSVs and
-IEEE OUI registry text.
+"""File-based dimension-table ingest: IANA-style service/port CSVs.
 
-The reference loads these as driver-side hash maps (CSV:
-internal/databases/service.go:157-208 — skip header/blank lines, skip
+The reference loads these as driver-side hash maps
+(internal/databases/service.go:157-208 — skip header/blank lines, skip
 port-range rows, parse uint16 port, uppercase names, split per
-transport protocol; OUI: internal/databases/mac.go:100-133 — lines
-containing "(hex)", prefix normalized XX-XX-XX -> XX:XX:XX).  Here each
-becomes a small DataFrame dimension meant for the broadcast side of an
-enrichment join (cerberus_spark J1/J2 lookups) — same semantics, but
-declarative: ``spark.read.csv`` + filter/cast only, no per-row Python.
+transport protocol).  Here the CSV becomes a small DataFrame dimension
+meant for the broadcast side of an enrichment join — same semantics,
+but declarative: ``spark.read.csv`` + filter/cast only, no per-row
+Python.
 
 One deliberate divergence: the reference's maps are last-write-wins in
 file order; a distributed read has no stable file order, so duplicate
@@ -20,9 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-#: IEEE oui.txt entry: "28-6F-B9   (hex)\t\tNokia Shanghai Bell"
-OUI_LINE = r"^\s*([0-9A-Fa-f]{2}-[0-9A-Fa-f]{2}-[0-9A-Fa-f]{2})\s*\(hex\)\s*(.*\S)"
 
 
 def load_service_ports(spark: SparkSession, path: str) -> DataFrame:
@@ -77,27 +72,4 @@ def service_lookup(
     )
     return df.join(F.broadcast(d), port_col, "left").withColumn(
         "service", F.coalesce(F.col("service"), F.lit(default))
-    )
-
-
-def load_oui(spark: SparkSession, path: str) -> DataFrame:
-    """Load the IEEE OUI registry text into an (oui, vendor) dimension.
-
-    Mirrors the reference line parse (mac.go:116-133): only lines
-    containing "(hex)" carry an assignment; the MAC prefix is
-    normalized from XX-XX-XX to XX:XX:XX; the vendor is the trimmed
-    remainder.  ``spark.read.text`` + regexp_extract — line-parallel,
-    no driver-side loop.
-    """
-    raw = spark.read.text(path)
-    pfx = F.regexp_extract(F.col("value"), OUI_LINE, 1)
-    vendor = F.regexp_extract(F.col("value"), OUI_LINE, 2)
-    return (
-        raw.select(
-            F.translate(F.upper(pfx), "-", ":").alias("oui"),
-            vendor.alias("vendor"),
-        )
-        .filter(F.col("oui") != "")
-        .groupBy("oui")
-        .agg(F.min("vendor").alias("vendor"))
     )

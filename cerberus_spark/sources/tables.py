@@ -1,14 +1,8 @@
-"""Loaders for the driver-generated parquet tables (TESTDATA.md).
-
-Parquet scans get Catalyst predicate pushdown and column pruning for
-free; an Iceberg catalog slots in by swapping ``spark.read.parquet``
-for ``spark.read.format("iceberg")`` (jars absent in this container —
-see cerberus_spark.plans.checkpoint for the table-format abstraction).
-"""
+"""The contract's parquet tables (TESTDATA.md), and helpers that build
+small tables and spread input without a Python task."""
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,13 +20,6 @@ TABLES = [
     "documents",
     "embeddings",
 ]
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
-    sf_dir = sf_dir or DEFAULT_SF_DIR
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 #: an exchange node's line in a physical plan's tree string

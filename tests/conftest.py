@@ -16,6 +16,25 @@ if REPO not in sys.path:
 from cerberus_spark.session import get_spark  # noqa: E402
 
 
+def run_stream_to_memory(spark, src_dir, src_schema, transform, query_name, output_mode="append"):
+    """Replay the parquet directory ``src_dir`` as a stream through
+    ``transform`` into the memory table ``query_name`` (availableNow
+    trigger) and return that table once the replay ends.  ``complete``
+    mode gives windowed aggregations their final answer; ``append``
+    emits only the windows the watermark sealed."""
+    stream = spark.readStream.schema(src_schema).parquet(src_dir)
+    q = (
+        transform(stream)
+        .writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.table(query_name)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(parallelism=8, driver_memory="8g", app_name="cerberus_spark_tests")

@@ -4,11 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cerberus_spark.operators.boilerplate import (
-    filter_hot_units,
-    hot_units,
-    remove_boilerplate,
-)
+from cerberus_spark.operators.boilerplate import hot_units, remove_boilerplate
 
 DOCS = [
     # "SUBSCRIBE" is in 3/4 docs (boilerplate at min_docs=3);
@@ -48,16 +44,6 @@ def test_hot_units_cap_is_deterministic_topk(spark):
     capped = hot_units(units, "line", "doc_id", 1, cap=2).collect()
     # ordered by n_groups desc then unit asc: SUBSCRIBE(4), hello(2)
     assert [(r.unit, r.n_groups) for r in capped] == [("SUBSCRIBE", 4), ("hello", 2)]
-
-
-def test_filter_hot_units_is_anti_join(spark):
-    units = _docs(spark).select(
-        "doc_id", F.explode(F.split("text", "\n", -1)).alias("line")
-    )
-    hot = hot_units(units, "line", "doc_id", 3)
-    kept = filter_hot_units(units, hot, "line")
-    assert kept.filter(F.col("line") == "SUBSCRIBE").count() == 0
-    assert kept.filter(F.col("line") == "hello").count() == 2  # below threshold
 
 
 def test_remove_boilerplate_preserves_order_and_blanks(spark):

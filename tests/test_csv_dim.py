@@ -1,18 +1,11 @@
-"""File-based dimension ingest: IANA-style service CSV + IEEE OUI text
-(reference semantics: internal/databases/service.go:157-208,
-internal/databases/mac.go:100-133)."""
+"""File-based dimension ingest: IANA-style service CSV (reference
+semantics: internal/databases/service.go:157-208)."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
-from cerberus_spark.sources.csv_dim import (
-    load_oui,
-    load_service_ports,
-    service_lookup,
-)
+from cerberus_spark.sources.csv_dim import load_service_ports, service_lookup
 
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -44,12 +37,3 @@ def test_service_lookup_broadcasts(spark):
     df = spark.createDataFrame([(22,)], "port int")
     plan = service_lookup(df, dim, "port")._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
-
-
-def test_oui_parse(spark):
-    oui = {r.oui: r.vendor for r in load_oui(spark, f"{FIX}/oui.txt").collect()}
-    assert oui == {
-        "28:6F:B9": "Nokia Shanghai Bell Co., Ltd.",
-        "00:00:0C": "Cisco Systems, Inc",
-        "F4:C7:95": "WEY Elektronik AG",
-    }

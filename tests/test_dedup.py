@@ -194,15 +194,6 @@ def test_minhash_bucket_cap_preserves_small_buckets(spark, docs_df):
     assert capped == uncapped and (0, 3) in capped
 
 
-def test_bucket_size_histogram_audit(spark):
-    from cerberus_spark.operators.dedup import bucket_size_histogram
-
-    rows = [("b1", i) for i in range(5)] + [("b2", i) for i in range(5, 7)] + [("b3", 9)]
-    df = spark.createDataFrame(rows, "band string, doc_id long")
-    got = {r.bucket_size: r.n_buckets for r in bucket_size_histogram(df, ["band"]).collect()}
-    assert got == {5: 1, 2: 1, 1: 1}
-
-
 def test_streaming_minhash_batch_parity(spark, tmp_path, docs_df):
     """Documented incremental mode for the near-dedup family: MinHash
     SIGNATURES are per-document and therefore embarrassingly

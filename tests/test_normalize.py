@@ -1,12 +1,12 @@
 """Cerberus normalization phase: rename → purge_unknown → default →
-coerce, compiled to one projection; lifecycle chaining with validation."""
+coerce, compiled to one projection."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from cerberus_spark.normalize import normalize_documents, normalize_then_validate
+from cerberus_spark.normalize import normalize_documents
 from cerberus_spark.rules import SchemaError
 
 
@@ -64,33 +64,3 @@ def test_unknown_coercer_and_callable_rules_raise(spark, raw):
         normalize_documents(raw, {"role": {"coerce": "snake_case"}})
     with pytest.raises(SchemaError, match="unsupported normalization"):
         normalize_documents(raw, {"role": {"rename_handler": "x"}})
-
-
-def test_normalize_then_validate_roundtrip(spark, raw):
-    """The Cerberus lifecycle: the raw frame FAILS the rule set, the
-    normalized frame passes — defaults fill required fields, coercion
-    fixes case before `allowed`, rename moves the rules with the
-    field."""
-    schema = {
-        "role": {
-            "rename": "speaker",
-            "default": "user",
-            "coerce": ["strip", "lower"],
-            "required": True,
-            "allowed": ["user", "tool", "assistant"],
-        },
-        "n": {"coerce": "int", "nullable": True, "min": 0},
-    }
-    norm, res = normalize_then_validate(raw, schema, key_cols=["id"])
-    assert res.violations().count() == 0
-    assert "speaker" in norm.columns and "role" not in norm.columns
-
-    # the same validation rules on the RAW frame do flag rows
-    from cerberus_spark.validation import validate
-
-    raw_viol = validate(
-        raw.withColumnRenamed("role", "speaker"),
-        {"speaker": {"required": True, "allowed": ["user", "tool", "assistant"]}},
-        key_cols=["id"],
-    )
-    assert raw_viol.violations().count() > 0

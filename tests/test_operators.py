@@ -139,6 +139,34 @@ def test_key_profile(spark, events_df):
     assert prof["k2"].targets is None
 
 
+def test_key_profile_pair_ties_and_nulls_parity(spark, contract_pair):
+    """Cross-engine parity of the key_profile contract pair on what the
+    shipped events never hold: a ts tie broken by event_id, a NULL
+    value, repeated and NULL props, more distinct props than the cap."""
+    import datetime as dt
+
+    T0 = dt.datetime(2026, 1, 1)
+    s = dt.timedelta(seconds=1)
+    rows = [
+        (1, T0, 10, "view", 1.25, '{"k": 1}'),
+        (2, T0 + s, 10, "click", None, '{"k": 2}'),
+        (3, T0 + s, 10, "purchase", 2.5, '{"k": 1}'),      # repeated props
+        (4, T0 + 2 * s, 10, "purchase", 0.1, '{"k": 4}'),
+        (5, T0 + 2 * s, 10, "view", 0.2, '{"k": 3}'),      # ts tie: id 5 is last
+        (6, T0, 11, "error", 3.0, None),                    # no props at all
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+    got, want = contract_pair("key_profile", "events", df)
+    assert got == want, (got, want)
+    by_user = {r[0]: r for r in got}
+    assert by_user[10][2] == "click:1,purchase:2,view:2"
+    assert by_user[10][5:] == (4.05, "view", '{"k": 1},{"k": 2},{"k": 4}')
+    assert by_user[11][7] is None
+
 def test_salted_agg_equals_plain(spark, events_df):
     plain = {
         (r.key, r.label): r["count"]
@@ -171,29 +199,6 @@ def test_sessionize_brute_force(spark):
     out = sessionize(df, "key", "ts", gap_seconds=1800, tiebreak="eid")
     got = {r.eid: r.session_id for r in out.collect()}
     assert got == {0: 0, 1: 0, 2: 1, 3: 1, 4: 2}
-
-
-def test_no_exact_session_gap_boundary_in_testdata():
-    """session_window_stats shares the sessionize oracle on the claim
-    that no per-user consecutive-ts delta is exactly 1800s (built-in
-    session_window splits at gap >= 30min, the SQL twin at > 30min).
-    Assert the invariant so a data-generator change fails loudly
-    instead of silently flipping the boundary semantics."""
-    import os
-
-    import duckdb
-
-    for sf in ("sf0.001", "sf0.01", "sf0.1"):
-        p = f"/root/testdata/{sf}/events.parquet"
-        if not os.path.exists(p):
-            continue
-        n = duckdb.sql(
-            f"""SELECT count(*) FROM (
-                  SELECT epoch(ts) - lag(epoch(ts)) OVER (
-                    PARTITION BY user_id ORDER BY ts, event_id) AS d
-                  FROM '{p}') WHERE d = 1800"""
-        ).fetchone()[0]
-        assert n == 0, f"{sf}: {n} exact-1800s gaps break the shared oracle"
 
 
 def test_validate_nested_pair_null_props_parity(spark, tmp_path):

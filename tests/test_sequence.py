@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from cerberus_spark.checks.sequence import (
     contiguity_report,
     contiguity_violations,
-    order_violations,
     sequence_violations,
     transition_violations,
 )
@@ -73,13 +72,6 @@ def test_contiguity_violations_and_start(seq_df):
     assert "c" not in bad2
 
 
-def test_order_violations(seq_df):
-    out = order_violations(seq_df, "conv_id", "ts", ["turn_idx", "ts"]).collect()
-    assert [(r.conv_id, r.turn_idx) for r in out] == [("b", 4)]
-    # Spark returns session-UTC naive datetimes
-    assert out[0].prev_ts == _ts(121).replace(tzinfo=None)
-
-
 def test_transition_violations(seq_df):
     out = transition_violations(
         seq_df, "conv_id", "role", ["turn_idx", "ts"], GRAMMAR, FIRST
@@ -136,92 +128,6 @@ def test_reindex_turns_repairs_gaps_and_dups(seq_df):
     # repaired index passes the contiguity check it pairs with
     fixed = reindex_turns(seq_df, "conv_id", ["turn_idx", "ts"])
     assert contiguity_violations(fixed, "conv_id", "turn_idx_fixed").count() == 0
-
-
-def test_streaming_sequence_check_matches_batch(spark, tmp_path):
-    """The stateful streaming checker must emit exactly the batch
-    operator's violations on an ordered single-batch stream."""
-    from cerberus_spark.sources.transcripts import generate_transcripts
-    from cerberus_spark.streaming.validate_stream import stateful_sequence_check
-
-    src = str(tmp_path / "seq_stream_src")
-    df = generate_transcripts(spark, 80)
-    df.repartition(1).write.parquet(src)
-
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    out = stateful_sequence_check(stream, GRAMMAR, FIRST)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("seq_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = sorted(
-        (r.conv, r.turn_idx, r.state, r.prev_state, r.rule)
-        for r in spark.sql("SELECT * FROM seq_stream").collect()
-    )
-    want = sorted(
-        (r.conv_id, r.turn_idx, r.role, r.prev_state, r.rule)
-        for r in sequence_violations(
-            spark.read.parquet(src),
-            "conv_id",
-            "role",
-            "ts",
-            ["turn_idx", "ts"],
-            GRAMMAR,
-            FIRST,
-        ).collect()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_streaming_sequence_check_catches_cross_batch_violation(spark, tmp_path):
-    """A bad transition whose two turns arrive in DIFFERENT
-    micro-batches is caught via the carried (prev_state, prev_ts)
-    state — the case a stateless per-batch window misses."""
-    import os
-    import time
-
-    from cerberus_spark.streaming.validate_stream import stateful_sequence_check
-
-    schema = "conv_id string, turn_idx int, role string, ts timestamp"
-    src = tmp_path / "xbatch_src"
-    spark.createDataFrame(
-        [("x", 0, "system", _ts(0)), ("x", 1, "user", _ts(7))], schema
-    ).repartition(1).write.parquet(str(src))
-    spark.createDataFrame(
-        [("x", 2, "user", _ts(3))], schema  # user->user AND ts regression
-    ).repartition(1).write.mode("append").parquet(str(src))
-    # file-source batch order follows modification time: force the
-    # clean prefix strictly older so it forms batch 1
-    files = sorted(
-        (f for f in os.listdir(src) if f.endswith(".parquet")),
-        key=lambda f: os.path.getmtime(src / f),
-    )
-    now = time.time()
-    os.utime(src / files[0], (now - 100, now - 100))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    out = stateful_sequence_check(stream, GRAMMAR, FIRST)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("seq_xbatch")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = sorted(
-        (r.turn_idx, r.rule)
-        for r in spark.sql("SELECT * FROM seq_xbatch").collect()
-    )
-    assert got == [(2, "transition"), (2, "ts_regression")]
 
 
 def test_contiguity_is_one_partial_agg_shuffle(spark):

@@ -127,71 +127,3 @@ def test_ivf_multiprobe_recall_monotone_and_exact_at_full_probe(spark, emb_df):
     r1, r2, r4 = got(1), got(2), got(4)
     assert r4 == exact
     assert len(r1 & exact) <= len(r2 & exact) <= len(r4 & exact)
-
-
-def test_train_centroids_deterministic_across_partitionings(spark, emb_df):
-    """No RNG anywhere: the sample is a deterministic SET (top-N by
-    md5(id)) and the fold order is id-sorted, so training twice — on
-    differently-partitioned input — yields byte-identical centroids."""
-    from cerberus_spark.operators.similarity import train_centroids
-
-    a = train_centroids(emb_df, 4, sample_size=48).collect()
-    b = train_centroids(emb_df.repartition(17), 4, sample_size=48).collect()
-    got_a = sorted((r.centroid_id, tuple(r.centroid)) for r in a)
-    got_b = sorted((r.centroid_id, tuple(r.centroid)) for r in b)
-    assert got_a == got_b
-    assert len(got_a) == 4
-    for _, c in got_a:
-        assert abs(float(np.linalg.norm(np.array(c))) - 1.0) < 1e-4  # unit sphere
-
-
-def test_train_centroids_recall_on_separated_clusters(spark):
-    """Three well-separated direction clusters: trained centroids must
-    land one per cluster, so probes=1 IVF search over them recovers
-    the exact neighbors (every true neighbor shares the query's
-    cluster by construction)."""
-    from cerberus_spark.operators.similarity import train_centroids
-
-    rng = np.random.default_rng(7)
-    axes = np.eye(8)[:3]
-    rows = []
-    for i in range(90):
-        v = axes[i % 3] * 10.0 + rng.normal(scale=0.3, size=8)
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
-    cents = train_centroids(df, 3, sample_size=90)
-    queries = df.filter(F.col("vec_id") < 6)
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in cosine_topk(df, queries, k=3).collect()
-    }
-    approx = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_topk(df, queries, cents, k=3, probes=1).collect()
-    }
-    assert approx == exact
-
-
-def test_train_centroids_recall_monotone_in_probes(spark, emb_df):
-    """Self-contained ANN path (trained centroids, no caller input):
-    recall vs brute force is monotone in probes and exact at the full
-    probe count — the same contract the fixed-centroid tests prove."""
-    from cerberus_spark.operators.similarity import train_centroids
-
-    cents = train_centroids(emb_df, 4, sample_size=60)
-    queries = emb_df.filter(F.col("vec_id") < 5)
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in cosine_topk(emb_df, queries, k=3).collect()
-    }
-
-    def recall(p):
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in ivf_topk(emb_df, queries, cents, k=3, probes=p).collect()
-        }
-        return len(got & exact)
-
-    r1, r2, r4 = recall(1), recall(2), recall(4)
-    assert r1 <= r2 <= r4
-    assert r4 == len(exact)

@@ -87,45 +87,6 @@ def test_lang_id(spark, text_df):
     assert got[4] == "und"
 
 
-# ---------------------------------------------------------------------------
-# binary label parsing (F1 analog: vectorized byte parsing via Arrow)
-# ---------------------------------------------------------------------------
-
-def test_parse_label_sequence_roundtrip(spark):
-    from pyspark.sql import functions as F
-
-    from cerberus_spark.functions.binary import (
-        encode_label_sequence,
-        parse_label_sequence,
-    )
-
-    names = ["example.com", "a.b.c.d", "spark.apache.org", "x"]
-    df = spark.createDataFrame([(n,) for n in names], "name string")
-    out = df.select(
-        "name", parse_label_sequence(encode_label_sequence(F.col("name"))).alias("rt")
-    )
-    assert all(r["rt"] == r["name"] for r in out.collect())
-
-
-def test_parse_label_sequence_malformed(spark):
-    from pyspark.sql import functions as F
-
-    from cerberus_spark.functions.binary import parse_label_sequence
-
-    rows = [
-        (1, bytes([7]) + b"example"),          # length overruns: no terminator
-        (2, bytes([250]) + b"ab"),              # length byte > remaining buffer
-        (3, b"\x00"),                           # empty name
-        (4, None),                              # null payload
-        (5, bytes([3]) + b"abc" + b"\x00"),     # valid single label
-    ]
-    df = spark.createDataFrame(rows, "id int, payload binary")
-    got = {r["id"]: r["name"] for r in df.select(
-        "id", parse_label_sequence(F.col("payload")).alias("name")
-    ).collect()}
-    assert got == {1: None, 2: None, 3: None, 4: None, 5: "abc"}
-
-
 def test_unigram_logprob_matches_python(spark):
     """Spark NLL == a hand-rolled python unigram LM, including the OOV
     floor when the vocab is capped."""
@@ -481,9 +442,9 @@ def test_gopher_gate_pair_keeps_and_drops_at_sf001():
     import duckdb
 
     import __spark_entry__ as entry
-    from cerberus_spark.sources.tables import DEFAULT_SF_DIR
+    from bench import SF_DIR
 
-    docs = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01", "documents.parquet")
+    docs = os.path.join(os.path.dirname(SF_DIR), "sf0.01", "documents.parquet")
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
     sql = f"SELECT DISTINCT keep FROM ({entry.oracle_sql()['gopher_gate']})"

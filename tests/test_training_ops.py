@@ -150,23 +150,6 @@ def test_interval_join_semantics(spark):
     assert unmatched == {2, 4}
 
 
-def test_hll_sketch_rollup_matches_direct(spark):
-    """Union-of-group-sketches must equal one direct global sketch
-    (register merge is exact), and land inside HLL's error envelope."""
-    from cerberus_spark.checks.sketches import hll_group_sketches, hll_rollup
-    from pyspark.sql import functions as F
-
-    df = spark.range(0, 20000).select(
-        (F.col("id") % 30).alias("day"), (F.col("id") % 3517).alias("user_id")
-    )
-    per_day = hll_group_sketches(df, ["day"], "user_id")
-    assert per_day.count() == 30
-    merged = hll_rollup(per_day).collect()[0]
-    direct = hll_group_sketches(df.withColumn("g", F.lit(1)), ["g"], "user_id").collect()[0]
-    assert merged.estimate == direct.estimate
-    assert abs(merged.estimate - 3517) / 3517 < 0.05
-
-
 def test_hash_sample_deterministic_and_nested(spark):
     df = spark.range(0, 5000).withColumnRenamed("id", "k")
     s20 = {r.k for r in hash_sample(df, "k", 0.2).collect()}
@@ -312,26 +295,6 @@ def test_contamination_report_counts_shared_shingles(spark):
     assert rows[1].n_shingles == 2 and rows[1].n_contaminated == 1
     assert rows[1].contam_milli == 500
     assert rows[3].n_shingles == 1 and rows[3].contam_milli == 1000
-
-
-def test_decontaminate_drops_only_contaminated(spark):
-    from cerberus_spark.operators.decontam import decontaminate
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "zeta eta theta iota")],
-        "doc_id long, text string",
-    )
-    ev = spark.createDataFrame([(9, "alpha beta gamma")], "doc_id long, text string")
-    kept = sorted(r.doc_id for r in decontaminate(docs, "text", "doc_id", ev).collect())
-    assert kept == [2]
-    # threshold: doc 1 is 500 permille contaminated -> survives a 600 cap
-    kept = sorted(
-        r.doc_id
-        for r in decontaminate(
-            docs, "text", "doc_id", ev, max_contam_milli=600
-        ).collect()
-    )
-    assert kept == [1, 2]
 
 
 def test_contamination_plan_broadcasts_eval_side(spark):
