@@ -486,7 +486,8 @@ def q_key_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     DeviceInfo, monitor.go:322-368).  The label map renders as a sorted
     'label:count' string and the first three distinct ``props`` as a
     string in first-seen order, so the compare is map-type-free; money
-    is summed in cents."""
+    is summed in cents.  A user with no non-NULL label renders NULL, as
+    DuckDB's ``string_agg`` over no rows does."""
     from cerberus_spark.operators.aggregate import key_profile
 
     ev = _t(spark, sf_dir, "events").withColumn("value_cents", _cents("value"))
@@ -501,7 +502,8 @@ def q_key_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prof.select(
         "user_id",
         "n_events",
-        F.array_join(F.sort_array(label_counts), ",").alias("label_counts"),
+        F.when(F.size("label_counts") > 0, F.array_join(F.sort_array(label_counts), ","))
+        .alias("label_counts"),
         "first_seen",
         "last_seen",
         (F.col("total_value") / 100).alias("total_value"),

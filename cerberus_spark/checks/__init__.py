@@ -17,19 +17,15 @@ from cerberus_spark.checks.diff import row_fingerprint, table_diff
 from cerberus_spark.checks.schema_diff import assert_schema, schema_diff
 from cerberus_spark.checks.sequence import (
     contiguity_report,
-    contiguity_violations,
     reindex_turns,
     sequence_violations,
-    transition_violations,
 )
 
 __all__ = [
     "uniqueness_violations",
     "contiguity_report",
-    "contiguity_violations",
     "reindex_turns",
     "sequence_violations",
-    "transition_violations",
     "referential_orphans",
     "referential_violations",
     "column_profile",

@@ -69,14 +69,12 @@ def windowed_categorical_histograms(
     column: str,
     ts_col: str = "ts",
     window_duration: str = "1 hour",
-    watermark: str | None = None,
 ) -> DataFrame:
     """(w: struct<start,end>, bin, count) — per-event-time-window
     category histogram.  The SAME expression is legal in batch and
-    streaming plans; pass ``watermark`` on a stream so the window
-    state is bounded (late rows beyond it are dropped)."""
-    if watermark is not None:
-        df = df.withWatermark(ts_col, watermark)
+    streaming plans; on a stream, set ``withWatermark`` on ``df``
+    first so the window state is bounded (late rows beyond it are
+    dropped)."""
     return (
         df.groupBy(
             F.window(ts_col, window_duration).alias("w"),
@@ -92,15 +90,12 @@ def windowed_numeric_histograms(
     edges: list[float],
     ts_col: str = "ts",
     window_duration: str = "1 hour",
-    watermark: str | None = None,
 ) -> DataFrame:
     """Numeric twin of :func:`windowed_categorical_histograms`: FROZEN
     ``edges`` binning (same clamp semantics as
     :func:`numeric_histogram`) per event-time window; NULLs dropped.
     Composes with :func:`windowed_drift_report` against a
     :func:`numeric_histogram` baseline."""
-    if watermark is not None:
-        df = df.withWatermark(ts_col, watermark)
     bin_idx = numeric_bin_expr(F.col(column), edges)
     return (
         df.filter(F.col(column).isNotNull())

@@ -22,11 +22,10 @@ def referential_orphans(
     fk: str,
     dim: DataFrame,
     pk: str,
-    ignore_null: bool = True,
 ) -> DataFrame:
-    """Fact rows whose ``fk`` is absent from ``dim.pk`` (broadcast anti-join)."""
-    src = fact.filter(F.col(fk).isNotNull()) if ignore_null else fact
-    return src.join(
+    """Fact rows whose non-NULL ``fk`` is absent from ``dim.pk``
+    (broadcast anti-join)."""
+    return fact.filter(F.col(fk).isNotNull()).join(
         F.broadcast(dim.select(F.col(pk).alias(fk)).distinct()), on=fk, how="left_anti"
     )
 

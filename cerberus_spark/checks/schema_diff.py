@@ -35,7 +35,6 @@ def schema_diff(
     actual: StructType | DataFrame,
     expected: StructType | str,
     allow_added: bool = False,
-    allow_widened: bool = True,
 ) -> list[dict]:
     """Findings for ``actual`` vs the declared ``expected`` schema
     (StructType or DDL string): one dict per problem with keys
@@ -44,8 +43,8 @@ def schema_diff(
     schema's column order (added columns last, in actual order) so
     output is deterministic.
 
-    ``allow_widened`` accepts lossless promotions (int→bigint,
-    float→double, date→timestamp); ``allow_added`` tolerates new
+    Lossless promotions (int→bigint, float→double, date→timestamp) are
+    accepted; ``allow_added`` tolerates new
     upstream columns.  A declared-nullable column that arrives
     non-nullable is fine; the reverse is a finding.
     """
@@ -63,7 +62,7 @@ def schema_diff(
             )
             continue
         a_t, e_t = af.dataType.simpleString(), ef.dataType.simpleString()
-        if a_t != e_t and not (allow_widened and (e_t, a_t) in _WIDENINGS):
+        if a_t != e_t and (e_t, a_t) not in _WIDENINGS:
             findings.append(
                 {"column": ef.name, "kind": "type_mismatch",
                  "actual": a_t, "expected": e_t}
@@ -88,11 +87,10 @@ def assert_schema(
     actual: StructType | DataFrame,
     expected: StructType | str,
     allow_added: bool = False,
-    allow_widened: bool = True,
 ) -> None:
     """Raise :class:`SchemaError` listing every finding (not just the
     first) if ``actual`` violates the declared contract."""
-    findings = schema_diff(actual, expected, allow_added, allow_widened)
+    findings = schema_diff(actual, expected, allow_added)
     if findings:
         lines = "; ".join(
             f"{f['column']}: {f['kind']} (actual={f['actual']}, expected={f['expected']})"

@@ -21,11 +21,10 @@ Scale shape (the only thing that matters at 10^12 turns):
 - :func:`contiguity_report` is ONE hash-partitioned groupBy with
   map-side partial aggregation — shuffle volume is |convs|, not
   |turns|; no window, no sort.
-- The windowed checks (:func:`transition_violations`,
-  :func:`sequence_violations`) share a
-  single ``Window.partitionBy(conv).orderBy(order)`` — ONE shuffle +
-  partition-local sort, then pure row-local predicates.
-  :func:`sequence_violations` evaluates every rule in the SAME window
+- :func:`sequence_violations` uses a single
+  ``Window.partitionBy(conv).orderBy(order)`` — ONE shuffle +
+  partition-local sort, then pure row-local predicates.  It
+  evaluates every rule in the SAME window
   pass (conditional rule-name array -> explode), so adding rules adds
   zero exchanges.  The rules themselves are defined once, in
   :func:`sequence_rules`, over the columns :func:`sequence_window`
@@ -88,68 +87,8 @@ def contiguity_report(
     )
 
 
-def contiguity_violations(
-    df: DataFrame, conv_col: str, idx_col: str, start: int = 0
-) -> DataFrame:
-    """Conversations whose index set is not exactly dense from
-    ``start``: any gap, duplicate, below-start index, or late start."""
-    rep = contiguity_report(df, conv_col, idx_col, start)
-    return rep.filter(
-        (F.col("n_dup_idx") > 0)
-        | (F.col("n_missing") > 0)
-        | (F.col("n_below_start") > 0)
-    )
-
-
 def _w(conv_col: str, order_by: list[str]) -> Window:
     return Window.partitionBy(conv_col).orderBy(*order_by)
-
-
-def transition_violations(
-    df: DataFrame,
-    conv_col: str,
-    state_col: str,
-    order_by: list[str],
-    allowed: set[tuple[str, str]],
-    allowed_first: set[str] | None = None,
-) -> DataFrame:
-    """Rows whose (prev_state -> state) transition is not in
-    ``allowed`` (plus, when ``allowed_first`` is given, first rows
-    whose state is not in it): input row + ``prev_state`` + ``rule``
-    ('transition', 'null_state' or 'first_state').  One shuffle.
-
-    NULL handling is explicit so the semantics match the DuckDB oracle
-    even on data with NULL states: a NULL state is its own
-    ``null_state`` violation (Spark's concat_ws would silently skip the
-    NULL operand and mis-flag it 'transition' while SQL's ``||`` yields
-    NULL and silently drops the row — neither is right); transitions
-    are only judged between two non-NULL states; and 'first row' means
-    row_number()==1, not prev IS NULL (a mid-conversation NULL state
-    must not make its successor look like a first row).
-    """
-    w = _w(conv_col, order_by)
-    prev = F.lag(state_col).over(w)
-    rn = F.row_number().over(w)
-    state = F.col(state_col)
-    trans_ok = F.concat_ws(_SEP, prev, state).isin(
-        [a + _SEP + b for a, b in sorted(allowed)]
-    )
-    bad_trans = prev.isNotNull() & state.isNotNull() & ~trans_ok
-    bad_null = state.isNull()
-    if allowed_first is not None:
-        bad_first = (rn == 1) & ~state.isin(sorted(allowed_first))
-    else:
-        bad_first = F.lit(False)
-    return (
-        df.withColumn("prev_state", prev)
-        .withColumn(
-            "rule",
-            F.when(bad_trans, F.lit("transition"))
-            .when(bad_null, F.lit("null_state"))
-            .when(bad_first, F.lit("first_state")),
-        )
-        .filter(F.col("rule").isNotNull())
-    )
 
 
 def sequence_violations(
@@ -160,12 +99,10 @@ def sequence_violations(
     order_by: list[str],
     allowed: set[tuple[str, str]],
     allowed_first: set[str] | None = None,
-    idx_col: str | None = None,
-    start: int = 0,
 ) -> DataFrame:
-    """All sequence rules in ONE window pass: emits one row per
-    (input row, violated rule) with ``rule`` in {'transition',
-    'null_state', 'first_state', 'ts_regression'}.
+    """All state and timestamp sequence rules in ONE window pass: emits
+    one row per (input row, violated rule) with ``rule`` in
+    {'transition', 'null_state', 'first_state', 'ts_regression'}.
 
     lag(state), lag(ts) and row_number come from the same window sort
     (:func:`sequence_window`); the per-row rule names
@@ -173,36 +110,18 @@ def sequence_violations(
     exploded, so a row violating two rules yields two output rows and
     clean rows yield none — still exactly one exchange.
 
-    NULL-state semantics match :func:`transition_violations` (and the
-    DuckDB oracle): NULL states report ``null_state``; transitions are
-    judged only between two non-NULL states; 'first row' is
-    row_number()==1, so a mid-conversation NULL state does not make its
-    successor look like a conversation start.
-
-    ``idx_col`` additionally derives the INDEX-DENSITY rules from the
-    SAME window pass (at 10^12-turn scale this folds
-    :func:`contiguity_report`'s separate corpus shuffle into the one
-    sort already paid): ``dup_idx`` (index equals its predecessor's),
-    ``below_start`` (index < ``start``), and ``idx_gap`` (indexes
-    skipped before this row — the gap SIZE lands in ``gap_size``,
-    NULL on non-gap rows, so Σ gap_size per conv equals
-    contiguity_report's ``n_missing``, equality pytest-locked).
-    REQUIREMENT: ``order_by`` must sort ``idx_col`` non-decreasing
-    within a conversation (e.g. lead with it), or gaps mis-derive.
+    NULL-state semantics match the DuckDB oracle: NULL states report
+    ``null_state``; transitions are judged only between two non-NULL
+    states; 'first row' is row_number()==1, so a mid-conversation NULL
+    state does not make its successor look like a conversation start.
     """
-    base = sequence_window(df, conv_col, state_col, ts_col, order_by, idx_col)
-    rules = sequence_rules(state_col, ts_col, allowed, allowed_first, idx_col, start)
+    base = sequence_window(df, conv_col, state_col, ts_col, order_by)
+    rules = sequence_rules(state_col, ts_col, allowed, allowed_first)
     names = F.filter(
         F.array(*[F.when(r.violated, F.lit(r.rule)) for r in rules]),
         lambda x: x.isNotNull(),
     )
-    out = base.withColumn("rule", F.explode(names))
-    if idx_col is not None:
-        gap = next(r.value_col for r in rules if r.rule == "idx_gap")
-        out = out.withColumn(
-            "gap_size", F.when(F.col("rule") == "idx_gap", gap)
-        ).drop("_prev_idx")
-    return out.drop("_prev_ts", "_rn")
+    return base.withColumn("rule", F.explode(names)).drop("_prev_ts", "_rn")
 
 
 def sequence_window(
@@ -242,8 +161,18 @@ def sequence_rules(
     consumer evaluates.  Each carries the field it reports and the
     value it reports: the state for the grammar rules, the timestamp
     for ``ts_regression``, the index for the density rules and the gap
-    SIZE for ``idx_gap``.  ``idx_col`` adds the density rules (see
-    :func:`sequence_violations`)."""
+    SIZE for ``idx_gap``.
+
+    ``idx_col`` adds the INDEX-DENSITY rules, derived from the SAME
+    window pass (at 10^12-turn scale this folds
+    :func:`contiguity_report`'s separate corpus shuffle into the one
+    sort already paid): ``dup_idx`` (index equals its predecessor's),
+    ``below_start`` (index < ``start``), and ``idx_gap`` (indexes
+    skipped before this row; its value is the gap SIZE, so Σ gap size
+    per conv equals contiguity_report's ``n_missing``, equality
+    pytest-locked).  REQUIREMENT: ``order_by`` must sort ``idx_col``
+    non-decreasing within a conversation (e.g. lead with it), or gaps
+    mis-derive."""
     prev_state, prev_ts = F.col("prev_state"), F.col("_prev_ts")
     state = F.col(state_col)
     trans_ok = F.concat_ws(_SEP, prev_state, state).isin(
@@ -318,8 +247,8 @@ def reindex_turns(
     """Repair contiguity violations: dense re-index ``0..n-1`` per
     conversation in ``order_by`` order (``order_by`` must be a total
     order within a conversation or the result is nondeterministic).
-    One shuffle + partition-local sort; pairs with
-    :func:`contiguity_violations` as the fix for the convs it flags.
+    One shuffle + partition-local sort; the fix for the convs
+    :func:`contiguity_report` flags.
     """
     w = _w(conv_col, order_by)
     return df.withColumn(new_col, (F.row_number().over(w) - 1).cast("int"))

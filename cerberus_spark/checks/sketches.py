@@ -4,10 +4,11 @@ answer to percentile and heavy-hitter rollups.
 
 Exact percentiles and exact top-k cannot be rolled up (the p95 of each
 day does not give the p95 of the month), so warehouse rollups either
-rescan raw data or store sketches.  Both states here merge
-associatively and order-insensitively, so per-partition partials,
-per-day groups and multi-table unions all combine without rescanning;
-this is the reference's periodic-stats report (S12,
+rescan raw data or store sketches.  The histogram state merges
+associatively and order-insensitively (:func:`histogram_rollup`), so
+per-partition partials, per-day groups and multi-table unions all
+combine without rescanning; this is the reference's periodic-stats
+report (S12,
 internal/monitor/monitor.go:514-584) done the way a 100 TB warehouse
 has to.
 """
@@ -155,9 +156,9 @@ def topk_group_sketches(
     undercount bound ``err``.
 
     State: ``state: array<struct<lo:long, item:string>>`` (sorted by
-    count desc) and ``err: long``.  The invariant, preserved by
-    :func:`topk_rollup` (the mergeable-summaries truncation argument —
-    Agarwal et al., "Mergeable Summaries", PODS 2012):
+    count desc) and ``err: long``.  The invariant (the
+    mergeable-summaries truncation argument — Agarwal et al.,
+    "Mergeable Summaries", PODS 2012):
 
         for every item:  lo <= true_count <= lo + err
         (items absent from the state have lo = 0)
@@ -165,9 +166,7 @@ def topk_group_sketches(
     At construction err is the (k+1)-th count (the max true count an
     absent item can hide); kept counts are exact.  Any item with
     true_count > err is guaranteed present, so heavy hitters are never
-    silently lost — the re-aggregatable top-k rollup a 100 TB
-    warehouse needs (per-partition/per-day states roll up by summing,
-    never rescanning raw data).  Cost: one (keys, item) shuffle with
+    silently lost.  Cost: one (keys, item) shuffle with
     map-side partial counts, then a |keys x k|-sized window.
     """
     item = F.col(item_col)
@@ -193,48 +192,5 @@ def topk_group_sketches(
         kept.join(F.broadcast(dropped), gk, "left")
         .withColumn("err", F.coalesce(F.col("_err"), F.lit(0).cast("long")))
         .drop("_err")
-    )
-    return out if keys else out.drop("_g")
-
-
-def topk_rollup(
-    sketches: DataFrame, key_cols: list[str] | None = None, k: int = 16
-) -> DataFrame:
-    """Merge top-k summaries up a level WITHOUT rescanning raw data:
-    sum per-item lower bounds across children, keep the k largest,
-    and grow ``err`` by (sum of child errs) + (the (k+1)-th merged
-    count dropped at truncation).  The lo <= true <= lo + err
-    invariant is preserved: an absent item was either absent from all
-    children (true <= sum of child errs) or dropped here
-    (true <= its lo + child errs <= dropped bound + child errs)."""
-    keys = list(key_cols or [])
-    # uniform handling: a constant group key stands in for "global"
-    src = sketches if keys else sketches.withColumn("_g", F.lit(1))
-    gk = keys or ["_g"]
-    base_err = src.groupBy(*gk).agg(F.sum("err").alias("_err0"))
-    merged = (
-        src.select(*gk, F.explode("state").alias("e"))
-        .groupBy(*gk, F.col("e.item").alias("item"))
-        .agg(F.sum("e.lo").alias("lo"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*gk).orderBy(F.col("lo").desc(), F.col("item"))
-    ranked = merged.withColumn("_r", F.row_number().over(w))
-    kept = ranked.filter(F.col("_r") <= k).groupBy(*gk).agg(
-        F.reverse(F.sort_array(F.collect_list(F.struct("lo", "item")))).alias("state")
-    )
-    dropped = ranked.filter(F.col("_r") == k + 1).select(
-        *gk, F.col("lo").alias("_errd")
-    )
-    out = (
-        kept.join(F.broadcast(dropped), gk, "left")
-        .join(F.broadcast(base_err), gk, "left")
-        .withColumn(
-            "err",
-            F.coalesce(F.col("_errd"), F.lit(0).cast("long"))
-            + F.coalesce(F.col("_err0"), F.lit(0).cast("long")),
-        )
-        .drop("_errd", "_err0")
     )
     return out if keys else out.drop("_g")

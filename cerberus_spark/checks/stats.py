@@ -2,10 +2,7 @@
 
 Analog of the reference's per-device profiling aggregates
 (internal/models/types.go:117-140, updates monitor.go:322-368), lifted
-to whole-column scope.  Exact distincts use ``count_distinct`` (fine at
-test scale); at 10^12 rows callers should pass ``approx=True`` to use
-HLL sketches (``approx_count_distinct``) — one pass, mergeable,
-bounded memory.
+to whole-column scope.  Exact distincts use ``count_distinct``.
 """
 
 from __future__ import annotations
@@ -14,7 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def column_profile(df: DataFrame, columns: list[str] | None = None, approx: bool = False) -> DataFrame:
+def column_profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Long-form profile: one row per column.
 
     Single aggregation job: all per-column measures are computed in ONE
@@ -26,10 +23,7 @@ def column_profile(df: DataFrame, columns: list[str] | None = None, approx: bool
     for c in columns:
         col = F.col(c)
         aggs.append(F.sum(F.when(col.isNull(), 1).otherwise(0)).alias(f"__nulls_{c}"))
-        if approx:
-            aggs.append(F.approx_count_distinct(c).alias(f"__nd_{c}"))
-        else:
-            aggs.append(F.count_distinct(col).alias(f"__nd_{c}"))
+        aggs.append(F.count_distinct(col).alias(f"__nd_{c}"))
         aggs.append(F.min(col).cast("string").alias(f"__min_{c}"))
         aggs.append(F.max(col).cast("string").alias(f"__max_{c}"))
     wide = df.agg(*aggs)
@@ -53,7 +47,7 @@ def numeric_quantiles(df: DataFrame, column: str, probs: list[float]) -> DataFra
 
     Exact ``percentile`` sorts per-group state — fine for bench/oracle
     scale; at 10^12 rows use ``percentile_approx`` (t-digest-style
-    mergeable sketch) via ``approx=True`` call sites.
+    mergeable sketch) instead.
     """
     arr = F.expr(
         f"percentile({column}, array({', '.join(str(p) for p in probs)}))"

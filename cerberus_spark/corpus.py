@@ -25,14 +25,12 @@ Python re-reads ``pyspark.zip``'s directory), so three per-document
 passes over four partitions cost twelve such tasks where one pass
 costs four.
 
-Scan count: by default the verdict (document pass plus window) is
+Scan count: the verdict (document pass plus window) is
 localCheckpointed, so it runs ONCE and the LSH input, ``kept``,
 ``dropped`` and ``report`` are all filters of it — none of them
 re-derives a fingerprint (re-running the branches measured 4.4x slower
-on a 1M-doc corpus).  Set ``checkpoint_stages=False`` when the gated
-corpus exceeds cluster storage and re-scanning parquet is the cheaper
-trade.  On the 4k-doc benchmark corpus at local[4], one warm
-``clean_corpus`` call plus writing its three outputs is 9 Spark jobs:
+on a 1M-doc corpus).  On the 4k-doc benchmark corpus at local[4], one
+warm ``clean_corpus`` call plus writing its three outputs is 9 Spark jobs:
 4 in the call (the window's exchange, the two LSH exchanges, the
 bounded edge collect) and 5 for the three writes.  It was 21 when the
 fingerprint join re-ran for each of four consumers and the clusters
@@ -175,8 +173,6 @@ def clean_corpus(
     winnow_g: int = 24,
     winnow_w: int = 8,
     min_run: int = 50,
-    checkpoint_stages: bool = True,
-    survivor_policy: str = "min_id",
     lm_filter: dict | None = None,
 ) -> dict[str, DataFrame]:
     """Returns lazy DataFrames:
@@ -215,13 +211,8 @@ def clean_corpus(
     evidence.  Runs only on dedup survivors: two capped count shuffles
     + broadcast joins, never a data-sized window.
 
-    ``survivor_policy`` picks which member of every NEAR-dup cluster
-    keeps: ``"min_id"`` (default — positional, same as
-    ``dedup_clusters``' flag; exact-dup groups always keep min id, the
-    members are byte-identical) or ``"longest"`` — the least-truncated
-    copy wins (max post-normalization ``length(text_col)``, ties to
-    min id), via :func:`cluster_representatives`; one extra
-    partial-aggregable groupBy over the |clustered docs| slice.
+    Every near-dup cluster keeps its min id (``dedup_clusters``'
+    ``keep`` flag), as every exact-dup group does.
     """
     from cerberus_spark.operators.dedup import minhash_dup_candidates
     from cerberus_spark.operators.graph import dedup_clusters
@@ -233,14 +224,12 @@ def clean_corpus(
     gated = _exact_verdict(
         gated, id_col, F.when(gate_keep, _fingerprint(F.col(text_col)))
     )
-    if checkpoint_stages:
-        # every output below is a filter of this one frame (gate drops,
-        # exact drops, the LSH input, kept): without a checkpoint the
-        # document pass and the fingerprint window re-execute once per
-        # branch (~4 scans — measured 200s -> 45.6s, 4.4x, on a 1M-doc
-        # corpus at local[32]).  Disable when the gated corpus exceeds
-        # cluster storage and re-scanning parquet is the cheaper trade.
-        gated = gated.localCheckpoint(eager=False)
+    # every output below is a filter of this one frame (gate drops,
+    # exact drops, the LSH input, kept): without a checkpoint the
+    # document pass and the fingerprint window re-execute once per
+    # branch (~4 scans — measured 200s -> 45.6s, 4.4x, on a 1M-doc
+    # corpus at local[32])
+    gated = gated.localCheckpoint(eager=False)
     quality_drops = gated.filter(~gate_keep).select(
         F.col(id_col).alias("id"),
         F.lit("quality").alias("stage"),
@@ -260,25 +249,7 @@ def clean_corpus(
     # runs the candidate pipeline now, once; a small graph comes back
     # as a driver-built local table, a big one over checkpointed labels
     clusters = dedup_clusters(cand)
-    if survivor_policy == "longest":
-        from cerberus_spark.operators.graph import cluster_representatives
-
-        reps = cluster_representatives(
-            clusters.select("id", "cluster_id"),
-            exact_kept.select(
-                F.col(id_col), F.length(F.col(text_col)).alias("__q")
-            ),
-            id_col,
-            "__q",
-        )
-        loser_rows = clusters.join(
-            reps.select("cluster_id", "rep_id"), "cluster_id"
-        ).filter(F.col("id") != F.col("rep_id"))
-    elif survivor_policy == "min_id":
-        loser_rows = clusters.filter(~F.col("keep"))
-    else:
-        raise ValueError(f"unknown survivor_policy: {survivor_policy!r}")
-    losers = _near_dup_losers(loser_rows)
+    losers = _near_dup_losers(clusters.filter(~F.col("keep")))
     kept = exact_kept.join(
         losers.select(F.col("id").alias(id_col)), id_col, "left_anti"
     )
@@ -319,9 +290,8 @@ def clean_corpus(
             raise ValueError(f"unknown lm_filter keys: {sorted(lf)}")
         if not set(keep_buckets) <= set(labels):
             raise ValueError(f"keep_buckets {keep_buckets} not all in labels {labels}")
-        if checkpoint_stages:
-            # kept feeds BOTH the LM count passes and the final output
-            kept = kept.localCheckpoint(eager=False)
+        # kept feeds BOTH the LM count passes and the final output
+        kept = kept.localCheckpoint(eager=False)
         if model == "unigram":
             scores = unigram_logprob_scores(
                 kept, text_col, id_col, vocab_size=vocab_size
@@ -480,7 +450,6 @@ def clean_transcripts(
     rows_per_band: int = 4,
     bucket_cap: int | None = 200,
     threshold: float = 0.5,
-    checkpoint_stages: bool = True,
     survivor_policy: str = "min_id",
 ) -> dict[str, DataFrame]:
     """Transcript twin of :func:`clean_corpus`, at CONVERSATION
@@ -488,8 +457,8 @@ def clean_transcripts(
     report, every stage an already oracle-gated operator.
 
     ``survivor_policy`` picks which member of every near-dup cluster
-    keeps, mirroring :func:`clean_corpus`: ``"min_id"`` (default —
-    positional min conversation key, ``dedup_clusters``' flag) or
+    keeps: ``"min_id"`` (default — positional min conversation key,
+    ``dedup_clusters``' flag) or
     ``"longest"`` (the conversation with the MOST TURNS survives, ties
     to min key — via :func:`cluster_representatives`; costs one extra
     per-conversation turn count, a map-side-combined |convs|-row
@@ -529,10 +498,10 @@ def clean_transcripts(
     Scale shape: ONE window pass over the corpus (health), one
     |turns|-keyed distinct for the conversation census, the capped
     near-dup chain over the healthy slice, and |convs|-sized joins for
-    the verdicts; ``checkpoint_stages`` localCheckpoints the
-    |violations|-sized health-drop frame because the lineage below
-    branches FOUR ways (healthy filter, dropped rows, report counts,
-    kept-conv census) — checkpointing at the drop rows (rather than
+    the verdicts; it localCheckpoints the |violations|-sized
+    health-drop frame because the lineage below branches FOUR ways
+    (healthy filter, dropped rows, report counts, kept-conv census) —
+    checkpointing at the drop rows (rather than
     the distinct-conv set derived from them) means every branch,
     including the ``dropped``/``report`` outputs, reads the single
     materialized window result instead of re-running the corpus sort
@@ -551,9 +520,7 @@ def clean_transcripts(
     )
     dropped_health = vio.select(conv, "rule").distinct().select(
         "conv", F.lit("health").alias("stage"), F.col("rule").alias("reason")
-    )
-    if checkpoint_stages:
-        dropped_health = dropped_health.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     unhealthy = dropped_health.select("conv").distinct()
     healthy_turns = turns.join(
         unhealthy, turns[conv_col] == unhealthy["conv"], "left_anti"
@@ -563,7 +530,6 @@ def clean_transcripts(
     pairs = sequence_neardup_pairs(
         healthy_turns, conv_col, order_cols, token_col,
         num_hashes, shingle_k, bands, rows_per_band, bucket_cap, threshold,
-        share_shingles=checkpoint_stages,
     )
     clusters = dedup_clusters(pairs)
     if survivor_policy == "longest":
@@ -582,9 +548,7 @@ def clean_transcripts(
         loser_rows = clusters.filter(~F.col("keep"))
     else:
         raise ValueError(f"unknown survivor_policy: {survivor_policy!r}")
-    losers = loser_rows.select(F.col("id").alias("conv"))
-    if checkpoint_stages:
-        losers = losers.localCheckpoint(eager=False)
+    losers = loser_rows.select(F.col("id").alias("conv")).localCheckpoint(eager=False)
     dropped_dup = losers.select(
         "conv", F.lit("near_dup").alias("stage"), F.lit("cluster_loser").alias("reason")
     )

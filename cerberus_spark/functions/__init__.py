@@ -4,17 +4,11 @@ plumbing."""
 from cerberus_spark.functions.text import (
     token_count_ws,
     token_count_bpeish,
-    stopword_ratio,
-    punct_ratio,
-    quality_score,
     lang_id,
 )
 
 __all__ = [
     "token_count_ws",
     "token_count_bpeish",
-    "stopword_ratio",
-    "punct_ratio",
-    "quality_score",
     "lang_id",
 ]

@@ -79,49 +79,13 @@ def _word_hits(col: Column, words: list[str]) -> Column:
     return F.regexp_count(F.lower(col), F.lit(pat))
 
 
-def stopword_ratio(col: Column, stopwords: list[str] | None = None) -> Column:
-    """stopword tokens / whitespace tokens (0 when no tokens)."""
-    sw = stopwords or STOPWORDS_EN
-    n = token_count_ws(col)
-    return F.when(n == 0, F.lit(0.0)).otherwise(_word_hits(col, sw) / n)
-
-
-def punct_ratio(col: Column) -> Column:
-    """punctuation chars / total chars (0 for empty)."""
-    n = F.length(col)
-    return F.when((n.isNull()) | (n == 0), F.lit(0.0)).otherwise(
-        F.regexp_count(col, F.lit(r"[^\w\s]")) / n
-    )
-
-
-def quality_score(col: Column) -> Column:
-    """Deterministic heuristic quality score in [0,1]:
-    0.4·length_ok + 0.3·(1−punct_ratio) + 0.3·min(stopword_ratio·5, 1)
-    where length_ok = 1 if 20 ≤ chars ≤ 20000 else 0.
-
-    Mirrors published quality-filter recipes (length / symbol ratio /
-    stopword presence) in spirit; the exact formula is ours and frozen
-    for reproducibility.
-    """
-    n = F.length(col)
-    length_ok = F.when((n >= 20) & (n <= 20000), F.lit(1.0)).otherwise(F.lit(0.0))
-    sw = stopword_ratio(col)
-    return F.round(
-        F.lit(0.4) * length_ok
-        + F.lit(0.3) * (F.lit(1.0) - punct_ratio(col))
-        + F.lit(0.3) * F.least(sw * 5, F.lit(1.0)),
-        4,
-    )
-
-
 def quality_score_milli(col: Column) -> Column:
-    """Exact-integer quality score in [0, 1000] — engine-portable.
-
-    The double formula in ``quality_score`` lands on round-half
-    boundaries (e.g. 9 stopwords / 80 tokens -> 0.86875) where the last
-    ulp differs between engines; this variant is pure integer
+    """Exact-integer quality score in [0, 1000] — engine-portable:
+    length, punctuation share and stopword presence, in pure integer
     arithmetic (floor-div with +half rounding), bit-identical in any
-    SQL engine:
+    SQL engine (a double formula lands on round-half boundaries, e.g.
+    9 stopwords / 80 tokens -> 0.86875, where the last ulp differs
+    between engines):
 
         400*length_ok
       + floor((600*(chars - punct) + chars) / (2*chars))

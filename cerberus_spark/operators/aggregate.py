@@ -38,6 +38,9 @@ def key_profile(
     (key,label) counts -> re-group by key with map_from_entries.  Both
     aggregations hash-partition by (a prefix of) the same key, and AQE
     coalesces the small second shuffle.
+
+    A NULL label counts in ``n_events`` and can be ``last_label``, but
+    has no ``label_counts`` entry: a map key cannot be NULL.
     """
     order = F.struct(F.col(ts_col), F.col(tiebreak_col)) if tiebreak_col else F.col(ts_col)
 
@@ -53,7 +56,10 @@ def key_profile(
     aggs = [
         F.sum("n").alias("n_events"),
         F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct(F.col(label_col), F.col("n"))))
+            F.filter(
+                F.sort_array(F.collect_list(F.struct(F.col(label_col), F.col("n")))),
+                lambda e: e[label_col].isNotNull(),
+            )
         ).alias("label_counts"),
         F.min("first_seen_l").alias("first_seen"),
         F.max("last_seen_l").alias("last_seen"),

@@ -42,26 +42,20 @@ def asof_join(
     value_cols: list[str],
     tiebreak: str | None = None,
     suffix: str = "_asof",
-    direction: str = "backward",
 ) -> DataFrame:
-    """Left as-of join (inclusive: a right row AT the left timestamp is
-    visible in either direction).
+    """Left backward as-of join (inclusive: a right row AT the left
+    timestamp is visible).
 
     Returns every ``left`` row plus, for each ``value_cols`` entry
     ``v``, a column ``v + suffix`` holding the value from the matched
     ``right`` row (NULL when none exists), and ``right_ts + suffix``
-    with its timestamp.  ``direction="backward"`` (default) matches the
-    LATEST right row with ``right_ts <= left_ts``;
-    ``direction="forward"`` matches the EARLIEST right row with
-    ``right_ts >= left_ts`` — both via the same single-shuffle
-    carry-forward window, just scanning the opposite way.
+    with its timestamp.  It matches the LATEST right row with
+    ``right_ts <= left_ts``, via one single-shuffle carry-forward window.
 
     ``tiebreak`` orders right rows sharing (key, ts) — pass a unique
-    right column for a deterministic winner: backward takes the LARGEST
-    tiebreak ("latest write"), forward the SMALLEST ("first write").
+    right column for a deterministic winner: the LARGEST tiebreak wins
+    ("latest write").
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
     out_ts = right_ts + suffix
     carried = [right_ts] + list(value_cols)
     left_cols = left.columns
@@ -93,13 +87,9 @@ def asof_join(
         F.struct(*[F.col(c).alias(c) for c in carried]).alias("_r"),
     )
     both = l_tagged.unionByName(r_tagged)
-    if direction == "backward":
-        order = [F.col("_ats").asc(), F.col("_side").asc(), F.col("_tb").asc()]
-    else:  # forward: scan from the latest timestamp down
-        order = [F.col("_ats").desc(), F.col("_side").asc(), F.col("_tb").desc()]
     w = (
         Window.partitionBy(*key_cols)
-        .orderBy(*order)
+        .orderBy(F.col("_ats").asc(), F.col("_side").asc(), F.col("_tb").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = both.select(

@@ -15,9 +15,7 @@ Scale shape (the 100 TB plan):
   map-side partial aggregation (count_distinct expands then
   partial-aggs; for very wide units pre-hash with md5_i64 the way
   checks/uniqueness.py does);
-- the hot set is SMALL by construction (corpus-wide boilerplate) and
-  is optionally capped deterministically (top-``cap`` by document
-  frequency, ties on unit) — the same guard as the LSH df_cap;
+- the hot set is SMALL by construction (corpus-wide boilerplate);
 - removal: broadcast LEFT ANTI hash join — the corpus itself never
   shuffles to be filtered;
 - reassembly: ONE shuffle on the doc id with order restored from the
@@ -35,22 +33,15 @@ def hot_units(
     unit_col: str,
     group_col: str,
     min_groups: int,
-    cap: int | None = None,
 ) -> DataFrame:
     """(unit, n_groups) for non-empty units present in at least
-    ``min_groups`` distinct groups.  ``cap`` keeps only the
-    ``cap`` most-frequent units (ties broken on the unit value) so the
-    broadcast stays bounded on degenerate corpora."""
-    hot = (
+    ``min_groups`` distinct groups."""
+    return (
         df.filter(F.col(unit_col) != "")
         .groupBy(F.col(unit_col).alias("unit"))
         .agg(F.count_distinct(F.col(group_col)).alias("n_groups"))
         .filter(F.col("n_groups") >= min_groups)
     )
-    if cap is not None:
-        # TakeOrdered (distributed top-k), deterministic total order
-        hot = hot.orderBy(F.col("n_groups").desc(), F.col("unit").asc()).limit(cap)
-    return hot
 
 
 def remove_boilerplate(
@@ -59,7 +50,6 @@ def remove_boilerplate(
     id_col: str,
     min_docs: int,
     sep: str = "\n",
-    cap: int | None = None,
 ) -> DataFrame:
     """(id, clean_text, n_kept, n_total): every document with its
     corpus-frequent units removed, unit order preserved.
@@ -75,7 +65,7 @@ def remove_boilerplate(
         F.size(F.split(F.col(text_col), sep, -1)).alias("_n_total"),
         F.posexplode(F.split(F.col(text_col), sep, -1)).alias("_pos", "_unit"),
     )
-    hot = hot_units(units, "_unit", id_col, min_docs, cap=cap)
+    hot = hot_units(units, "_unit", id_col, min_docs)
     kept = units.join(
         F.broadcast(hot.select(F.col("unit").alias("_unit"))),
         on="_unit",

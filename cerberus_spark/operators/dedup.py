@@ -31,11 +31,10 @@ from pyspark.sql import functions as F
 # deterministic cross-engine hashing
 # ---------------------------------------------------------------------------
 
-def md5_i64(col: Column, seed: int = 0) -> Column:
+def md5_i64(col: Column) -> Column:
     """Stable 63-bit positive int from md5 — reproducible in any engine
     with md5 + hex parse (DuckDB: ('0x'||substr(md5(x),1,15))::BIGINT)."""
-    src = F.concat(col, F.lit(f"#{seed}")) if seed else col
-    return F.conv(F.substring(F.md5(src), 1, 15), 16, 10).cast("long")
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def normalize_text(col: Column) -> Column:
@@ -76,12 +75,10 @@ def first_occurrence(
 
     Implemented as ``min_by(struct(payload), struct(order))`` — a real
     aggregate with a map-side partial, so only one candidate row per
-    key per input partition reaches the shuffle.  The window form
-    (:func:`first_occurrence_window`) shuffles and sorts EVERY row to
-    rank it, then throws all but one away — at 100x the data that sort
-    is the bottleneck; the aggregate form shuffles ~|keys| rows.
-    ``order_by`` must be a total order within each key group (include a
-    unique tiebreak column) or the winner is undefined.
+    key per input partition reaches the shuffle; a window rank would
+    shuffle and sort EVERY row to keep one.  ``order_by`` must be a
+    total order within each key group (include a unique tiebreak
+    column) or the winner is undefined.
     """
     payload = [c for c in df.columns if c not in keys]
     ordk = F.struct(*[F.col(c) for c in order_by])
@@ -92,20 +89,6 @@ def first_occurrence(
         *keys, *[F.col(f"_row.{c}").alias(c) for c in payload]
     )
     return unpacked.select(*df.columns)
-
-
-def first_occurrence_window(
-    df: DataFrame, keys: list[str], order_by: list[str]
-) -> DataFrame:
-    """Window-ranked variant of :func:`first_occurrence` — same winner,
-    but keeps the machinery callers need when they want the full rank
-    (rn column / first-N-per-key), at the cost of a full shuffle+sort."""
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c) for c in order_by])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -645,8 +628,6 @@ def sequence_fingerprints(
     key_col: str,
     order_cols: list[str],
     token_col: str,
-    sep: str = "\x1f",
-    chunk_size: int | None = None,
 ) -> DataFrame:
     """One md5 fingerprint per ``key_col`` group over the ORDERED
     sequence of ``token_col`` — conversation-level exact dedup: two
@@ -661,77 +642,25 @@ def sequence_fingerprints(
     within a key (e.g. ``[ts, event_id]``); NULL tokens render as ''
     (both engines) before hashing.
 
-    Scale shape (default, ``chunk_size=None``): ONE groupBy(key)
-    shuffle; the per-key render is array_sort + transform + array_join
-    — codegen, no Python.  The aggregation buffer holds one whole
-    conversation's hashed tokens: bounded by the key's own payload,
-    right whenever conversation length is bounded (the transcript
-    north rule), and the contract/oracle shape.
-
-    ``chunk_size`` is the degenerate-input guard (same "cap visible,
-    never silent" family as ``keys_cap``): with it set, a
-    million-turn pathological conversation never materializes whole in
-    one reducer.  The fold becomes hierarchical — rows are numbered
-    within their key (a window SORT, which spills, never a buffer),
-    md5-folded per ``chunk_size``-row chunk (buffer ≤ chunk_size), and
-    the ordered CHUNK DIGESTS fold to the final fingerprint (buffer ≤
-    n_items/chunk_size).  Chunked fingerprints are deterministic and
-    equality-preserving but NOT equal to unchunked ones — pick one
-    mode per corpus (dup groups are identical either way, proven in
-    tests).
+    Scale shape: ONE groupBy(key) shuffle; the per-key render is
+    array_sort + transform + array_join — codegen, no Python.  The
+    aggregation buffer holds one whole conversation's hashed tokens:
+    bounded by the key's own payload, right whenever conversation
+    length is bounded (the transcript north rule), and the
+    contract/oracle shape.
     """
-    if chunk_size is not None and chunk_size < 1:
-        # loud, not degenerate: chunk_size=0 would NULL the integer
-        # division and collapse every key into ONE unbounded chunk —
-        # the exact buffer the parameter exists to bound
-        raise ValueError(f"chunk_size must be >= 1, got {chunk_size}")
     tok = F.coalesce(F.col(token_col).cast("string"), F.lit("")).alias("__tok")
-    if chunk_size is None:
-        order_struct = F.struct(*[F.col(c) for c in order_cols], tok)
-        seq = F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(order_struct)),
-                lambda x: F.md5(x["__tok"]),
-            ),
-            sep,
-        )
-        return df.groupBy(F.col(key_col).alias("key")).agg(
-            md5_i64(seq).alias("seq_fp"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    # The window must partition by the POST-select name ("key"):
-    # key_col itself no longer exists after the aliasing select, so
-    # partitioning by it resolves only when key_col happens to be
-    # literally "key" (regression: test_chunked_fingerprint_renamed_key).
-    w = Window.partitionBy("key").orderBy(
-        *[F.col(c) for c in order_cols], F.col("__tok")
-    )
-    numbered = df.select(F.col(key_col).alias("key"), *order_cols, tok).withColumn(
-        "__chunk", ((F.row_number().over(w) - F.lit(1)) / F.lit(chunk_size)).cast("long")
-    )
-    chunk_struct = F.struct(*[F.col(c) for c in order_cols], F.col("__tok"))
-    chunks = numbered.groupBy("key", "__chunk").agg(
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(chunk_struct)),
-                    lambda x: F.md5(x["__tok"]),
-                ),
-                sep,
-            )
-        ).alias("__digest"),
-        F.count(F.lit(1)).alias("__n"),
-    )
-    final_seq = F.array_join(
+    order_struct = F.struct(*[F.col(c) for c in order_cols], tok)
+    seq = F.array_join(
         F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("__chunk"), F.col("__digest")))),
-            lambda x: x["__digest"],
+            F.array_sort(F.collect_list(order_struct)),
+            lambda x: F.md5(x["__tok"]),
         ),
-        sep,
+        "\x1f",
     )
-    return chunks.groupBy("key").agg(
-        md5_i64(final_seq).alias("seq_fp"),
-        F.sum("__n").alias("n_items"),
+    return df.groupBy(F.col(key_col).alias("key")).agg(
+        md5_i64(seq).alias("seq_fp"),
+        F.count(F.lit(1)).alias("n_items"),
     )
 
 
@@ -740,8 +669,6 @@ def sequence_dup_groups(
     key_col: str,
     order_cols: list[str],
     token_col: str,
-    keys_cap: int | None = None,
-    chunk_size: int | None = None,
 ) -> DataFrame:
     """Groups of keys whose ordered token sequences are IDENTICAL:
     (seq_fp, n_keys, n_items, keys) for every fingerprint shared by
@@ -751,39 +678,15 @@ def sequence_dup_groups(
     Second groupBy shuffles one row per conversation (already
     aggregated), so the dup-group pass costs ~nothing on top of the
     fingerprint pass.
-
-    ``keys_cap`` is the no-unbounded-rows scale guard: a degenerate
-    corpus (millions of byte-identical conversations — one fp group)
-    would otherwise buffer and render one multi-GB ``keys`` value on a
-    single reducer.  With a cap, members are ranked per fingerprint
-    FIRST (one window pass over the already-aggregated |convs| rows)
-    and only the ``keys_cap`` smallest enter the collect buffer
-    (``collect_list`` skips the NULLed rest), so reducer memory is
-    bounded at cap entries per group while ``n_keys`` stays EXACT —
-    the truncation is visible as n_keys > cap, never silent.  None
-    (the default) renders the full list with no window pass — right
-    for contract/oracle use at test SFs; set it in production jobs.
-
-    ``chunk_size`` passes through to :func:`sequence_fingerprints` —
-    the bounded hierarchical fold for degenerate (million-turn)
-    conversations; dup GROUPS are identical either way.
     """
-    fps = sequence_fingerprints(
-        df, key_col, order_cols, token_col, chunk_size=chunk_size
-    )
-    key_str = F.col("key").cast("string")
-    if keys_cap is not None:
-        w = Window.partitionBy("seq_fp").orderBy(key_str)
-        fps = fps.withColumn("__rk", F.row_number().over(w))
-        member = F.when(F.col("__rk") <= keys_cap, key_str)
-    else:
-        member = key_str
+    fps = sequence_fingerprints(df, key_col, order_cols, token_col)
+    members = F.sort_array(F.collect_list(F.col("key").cast("string")))
     return (
         fps.groupBy("seq_fp")
         .agg(
             F.count(F.lit(1)).alias("n_keys"),
             F.min("n_items").alias("n_items"),
-            F.array_join(F.sort_array(F.collect_list(member)), ",").alias("keys"),
+            F.array_join(members, ",").alias("keys"),
         )
         .filter(F.col("n_keys") > 1)
     )
@@ -851,7 +754,7 @@ def sequence_minhash(
 
     Scale shape: ONE exchange total.  The lag window hash-partitions
     by key and sorts partition-locally (spills, never buffers a whole
-    conversation — this family's answer to the chunk_size guard); the
+    conversation); the
     per-key signature groupBy reuses the window's hash(key)
     partitioning, so Catalyst plans it with NO second exchange
     (locked in tests/test_plans.py).  The ``num_hashes`` minima are
@@ -931,7 +834,6 @@ def sequence_neardup_pairs(
     rows_per_band: int = 4,
     bucket_cap: int | None = None,
     threshold: float = 0.5,
-    share_shingles: bool = True,
 ) -> DataFrame:
     """VERIFIED conversation near-dup pairs: LSH candidates re-scored
     with the EXACT Jaccard similarity of the two conversations'
@@ -944,15 +846,14 @@ def sequence_neardup_pairs(
     candidate signatures AND the verify shingle sets both derive from
     the same distinct-shingle frame (MinHash minima are set
     functions, so signing the distinct set is bit-identical to
-    signing the multiset — same candidates, same Jaccard), and with
-    ``share_shingles`` (default) that frame is lazily
-    ``localCheckpoint``-ed so its four consumers (signatures, sizes,
-    and the two verify probes) read ONE materialization instead of
-    re-running the scan+window per branch (measured 5 scans / 5
-    window sorts in the naive plan).  The materialized rows are
-    (key, hash) longs only — no text — so executor-local storage is
-    a small fraction of corpus size; pass ``share_shingles=False``
-    to trade recompute for zero caching.  The candidate pass is the
+    signing the multiset — same candidates, same Jaccard), and that
+    frame is lazily ``localCheckpoint``-ed so its four consumers
+    (signatures, sizes, and the two verify probes) read ONE
+    materialization instead of re-running the scan+window per branch
+    (measured 5 scans / 5 window sorts in the naive plan).  The
+    materialized rows are (key, hash) longs only — no text — so
+    executor-local storage is a small fraction of corpus size.  The
+    candidate pass is the
     banded bucket join (capped via ``bucket_cap``); the verify pass
     joins the candidate pairs to the shingle rows TWICE on the
     conversation key (shuffle volume = |candidates| x avg shingles —
@@ -966,9 +867,7 @@ def sequence_neardup_pairs(
         raise ValueError("sequence_neardup_pairs: threshold must be > 0")
     sh = _sequence_shingle_hashes(
         df, key_col, order_cols, token_col, shingle_k
-    ).distinct()
-    if share_shingles:
-        sh = sh.localCheckpoint(eager=False)
+    ).distinct().localCheckpoint(eager=False)
     sigs = _sign_shingle_frame(sh, num_hashes)
     cand = minhash_dup_candidates(
         sigs, "key", bands, rows_per_band, bucket_cap

@@ -28,15 +28,11 @@ def interval_join(
     start_col: str,
     end_col: str,
     chunk_seconds: int = 86_400,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join each point row to the interval rows with
+    """Inner-join each point row to the interval rows with
     ``start <= ts < end`` (half-open).  Output: point columns +
-    interval columns.  ``how='inner'`` (matched points only) or
-    ``'left'`` (keep unmatched points with NULL interval columns).
+    interval columns.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be inner|left, got {how!r}")
     chunk = F.lit(chunk_seconds)
 
     def chunk_of(col):
@@ -57,4 +53,4 @@ def interval_join(
         & (pt[ts_col] >= iv[start_col])
         & (pt[ts_col] < iv[end_col])
     )
-    return pt.join(iv, cond, how).drop(pt["_chunk"]).drop(iv["_chunk"])
+    return pt.join(iv, cond).drop(pt["_chunk"]).drop(iv["_chunk"])

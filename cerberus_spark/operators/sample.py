@@ -3,7 +3,7 @@
 Training-data pipelines need samples and train/val/test splits that are
 (a) reproducible across runs and engines, (b) stable under
 repartitioning, and (c) consistent for the same record everywhere —
-properties ``df.sample()`` (partition-seeded RNG) does not give.  Both
+properties ``df.sample()`` (partition-seeded RNG) does not give.  The
 operators here derive the decision purely from a record key via the
 engine-portable ``md5_i64`` hash, so membership is a pure function of
 the key: no shuffle, no RNG state, embarrassingly parallel, and the
@@ -21,14 +21,6 @@ from cerberus_spark.operators.dedup import md5_i64
 def _bucket_10k(key: Column, salt: str) -> Column:
     """Uniform bucket in [0, 10000) from a key column + salt string."""
     return F.pmod(md5_i64(F.concat(key.cast("string"), F.lit(f"|{salt}"))), F.lit(10_000))
-
-
-def hash_sample(df: DataFrame, key_col: str, rate: float, salt: str = "sample") -> DataFrame:
-    """Keep ~``rate`` (0..1, 0.01% resolution) of rows, chosen by key
-    hash — the same keys are kept on every run, engine, and partition
-    layout.  Pure filter: no shuffle, fully pushdown-friendly."""
-    threshold = int(round(rate * 10_000))
-    return df.filter(_bucket_10k(F.col(key_col), salt) < threshold)
 
 
 def leak_safe_split(
@@ -62,8 +54,8 @@ def stratified_hash_sample(
     salt: str = "sample",
 ) -> DataFrame:
     """Per-stratum deterministic sampling (class rebalancing: keep 100%
-    of a rare class, 5% of a dominant one).  Same md5-bucket mechanics
-    as :func:`hash_sample` — a pure filter with a per-class threshold,
+    of a rare class, 5% of a dominant one).  Membership is a pure
+    md5-bucket filter of the key with a per-class threshold,
     so it is reproducible, shuffle-free, and engine-portable; unlike
     ``df.sampleBy`` there is no RNG and membership survives
     repartitioning."""
@@ -139,8 +131,8 @@ def resample_to_mixture(
 
     The per-stratum counts are a tiny in-plan aggregate joined back by
     BROADCAST (never collected); membership is then the same pure
-    md5-bucket filter as :func:`hash_sample` — no RNG, stable across
-    engines/partitionings.  Strata absent from ``targets`` get weight
+    md5-bucket filter as :func:`stratified_hash_sample` — no RNG, stable
+    across engines/partitionings.  Strata absent from ``targets`` get weight
     0 and are dropped.  Expected kept mixture approaches ``targets``
     up to hash-bucket granularity (1/10000) and stratum exhaustion.
     """

@@ -174,7 +174,6 @@ def remove_shared_spans(
     text_col: str,
     id_col: str,
     min_run: int = 50,
-    distributed_merge: bool = False,
 ) -> DataFrame:
     """The substring-REMOVAL step of Lee et al. 2022: for every
     candidate pair, cut from the HIGHER-id document every verbatim run
@@ -192,21 +191,10 @@ def remove_shared_spans(
     Documents in no pair are untouched and never enter the pair-side
     shuffles.
 
-    Two physical strategies for the per-victim merge+rewrite:
-
-    - default (``distributed_merge=False``): one Arrow
-      ``applyInPandas`` group per victim does blocks+merge+rewrite in
-      one step — but the group buffers ALL of that victim's partner
-      texts, so a boilerplate-heavy victim paired with 10^5 partners
-      materializes 10^5 texts in one pandas group;
-    - ``distributed_merge=True``: SequenceMatcher runs per PAIR in a
-      flat ``mapInPandas`` (no victim grouping — a hot victim's pairs
-      spread across partitions), the spans merge via
-      :func:`merge_intervals` (gaps-and-islands, window passes that
-      SPILL), and the rewrite is a JVM-side fold over the victim's
-      merged intervals (bounded by |text|/min_run, never by partner
-      count).  Same output, partner-count-proof — the corpus-scale
-      setting.  Equivalence is pytest-locked.
+    The per-victim merge+rewrite is one Arrow ``applyInPandas`` group
+    per victim doing blocks+merge+rewrite in one step; the group
+    buffers ALL of that victim's partner texts, so a boilerplate-heavy
+    victim's group grows with its partner count.
 
     No SQL oracle by design (SequenceMatcher's block decomposition is
     library-specific; the interval-merge step alone is cross-engine
@@ -227,76 +215,6 @@ def remove_shared_spans(
     )
 
     id_t = docs.schema[id_col].dataType.simpleString()
-    if distributed_merge:
-        def spans(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from difflib import SequenceMatcher
-
-            for b in batches:
-                if len(b) == 0:
-                    continue  # empty pandas yields break the Arrow cast
-                vids, los, his = [], [], []
-                for vid, ktext, vtext in zip(
-                    b["_victim"], b["_keep_text"], b["_victim_text"]
-                ):
-                    if ktext is None or vtext is None:
-                        continue
-                    sm = SequenceMatcher(None, ktext, vtext, autojunk=False)
-                    for m in sm.get_matching_blocks():
-                        if m.size >= min_run:
-                            vids.append(vid)
-                            los.append(m.b)
-                            his.append(m.b + m.size)
-                if not vids:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "_victim": vids,
-                        "lo": pd.array(los, dtype="int64"),
-                        "hi": pd.array(his, dtype="int64"),
-                    }
-                )
-
-        span_df = joined.select("_victim", "_keep_text", "_victim_text").mapInPandas(
-            spans, schema=f"_victim {id_t}, lo long, hi long"
-        )
-        merged = merge_intervals(span_df, ["_victim"], "lo", "hi")
-        grouped = merged.groupBy("_victim").agg(
-            F.sort_array(F.collect_list(F.struct("lo", "hi"))).alias("_ivs"),
-            F.sum(F.col("hi") - F.col("lo")).alias("n_cut_chars"),
-        )
-        vt = F.col("_vt")
-        rebuilt = F.aggregate(
-            F.col("_ivs"),
-            F.struct(
-                F.lit(0).cast("long").alias("pos"), F.lit("").alias("acc")
-            ),
-            lambda st, iv: F.struct(
-                iv["hi"].alias("pos"),
-                F.concat(
-                    st["acc"],
-                    F.substring(vt, (st["pos"] + 1).cast("int"), (iv["lo"] - st["pos"]).cast("int")),
-                ).alias("acc"),
-            ),
-            lambda st: F.concat(
-                st["acc"],
-                F.substring(
-                    vt,
-                    (st["pos"] + 1).cast("int"),
-                    (F.length(vt).cast("long") - st["pos"]).cast("int"),
-                ),
-            ),
-        )
-        cuts = grouped.join(
-            t.withColumnRenamed("_jid", "_victim").withColumnRenamed("_jtext", "_vt"),
-            "_victim",
-        ).select("_victim", rebuilt.alias("_new_text"), "n_cut_chars")
-        return (
-            docs.join(cuts, docs[id_col] == cuts["_victim"], "left")
-            .withColumn(text_col, F.coalesce("_new_text", F.col(text_col)))
-            .withColumn("n_cut_chars", F.coalesce("n_cut_chars", F.lit(0)))
-            .drop("_victim", "_new_text")
-        )
-
     def cut(pdf: pd.DataFrame) -> pd.DataFrame:
         from difflib import SequenceMatcher
 

@@ -37,15 +37,6 @@ def test_hot_units_never_counts_empty(spark):
     assert "" not in got
 
 
-def test_hot_units_cap_is_deterministic_topk(spark):
-    units = _docs(spark).select(
-        "doc_id", F.explode(F.split("text", "\n", -1)).alias("line")
-    )
-    capped = hot_units(units, "line", "doc_id", 1, cap=2).collect()
-    # ordered by n_groups desc then unit asc: SUBSCRIBE(4), hello(2)
-    assert [(r.unit, r.n_groups) for r in capped] == [("SUBSCRIBE", 4), ("hello", 2)]
-
-
 def test_remove_boilerplate_preserves_order_and_blanks(spark):
     out = {
         r.doc_id: (r.clean_text, r.n_kept, r.n_total)

@@ -205,47 +205,15 @@ def _topk_fixture(spark):
     )
 
 
-def test_topk_sketch_bounds_invariant_after_rollup(spark):
-    """Roll day sketches up to global: every item's true count must sit
-    in [lo, lo + err], and any item with true > err must be present —
-    heavy hitters can never be silently lost."""
-    from cerberus_spark.checks.sketches import topk_group_sketches, topk_rollup
-
-    df, true = _topk_fixture(spark)
-    days = topk_group_sketches(df, ["day"], "item", k=4)
-    g = topk_rollup(days, key_cols=None, k=4).collect()[0]
-    assert len(g.state) <= 4
-    lo = {e.item: e.lo for e in g.state}
-    for item, t in true.items():
-        assert lo.get(item, 0) <= t <= lo.get(item, 0) + g.err, (item, t, lo, g.err)
-    for item, t in true.items():
-        if t > g.err:
-            assert item in lo, (item, t, g.err)
-
-
-def test_topk_sketch_two_level_merge_keeps_bounds(spark):
-    from cerberus_spark.checks.sketches import topk_group_sketches, topk_rollup
-    from pyspark.sql import functions as F
-
-    df, true = _topk_fixture(spark)
-    days = topk_group_sketches(df.withColumn("half", F.col("day").isin("d0")), ["day", "half"], "item", k=4)
-    halves = topk_rollup(days, key_cols=["half"], k=4)
-    g = topk_rollup(halves, key_cols=None, k=4).collect()[0]
-    lo = {e.item: e.lo for e in g.state}
-    for item, t in true.items():
-        assert lo.get(item, 0) <= t <= lo.get(item, 0) + g.err
-
-
 def test_topk_sketch_exact_when_k_covers_domain(spark):
-    """k >= distinct items: group construction and rollup are exact
-    (err stays 0)."""
-    from cerberus_spark.checks.sketches import topk_group_sketches, topk_rollup
+    """k >= distinct items: group construction is exact (err stays 0),
+    per key group and globally."""
+    from cerberus_spark.checks.sketches import topk_group_sketches
 
     df, true = _topk_fixture(spark)
     days = topk_group_sketches(df, ["day"], "item", k=32)
     assert all(r.err == 0 for r in days.collect())
-    g = topk_rollup(days, key_cols=None, k=32)
-    row = g.collect()[0]
+    row = topk_group_sketches(df, [], "item", k=32).collect()[0]
     assert row.err == 0
     assert {e.item: e.lo for e in row.state} == true
 
@@ -363,7 +331,7 @@ def test_windowed_histograms_watermark_bounds_state(spark, transcripts, tmp_path
         src,
         TRANSCRIPT_SCHEMA,
         lambda s: windowed_categorical_histograms(
-            s, "role", "ts", "1 hour", watermark="0 seconds"
+            s.withWatermark("ts", "0 seconds"), "role", "ts", "1 hour"
         ),
         query_name="wmark",
         output_mode="append",
@@ -482,11 +450,9 @@ def test_schema_diff_and_assert(spark):
     assert schema_diff(ok, expected) == []
     assert_schema(ok, expected)  # no raise
 
-    # widened turn_idx (int->bigint) tolerated by default, flagged when strict
+    # widened turn_idx (int->bigint) tolerated
     widened = spark.createDataFrame([], "conv_id string, turn_idx bigint, role string, ts timestamp")
     assert schema_diff(widened, expected) == []
-    strict = schema_diff(widened, expected, allow_widened=False)
-    assert [(f["column"], f["kind"]) for f in strict] == [("turn_idx", "type_mismatch")]
 
     # missing + added + real mismatch, deterministic order
     drifted = spark.createDataFrame([], "conv_id string, turn_idx string, extra double, ts timestamp")

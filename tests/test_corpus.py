@@ -165,28 +165,6 @@ def test_corpus_job_cli_incremental(spark, corpus, tmp_path):
     assert kept == {r.doc_id for r in batch["kept"].collect()}
 
 
-def test_clean_corpus_survivor_policy_longest(spark, corpus):
-    # doc 3 (near dup of 1, one word swapped, same length as BASE) vs a
-    # LONGER near-dup with a higher id: keep-longest must keep the long
-    # copy where min_id would keep doc 1
-    longer = BASE + " plus an extra trailing clause that makes it longest"
-    docs = corpus.union(
-        spark.createDataFrame([(7, longer)], "doc_id long, text string")
-    )
-    kw = {"minhash_kwargs": {"num_hashes": 32, "shingle_k": 3},
-          "bands": 8, "rows_per_band": 4}
-    by_len = clean_corpus(docs, survivor_policy="longest", **kw)
-    kept_len = sorted(r.doc_id for r in by_len["kept"].collect())
-    assert 7 in kept_len and 1 not in kept_len and 3 not in kept_len
-
-    by_id = clean_corpus(docs, **kw)
-    kept_id = sorted(r.doc_id for r in by_id["kept"].collect())
-    assert 1 in kept_id and 7 not in kept_id
-
-    with pytest.raises(ValueError, match="survivor_policy"):
-        clean_corpus(docs, survivor_policy="bogus", **kw)
-
-
 def test_clean_corpus_lm_filter_stage(spark):
     """The optional CCNet LM stage drops exactly the docs whose bucket
     falls outside keep_buckets, records lm_quality rows, keeps
@@ -354,8 +332,7 @@ def test_clean_transcripts_stages(spark):
 
 def test_clean_transcripts_survivor_policy_longest(spark):
     """survivor_policy="longest" keeps the cluster member with the
-    MOST TURNS (ties to min key) instead of the positional min key —
-    the same explicit-quality contract clean_corpus exposes."""
+    MOST TURNS (ties to min key) instead of the positional min key."""
     import datetime as dt
 
     from cerberus_spark.corpus import clean_transcripts
@@ -696,9 +673,8 @@ def _staged_document_pass(docs, text_col, normalize, quality_kwargs, minhash_kwa
         {},
         {"normalize": False},
         {"lm_filter": {"keep_buckets": ("head", "middle")}},
-        {"survivor_policy": "longest"},
     ],
-    ids=["default", "no_normalize", "lm_filter", "longest"],
+    ids=["default", "no_normalize", "lm_filter"],
 )
 def test_clean_corpus_fused_equals_staged(spark, edge_docs, monkeypatch, kw):
     """One Arrow pass per document (the default) and the staged
@@ -733,9 +709,8 @@ NULL_TEXT_DOCS = [
 ]
 
 
-@pytest.mark.parametrize("checkpoint_stages", [True, False])
 @pytest.mark.parametrize("normalize", [True, False])
-def test_null_text_docs_are_kept(spark, tmp_path, normalize, checkpoint_stages):
+def test_null_text_docs_are_kept(spark, tmp_path, normalize):
     """The gate keeps a NULL-text document, and it has no fingerprint
     and no signature, so it is never a dup: it lands in ``kept``.
     Every document is in exactly one of ``kept`` and ``dropped``, and
@@ -744,9 +719,7 @@ def test_null_text_docs_are_kept(spark, tmp_path, normalize, checkpoint_stages):
 
     docs = spark.createDataFrame(NULL_TEXT_DOCS, "doc_id long, text string")
     kw = {"normalize": normalize, "minhash_kwargs": {"num_hashes": 32, "shingle_k": 3}}
-    outs = clean_corpus(
-        docs, checkpoint_stages=checkpoint_stages, bands=8, rows_per_band=4, **kw
-    )
+    outs = clean_corpus(docs, bands=8, rows_per_band=4, **kw)
     kept = sorted(r.doc_id for r in outs["kept"].collect())
     dropped = {(r.id, r.stage, r.reason) for r in outs["dropped"].collect()}
     dropped_ids = {d[0] for d in dropped}

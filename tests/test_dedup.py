@@ -270,19 +270,6 @@ def test_sequence_fingerprints_order_sensitivity(spark):
     assert fps["A"] != fps["B"]  # same multiset, different order
 
 
-def test_sequence_dup_groups_keys_cap(spark):
-    from cerberus_spark.operators.dedup import sequence_dup_groups
-
-    # 5 single-item conversations with the SAME token -> one dup group
-    rows = [(f"k{i}", 1, i, "x") for i in range(5)]
-    df = spark.createDataFrame(rows, "key string, pos int, rid long, tok string")
-    (grp,) = sequence_dup_groups(df, "key", ["pos", "rid"], "tok", keys_cap=2).collect()
-    # n_keys stays exact; the rendered list is the 2 smallest members
-    assert (grp.n_keys, grp.keys) == (5, "k0,k1")
-    (full,) = sequence_dup_groups(df, "key", ["pos", "rid"], "tok").collect()
-    assert full.keys == "k0,k1,k2,k3,k4"
-
-
 def test_sequence_fingerprints_separator_injection(spark):
     """Tokens are md5-hashed before the joined render, so a token
     containing the separator byte can never make distinct sequences
@@ -299,119 +286,6 @@ def test_sequence_fingerprints_separator_injection(spark):
     }
     assert fps["A"][0] != fps["B"][0]
     assert fps["A"][1] == 1 and fps["B"][1] == 2
-
-
-def test_sequence_dup_groups_chunked_parity(spark):
-    """chunk_size (the bounded hierarchical fold) must produce the
-    SAME dup groups as the single-pass fold — fingerprints differ by
-    design, group membership may not."""
-    from cerberus_spark.operators.dedup import sequence_dup_groups
-
-    rows = [
-        (key, pos, pos, tok)
-        for key, toks in [
-            ("A", ["x", "y", "z", "x", "y"]),
-            ("B", ["x", "y", "z", "x", "y"]),   # dup of A
-            ("C", ["x", "y", "z", "y", "x"]),   # same multiset, reordered
-            ("D", ["x", "y"]),
-            ("E", ["x", "y"]),                  # dup of D
-        ]
-        for pos, tok in enumerate(toks)
-    ]
-    df = spark.createDataFrame(rows, "key string, pos int, rid long, tok string")
-
-    def groups(chunk_size):
-        return {
-            (g.n_keys, g.n_items, g.keys)
-            for g in sequence_dup_groups(
-                df, "key", ["pos", "rid"], "tok", chunk_size=chunk_size
-            ).collect()
-        }
-
-    expect = {(2, 5, "A,B"), (2, 2, "D,E")}
-    # chunk boundary inside the sequence (2), exactly at it (5), beyond (100)
-    assert groups(None) == expect
-    assert groups(2) == expect
-    assert groups(5) == expect
-    assert groups(100) == expect
-
-
-def test_sequence_fingerprints_chunk_size_guard(spark):
-    """chunk_size < 1 must raise loudly: chunk_size=0 would NULL the
-    integer division and collapse every key into one unbounded chunk —
-    the exact buffer the parameter exists to bound."""
-    from cerberus_spark.operators.dedup import sequence_fingerprints
-
-    df = spark.createDataFrame([("A", 1, "x")], "key string, pos int, tok string")
-    for bad in (0, -3):
-        with pytest.raises(ValueError, match="chunk_size"):
-            sequence_fingerprints(df, "key", ["pos"], "tok", chunk_size=bad)
-
-
-def test_sequence_fingerprints_chunked_boundedness(spark):
-    """The degenerate input the chunked fold exists for: ONE
-    million-turn conversation.  No reducer may buffer the whole
-    sequence — chunks buffer <= chunk_size rows and the final fold
-    buffers <= n/chunk_size digests.  Deterministic across runs and
-    partitionings, n_items exact."""
-    from pyspark.sql import functions as F
-
-    from cerberus_spark.operators.dedup import sequence_fingerprints
-
-    n = 1_000_000
-    df = (
-        spark.range(n)
-        .select(
-            F.lit("conv").alias("key"),
-            F.col("id").alias("pos"),
-            F.concat(F.lit("t"), F.col("id") % 97).alias("tok"),
-        )
-    )
-    (row,) = sequence_fingerprints(
-        df, "key", ["pos"], "tok", chunk_size=4096
-    ).collect()
-    assert row.n_items == n
-    (again,) = sequence_fingerprints(
-        df.repartition(17), "key", ["pos"], "tok", chunk_size=4096
-    ).collect()
-    assert again.seq_fp == row.seq_fp
-
-
-def test_chunked_fingerprint_renamed_key(spark):
-    """Regression: the chunked fold's row-numbering window must
-    partition by the POST-select alias ("key"), not by key_col — with
-    any key_col other than literally "key" (e.g. the entry point's
-    "conv_key") the old code raised UNRESOLVED_COLUMN.  Dup groups
-    must also match the key_col="key" result exactly."""
-    from cerberus_spark.operators.dedup import (
-        sequence_dup_groups,
-        sequence_fingerprints,
-    )
-
-    rows = [
-        (key, pos, tok)
-        for key, toks in [
-            ("A", ["x", "y", "z"]),
-            ("B", ["x", "y", "z"]),  # dup of A
-            ("C", ["x", "z", "y"]),
-        ]
-        for pos, tok in enumerate(toks)
-    ]
-    df = spark.createDataFrame(rows, "conv_key string, pos int, tok string")
-    fps = {
-        r.key: r.seq_fp
-        for r in sequence_fingerprints(
-            df, "conv_key", ["pos"], "tok", chunk_size=2
-        ).collect()
-    }
-    assert fps["A"] == fps["B"] != fps["C"]
-    got = {
-        (g.n_keys, g.n_items, g.keys)
-        for g in sequence_dup_groups(
-            df, "conv_key", ["pos"], "tok", chunk_size=2
-        ).collect()
-    }
-    assert got == {(2, 3, "A,B")}
 
 
 def test_minhash_band_misconfiguration_raises(spark, docs_df):

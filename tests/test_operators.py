@@ -167,6 +167,37 @@ def test_key_profile_pair_ties_and_nulls_parity(spark, contract_pair):
     assert by_user[10][5:] == (4.05, "view", '{"k": 1},{"k": 2},{"k": 4}')
     assert by_user[11][7] is None
 
+
+def test_key_profile_pair_null_labels_parity(spark, contract_pair):
+    """A NULL label counts in ``n_events`` and can be ``last_label`` but
+    has no ``label_counts`` entry (a map key cannot be NULL), as DuckDB's
+    ``string_agg`` skips it; a user with only NULL labels has no label
+    string at all."""
+    import datetime as dt
+
+    T0 = dt.datetime(2026, 1, 1)
+    s = dt.timedelta(seconds=1)
+    rows = [
+        (1, T0, 10, "view", 1.0, '{"k": 1}'),
+        (2, T0 + s, 10, None, 2.0, '{"k": 2}'),
+        (3, T0 + 2 * s, 10, None, 3.0, None),               # NULL label is last
+        (4, T0, 11, None, 0.5, '{"k": 1}'),                 # only NULL labels
+        (5, T0 + s, 11, None, None, None),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+    got, want = contract_pair("key_profile", "events", df)
+    assert got == want, (got, want)
+    by_user = {r[0]: r for r in got}
+    assert by_user[10][1:3] == (3, "view:1")
+    assert by_user[10][6] is None
+    assert by_user[11][1:3] == (2, None)
+    assert by_user[11][6] is None
+
+
 def test_salted_agg_equals_plain(spark, events_df):
     plain = {
         (r.key, r.label): r["count"]

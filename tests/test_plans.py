@@ -237,10 +237,14 @@ def test_first_occurrence_is_partial_aggregate(spark, transcripts_parquet):
 
 
 def test_first_occurrence_agg_matches_window(spark, transcripts_parquet):
-    from cerberus_spark.operators.dedup import first_occurrence, first_occurrence_window
+    """The aggregate keeps the row a row_number() window ranks first."""
+    from pyspark.sql import Window
+
+    from cerberus_spark.operators.dedup import first_occurrence
 
     a = first_occurrence(transcripts_parquet, ["conv_id", "role"], ["turn_idx"])
-    b = first_occurrence_window(transcripts_parquet, ["conv_id", "role"], ["turn_idx"])
+    w = Window.partitionBy("conv_id", "role").orderBy("turn_idx")
+    b = transcripts_parquet.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1")
     ka = sorted((r.conv_id, r.role, r.turn_idx) for r in a.collect())
     kb = sorted((r.conv_id, r.role, r.turn_idx) for r in b.collect())
     assert ka == kb and len(ka) > 0
@@ -452,11 +456,10 @@ def test_sequence_minhash_single_shuffle_reuses_window_partitioning(spark):
 def test_sequence_neardup_pairs_shares_one_shingle_pass(spark):
     """The candidate->verify chain must derive its four shingle
     consumers (signatures, sizes, two verify probes) from ONE
-    materialized distinct-shingle frame: with share_shingles (the
-    default) the live plan contains ZERO Window nodes — the corpus
-    scan + lag-window pass runs once, inside the checkpoint
-    materialization — where the naive recompute mode plans the window
-    once per consumer (5x corpus scans measured)."""
+    materialized distinct-shingle frame: the live plan contains ZERO
+    Window nodes — the corpus scan + lag-window pass runs once, inside
+    the checkpoint materialization — where recomputing it would plan
+    the window once per consumer (5x corpus scans measured)."""
     from cerberus_spark.operators.dedup import sequence_neardup_pairs
 
     df = spark.createDataFrame(
@@ -467,10 +470,6 @@ def test_sequence_neardup_pairs_shares_one_shingle_pass(spark):
     assert len(re.findall(r"\(\d+\) Window", shared)) == 0, shared
     assert "CartesianProduct" not in shared, shared
     assert "BroadcastNestedLoopJoin" not in shared, shared
-    naive = plan_of(
-        sequence_neardup_pairs(df, "key", ["pos"], "tok", share_shingles=False)
-    )
-    assert len(re.findall(r"\(\d+\) Window", naive)) >= 2, naive
 
 
 def test_clean_transcripts_report_plan_shape(spark):
@@ -546,15 +545,18 @@ def _lock_docs(spark):
     )
 
 
-def test_clean_corpus_document_stage_is_one_python_pass(spark):
+def test_clean_corpus_document_stage_is_one_python_pass(spark, monkeypatch):
     """Normalize, quality gate and MinHash run as ONE Arrow pass per
-    document: the quality drops (the per-document stage alone) plan
-    exactly one Python node, and with the default checkpoint nothing
-    downstream of it runs Python."""
+    document: the quality drops (the per-document stage alone, with
+    checkpoints lifted so the plan shows its full lineage) plan exactly
+    one Python node, and with the checkpoint nothing downstream of it
+    runs Python."""
     from cerberus_spark.corpus import clean_corpus
 
     docs = _lock_docs(spark)
-    unckpt = clean_corpus(docs, checkpoint_stages=False)["dropped"]
+    with monkeypatch.context() as m:
+        m.setattr(type(docs), "localCheckpoint", lambda self, eager=True: self)
+        unckpt = clean_corpus(docs)["dropped"]
     quality = unckpt.filter(F.col("stage") == "quality")
     assert python_nodes(quality) == ["MapInPandas"], plan_of(quality)
     outs = clean_corpus(docs)

@@ -7,6 +7,7 @@ import ast
 import inspect
 import re
 import textwrap
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -129,3 +130,51 @@ def test_every_contract_pair_calls_the_package():
         name for name, fn in entry.queries().items() if not _package_names(fn, entry, set())
     )
     assert without == []
+
+
+#: the package's Python reference for ``generate_transcripts``: the
+#: generator tests compare the Spark rows against it, so no job runs it
+_TEST_REFERENCE_DEFS = {"py_rows", "py_n_turns"}
+
+
+def _used_names(tree):
+    """Every name and attribute ``tree`` uses: string constants, and so
+    docstrings, do not count."""
+    return {
+        node.id if isinstance(node, ast.Name) else node.attr
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Name, ast.Attribute))
+    }
+
+
+def test_no_package_def_is_reached_only_from_tests():
+    """Every top-level package def is reached, by name and through the
+    defs it reaches, from code that runs outside the test suite: the
+    CLI jobs, ``bench.py``, ``perfbench/``, ``scripts/oracle_check.py``
+    and ``__spark_entry__.py`` (the contract pairs).  A def only tests
+    call is an option nothing uses."""
+    from conftest import REPO
+
+    root = Path(REPO)
+    defs, module_level = {}, set()
+    for path in sorted((root / "cerberus_spark").rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(node.name, []).append(node)
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                module_level |= _used_names(node)
+    roots = [root / "bench.py", root / "__spark_entry__.py", root / "scripts" / "oracle_check.py"]
+    roots += sorted((root / "jobs").rglob("*.py")) + sorted((root / "perfbench").rglob("*.py"))
+    frontier = set(module_level)
+    for path in roots:
+        frontier |= _used_names(ast.parse(path.read_text()))
+    reached = set()
+    while frontier:
+        name = frontier.pop()
+        if name in defs and name not in reached:
+            reached.add(name)
+            for node in defs[name]:
+                frontier |= _used_names(node)
+    unreached = sorted(set(defs) - reached - _TEST_REFERENCE_DEFS)
+    assert unreached == []
+    assert _TEST_REFERENCE_DEFS <= set(defs) - reached  # no stale exemption

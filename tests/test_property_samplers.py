@@ -12,7 +12,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from cerberus_spark.operators.sample import hash_sample, hash_split, leak_safe_split
+from cerberus_spark.operators.sample import hash_split, leak_safe_split
 
 
 @pytest.fixture(scope="module")
@@ -64,20 +64,6 @@ def test_hash_split_fractions_converge(_spark, splits, salt):
         n_got = got.get(name, 0)
         tol = 4.5 * math.sqrt(p * (1 - p) * N_KEYS) + 1
         assert abs(n_got - p * N_KEYS) <= tol, (name, p, n_got, splits, salt)
-
-
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(rate=st.integers(min_value=1, max_value=99), salt=st.sampled_from(["x", "y"]))
-def test_hash_sample_rate_converges(_spark, rate, salt):
-    p = rate / 100
-    df = _spark.range(0, N_KEYS).withColumnRenamed("id", "k")
-    n_got = hash_sample(df, "k", p, salt=salt).count()
-    tol = 4.5 * math.sqrt(p * (1 - p) * N_KEYS) + 1
-    assert abs(n_got - p * N_KEYS) <= tol, (p, n_got, salt)
 
 
 @st.composite

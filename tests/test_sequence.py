@@ -5,12 +5,7 @@ from datetime import datetime, timezone
 import pytest
 from pyspark.sql import functions as F
 
-from cerberus_spark.checks.sequence import (
-    contiguity_report,
-    contiguity_violations,
-    sequence_violations,
-    transition_violations,
-)
+from cerberus_spark.checks.sequence import contiguity_report, sequence_violations
 
 
 def _ts(s: int) -> datetime:
@@ -61,29 +56,6 @@ def test_contiguity_report_hand_checked(seq_df):
     assert (c.n_rows, c.min_idx, c.max_idx, c.n_dup_idx, c.n_missing) == (2, 2, 3, 0, 2)
 
 
-def test_contiguity_violations_and_start(seq_df):
-    bad = {r.conv for r in contiguity_violations(seq_df, "conv_id", "turn_idx").collect()}
-    assert bad == {"b", "c"}
-    # with start=2, conv c ({2,3}) becomes dense and clean
-    bad2 = {
-        r.conv
-        for r in contiguity_violations(seq_df, "conv_id", "turn_idx", start=2).collect()
-    }
-    assert "c" not in bad2
-
-
-def test_transition_violations(seq_df):
-    out = transition_violations(
-        seq_df, "conv_id", "role", ["turn_idx", "ts"], GRAMMAR, FIRST
-    ).collect()
-    got = {(r.conv_id, r.turn_idx, r.rule) for r in out}
-    # b0 opens with 'user'; b1 is user->user; b3(tool) follows
-    # assistant->tool (OK) but the DUP idx-3 row makes tool->assistant
-    # at idx 4 legal, so only the two b violations plus nothing from c
-    # (c opens with 'system', system->user is legal)
-    assert got == {("b", 0, "first_state"), ("b", 1, "transition")}
-
-
 def test_sequence_violations_single_pass(seq_df):
     out = sequence_violations(
         seq_df, "conv_id", "role", "ts", ["turn_idx", "ts"], GRAMMAR, FIRST
@@ -125,9 +97,13 @@ def test_reindex_turns_repairs_gaps_and_dups(seq_df):
     assert b == [(0, 0), (1, 1), (3, 2), (3, 3), (4, 4)]
     c = sorted(r.turn_idx_fixed for r in out if r.conv_id == "c")
     assert c == [0, 1]
-    # repaired index passes the contiguity check it pairs with
+    # the repaired index is dense from 0 in every conversation
     fixed = reindex_turns(seq_df, "conv_id", ["turn_idx", "ts"])
-    assert contiguity_violations(fixed, "conv_id", "turn_idx_fixed").count() == 0
+    rep = contiguity_report(fixed, "conv_id", "turn_idx_fixed")
+    assert rep.count() == 3
+    assert rep.filter(
+        (F.col("n_dup_idx") > 0) | (F.col("n_missing") > 0) | (F.col("n_below_start") > 0)
+    ).count() == 0
 
 
 def test_contiguity_is_one_partial_agg_shuffle(spark):
@@ -187,10 +163,11 @@ def test_conversation_report_hand_checked(spark, seq_df):
 
 def test_sequence_violations_idx_density_matches_contiguity_report(spark):
     """The idx_col density rules (dup_idx / idx_gap / below_start)
-    derived from the ONE window pass must reproduce
-    contiguity_report's per-conv counters exactly — leading gaps,
-    below-start strays, duplicates, and clean conversations."""
-    from cerberus_spark.checks.sequence import contiguity_report, sequence_violations
+    derived from the ONE window pass, as the validator's sequence sink
+    evaluates them, must reproduce contiguity_report's per-conv
+    counters exactly — leading gaps, below-start strays, duplicates,
+    and clean conversations."""
+    from cerberus_spark.checks.sequence import sequence_rules, sequence_window
 
     rows = [
         # A: clean dense 0..3
@@ -210,18 +187,21 @@ def test_sequence_violations_idx_density_matches_contiguity_report(spark):
     ]
     df = spark.createDataFrame(rows, "conv string, idx int, st string, t long")
     allowed = {("user", "user")}
-    seq = sequence_violations(
-        df, "conv", "st", "t", ["idx", "t"], allowed, idx_col="idx"
+    base = sequence_window(df, "conv", "st", "t", ["idx", "t"], "idx")
+    rules = {r.rule: r for r in sequence_rules("st", "t", allowed, idx_col="idx")}
+    counts = base.groupBy("conv").agg(
+        F.count_if(rules["dup_idx"].violated).alias("dup"),
+        F.coalesce(
+            F.sum(F.when(rules["idx_gap"].violated, rules["idx_gap"].value_col)),
+            F.lit(0),
+        ).alias("gap"),
+        F.count_if(rules["below_start"].violated).alias("below"),
     )
-    got = {}
-    for r in seq.collect():
-        d = got.setdefault(r.conv, {"dup": 0, "gap": 0, "below": 0})
-        if r.rule == "dup_idx":
-            d["dup"] += 1
-        elif r.rule == "idx_gap":
-            d["gap"] += r.gap_size
-        elif r.rule == "below_start":
-            d["below"] += 1
+    got = {
+        r.conv: {"dup": r.dup, "gap": r.gap, "below": r.below}
+        for r in counts.collect()
+        if (r.dup, r.gap, r.below) != (0, 0, 0)
+    }
     expect = {
         r.conv: {"dup": r.n_dup_idx, "gap": r.n_missing, "below": r.n_below_start}
         for r in contiguity_report(df, "conv", "idx").collect()

@@ -11,7 +11,6 @@ from cerberus_spark.functions.text import (
     BPEISH_PATTERN,
     STOPWORDS_EN,
     lang_id,
-    punct_ratio,
     quality_score_milli,
     token_count_bpeish,
     token_count_ws,
@@ -69,11 +68,6 @@ def test_quality_milli(spark, text_df):
     ).collect()}
     for i, t in enumerate(TEXTS):
         assert got[i] == py_quality_milli(t), (i, t)
-
-
-def test_punct_ratio_bounds(spark, text_df):
-    vals = [r.p for r in text_df.select(punct_ratio(F.col("text")).alias("p")).collect()]
-    assert all(0.0 <= v <= 1.0 for v in vals)
 
 
 def test_lang_id(spark, text_df):

@@ -159,14 +159,18 @@ def test_remove_shared_spans_merges_multiple_partners(spark):
             (1, "x" + r1 + "y"),
             (2, "p" + r2 + "q"),
             (3, "0" + r1 + "1" + r2 + "2"),  # boundary chars all distinct
+            (4, "untouched bystander document"),
+            (5, None),                        # a NULL-text victim
         ],
         "doc_id long, text string",
     )
-    pairs = spark.createDataFrame([(1, 3), (2, 3)], "id_a long, id_b long")
+    pairs = spark.createDataFrame([(1, 3), (2, 3), (4, 5)], "id_a long, id_b long")
     out = {r.doc_id: r for r in remove_shared_spans(docs, pairs, "text", "doc_id", min_run=50).collect()}
     assert out[3].text == "012"
     assert out[3].n_cut_chars == 110
     assert out[1].n_cut_chars == 0 and out[2].n_cut_chars == 0
+    assert (out[4].text, out[4].n_cut_chars) == ("untouched bystander document", 0)
+    assert (out[5].text, out[5].n_cut_chars) == (None, 0)
 
 
 def test_remove_shared_spans_end_to_end_with_candidates(spark):
@@ -245,47 +249,10 @@ def test_merge_intervals_keys_independent(spark):
     assert rows == {("a", 0, 9, 2), ("b", 0, 5, 1), ("b", 6, 9, 1)}
 
 
-@pytest.mark.parametrize("min_run", [40, 50])
-def test_remove_shared_spans_distributed_merge_parity(spark, min_run):
-    """distributed_merge=True (per-pair spans -> merge_intervals ->
-    JVM rebuild) must return EXACTLY the default per-victim pandas
-    path's output on overlapping multi-partner cuts, no-cut pairs,
-    NULL texts, and untouched bystanders."""
-    from cerberus_spark.operators.winnow import remove_shared_spans
-
-    r1, r2 = "A" * 55, "B" * 55
-    docs = spark.createDataFrame(
-        [
-            (1, "x" + r1 + "y"),
-            (2, "p" + r1[:30] + r2 + "q"),      # overlaps doc 3's r1 tail
-            (3, "0" + r1 + "1" + r2 + "2"),
-            (4, "untouched bystander document"),
-            (5, None),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 3), (2, 3), (1, 2), (4, 5)], "id_a long, id_b long"
-    )
-    base = {
-        r.doc_id: (r.text, r.n_cut_chars)
-        for r in remove_shared_spans(docs, pairs, "text", "doc_id", min_run=min_run).collect()
-    }
-    dist = {
-        r.doc_id: (r.text, r.n_cut_chars)
-        for r in remove_shared_spans(
-            docs, pairs, "text", "doc_id", min_run=min_run, distributed_merge=True
-        ).collect()
-    }
-    assert dist == base
-    assert base[3][1] > 0  # the scenario actually cuts something
-
-
 def test_remove_shared_spans_many_partner_victim(spark):
-    """The pathological shape the distributed path exists for: ONE
-    victim paired with hundreds of partners (boilerplate-heavy doc).
-    The per-pair span pass never groups the victim's partners into one
-    pandas group; output still equals the per-victim path."""
+    """ONE victim paired with hundreds of partners (a boilerplate-heavy
+    doc): every partner's copy of the shared run merges into one cut,
+    and the partners keep their text."""
     from cerberus_spark.operators.winnow import remove_shared_spans
 
     run = "Z" * 60
@@ -298,16 +265,7 @@ def test_remove_shared_spans_many_partner_victim(spark):
     )
     out = {
         r.doc_id: (r.text, r.n_cut_chars)
-        for r in remove_shared_spans(
-            docs, pairs, "text", "doc_id", min_run=50, distributed_merge=True
-        ).collect()
+        for r in remove_shared_spans(docs, pairs, "text", "doc_id", min_run=50).collect()
     }
     assert out[n_partners] == ("HEAD--TAIL", 60)
     assert out[0] == (rows[0][1], 0)
-    base = {
-        r.doc_id: (r.text, r.n_cut_chars)
-        for r in remove_shared_spans(
-            docs, pairs, "text", "doc_id", min_run=50
-        ).collect()
-    }
-    assert out == base
