@@ -288,15 +288,11 @@ def q_classify_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_uniqueness_user_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, day) is a dup-HEAVY key (~30% of rows violate), so the
-    direct one-shuffle groupBy (the default) is doubly right here —
-    its map-side partial combine does the reducing, and the opt-in
-    hashed two-phase variant would broadcast a large dup-hash set
-    (that variant is for wide mostly-unique keys; pytest-proven
-    bit-identical in test_checks/test_plans)."""
+    one-shuffle groupBy's map-side partial combine does the reducing."""
     ev = _t(spark, sf_dir, "events").withColumn(
         "day", F.date_trunc("day", F.col("ts")).cast("date")
     )
-    return uniqueness_violations(ev, ["user_id", "day"], hashed=False)
+    return uniqueness_violations(ev, ["user_id", "day"])
 
 
 def q_referential_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:

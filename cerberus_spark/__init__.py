@@ -12,7 +12,7 @@ as an idiomatic Spark engine:
   (the columnar analog of the reference's per-event rule cascade,
   internal/monitor/monitor.go:197-408);
 - distributed-only checks the reference cannot do: exact uniqueness via
-  hashed groupBy, referential integrity via broadcast anti-join,
+  shuffle groupBy, referential integrity via broadcast anti-join,
   per-column stats sketches, KL/PSI drift vs a frozen baseline;
 - training-data-pipeline operators: exact/MinHash/SimHash dedup,
   n-gram Jaccard, embedding cosine top-k, language-ID, quality scoring,
@@ -33,14 +33,13 @@ from cerberus_spark.rules import (
     compile_schema,
     CompiledRuleSet,
 )
-from cerberus_spark.validation import ValidationSession, ValidationResult
+from cerberus_spark.validation import ValidationResult
 
 __all__ = [
     "normalize_documents",
     "apply_validator_flags",
     "compile_schema",
     "CompiledRuleSet",
-    "ValidationSession",
     "ValidationResult",
     "__version__",
 ]

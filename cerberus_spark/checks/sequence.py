@@ -154,7 +154,6 @@ def sequence_rules(
     allowed: set[tuple[str, str]],
     allowed_first: set[str] | None = None,
     idx_col: str | None = None,
-    start: int = 0,
 ) -> list[CompiledRule]:
     """The sequence rules as compiled rules over the columns
     :func:`sequence_window` adds — the single definition every sequence
@@ -167,7 +166,7 @@ def sequence_rules(
     window pass (at 10^12-turn scale this folds
     :func:`contiguity_report`'s separate corpus shuffle into the one
     sort already paid): ``dup_idx`` (index equals its predecessor's),
-    ``below_start`` (index < ``start``), and ``idx_gap`` (indexes
+    ``below_start`` (index < 0), and ``idx_gap`` (indexes
     skipped before this row; its value is the gap SIZE, so Σ gap size
     per conv equals contiguity_report's ``n_missing``, equality
     pytest-locked).  REQUIREMENT: ``order_by`` must sort ``idx_col``
@@ -200,11 +199,11 @@ def sequence_rules(
         )
     if idx_col is not None:
         idx, prev_idx = F.col(idx_col).cast("long"), F.col("_prev_idx").cast("long")
-        s = F.lit(start).cast("long")
+        s = F.lit(0).cast("long")
         # indexes skipped immediately before this row: from the
         # predecessor when it was in range, else (first in-range row
-        # of the conv) from `start` — matches contiguity_report's
-        # "density inside [start, max_idx]" exactly
+        # of the conv) from 0 — matches contiguity_report's
+        # "density inside [start, max_idx]" at start = 0 exactly
         gap = (
             F.when(
                 (idx >= s) & (prev_idx.isNull() | (prev_idx < s)), idx - s
@@ -263,7 +262,6 @@ def conversation_report(
     order_by: list[str],
     allowed: set[tuple[str, str]],
     allowed_first: set[str] | None = None,
-    start: int = 0,
 ) -> DataFrame:
     """Per-conversation health gate — the transcript analog of the
     corpus Gopher gate: ONE row per conversation with every structural
@@ -282,7 +280,7 @@ def conversation_report(
     is the conversation-level quarantine a 10^12-turn ingest needs
     before per-turn rules even run.
     """
-    rep = contiguity_report(df, conv_col, idx_col, start=start).withColumnRenamed(
+    rep = contiguity_report(df, conv_col, idx_col).withColumnRenamed(
         "n_rows", "n_turns"
     )
     seq = sequence_violations(

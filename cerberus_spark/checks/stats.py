@@ -184,12 +184,11 @@ def volume_anomalies(
     ts_col: str = "ts",
     window_duration: str = "1 hour",
     trailing: int = 6,
-    min_ratio: float = 0.5,
-    max_ratio: float = 2.0,
 ) -> DataFrame:
     """Event-time windows whose row count deviates from the mean of the
-    ``trailing`` preceding windows by more than the ratio band — the
-    operational "did ingestion silently break / double-fire" check the
+    ``trailing`` preceding windows by more than the ratio band
+    [0.5, 2.0] — the operational "did ingestion silently break /
+    double-fire" check the
     reference approximates with eyeballed periodic stats dumps
     (internal/monitor/monitor.go:514-584).
 
@@ -218,8 +217,7 @@ def volume_anomalies(
         )
         .withColumn(
             "anomaly",
-            (F.col("ratio") < F.lit(float(min_ratio)))
-            | (F.col("ratio") > F.lit(float(max_ratio))),
+            (F.col("ratio") < F.lit(0.5)) | (F.col("ratio") > F.lit(2.0)),
         )
     )
     return out.select(

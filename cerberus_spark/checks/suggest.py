@@ -158,10 +158,9 @@ def suggest_bin_edges(
     df: DataFrame,
     column: str,
     n_bins: int = 8,
-    round_digits: int = 6,
 ) -> list[float]:
     """Equi-depth bin edges for :func:`drift.numeric_histogram`: the
-    (i/n)-quantiles of ``column``, rounded then deduplicated (a heavy
+    (i/n)-quantiles of ``column``, rounded to 6 decimals then deduplicated (a heavy
     point mass collapses its edges — fewer, still-valid bins).
 
     This is how the FROZEN drift edges should be derived ONCE from the
@@ -180,7 +179,7 @@ def suggest_bin_edges(
     ).collect()[0]["qs"]
     out: list[float] = []
     for v in arr:
-        r = round(float(v), round_digits)
+        r = round(float(v), 6)
         if not out or r > out[-1]:
             out.append(r)
     return out

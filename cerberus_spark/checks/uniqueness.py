@@ -5,18 +5,6 @@ The reference enforces key uniqueness implicitly via map upsert
 shape is a shuffle hash-aggregation on the key — partial (map-side)
 counts then a final merge; never a collect, never a window over the
 whole table.  AQE coalesces the post-shuffle partitions.
-
-On a MOSTLY-unique key (the normal case for a primary key check) the
-map-side partial combine reduces almost nothing, so the shuffle moves
-~|rows| full key tuples.  The hashed two-phase variant cuts those
-shuffle bytes: phase 1 aggregates an 8-byte md5 of the key (same row
-count through the exchange, ~3-5x fewer bytes than a string+int key
-tuple), phase 2 re-verifies only rows whose HASH is duplicated — a
-broadcast semi-join (the dup-hash set is tiny when dups are rare) plus
-an exact groupBy on the real keys over that tiny subset.  Hash
-collisions can only create false CANDIDATES (discarded by phase 2),
-never false negatives: equal keys always hash equal.  Results are
-bit-identical to the direct groupBy.
 """
 
 from __future__ import annotations
@@ -24,43 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cerberus_spark.operators.dedup import md5_i64
 
-
-def uniqueness_violations(
-    df: DataFrame, keys: list[str], hashed: bool = False
-) -> DataFrame:
-    """Keys appearing more than once: (*keys, n_dup).
-
-    ``hashed=False`` (default) is the direct one-shuffle groupBy —
-    one scan, map-side partial combine.  ``hashed=True`` switches to
-    the two-phase hashed shuffle (module docstring), which trades a
-    SECOND scan of the key columns for 3-5x fewer shuffle bytes; at
-    the benched transcript shape (narrow string+int key) the extra
-    scan costs more than the shuffle savings at every tested size
-    (measured ~1.4x slower at 1M rows), so it is opt-in for WIDE keys
-    (long strings / many columns) where shuffle bytes dominate the
-    pruned columnar re-scan.  Both produce identical results.
-    """
-    if not hashed:
-        return (
-            df.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n_dup"))
-            .filter(F.col("n_dup") > 1)
-        )
-    kh = md5_i64(
-        F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
-    ).alias("_h")
-    dup_h = (
-        df.select(kh)
-        .groupBy("_h")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > 1)
-        .select("_h")
-    )
-    cand = df.select(*keys, kh).join(F.broadcast(dup_h), "_h", "leftsemi")
+def uniqueness_violations(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Keys appearing more than once: (*keys, n_dup).  One scan, one
+    shuffle keyed on the key, map-side partial combine; NULL keys
+    group together."""
     return (
-        cand.groupBy(*keys)
+        df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("n_dup"))
         .filter(F.col("n_dup") > 1)
     )

@@ -18,9 +18,9 @@ Build shape — NEVER a driver-side scan:
 1. ``mapInPandas`` folds each partition's keys into ONE local bitarray
    (vectorized NumPy double hashing), yielding one ``m/8``-byte binary
    row per partition;
-2. one ``groupBy(partition_id % fan_in)`` + ``applyInPandas`` ORs them
-   to ``fan_in`` rows;
-3. the driver ORs those ``fan_in`` blooms (≤ fan_in · m/8 bytes moved
+2. one ``groupBy(partition_id % _FAN_IN)`` + ``applyInPandas`` ORs them
+   to ``_FAN_IN`` (16) rows;
+3. the driver ORs those blooms (≤ 16 · m/8 bytes moved
    — for a 10M-key / 1% filter that is 16 × 12 MB, not the key set).
 
 Hashing is fixed-key siphash (vectorized, worker-independent), so
@@ -35,6 +35,9 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: partial blooms ORed per merge task (build stage 2)
+_FAN_IN = 16
 
 
 def _params(capacity: int, fp_rate: float) -> tuple[int, int]:
@@ -110,7 +113,6 @@ def build_bloom(
     key_col: str,
     capacity: int,
     fp_rate: float = 0.01,
-    fan_in: int = 16,
 ) -> bytes:
     """Bloom filter blob (16-byte ``(m, k)`` header + bitarray) over
     the distinct values of ``key_col`` (nulls never enter the filter).
@@ -141,12 +143,12 @@ def build_bloom(
         return pd.DataFrame({"bloom": [acc.tobytes()]})
 
     merged = (
-        partials.withColumn("g", F.spark_partition_id() % fan_in)
+        partials.withColumn("g", F.spark_partition_id() % _FAN_IN)
         .groupBy("g")
         .applyInPandas(lambda p: merge(p), schema="bloom binary")
     )
     acc = np.zeros(m // 64, dtype=np.uint64)
-    for row in merged.collect():  # ≤ fan_in rows of m/8 bytes each
+    for row in merged.collect():  # ≤ _FAN_IN rows of m/8 bytes each
         acc |= np.frombuffer(row.bloom, dtype=np.uint64)
     return np.asarray([m, k], dtype=np.uint64).tobytes() + acc.tobytes()
 

@@ -56,6 +56,26 @@ def _normalize_py(text: str) -> str:
     return _ASCII_WS_RE.sub(" ", text.lower()).strip(_ASCII_WS)
 
 
+def _shingle_hashes(text: str | None, k: int):
+    """int64 array of the 60-bit md5 prefix (:func:`md5_i64`) of each
+    DISTINCT ``k``-word shingle string of :func:`_normalize_py`'s text;
+    None for NULL text or fewer than ``k`` words.  The one shingling
+    behind MinHash, n-gram Jaccard and SimHash."""
+    import numpy as np
+
+    if text is None:
+        return None
+    words = _normalize_py(text).split(" ")
+    if len(words) < k:
+        return None
+    shingles = {" ".join(words[i : i + k]) for i in range(len(words) - k + 1)}
+    return np.fromiter(
+        (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) for s in shingles),
+        dtype=np.int64,
+        count=len(shingles),
+    )
+
+
 def fingerprint(col: Column) -> Column:
     """Exact-dup document fingerprint: md5 of normalized text."""
     return F.md5(normalize_text(col))
@@ -199,21 +219,10 @@ def minhash_text_signature(
     than ``shingle_k`` words.  The per-row body of
     :func:`minhash_signatures` and of ``clean_corpus``'s fused document
     pass."""
-    import numpy as np
-
-    if text is None:
+    hs = _shingle_hashes(text, shingle_k)
+    if hs is None:
         return None
-    words = _normalize_py(text).split(" ")
-    if len(words) < shingle_k:
-        return None
-    shingles = {
-        " ".join(words[i : i + shingle_k]) for i in range(len(words) - shingle_k + 1)
-    }
-    hs = np.fromiter(
-        (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % MINHASH_P for s in shingles),
-        dtype=np.int64,
-        count=len(shingles),
-    )
+    hs %= MINHASH_P
     return ((hs[:, None] * a_vec + b_vec) % MINHASH_P).min(axis=0).tolist()
 
 
@@ -331,9 +340,9 @@ def bucket_pairs(buckets: DataFrame, count_alias: str) -> DataFrame:
 def shingle_hash_rows(
     df: DataFrame, text_col: str, id_col: str, k: int = 3
 ) -> DataFrame:
-    """Exploded (id, n_sh, shingle) rows with shingle = 63-bit md5 of
-    each distinct k-word shingle (:func:`minhash_text_signature`'s
-    shingling) — Arrow-batched: Catalyst's interpreted higher-order
+    """Exploded (id, n_sh, shingle) rows with shingle = 60-bit md5 of
+    each distinct k-word shingle (:func:`_shingle_hashes`) —
+    Arrow-batched: Catalyst's interpreted higher-order
     functions lose to vectorized Python by ~10x on shingling, and this
     runs the subtree once even when consumed twice by a self-join."""
     import pandas as pd
@@ -344,16 +353,12 @@ def shingle_hash_rows(
         for pdf in batches:
             ids, ns, hs = [], [], []
             for rid, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
+                h = _shingle_hashes(text, k)
+                if h is None:
                     continue
-                words = _normalize_py(text).split(" ")
-                if len(words) < k:
-                    continue
-                shingles = {" ".join(words[i : i + k]) for i in range(len(words) - k + 1)}
-                for s in shingles:
-                    ids.append(rid)
-                    ns.append(len(shingles))
-                    hs.append(int(hashlib.md5(s.encode()).hexdigest()[:15], 16))
+                ids += [rid] * len(h)
+                ns += [len(h)] * len(h)
+                hs += h.tolist()
             if ids:
                 yield pd.DataFrame(
                     {
@@ -476,7 +481,6 @@ def simhash_rows(
     text or fewer than ``shingle_k`` words get simhash 0."""
     import pandas as pd
 
-    k = shingle_k
     id_field = df.schema[id_col]
 
     def compute(batches):
@@ -486,27 +490,13 @@ def simhash_rows(
         for pdf in batches:
             ids, out = [], []
             for rid, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    ids.append(rid)
+                hs = _shingle_hashes(text, shingle_k)
+                ids.append(rid)
+                if hs is None:
                     out.append(0)
                     continue
-                words = _normalize_py(text).split(" ")
-                if len(words) < k:
-                    ids.append(rid)
-                    out.append(0)
-                    continue
-                shingles = {" ".join(words[i : i + k]) for i in range(len(words) - k + 1)}
-                hs = _np.fromiter(
-                    (
-                        int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-                        for s in shingles
-                    ),
-                    dtype=_np.int64,
-                    count=len(shingles),
-                )
                 counts = (((hs[:, None] >> shifts) & 1) * 2 - 1).sum(axis=0)
                 out.append(int(((counts > 0).astype(_np.int64) << shifts).sum()))
-                ids.append(rid)
             if ids:
                 yield pd.DataFrame(
                     {

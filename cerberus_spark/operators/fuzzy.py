@@ -12,8 +12,8 @@ key — bounded expansion, not quadratic), and the exact ``levenshtein``
 check then removes the neighborhood false positives (e.g. "ab"/"ba"
 share "a" but are distance 2) — candidates are a strict superset, so
 the verified result EXACTLY equals the theta join for every pair whose
-shorter key is at most ``max_len`` chars (deletion variants are
-generated up to ``max_len + 1`` so boundary-straddling insertion pairs
+shorter key is at most ``_MAX_LEN`` (64) chars (deletion variants are
+generated up to ``_MAX_LEN + 1`` so boundary-straddling insertion pairs
 are covered; pairs of two longer keys are only guaranteed at dist 0).
 
 Reference analog: none (the reference matches keys exactly); this is
@@ -33,21 +33,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: longest shorter key the edit-1 join is exact for
+_MAX_LEN = 64
 
-def deletion_neighborhood(col, max_len: int = 64):
+
+def deletion_neighborhood(col):
     """Array of 1-deletion variants of ``col`` plus ``col`` itself.
-    Deletions are generated for strings up to ``max_len + 1`` chars so
+    Deletions are generated for strings up to ``_MAX_LEN + 1`` chars so
     the exactness guarantee covers every pair whose SHORTER key is
-    ≤ ``max_len`` — including a ``max_len``-char key and its
-    one-insertion ``max_len + 1``-char neighbor, which would otherwise
+    ≤ ``_MAX_LEN`` — including a ``_MAX_LEN``-char key and its
+    one-insertion ``_MAX_LEN + 1``-char neighbor, which would otherwise
     share no variant (the longer side contributing only itself).
-    Strings beyond ``max_len + 1`` contribute only themselves (still
+    Strings beyond ``_MAX_LEN + 1`` contribute only themselves (still
     exact for dist-0; a length-1 edit on a very long key is better
     caught by winnowing).  Pure Catalyst: transform over a position
     sequence, no UDF."""
     s = F.col(col) if isinstance(col, str) else col
     dels = F.when(
-        F.length(s) <= max_len + 1,
+        F.length(s) <= _MAX_LEN + 1,
         F.transform(
             F.sequence(F.lit(1), F.length(s)),
             lambda i: F.concat(

@@ -50,29 +50,18 @@ def stratified_hash_sample(
     key_col: str,
     strata_col: str,
     rates: dict[str, float],
-    default_rate: float = 0.0,
-    salt: str = "sample",
 ) -> DataFrame:
     """Per-stratum deterministic sampling (class rebalancing: keep 100%
-    of a rare class, 5% of a dominant one).  Membership is a pure
+    of a rare class, 5% of a dominant one); strata absent from
+    ``rates`` are dropped.  Membership is a pure
     md5-bucket filter of the key with a per-class threshold,
     so it is reproducible, shuffle-free, and engine-portable; unlike
     ``df.sampleBy`` there is no RNG and membership survives
     repartitioning."""
-    bucket = _bucket_10k(F.col(key_col), salt)
-    thr = None
+    bucket = _bucket_10k(F.col(key_col), "sample")
+    thr = F.lit(0)
     for name, rate in rates.items():
-        t = int(round(rate * 10_000))
-        thr = (
-            F.when(F.col(strata_col) == name, F.lit(t))
-            if thr is None
-            else thr.when(F.col(strata_col) == name, F.lit(t))
-        )
-    thr = (
-        thr.otherwise(F.lit(int(round(default_rate * 10_000))))
-        if thr is not None
-        else F.lit(int(round(default_rate * 10_000)))
-    )
+        thr = F.when(F.col(strata_col) == name, F.lit(int(round(rate * 10_000)))).otherwise(thr)
     return df.filter(bucket < thr)
 
 
@@ -115,7 +104,6 @@ def resample_to_mixture(
     key_col: str,
     strata_col: str,
     targets: dict[str, float],
-    salt: str = "mixture",
 ) -> DataFrame:
     """Deterministically downsample strata toward target mixture
     weights (domain rebalancing: "the trained corpus should be 30%
@@ -161,7 +149,7 @@ def resample_to_mixture(
             F.floor(F.lit(10_000) * F.col("_keep") + F.lit(0.5)).alias("_thr"),
         )
     )
-    bucket = _bucket_10k(F.col(key_col), salt)
+    bucket = _bucket_10k(F.col(key_col), "mixture")
     return (
         df.join(F.broadcast(counts), strata_col)
         .filter(bucket < F.col("_thr"))
@@ -208,7 +196,6 @@ def quantile_buckets(
     group_col: str | None = None,
     cuts_permille: tuple[int, ...] = (333, 667),
     labels: tuple[str, ...] = ("head", "middle", "tail"),
-    decimals: int = 6,
 ) -> DataFrame:
     """Assign each row a quantile bucket of ``score_col`` within its
     group — the CCNet head/middle/tail perplexity split (docs are
@@ -217,7 +204,7 @@ def quantile_buckets(
     bucket, so with an NLL score ``head`` is the most-fluent slice.
 
     Deterministic and engine-portable by construction: scores are
-    ROUNDED to ``decimals`` first, each threshold is the smallest
+    ROUNDED to 6 decimals first, each threshold is the smallest
     rounded score whose cumulative count reaches ``ceil(n *
     cut/1000)`` (type-1 / lower quantile — pure INTEGER arithmetic,
     no interpolation, so engines cannot diverge on boundary
@@ -241,7 +228,7 @@ def quantile_buckets(
     ):
         raise ValueError("cuts_permille must be strictly increasing in (0, 1000)")
 
-    s = F.round(F.col(score_col), decimals)
+    s = F.round(F.col(score_col), 6)
     grp = [group_col] if group_col else []
     gcols = [F.col(c) for c in grp]
 

@@ -21,13 +21,9 @@ def top_k_per_group(
     group: str,
     label: str,
     k: int,
-    count_col: str | None = None,
 ) -> DataFrame:
     """(group, label, n, rk) with rk ≤ k; ties broken by label asc."""
-    if count_col is None:
-        counted = df.groupBy(group, label).agg(F.count(F.lit(1)).alias("n"))
-    else:
-        counted = df.groupBy(group, label).agg(F.sum(count_col).alias("n"))
+    counted = df.groupBy(group, label).agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy(group).orderBy(F.col("n").desc(), F.col(label).asc())
     return (
         counted.withColumn("rk", F.row_number().over(w))

@@ -54,7 +54,6 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cerberus_spark.checks.drift import categorical_histogram, drift_report, numeric_histogram
 from cerberus_spark.checks.referential import referential_flag
 from cerberus_spark.checks.sequence import (
     assemble_conversation_report,
@@ -283,49 +282,41 @@ def _all_violations(
 
 
 def drift_reports(df: DataFrame, baseline: DataFrame | None = None) -> DataFrame:
-    """role + text-length drift vs baseline in one DataFrame.
+    """role, tool and text-length KL/PSI drift: (column_name, kl, psi).
 
-    With an explicit baseline snapshot: two-sided histograms via
-    ``drift_report`` (lazy).  Without one (self-drift around the median
-    ts): a SINGLE scan computes every histogram at once — the split is
-    an in-plan broadcast 1-row aggregate and both the role and
-    text-length histograms come out of one GROUPING SETS aggregation;
-    the KL/PSI math then runs driver-side on the collected
-    histogram-sized rows (SURVEY.md §4: drift is deterministic binning
-    + small math, never a second pass over the data).
+    One path for both baselines; they differ only in how rows are
+    tagged ``is_cur``:
+
+    - without ``baseline``: self-drift around the median ``ts``, the
+      split an in-plan broadcast 1-row aggregate over ``df``;
+    - with ``baseline``: the snapshot's rows are ``False``, ``df``'s
+      ``True``, unioned by name.
+
+    Every histogram then comes out of ONE GROUPING SETS aggregation and
+    the KL/PSI math runs driver-side on the collected histogram-sized
+    rows (SURVEY.md §4: drift is deterministic binning + small math,
+    never a second pass over the data).  The result equals
+    :func:`drift_report` over the same two sides; an empty side gives
+    NULL kl/psi.
     """
     import math
 
     from cerberus_spark.checks.drift import EPS, numeric_bin_expr
 
-    if baseline is not None:
-        current = df
-        role = drift_report(
-            categorical_histogram(baseline, "role"),
-            categorical_histogram(current, "role"),
-            "role",
-        )
-        tool = drift_report(
-            categorical_histogram(baseline, "tool"),
-            categorical_histogram(current, "tool"),
-            "tool",
-        )
-        blen = baseline.select(F.length("text").alias("text_len"))
-        clen = current.select(F.length("text").alias("text_len"))
-        tlen = drift_report(
-            numeric_histogram(blen, "text_len", TEXT_LEN_EDGES),
-            numeric_histogram(clen, "text_len", TEXT_LEN_EDGES),
-            "text_len",
-        )
-        return role.unionAll(tool).unionAll(tlen)
-
-    med = df.agg(F.percentile_approx("ts", F.lit(0.5), F.lit(10000)).alias("_split"))
-    tagged = df.crossJoin(F.broadcast(med)).select(
-        (F.col("ts") >= F.col("_split")).alias("is_cur"),
+    bins = [
         F.coalesce(F.col("role"), F.lit("__null__")).alias("role_bin"),
         F.coalesce(F.col("tool"), F.lit("__null__")).alias("tool_bin"),
         numeric_bin_expr(F.length("text"), TEXT_LEN_EDGES).alias("len_bin"),
-    )
+    ]
+    if baseline is None:
+        med = df.agg(F.percentile_approx("ts", F.lit(0.5), F.lit(10000)).alias("_split"))
+        tagged = df.crossJoin(F.broadcast(med)).select(
+            (F.col("ts") >= F.col("_split")).alias("is_cur"), *bins
+        )
+    else:
+        tagged = baseline.select(F.lit(False).alias("is_cur"), *bins).unionByName(
+            df.select(F.lit(True).alias("is_cur"), *bins)
+        )
     gs = tagged.groupingSets(
         [["is_cur", "role_bin"], ["is_cur", "len_bin"], ["is_cur", "tool_bin"]],
         "is_cur",

@@ -294,7 +294,6 @@ def _compile_field(
     col: Column,
     fr: dict[str, Any],
     dtype: T.DataType | None,
-    have_schema: bool,
     rules: list[CompiledRule],
     schema_errors: list[str],
     parent: tuple[Column, T.DataType | None] | None = None,
@@ -485,7 +484,7 @@ def _compile_field(
                     )
                     continue
                 _compile_field(
-                    f"{path}.{sub}", subcol, sfr, sub_dtype, have_schema,
+                    f"{path}.{sub}", subcol, sfr, sub_dtype,
                     rules, schema_errors, parent=(col, dtype),
                 )
 
@@ -659,8 +658,7 @@ def compile_schema(
             continue
         dtype = fields_by_name[fname].dataType if df_schema is not None else None
         _compile_field(
-            fname, F.col(fname), fr, dtype, df_schema is not None,
-            rules, schema_errors,
+            fname, F.col(fname), fr, dtype, rules, schema_errors,
         )
 
     return CompiledRuleSet(rules=rules, schema_errors=schema_errors)

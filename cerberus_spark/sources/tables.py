@@ -26,7 +26,7 @@ TABLES = [
 _EXCHANGE_NODE = re.compile(r"^[\s:+\-*()\d]*\w*Exchange\b", re.M)
 
 
-def spread(df: DataFrame, parallelism: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Fan a narrow input across all cores before expression-heavy work.
 
     A single small parquet file scans as ONE partition, serializing any
@@ -42,7 +42,7 @@ def spread(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     Exchange-free plans (scans, local tables, checkpoints, Python
     passes over them) report their partitions without a job.
     """
-    parallelism = parallelism or df.sparkSession.sparkContext.defaultParallelism
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     if _EXCHANGE_NODE.search(df._jdf.queryExecution().executedPlan().toString()):
         return df
     if df.rdd.getNumPartitions() >= parallelism:

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cerberus_spark.rules import CompiledRuleSet, compile_schema
@@ -62,9 +62,6 @@ class ValidationResult:
             )
         )
 
-    def passed(self) -> DataFrame:
-        return self.annotated.filter(F.col(PASSED_COL))
-
     def failed(self) -> DataFrame:
         return self.annotated.filter(~F.col(PASSED_COL))
 
@@ -79,16 +76,6 @@ class ValidationResult:
             .groupBy("field", "rule")
             .agg(F.count(F.lit(1)).alias("n_violations"))
         )
-
-    def metrics(self) -> dict[str, Any]:
-        """Small driver-side scalars for audit records."""
-        row = self.annotated.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.when(F.col(PASSED_COL), 1).otherwise(0)).alias("passed"),
-        ).collect()[0]
-        rows = row["rows"] or 0
-        ok = row["passed"] or 0
-        return {"rows": rows, "passed": ok, "failed": rows - ok}
 
     def partition_summary(self) -> DataFrame:
         """Per-partition pass/fail + lineage: :func:`partition_summary`
@@ -122,51 +109,6 @@ def partition_summary(annotated: DataFrame) -> DataFrame:
     )
 
 
-class ValidationSession:
-    """Compile once, validate many DataFrames.
-
-    Entry point analog of the reference's ``TrackEvent`` hot path
-    (cmd/cerberus/main.go:209 -> monitor.go:197) minus the mutex: the
-    rule set is compiled to Column predicates on the driver and shipped
-    inside the plan, never per-row.
-    """
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def validate(
-        self,
-        df: DataFrame,
-        schema: dict[str, dict[str, Any]],
-        key_cols: list[str] | None = None,
-        update: bool = False,
-        require_all: bool = False,
-        allow_unknown: bool = True,
-    ) -> ValidationResult:
-        key_cols = key_cols or []
-        ruleset = compile_schema(
-            schema, df.schema, update=update, require_all=require_all
-        )
-        if not allow_unknown:
-            # Cerberus Validator(allow_unknown=False): fields outside the
-            # schema invalidate the document.  Columns are compile-time
-            # knowledge in a table, so this is a schema error (fail-fast),
-            # never per-row work; key columns are exempt (they identify
-            # the document, Cerberus documents don't carry their keys).
-            for c in df.columns:
-                if c not in schema and c not in key_cols:
-                    ruleset.schema_errors.append(f"unknown field {c!r}")
-        structs = ruleset.violation_structs()
-        if structs:
-            arr = F.array_compact(F.array(*structs))
-        else:
-            arr = F.array().cast("array<struct<field:string,rule:string,value:string>>")
-        annotated = df.withColumn(VIOLATIONS_COL, arr).withColumn(
-            PASSED_COL, ~ruleset.any_violated()
-        )
-        return ValidationResult(annotated, key_cols, ruleset)
-
-
 def validate(
     df: DataFrame,
     schema: dict[str, dict[str, Any]],
@@ -175,12 +117,30 @@ def validate(
     require_all: bool = False,
     allow_unknown: bool = True,
 ) -> ValidationResult:
-    """Convenience one-shot validate."""
-    return ValidationSession(df.sparkSession).validate(
-        df,
-        schema,
-        key_cols,
-        update=update,
-        require_all=require_all,
-        allow_unknown=allow_unknown,
+    """Validate ``df`` against a Cerberus-style ``schema``.
+
+    Entry point analog of the reference's ``TrackEvent`` hot path
+    (cmd/cerberus/main.go:209 -> monitor.go:197) minus the mutex: the
+    rule set is compiled to Column predicates on the driver and shipped
+    inside the plan, never per-row.
+    """
+    key_cols = key_cols or []
+    ruleset = compile_schema(schema, df.schema, update=update, require_all=require_all)
+    if not allow_unknown:
+        # Cerberus Validator(allow_unknown=False): fields outside the
+        # schema invalidate the document.  Columns are compile-time
+        # knowledge in a table, so this is a schema error (fail-fast),
+        # never per-row work; key columns are exempt (they identify
+        # the document, Cerberus documents don't carry their keys).
+        for c in df.columns:
+            if c not in schema and c not in key_cols:
+                ruleset.schema_errors.append(f"unknown field {c!r}")
+    structs = ruleset.violation_structs()
+    if structs:
+        arr = F.array_compact(F.array(*structs))
+    else:
+        arr = F.array().cast("array<struct<field:string,rule:string,value:string>>")
+    annotated = df.withColumn(VIOLATIONS_COL, arr).withColumn(
+        PASSED_COL, ~ruleset.any_violated()
     )
+    return ValidationResult(annotated, key_cols, ruleset)

@@ -83,10 +83,10 @@ def test_edit1_random_single_edits_always_found(spark):
 
 
 def test_edit1_pairs_max_len_boundary(spark):
-    """A max_len-char key and its one-insertion (max_len+1)-char
+    """A _MAX_LEN-char key and its one-insertion (_MAX_LEN + 1)-char
     neighbor must pair: deletion variants are generated up to
-    max_len+1 so the exactness claim holds for every pair whose
-    shorter key is <= max_len."""
+    _MAX_LEN + 1 so the exactness claim holds for every pair whose
+    shorter key is <= _MAX_LEN."""
     from cerberus_spark.operators.fuzzy import edit1_pairs
 
     s64 = "a" * 30 + "b" * 34
@@ -100,6 +100,6 @@ def test_edit1_pairs_max_len_boundary(spark):
         for r in edit1_pairs(df, "id", "key", bucket_cap=100).collect()
     }
     # 64<->65 straddles the boundary and must be found; 65<->66 has a
-    # 65-char shorter side (> max_len) — outside the guarantee and
+    # 65-char shorter side (> _MAX_LEN) — outside the guarantee and
     # genuinely unmatchable via length-64..65 variants
     assert (1, 2, 1) in got

@@ -228,28 +228,77 @@ def test_validate_job_job_budget(spark, transcripts, tmp_path, count_jobs):
         assert cli.n - rfv.n <= 4, (flags, cli.n, rfv.n)
 
 
-def test_singlepass_drift_matches_two_sided(spark, transcripts):
-    """The grouping-sets single-scan drift must equal the lazy
-    two-histogram drift_report path on the same median split."""
-    from pyspark.sql import functions as F
-
+def _median_split(transcripts):
     split = transcripts.agg(
         F.percentile_approx("ts", F.lit(0.5), F.lit(10000)).alias("m")
     ).collect()[0]["m"]
-    base = transcripts.filter(F.col("ts") < F.lit(split))
-    cur = transcripts.filter(F.col("ts") >= F.lit(split))
-    two_sided = {
-        r["column_name"]: (r["kl"], r["psi"])
-        for r in drift_reports(cur, baseline=base).collect()
-    }
-    single = {
-        r["column_name"]: (r["kl"], r["psi"])
-        for r in drift_reports(transcripts).collect()
-    }
-    assert set(single) == {"role", "text_len", "tool"} == set(two_sided)
-    for name in single:
-        for a, b in zip(single[name], two_sided[name]):
-            assert abs(a - b) < 1e-9, (name, single[name], two_sided[name])
+    return (
+        transcripts.filter(F.col("ts") < F.lit(split)),
+        transcripts.filter(F.col("ts") >= F.lit(split)),
+    )
+
+
+def test_singlepass_drift_matches_two_sided(spark, transcripts):
+    """Both drift_reports paths, the self-baseline median split and an
+    explicit baseline of the same split, must equal drift_report over
+    that split's two histograms."""
+    from cerberus_spark.checks.drift import (
+        categorical_histogram,
+        drift_report,
+        numeric_histogram,
+    )
+    from cerberus_spark.pipeline import TEXT_LEN_EDGES
+
+    base, cur = _median_split(transcripts)
+
+    def text_len(df):
+        return numeric_histogram(
+            df.select(F.length("text").alias("text_len")), "text_len", TEXT_LEN_EDGES
+        )
+
+    exp = {}
+    for name, hist in (
+        ("role", lambda df: categorical_histogram(df, "role")),
+        ("tool", lambda df: categorical_histogram(df, "tool")),
+        ("text_len", text_len),
+    ):
+        r = drift_report(hist(base), hist(cur), name).collect()[0]
+        exp[name] = (r["kl"], r["psi"])
+    for got in (drift_reports(cur, baseline=base), drift_reports(transcripts)):
+        rows = {r["column_name"]: (r["kl"], r["psi"]) for r in got.collect()}
+        assert set(rows) == set(exp) == {"role", "text_len", "tool"}
+        for name, pair in rows.items():
+            assert pair == pytest.approx(exp[name], abs=1e-9), (name, pair, exp[name])
+
+
+def test_drift_reports_empty_side(spark, transcripts):
+    """An empty baseline or an empty current side gives NULL kl/psi for
+    every column on both paths, never a division by zero.  The median
+    split leaves its baseline empty when every row has the same ts."""
+    empty = transcripts.limit(0)
+    one_ts = transcripts.withColumn("ts", F.lit("2024-01-01 00:00:00").cast("timestamp"))
+    for out in (
+        drift_reports(transcripts, baseline=empty),
+        drift_reports(empty, baseline=transcripts),
+        drift_reports(one_ts),
+        drift_reports(empty),
+    ):
+        assert {r["column_name"]: (r["kl"], r["psi"]) for r in out.collect()} == {
+            name: (None, None) for name in ("role", "text_len", "tool")
+        }
+
+
+def test_drift_reports_baseline_takes_no_more_jobs(spark, transcripts, count_jobs):
+    """An explicit baseline runs the self-baseline's one aggregate over
+    a union, so it launches no more Spark jobs than the median split."""
+    base, cur = _median_split(transcripts)
+    drift_reports(cur, baseline=base).collect()  # warm both plans once
+    drift_reports(transcripts).collect()
+    with count_jobs() as with_baseline:
+        drift_reports(cur, baseline=base).collect()
+    with count_jobs() as self_baseline:
+        drift_reports(transcripts).collect()
+    assert 0 < with_baseline.n <= self_baseline.n, (with_baseline.n, self_baseline.n)
 
 
 def test_transcript_stats_shape(spark, transcripts):

@@ -60,32 +60,13 @@ def test_column_pruning_reaches_parquet(spark, transcripts_parquet):
 
 
 def test_uniqueness_direct_is_partial_final_hash_agg(spark, transcripts_parquet):
-    """Direct variant: one shuffle keyed on the natural key, partial
-    agg before it."""
-    plan = plan_of(
-        uniqueness_violations(transcripts_parquet, ["conv_id", "turn_idx"], hashed=False)
-    )
+    """One shuffle keyed on the natural key, partial agg before it."""
+    plan = plan_of(uniqueness_violations(transcripts_parquet, ["conv_id", "turn_idx"]))
     assert n_exchanges(plan) == 1, plan
     assert "hashpartitioning(conv_id" in plan, plan
     assert "HashAggregate" in plan
     # map-side combine keeps shuffle volume at |distinct keys|
     assert "partial_count" in plan, plan
-
-
-def test_uniqueness_hashed_shuffles_hash_then_broadcasts_dups(spark, transcripts_parquet):
-    """Two-phase variant: phase 1 shuffles only the 8-byte key hash
-    (partial-agg'd), the dup-hash set reaches the fact side via a
-    BROADCAST semi-join (never a shuffled join), and phase 2 regroups
-    only the candidate rows on the real keys."""
-    plan = plan_of(
-        uniqueness_violations(transcripts_parquet, ["conv_id", "turn_idx"], hashed=True)
-    )
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
-    assert "partial_count" in plan, plan
-    # phase-1 exchange is keyed on the hash, not the wide key tuple
-    assert "hashpartitioning(_h" in plan, plan
-    # no sort-merge join anywhere — the dup set must broadcast
-    assert "SortMergeJoin" not in plan, plan
 
 
 def test_evaluate_once_barrier_defeats_collapse_project(spark):

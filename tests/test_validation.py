@@ -54,10 +54,10 @@ def test_violations_exact(spark, transcripts, expected_rows):
 
 def test_metrics_consistent(spark, transcripts):
     res = validate(transcripts, TRANSCRIPT_RULES, key_cols=["conv_id", "turn_idx"])
-    m = res.metrics()
-    assert m["rows"] == transcripts.count()
-    assert m["passed"] + m["failed"] == m["rows"]
-    assert m["failed"] == res.failed().count()
+    n_failed = res.failed().count()
+    assert 0 < n_failed < transcripts.count()
+    n_violating_keys = res.violations().select("conv_id", "turn_idx").distinct().count()
+    assert n_failed == n_violating_keys
 
 
 def test_partition_summary_sums(spark, transcripts):
@@ -65,10 +65,8 @@ def test_partition_summary_sums(spark, transcripts):
     ps = res.partition_summary().agg(
         F.sum("rows").alias("rows"), F.sum("n_pass").alias("p"), F.sum("n_fail").alias("f")
     ).collect()[0]
-    m = res.metrics()
-    assert ps["rows"] == m["rows"]
-    assert ps["p"] == m["passed"]
-    assert ps["f"] == m["failed"]
+    assert ps["rows"] == transcripts.count()
+    assert ps["f"] == res.failed().count() > 0
 
 
 def test_summary_matches_violations(spark, transcripts):
