@@ -6,9 +6,9 @@ internal/databases/service.go:414-442) are broadcast hash joins; the
 integrity check is the inverse: rows whose foreign key has NO match in
 the (small, broadcastable) catalog.  ``left_anti`` + ``F.broadcast``
 keeps it a map-side join: no shuffle of the fact table at all.
-:func:`referential_flag` is the same check as a broadcast LEFT join
-that marks orphans in place, for plans that evaluate other checks over
-the same rows.
+The validator's violations sink needs no join at all: its catalog is a
+fixed literal set, so an orphan there is the row-local predicate
+``fk IS NOT NULL AND NOT fk IN (...)`` (``pipeline.all_violations``).
 """
 
 from __future__ import annotations
@@ -45,18 +45,3 @@ def referential_violations(
         F.col(fk).cast("string").alias("value"),
     )
 
-
-def referential_flag(
-    fact: DataFrame, fk: str, dim: DataFrame, pk: str, flag: str
-) -> DataFrame:
-    """``fact`` plus a boolean ``flag`` column, True exactly on the rows
-    :func:`referential_orphans` returns.  A broadcast LEFT join against
-    the distinct dim keys, whose joined key is the match marker (NULL
-    where no dim row matched): no fact row is dropped or duplicated, so
-    other checks can share the same scan."""
-    keys = dim.select(F.col(pk).alias("__ref_pk")).distinct()
-    return (
-        fact.join(F.broadcast(keys), F.col(fk) == F.col("__ref_pk"), "left")
-        .withColumn(flag, F.col(fk).isNotNull() & F.col("__ref_pk").isNull())
-        .drop("__ref_pk")
-    )

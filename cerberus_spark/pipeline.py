@@ -7,7 +7,7 @@ cmd/cerberus/main.go:153-211 + internal/monitor/monitor.go:197-408).
 The reference runs each event through that loop once and reports from
 it; :func:`run_full_validation` is the one orchestration here (bench,
 ``perfbench``, ``jobs/validate_job.py`` and the tests all call it) and
-reads the table in four independent tasks:
+reads the table in three steps, the first two side by side:
 
   1. violations sink   — :func:`all_violations`: rule violations ∪
                          uniqueness dups ∪ referential orphans (∪ the
@@ -15,35 +15,35 @@ reads the table in four independent tasks:
                          one normalized parquet sink (conv_id,
                          turn_idx, field, rule, value); with
                          ``sequence_checks`` from ONE scan and ONE
-                         conv-keyed exchange, without them one scan
-                         plus a key-only uniqueness groupBy
-  2. partition summary — pass/fail per (partition, input file) over the
+                         conv-keyed exchange that carries only the keys,
+                         role, ts and each row's already-evaluated rule
+                         violations, without them one scan plus a
+                         key-only uniqueness groupBy.  The (field, rule)
+                         counts are an ``Observation`` on this write.
+  2. summaries         — pass/fail per (partition, input file) over the
                          plain ``_passed`` boolean (monitor.go:514-584
-                         analog); the column stats ride its scan as an
-                         ``Observation``
-  3. drift             — role / tool / text-length KL+PSI vs baseline;
-                         the self-baseline splits on the median ts
-                         in-plan and bins everything in one
-                         grouping-sets scan
-  4. rollups           — (field, rule) counts and, with
-                         ``sequence_checks``, the per-conversation
-                         ``conversation_health`` gate (parquet, next to
-                         the violations), both read back FROM the sink
-                         (one extra per-conv row count)
+                         analog), with the column stats and the
+                         self-drift median ``ts`` observed on its scan;
+                         then drift (role / tool / text-length KL+PSI vs
+                         baseline) with that split as a literal, binned
+                         in one grouping-sets scan
+  3. health rollup     — with ``sequence_checks``, after the sink: the
+                         per-conversation ``conversation_health`` gate
+                         (parquet, next to the violations), read back
+                         FROM the sink (one extra per-conv row count)
 
 Row-sized outputs go to the sink; summary-sized ones come back to the
 driver as rows.  Measured with ``perfbench/run.py --workload
 validate_turns --trace 1`` (149k turns, ``sequence_checks=True``,
-local[4] on a 4-core VM): 17 Spark jobs and 5.0 input scans per run
-(sink 1, partition summary 1, drift 2, health 1).  On the 700-conv
-test input at local[8]: 14 jobs, 18 with ``sequence_checks``; the CLI
-adds 4 (one write per summary table).  The tasks go to a driver-side
-thread pool so each action's planning and scheduling overlaps the
-others' execution.  Shapes: rules are scan + codegen'd predicates,
-referential is a broadcast join (map-side), uniqueness shares the
-sequence rules' one window sort (without ``sequence_checks`` it is a
-key-only groupBy instead), drift shuffles histogram-sized data, and
-nothing collects more than summary rows to the driver.
+local[4] on a 4-core VM): 10 Spark jobs and 4.0 input scans per run
+(sink 1, partition summary 1, drift 1, health 1).  On the cached
+700-conv test input at local[8]: 6 jobs, 10 with ``sequence_checks``;
+the CLI adds at most 4 (one write per summary table).  Shapes: rules
+are scan + codegen'd predicates, referential is one more of them (the
+catalog is a literal allowed set: no join, no broadcast), uniqueness
+shares the sequence rules' one window sort (without ``sequence_checks``
+it is a key-only groupBy instead), drift shuffles histogram-sized data,
+and nothing collects more than summary rows to the driver.
 """
 
 from __future__ import annotations
@@ -54,7 +54,6 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cerberus_spark.checks.referential import referential_flag
 from cerberus_spark.checks.sequence import (
     assemble_conversation_report,
     conversation_report,
@@ -63,7 +62,7 @@ from cerberus_spark.checks.sequence import (
 )
 from cerberus_spark.checks.uniqueness import uniqueness_violations
 from cerberus_spark.rules import CompiledRule, CompiledRuleSet, compile_schema
-from cerberus_spark.sources.catalog import tool_catalog
+from cerberus_spark.sources.catalog import TOOLS
 from cerberus_spark.sources.tables import local_table
 from cerberus_spark.validation import PASSED_COL, partition_summary
 
@@ -97,6 +96,14 @@ KEY_COLS = ["conv_id", "turn_idx"]
 #: so the emitted violations stay deterministic regardless.
 TRANSCRIPT_ORDER = ["turn_idx", "ts", "role", "text"]
 
+#: the violations sink's window order: :data:`TRANSCRIPT_ORDER` without
+#: ``text``, so only the key, role and ts columns cross its exchange.
+#: Every sequence and uniqueness rule reads only those columns, so rows
+#: tied on them emit the same (conv_id, turn_idx, field, rule, value)
+#: rows in either order; each row's own rule violations travel with it
+#: and do not depend on its position.
+_SINK_ORDER = ["turn_idx", "ts", "role"]
+
 #: north-rule role-transition grammar for multi-turn agent transcripts
 TRANSCRIPT_TRANSITIONS: set[tuple[str, str]] = {
     ("system", "user"),
@@ -116,24 +123,38 @@ def _sequence_checks(df: DataFrame) -> tuple[DataFrame, list[CompiledRule]]:
     """``df`` with the transcript conv window attached, and the sequence
     rules over it (grammar, ordering, null state and index density)
     renamed ``seq_<rule>`` for the violations sink."""
-    windowed = sequence_window(df, "conv_id", "role", "ts", TRANSCRIPT_ORDER, "turn_idx")
+    windowed = sequence_window(df, "conv_id", "role", "ts", _SINK_ORDER, "turn_idx")
     rules = sequence_rules(
         "role", "ts", TRANSCRIPT_TRANSITIONS, TRANSCRIPT_FIRST_ROLES, "turn_idx"
     )
     return windowed, [replace(r, rule=f"seq_{r.rule}") for r in rules]
 
 
-def _violation_rows(df: DataFrame, rules: list[CompiledRule]) -> DataFrame:
-    """One sink row per (row, violated rule): (conv_id, turn_idx, field,
-    rule, value).  Every row pays only the OR'd plain boolean; the
-    struct array is built for the failing rows alone."""
-    checks = CompiledRuleSet(rules)
-    v = F.explode(F.array_compact(F.array(*checks.violation_structs()))).alias("v")
+#: the type of a row's violation-struct array (:func:`_violation_array`)
+_VIOLATION_ARRAY = "array<struct<field:string,rule:string,value:string>>"
+
+
+def _violation_array(checks: CompiledRuleSet) -> Column:
+    """The struct<field,rule,value> of every rule the row violates."""
+    return F.array_compact(F.array(*checks.violation_structs()))
+
+
+def _sink_rows(df: DataFrame, keep: Column, violations: Column) -> DataFrame:
+    """The sink shape (conv_id, turn_idx, field, rule, value): one row
+    per struct of ``violations`` on the rows ``keep`` holds for."""
     return (
-        df.filter(checks.any_violated())
-        .select(*KEY_COLS, v)
+        df.filter(keep)
+        .select(*KEY_COLS, F.explode(violations).alias("v"))
         .select(*KEY_COLS, "v.field", "v.rule", "v.value")
     )
+
+
+def _violation_rows(df: DataFrame, rules: list[CompiledRule]) -> DataFrame:
+    """One sink row per (row, violated rule).  Every row pays only the
+    OR'd plain boolean; the struct array is built for the failing rows
+    alone."""
+    checks = CompiledRuleSet(rules)
+    return _sink_rows(df, checks.any_violated(), _violation_array(checks))
 
 
 def sequence_violation_rows(df: DataFrame) -> DataFrame:
@@ -235,50 +256,76 @@ def all_violations(
     violations in ONE normalized DataFrame (conv_id, turn_idx, field,
     rule, value) — the single violations sink the audit table ingests.
 
-    The row checks share one scan: a broadcast left join to the
-    distinct tool catalog flags referential orphans in place
-    (:func:`referential_flag`), one filter on the OR of every predicate
-    keeps the failing rows, and only those build and explode their
-    violation structs.
+    The row checks share one scan.  The tool catalog is a literal
+    allowed set (``tool IN (...)``), so a referential orphan is one more
+    row-local predicate: no join and no broadcast.
 
     Uniqueness depends on whether a conversation window runs:
 
-    - ``sequence_checks``: the conv window of
-      :func:`sequence_violation_rows` already hash-shuffles whole rows
-      by conv_id and sorts them by (conv_id, turn_idx, ts, ...).  A
-      ``count(1)`` over (conv_id, turn_idx) reuses that exchange and
+    - ``sequence_checks``: every row-local rule is evaluated map-side,
+      and each row crosses the one conv-keyed exchange as its keys,
+      role, ts and ``_row_v`` (the array of its violation structs, NULL
+      on a passing row), never its text.  A ``count(1)`` over
+      (conv_id, turn_idx) reuses that exchange and the conv window's
       sort, and one row per duplicated key reports it (NULL keys group
       alike, as in ``groupBy``).  One scan, one exchange.
     - otherwise nothing shuffles the rows, so uniqueness stays the
       key-only :func:`_uniqueness_rows` over a second, key-pruned scan:
-      cheaper than hash-shuffling and sorting every full row just to
-      count keys.
+      cheaper than hash-shuffling and sorting every row just to count
+      keys.
 
     Rows equal, as a multiset, the union of the standalone checks
     (pytest-locked on clean and dirty input)."""
     ruleset = compile_schema(rules or TRANSCRIPT_RULES, df.schema)
-    return _all_violations(spark, df, ruleset, sequence_checks)
+    return _all_violations(df, ruleset, sequence_checks)[0]
 
 
 def _all_violations(
-    spark: SparkSession, df: DataFrame, ruleset: CompiledRuleSet, sequence_checks: bool
-) -> DataFrame:
-    """:func:`all_violations` over an already compiled rule set."""
-    checked = referential_flag(df, "tool", tool_catalog(spark), "tool", "_orphan")
-    checks = ruleset.rules + [CompiledRule("tool", "referential", F.col("_orphan"))]
+    df: DataFrame, ruleset: CompiledRuleSet, sequence_checks: bool
+) -> tuple[DataFrame, list[tuple[str, str]]]:
+    """:func:`all_violations` over an already compiled rule set, and
+    every (field, rule) pair its rows can carry."""
+    tool = F.col("tool")
+    orphan = tool.isNotNull() & ~tool.isin([name for name, _, _ in TOOLS])
+    row_checks = CompiledRuleSet(ruleset.rules + [CompiledRule("tool", "referential", orphan)])
+    unique_pair = ("(conv_id,turn_idx)", "unique")
+    pairs = [(r.field, r.rule) for r in row_checks.rules]
     if not sequence_checks:
-        return _violation_rows(checked, checks).unionAll(_uniqueness_rows(df))
-    checked, seq = _sequence_checks(checked)
+        rows = _violation_rows(df, row_checks.rules).unionAll(_uniqueness_rows(df))
+        return rows, pairs + [unique_pair]
+    narrow = df.select(
+        *KEY_COLS,
+        "role",
+        "ts",
+        F.when(row_checks.any_violated(), _violation_array(row_checks)).alias("_row_v"),
+    )
+    windowed, seq = _sequence_checks(narrow)
     # which row of a duplicated key reports it does not matter (the
     # sink row is the key and its count); ordering by ts keeps the
     # required sort a prefix of the conv window's, so no second Sort
     key = Window.partitionBy(*KEY_COLS)
-    checked = checked.withColumn("_key_n", F.count(F.lit(1)).over(key)).withColumn(
+    windowed = windowed.withColumn("_key_n", F.count(F.lit(1)).over(key)).withColumn(
         "_key_rn", F.row_number().over(key.orderBy("ts"))
     )
     unique = (F.col("_key_n") > 1) & (F.col("_key_rn") == 1)
-    checks += seq + [CompiledRule("(conv_id,turn_idx)", "unique", unique, F.col("_key_n"))]
-    return _violation_rows(checked, checks)
+    window_checks = CompiledRuleSet(seq + [CompiledRule(*unique_pair, unique, F.col("_key_n"))])
+    row_v = F.col("_row_v")
+    rows = _sink_rows(
+        windowed,
+        row_v.isNotNull() | window_checks.any_violated(),
+        F.concat(F.coalesce(row_v, F.array().cast(_VIOLATION_ARRAY)), _violation_array(window_checks)),
+    )
+    return rows, pairs + [(r.field, r.rule) for r in window_checks.rules]
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _median_ts() -> Column:
+    """The self-baseline drift split: the approximate median ``ts``."""
+    return F.percentile_approx("ts", F.lit(0.5), F.lit(10000)).alias("_split")
 
 
 def drift_reports(df: DataFrame, baseline: DataFrame | None = None) -> DataFrame:
@@ -287,8 +334,8 @@ def drift_reports(df: DataFrame, baseline: DataFrame | None = None) -> DataFrame
     One path for both baselines; they differ only in how rows are
     tagged ``is_cur``:
 
-    - without ``baseline``: self-drift around the median ``ts``, the
-      split an in-plan broadcast 1-row aggregate over ``df``;
+    - without ``baseline``: self-drift around the median ``ts``
+      (collected first); a row with a NULL ``ts`` is on neither side;
     - with ``baseline``: the snapshot's rows are ``False``, ``df``'s
       ``True``, unioned by name.
 
@@ -299,6 +346,13 @@ def drift_reports(df: DataFrame, baseline: DataFrame | None = None) -> DataFrame
     :func:`drift_report` over the same two sides; an empty side gives
     NULL kl/psi.
     """
+    split = df.agg(_median_ts()).collect()[0]["_split"] if baseline is None else None
+    return _drift(df, baseline, split)
+
+
+def _drift(df: DataFrame, baseline: DataFrame | None, split: Any) -> DataFrame:
+    """:func:`drift_reports` with the self-baseline's median ``split``
+    already known (ignored when ``baseline`` is given)."""
     import math
 
     from cerberus_spark.checks.drift import EPS, numeric_bin_expr
@@ -309,10 +363,8 @@ def drift_reports(df: DataFrame, baseline: DataFrame | None = None) -> DataFrame
         numeric_bin_expr(F.length("text"), TEXT_LEN_EDGES).alias("len_bin"),
     ]
     if baseline is None:
-        med = df.agg(F.percentile_approx("ts", F.lit(0.5), F.lit(10000)).alias("_split"))
-        tagged = df.crossJoin(F.broadcast(med)).select(
-            (F.col("ts") >= F.col("_split")).alias("is_cur"), *bins
-        )
+        is_cur = F.col("ts") >= F.lit(split)
+        tagged = df.filter(is_cur.isNotNull()).select(is_cur.alias("is_cur"), *bins)
     else:
         tagged = baseline.select(F.lit(False).alias("is_cur"), *bins).unionByName(
             df.select(F.lit(True).alias("is_cur"), *bins)
@@ -461,66 +513,70 @@ def run_full_validation(
     ``baseline`` defaults to the older half of ``df`` by median
     timestamp; ``rules`` overrides :data:`TRANSCRIPT_RULES`.
 
-    The tasks are the violations sink, the partition summary, drift
-    and the rollups of the sink.  They are independent (the
-    sink->rollup chain stays ordered), so overlapping them hides the
-    driver-side planning and scheduling each action pays; concurrent
-    actions from threads are a supported Spark pattern (one scheduler,
-    shared executors).  The self-drift histogram collect runs inside
-    its task, so its driver-side KL math overlaps the other jobs too.
+    Two tasks run side by side, so each one's driver-side planning and
+    scheduling hides behind the other's execution; concurrent actions
+    from threads are a supported Spark pattern (one scheduler, shared
+    executors):
 
-    The column stats have no job of their own: their aggregates are one
-    ``Observation`` on the partition summary's scan.  That is one scan
-    of every row in both sink shapes; the sink without
-    ``sequence_checks`` scans twice, and an observation there would
-    ride (and widen) its key-pruned uniqueness scan too.
+    - the sink, the longer chain, planned before either task starts:
+      write the violations, then (with ``sequence_checks``) roll the
+      conversation health gate up FROM the written sink, so the rule
+      cascade and the sequence window each run once;
+    - the summaries, planned in their task while the sink runs: the
+      partition summary, then drift.
 
-    The (field, rule) summary and the conversation health gate derive
-    FROM the written sink (audit table, then rollup), so the rule
-    cascade and the sequence window each run once.
+    Three summaries ride scans the run already makes, as
+    ``Observation`` aggregates, and take no job of their own:
+
+    - the column stats and the self-drift median ``ts`` observe the
+      partition summary's scan (one scan of every row in both sink
+      shapes; the sink without ``sequence_checks`` scans twice, and an
+      observation there would ride and widen its key-pruned uniqueness
+      scan too), so drift then runs with a literal split;
+    - the (field, rule) counts observe the violations write, one
+      ``count_if`` per compiled pair.
     """
-    import threading
     from concurrent.futures import ThreadPoolExecutor
 
     ruleset = compile_schema(rules or TRANSCRIPT_RULES, df.schema)
-    violations = _all_violations(spark, df, ruleset, sequence_checks)
-    stats = Observation()
-    summary = _passed_summary(df.observe(stats, *_stats_aggs()), ruleset)
-    sink_written = threading.Event()
+    violations, pairs = _all_violations(df, ruleset, sequence_checks)
+    counts = Observation()
+    # one parsed expression per pair: a tenth of the driver time of the
+    # same aggregate built from Column operators
+    observed_violations = violations.observe(
+        counts,
+        *[
+            F.expr(f"count_if(field = {_sql_str(f)} AND rule = {_sql_str(r)}) AS _n{i}")
+            for i, (f, r) in enumerate(pairs)
+        ],
+    )
     out: dict[str, list[Row]] = {}
 
-    def violations_task() -> None:
-        try:
-            violations.write.mode("overwrite").parquet(f"{sink_dir}/violations")
-        finally:
-            # ALWAYS release the rollup task — on write failure it
-            # reads the missing path and fails loudly too, instead of
-            # deadlocking the pool
-            sink_written.set()
-
-    def rollups_task() -> None:
-        # gated on the write, in its own thread so it shares only the
-        # WAIT with the violations task, not its thread
-        sink_written.wait()
-        sunk = spark.read.parquet(f"{sink_dir}/violations")
-        out["rule_summary"] = (
-            sunk.groupBy("field", "rule").agg(F.count(F.lit(1)).alias("n_violations")).collect()
-        )
+    def sink_task() -> None:
+        observed_violations.write.mode("overwrite").parquet(f"{sink_dir}/violations")
+        n = counts.get
+        out["rule_summary"] = [
+            Row(field=f, rule=r, n_violations=n[f"_n{i}"])
+            for i, (f, r) in enumerate(pairs)
+            if n[f"_n{i}"]
+        ]
         if sequence_checks:
+            # the written schema is known: no schema-inference job
+            sunk = spark.read.schema(violations.schema).parquet(f"{sink_dir}/violations")
             conversation_health_from_violations(df, sunk).write.mode("overwrite").parquet(
                 f"{sink_dir}/conversation_health"
             )
 
-    def summary_task() -> None:
-        out["partition_summary"] = summary.collect()
+    def summaries_task() -> None:
+        stats = Observation()
+        observed = _stats_aggs() + ([_median_ts()] if baseline is None else [])
+        out["partition_summary"] = _passed_summary(df.observe(stats, *observed), ruleset).collect()
+        wide = stats.get
+        out["column_stats"] = _stats_rows(wide)
+        out["drift"] = _drift(df, baseline, wide["_split"] if baseline is None else None).collect()
 
-    def drift_task() -> None:
-        out["drift"] = drift_reports(df, baseline).collect()
-
-    tasks = [violations_task, summary_task, drift_task, rollups_task]
-    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-        futures = [pool.submit(t) for t in tasks]
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [pool.submit(sink_task), pool.submit(summaries_task)]
         for f in futures:
             f.result()  # propagate the first failure
-    out["column_stats"] = _stats_rows(stats.get)
     return out

@@ -36,8 +36,8 @@ input files the audit log has not completed.  After it, the sink holds:
 
 With ``--resume`` the audit log records the partition summary's rows
 per input file, and ``input_turns`` is the rows this run validated.
-On a 700-conversation input at local[8] the job launches 18 Spark jobs
-(22 with ``--sequence-checks``, 24 with ``--resume``):
+On a 700-conversation input at local[8] the job launches 11 Spark jobs
+(15 with ``--sequence-checks``, 17 with ``--resume``):
 ``run_full_validation``'s plus one write per summary table.
 """
 

@@ -446,8 +446,8 @@ def _dirty_transcripts(spark):
 def test_sequence_rows_dirty_input_partition_invariant(spark):
     """On duplicate/NULL-index input the emitted violation rows (and
     hence the sink) must be invariant under partition layout: the
-    within-conversation window orders by the full TRANSCRIPT_ORDER
-    tiebreak, not turn_idx alone."""
+    within-conversation window orders by turn_idx, ts and role, not
+    turn_idx alone, and rows tied on all three emit the same rows."""
     from cerberus_spark import pipeline
 
     dirty = _dirty_transcripts(spark)
@@ -488,13 +488,20 @@ def _dirty_keys(spark):
     a duplicated key: a window count over (conv_id, turn_idx) must
     group NULL keys exactly as the uniqueness ``groupBy`` does.  Its
     third turn (idx 2 after a gap, a user -> tool transition, ts back
-    to the first turn's) breaks the density, grammar and ts rules."""
+    to the first turn's) breaks the density, grammar and ts rules.
+    Last, a conversation whose duplicated key holds two rows that
+    differ only in text, one of them empty."""
     ts = __import__("datetime").datetime
     extra = spark.createDataFrame(
         [
             (None, 0, "system", "n0", None, ts(2026, 1, 3, 0, 0, 0)),
             (None, 0, "user", "n1", "search", ts(2026, 1, 3, 0, 0, 1)),
             (None, 2, "tool", "n2", "search", ts(2026, 1, 3, 0, 0, 0)),
+            # tied on (conv_id, turn_idx, ts, role), differing only in
+            # text (one empty): the sink's window never sees text
+            ("c-text", 0, "system", "s", None, ts(2026, 1, 4, 0, 0, 0)),
+            ("c-text", 1, "user", "", None, ts(2026, 1, 4, 0, 0, 1)),
+            ("c-text", 1, "user", "differs", None, ts(2026, 1, 4, 0, 0, 1)),
         ],
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp",
@@ -534,6 +541,96 @@ def test_all_violations_equals_standalone_union(spark, transcripts, data, sequen
     assert got == want and sum(want.values()) > 0
     n_unique = sum(n for r, n in want.items() if r[3] == "unique")
     assert n_unique > 0 and (data == "generator" or (None, 0, "(conv_id,turn_idx)", "unique", "2") in want)
+
+
+def test_all_violations_dirty_input_partition_invariant(spark):
+    """The one-pass sink is invariant under partition layout on dirty
+    keys, rows tied on everything but text included: each row's own
+    violations travel with it through the conv exchange, so the order
+    among tied rows changes no sink row."""
+    dirty = _dirty_keys(spark)
+    outs = [
+        Counter(map(tuple, all_violations(spark, d, sequence_checks=True).collect()))
+        for d in (dirty.coalesce(1), dirty.repartition(7), dirty.repartition(5, "text"))
+    ]
+    assert outs[0] == outs[1] == outs[2]
+    assert outs[0][("c-text", 1, "text", "empty", "")] == 1
+    assert outs[0][("c-text", 1, "(conv_id,turn_idx)", "unique", "2")] == 1
+    assert outs[0][("c-text", 1, "turn_idx", "seq_dup_idx", "1")] == 1
+
+
+@pytest.mark.parametrize("sequence_checks", [True, False])
+def test_rule_summary_equals_sink_groupby(spark, transcripts, tmp_path, sequence_checks):
+    """The (field, rule) counts observed on the violations write equal
+    a groupBy over the written sink, a field whose name holds a quote
+    and a backslash included."""
+    odd = "it's \\ odd"
+    df = transcripts.withColumn(odd, F.when(F.col("turn_idx") == 0, F.lit("x")))
+    rules = {**TRANSCRIPT_RULES, odd: {"type": "string", "required": True}}
+    sink = str(tmp_path / "sink")
+    got = run_full_validation(
+        spark, df, sink_dir=sink, rules=rules, sequence_checks=sequence_checks
+    )
+    want = (
+        spark.read.parquet(f"{sink}/violations")
+        .groupBy("field", "rule")
+        .agg(F.count(F.lit(1)).alias("n_violations"))
+        .collect()
+    )
+    assert sorted(got["rule_summary"]) == sorted(want)
+    assert any(r["field"] == odd and r["n_violations"] > 0 for r in want), want
+
+
+def _drift_stats(rows):
+    """drift rows as {(column_name, "kl" | "psi"): value}"""
+    return {(r["column_name"], k): r[k] for r in rows for k in ("kl", "psi")}
+
+
+def test_run_full_validation_drift_equals_drift_reports(spark, transcripts, tmp_path):
+    """The drift ``run_full_validation`` returns, its self-baseline
+    split observed on the partition summary's scan, equals
+    :func:`drift_reports` on the same input, with and without an
+    explicit baseline."""
+    base, cur = _median_split(transcripts)
+    for df, baseline in ((transcripts, None), (cur, base)):
+        got = run_full_validation(spark, df, sink_dir=str(tmp_path / "sink"), baseline=baseline)
+        want = _drift_stats(drift_reports(df, baseline).collect())
+        assert {c for c, _ in want} == {"role", "text_len", "tool"}
+        assert _drift_stats(got["drift"]) == pytest.approx(want, abs=1e-12)
+
+
+def test_drift_reports_null_ts_on_neither_side(spark):
+    """A row with a NULL ts is neither older nor newer than the median
+    split, so it is on neither side of the self-drift: adding such rows
+    leaves every statistic unchanged."""
+    ts = __import__("datetime").datetime
+    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    rows = [
+        ("c", 0, "system", "hello", None, ts(2026, 1, 1, 0, 0, 0)),
+        ("c", 1, "user", "what is the weather today", None, ts(2026, 1, 1, 0, 0, 1)),
+        ("c", 2, "assistant", "let me look it up", None, ts(2026, 1, 1, 0, 0, 2)),
+        ("c", 3, "tool", "sunny", "search", ts(2026, 1, 1, 0, 0, 3)),
+    ]
+    nulls = [("n", i, "tool", "x", "search", None) for i in range(3)]
+    clean = spark.createDataFrame(rows, schema)
+    with_nulls = clean.unionByName(spark.createDataFrame(nulls, schema))
+    want = _drift_stats(drift_reports(clean).collect())
+    assert want[("tool", "kl")] is not None
+    assert _drift_stats(drift_reports(with_nulls).collect()) == pytest.approx(want, abs=1e-12)
+
+
+def test_run_full_validation_job_budget(spark, transcripts, tmp_path, count_jobs):
+    """A warm ``run_full_validation`` launches at most 10 Spark jobs
+    with the sequence checks and 6 without: no catalog broadcast, no
+    rule-summary or drift-split job, no schema inference on the sink
+    read-back."""
+    for sequence_checks, budget in ((True, 10), (False, 6)):
+        run_full_validation(spark, transcripts, sink_dir=str(tmp_path / "warm"),
+                            sequence_checks=sequence_checks)
+        with count_jobs() as jobs:
+            run_full_validation(spark, transcripts, sink_dir=str(tmp_path / "run"),
+                                sequence_checks=sequence_checks)
+        assert jobs.n <= budget, (sequence_checks, jobs.n)
 
 
 @pytest.mark.parametrize("sequence_checks", [True, False])

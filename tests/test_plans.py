@@ -136,56 +136,50 @@ def plan_ops(plan: str) -> list[tuple[int, str]]:
     return out
 
 
-def without_broadcast_side(ops: list[tuple[int, str]]) -> list[str]:
-    """Operator names of ``ops`` minus every BroadcastExchange subtree."""
-    out, cut = [], None
-    for depth, name in ops:
-        if cut is not None and depth > cut:
-            continue
-        cut = depth if name == "BroadcastExchange" else None
-        if cut is None:
-            out.append(name)
-    return out
-
-
 def test_all_violations_one_scan_one_exchange(spark, transcripts_parquet):
     """With the sequence checks, the violations sink is one projection
     over one scan of the fact table and ONE hash exchange on the
-    conversation key: the catalog reaches it by broadcast, the
+    conversation key.  Every row-local rule (the catalog check a literal
+    allowed set) runs before that exchange, so it carries the keys,
+    role, ts and the row's violation array, never text or tool; the
     uniqueness window reuses the conv window's exchange and sort, and
-    no check aggregates or sort-merge joins the fact side."""
+    no check aggregates, joins or broadcasts."""
     from cerberus_spark.pipeline import all_violations
 
     plan = plan_of(all_violations(spark, transcripts_parquet, sequence_checks=True))
-    ops = plan_ops(plan)
-    fact = without_broadcast_side(ops)
-    assert [n for _, n in ops].count("Scan parquet") == 1, plan
-    assert "BroadcastHashJoin LeftOuter BuildRight" in fact, plan
-    assert fact.count("Exchange") == 1 and fact.count("Sort") == 1, plan
+    ops = [n for _, n in plan_ops(plan)]
+    assert ops.count("Scan parquet") == 1, plan
+    assert ops.count("Exchange") == 1 and ops.count("Sort") == 1, plan
     assert re.search(r"Arguments: hashpartitioning\(conv_id#\d+, \d+\)", plan), plan
-    assert "HashAggregate" not in fact, plan
-    assert "SortMergeJoin" not in plan, plan
+    exchange = re.search(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
+    assert exchange, plan
+    cols = [c.split("#")[0] for c in exchange.group(1).split(", ")]
+    assert cols == ["conv_id", "turn_idx", "role", "ts", "_row_v"], plan
+    assert "HashAggregate" not in ops, plan
+    assert "BroadcastExchange" not in ops, plan
+    assert not any("Join" in n for n in ops), plan
 
 
 def test_all_violations_without_sequence_shuffles_keys_only(spark, transcripts_parquet):
     """Without the sequence checks no window runs, so no full row is
     shuffled or sorted: the row checks stream map-side over one scan
-    (catalog by broadcast), and the only fact-side exchange carries
-    (conv_id, turn_idx) partial counts from a key-pruned scan."""
+    (the catalog a literal allowed set, no join), and the only exchange
+    carries (conv_id, turn_idx) partial counts from a key-pruned
+    scan."""
     from cerberus_spark.pipeline import all_violations
 
     plan = plan_of(all_violations(spark, transcripts_parquet, sequence_checks=False))
-    fact = without_broadcast_side(plan_ops(plan))
-    assert "BroadcastHashJoin LeftOuter BuildRight" in fact, plan
-    assert fact.count("Scan parquet") == 2, plan
+    ops = [n for _, n in plan_ops(plan)]
+    assert ops.count("Scan parquet") == 2, plan
     schemas = sorted(re.findall(r"ReadSchema: struct<([^>]*)>", plan), key=len)
     assert schemas[0] == "conv_id:string,turn_idx:int", plan
-    assert fact.count("Exchange") == 1, plan
-    i = fact.index("Exchange")
-    assert fact[i - 1] == fact[i + 1] == "HashAggregate", plan
+    assert ops.count("Exchange") == 1, plan
+    i = ops.index("Exchange")
+    assert ops[i - 1] == ops[i + 1] == "HashAggregate", plan
     assert re.search(r"Arguments: hashpartitioning\(conv_id#\d+, turn_idx#\d+, \d+\)", plan), plan
-    assert "Sort" not in fact and "Window" not in fact, plan
-    assert "SortMergeJoin" not in plan, plan
+    assert "Sort" not in ops and "Window" not in ops, plan
+    assert "BroadcastExchange" not in ops, plan
+    assert not any("Join" in n for n in ops), plan
 
 
 def test_broadcast_join_for_small_dim(spark, sf_dir="/root/testdata/sf0.001"):
@@ -501,8 +495,8 @@ def python_task_nodes(df) -> list[str]:
 
 @pytest.mark.parametrize("sequence_checks", [True, False])
 def test_all_violations_runs_no_python(spark, transcripts_parquet, sequence_checks):
-    """The violations sink and the catalog it broadcasts are JVM-only:
-    no Python UDF and no Python-RDD table in the plan."""
+    """The violations sink, its catalog check included, is JVM-only: no
+    Python UDF and no Python-RDD table in the plan."""
     from cerberus_spark.pipeline import all_violations
 
     out = all_violations(spark, transcripts_parquet, sequence_checks=sequence_checks)
