@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cerberus_spark.rules import ident, sql_literal
+
 EPS = 1e-9
 
 
@@ -37,22 +39,21 @@ def categorical_histogram(df: DataFrame, column: str) -> DataFrame:
     )
 
 
-def numeric_bin_expr(col, edges: list[float]):
-    """FROZEN-edge bin index expression: Σ 1[x >= edge_i] over interior
-    edges (clamps out-of-range into first/last bin).  NULL in -> NULL
-    out.  Shared by the numeric histograms and the single-pass drift."""
-    col = col.cast("double")
-    steps = None
-    for e in edges[1:-1]:
-        ind = F.when(col >= F.lit(float(e)), 1).otherwise(0)
-        steps = ind if steps is None else steps + ind
-    bin_idx = steps if steps is not None else F.lit(0)
-    return F.when(col.isNotNull(), bin_idx.cast("int"))
+def numeric_bin_expr(expr: str, edges: list[float]) -> str:
+    """FROZEN-edge bin index, as SQL over the SQL ``expr``: Σ 1[x >=
+    edge_i] over interior edges (clamps out-of-range into first/last
+    bin).  NULL in -> NULL out.  Shared by the numeric histograms and
+    the single-pass drift."""
+    x = f"CAST({expr} AS DOUBLE)"
+    steps = " + ".join(
+        f"CASE WHEN {x} >= {sql_literal(float(e))} THEN 1 ELSE 0 END" for e in edges[1:-1]
+    )
+    return f"CASE WHEN {x} IS NOT NULL THEN CAST({steps or '0'} AS INT) END"
 
 
 def _numeric_bin(column: str, edges: list[float]):
     """The ``bin_<i>`` label of :func:`numeric_bin_expr`."""
-    return F.concat(F.lit("bin_"), numeric_bin_expr(F.col(column), edges).cast("string"))
+    return F.expr(f"concat('bin_', CAST({numeric_bin_expr(ident(column), edges)} AS STRING))")
 
 
 def numeric_histogram(df: DataFrame, column: str, edges: list[float]) -> DataFrame:

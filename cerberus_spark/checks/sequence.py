@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cerberus_spark.rules import CompiledRule
+from cerberus_spark.rules import CompiledRule, ident, sql_in, sql_literal
 
 #: separator for (prev, cur) transition encoding; \x1f never appears in
 #: role vocabularies
@@ -87,10 +87,6 @@ def contiguity_report(
     )
 
 
-def _w(conv_col: str, order_by: list[str]) -> Window:
-    return Window.partitionBy(conv_col).orderBy(*order_by)
-
-
 def sequence_violations(
     df: DataFrame,
     conv_col: str,
@@ -117,11 +113,10 @@ def sequence_violations(
     """
     base = sequence_window(df, conv_col, state_col, ts_col, order_by)
     rules = sequence_rules(state_col, ts_col, allowed, allowed_first)
-    names = F.filter(
-        F.array(*[F.when(r.violated, F.lit(r.rule)) for r in rules]),
-        lambda x: x.isNotNull(),
+    names = ", ".join(f"CASE WHEN {r.violated} THEN {sql_literal(r.rule)} END" for r in rules)
+    return base.withColumn("rule", F.expr(f"explode(array_compact(array({names})))")).drop(
+        "_prev_ts", "_rn"
     )
-    return base.withColumn("rule", F.explode(names)).drop("_prev_ts", "_rn")
 
 
 def sequence_window(
@@ -134,18 +129,18 @@ def sequence_window(
 ) -> DataFrame:
     """``df`` plus the window attributes every sequence rule reads:
     ``prev_state``, ``_prev_ts``, ``_rn`` (and ``_prev_idx`` with
-    ``idx_col``), all from ONE ``partitionBy(conv).orderBy(order_by)``
+    ``idx_col``), all from ONE ``PARTITION BY conv ORDER BY order_by``
     window — one exchange and one sort.  Materialized as plain columns
     because generators (explode) cannot embed window functions."""
-    w = _w(conv_col, order_by)
-    base = (
-        df.withColumn("prev_state", F.lag(state_col).over(w))
-        .withColumn("_prev_ts", F.lag(ts_col).over(w))
-        .withColumn("_rn", F.row_number().over(w))
-    )
+    w = f"OVER (PARTITION BY {ident(conv_col)} ORDER BY {', '.join(map(ident, order_by))})"
+    cols = [
+        f"lag({ident(state_col)}) {w} AS prev_state",
+        f"lag({ident(ts_col)}) {w} AS _prev_ts",
+        f"row_number() {w} AS _rn",
+    ]
     if idx_col is not None:
-        base = base.withColumn("_prev_idx", F.lag(idx_col).over(w))
-    return base
+        cols.append(f"lag({ident(idx_col)}) {w} AS _prev_idx")
+    return df.selectExpr("*", *cols)
 
 
 def sequence_rules(
@@ -172,67 +167,59 @@ def sequence_rules(
     pytest-locked).  REQUIREMENT: ``order_by`` must sort ``idx_col``
     non-decreasing within a conversation (e.g. lead with it), or gaps
     mis-derive."""
-    prev_state, prev_ts = F.col("prev_state"), F.col("_prev_ts")
-    state = F.col(state_col)
-    trans_ok = F.concat_ws(_SEP, prev_state, state).isin(
-        [a + _SEP + b for a, b in sorted(allowed)]
-    )
-    state_value = F.coalesce(state, F.lit(""))
+    state, ts = ident(state_col), ident(ts_col)
+    transitions = [a + _SEP + b for a, b in sorted(allowed)]
+    trans_ok = sql_in(f"concat_ws({sql_literal(_SEP)}, prev_state, {state})", transitions)
+    state_value = f"coalesce({state}, '')"
     rules = [
         CompiledRule(
             state_col,
             "transition",
-            prev_state.isNotNull() & state.isNotNull() & ~trans_ok,
+            f"(prev_state IS NOT NULL AND {state} IS NOT NULL AND NOT {trans_ok})",
             state_value,
         ),
-        CompiledRule(state_col, "null_state", state.isNull(), state_value),
-        CompiledRule(ts_col, "ts_regression", F.col(ts_col) < prev_ts, F.col(ts_col)),
+        CompiledRule(state_col, "null_state", f"({state} IS NULL)", state_value),
+        CompiledRule(ts_col, "ts_regression", f"({ts} < _prev_ts)", ts),
     ]
     if allowed_first is not None:
         rules.append(
             CompiledRule(
                 state_col,
                 "first_state",
-                (F.col("_rn") == 1) & ~state.isin(sorted(allowed_first)),
+                f"(_rn = 1 AND NOT {sql_in(state, sorted(allowed_first))})",
                 state_value,
             )
         )
     if idx_col is not None:
-        idx, prev_idx = F.col(idx_col).cast("long"), F.col("_prev_idx").cast("long")
-        s = F.lit(0).cast("long")
+        idx, prev_idx = f"CAST({ident(idx_col)} AS BIGINT)", "CAST(_prev_idx AS BIGINT)"
         # indexes skipped immediately before this row: from the
         # predecessor when it was in range, else (first in-range row
         # of the conv) from 0 — matches contiguity_report's
         # "density inside [start, max_idx]" at start = 0 exactly
         gap = (
-            F.when(
-                (idx >= s) & (prev_idx.isNull() | (prev_idx < s)), idx - s
-            )
-            .when((idx >= s) & (prev_idx >= s), F.greatest(F.lit(0).cast("long"), idx - prev_idx - 1))
-            .otherwise(F.lit(0).cast("long"))
+            f"CASE WHEN {idx} >= 0 AND ({prev_idx} IS NULL OR {prev_idx} < 0) THEN {idx} "
+            f"WHEN {idx} >= 0 AND {prev_idx} >= 0 THEN greatest(0L, {idx} - {prev_idx} - 1) "
+            "ELSE 0L END"
         )
         rules += [
             # null-safe: contiguity_report's per-(conv, idx) grouping
             # treats NULL as one index value, so duplicate NULL indexes
-            # ARE duplicates here too (idx == prev_idx alone is NULL
+            # ARE duplicates here too (idx = prev_idx alone is NULL
             # when idx is NULL and would silently pass them); _rn > 1
             # distinguishes "first row of the conv" from "predecessor
             # had a NULL index"
             CompiledRule(
-                idx_col,
-                "dup_idx",
-                (F.col("_rn") > 1) & idx.eqNullSafe(prev_idx),
-                F.col(idx_col),
+                idx_col, "dup_idx", f"(_rn > 1 AND {idx} <=> {prev_idx})", ident(idx_col)
             ),
             # first row of its index only: contiguity_report counts
             # DISTINCT below-start indexes, not rows (its per-idx dedup)
             CompiledRule(
                 idx_col,
                 "below_start",
-                (idx < s) & (prev_idx.isNull() | (idx != prev_idx)),
-                F.col(idx_col),
+                f"({idx} < 0 AND ({prev_idx} IS NULL OR {idx} != {prev_idx}))",
+                ident(idx_col),
             ),
-            CompiledRule(idx_col, "idx_gap", gap > 0, gap),
+            CompiledRule(idx_col, "idx_gap", f"(({gap}) > 0)", f"({gap})"),
         ]
     return rules
 
@@ -249,7 +236,7 @@ def reindex_turns(
     One shuffle + partition-local sort; the fix for the convs
     :func:`contiguity_report` flags.
     """
-    w = _w(conv_col, order_by)
+    w = Window.partitionBy(conv_col).orderBy(*order_by)
     return df.withColumn(new_col, (F.row_number().over(w) - 1).cast("int"))
 
 
@@ -286,13 +273,8 @@ def conversation_report(
     seq = sequence_violations(
         df, conv_col, state_col, ts_col, order_by, allowed, allowed_first
     )
-    counts = seq.groupBy(F.col(conv_col).alias("conv")).agg(
-        *[
-            F.sum(F.when(F.col("rule") == r, 1).otherwise(0))
-            .cast("long")
-            .alias(f"n_{r}")
-            for r in ("transition", "null_state", "ts_regression", "first_state")
-        ]
+    counts = seq.groupBy(F.expr(f"{ident(conv_col)} AS conv")).agg(
+        *rule_counts(("transition", "null_state", "ts_regression", "first_state"))
     )
     return assemble_conversation_report(rep, counts)
 
@@ -322,9 +304,22 @@ def assemble_conversation_report(rep: DataFrame, counts: DataFrame) -> DataFrame
     violations (e.g. the pipeline's audit sink) can roll the health
     gate up from those rows instead of paying the window pass twice —
     same output by construction."""
-    joined = rep.join(counts, rep["conv"].eqNullSafe(counts["conv"]), "left").drop(counts["conv"])
-    joined = joined.fillna(0, subset=REPORT_COUNT_COLS)
-    keep = F.lit(True)
-    for c in REPORT_COUNT_COLS:
-        keep = keep & (F.col(c) == 0)
-    return joined.select("conv", "n_turns", *REPORT_COUNT_COLS, keep.alias("keep"))
+    joined = rep.join(
+        counts.withColumnRenamed("conv", "_conv"), F.expr("conv <=> _conv"), "left"
+    )
+    filled = [f"coalesce({c}, 0)" for c in REPORT_COUNT_COLS]
+    return joined.selectExpr(
+        "conv",
+        "n_turns",
+        *[f"{f} AS {c}" for f, c in zip(filled, REPORT_COUNT_COLS)],
+        f"({' AND '.join(f + ' = 0' for f in filled)}) AS keep",
+    )
+
+
+def rule_counts(rules, prefix: str = "") -> list:
+    """``n_<rule>``: the rows of a group whose ``rule`` is
+    ``prefix + rule``, one aggregate per rule."""
+    return [
+        F.expr(f"sum(CASE WHEN rule = {sql_literal(prefix + r)} THEN 1 ELSE 0 END) AS n_{r}")
+        for r in rules
+    ]

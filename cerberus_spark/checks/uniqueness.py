@@ -17,8 +17,4 @@ def uniqueness_violations(df: DataFrame, keys: list[str]) -> DataFrame:
     """Keys appearing more than once: (*keys, n_dup).  One scan, one
     shuffle keyed on the key, map-side partial combine; NULL keys
     group together."""
-    return (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n_dup"))
-        .filter(F.col("n_dup") > 1)
-    )
+    return df.groupBy(*keys).agg(F.expr("count(1) AS n_dup")).where("n_dup > 1")

@@ -44,24 +44,42 @@ catalog is a literal allowed set: no join, no broadcast), uniqueness
 shares the sequence rules' one window sort (without ``sequence_checks``
 it is a key-only groupBy instead), drift shuffles histogram-sized data,
 and nothing collects more than summary rows to the driver.
+
+Every stage is planned from Spark SQL text (``selectExpr``/``where``
+over the rule compiler's strings), one parse on the JVM per stage.
+Built from ``Column`` operators, each paying PySpark's call-site
+capture, the sink's plan (rule compile included) took 3,236 py4j
+commands and 0.25-0.27 s of driver time and the health rollup's 918
+and ~0.1 s; from text they take 37 and 79 commands, 0.06 s and 0.05 s
+(warm, seed-301 ``validate_turns`` input, 4-core VM).  Most of what is
+left is the JVM analysing each stage.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
 from dataclasses import replace
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from cerberus_spark.checks.sequence import (
     assemble_conversation_report,
     conversation_report,
+    rule_counts,
     sequence_rules,
     sequence_window,
 )
 from cerberus_spark.checks.uniqueness import uniqueness_violations
-from cerberus_spark.rules import CompiledRule, CompiledRuleSet, compile_schema
+from cerberus_spark.rules import (
+    VIOLATION_ARRAY,
+    CompiledRule,
+    CompiledRuleSet,
+    compile_schema,
+    sql_in,
+    sql_literal,
+)
 from cerberus_spark.sources.catalog import TOOLS
 from cerberus_spark.sources.tables import local_table
 from cerberus_spark.validation import PASSED_COL, partition_summary
@@ -130,31 +148,12 @@ def _sequence_checks(df: DataFrame) -> tuple[DataFrame, list[CompiledRule]]:
     return windowed, [replace(r, rule=f"seq_{r.rule}") for r in rules]
 
 
-#: the type of a row's violation-struct array (:func:`_violation_array`)
-_VIOLATION_ARRAY = "array<struct<field:string,rule:string,value:string>>"
-
-
-def _violation_array(checks: CompiledRuleSet) -> Column:
-    """The struct<field,rule,value> of every rule the row violates."""
-    return F.array_compact(F.array(*checks.violation_structs()))
-
-
-def _sink_rows(df: DataFrame, keep: Column, violations: Column) -> DataFrame:
-    """The sink shape (conv_id, turn_idx, field, rule, value): one row
-    per struct of ``violations`` on the rows ``keep`` holds for."""
-    return (
-        df.filter(keep)
-        .select(*KEY_COLS, F.explode(violations).alias("v"))
-        .select(*KEY_COLS, "v.field", "v.rule", "v.value")
-    )
-
-
 def _violation_rows(df: DataFrame, rules: list[CompiledRule]) -> DataFrame:
-    """One sink row per (row, violated rule).  Every row pays only the
-    OR'd plain boolean; the struct array is built for the failing rows
-    alone."""
+    """One sink row (conv_id, turn_idx, field, rule, value) per (row,
+    violated rule).  Every row pays only the OR'd plain boolean; the
+    struct array is built for the failing rows alone."""
     checks = CompiledRuleSet(rules)
-    return _sink_rows(df, checks.any_violated(), _violation_array(checks))
+    return df.where(checks.any_violated()).selectExpr(*KEY_COLS, f"inline({checks.violation_array()})")
 
 
 def sequence_violation_rows(df: DataFrame) -> DataFrame:
@@ -193,34 +192,20 @@ def conversation_health_from_violations(df: DataFrame, viol: DataFrame) -> DataF
     Output equal to :func:`conversation_health` by construction
     (shared assembly; equality pytest-locked)."""
     density = (
-        viol.filter(F.col("rule").startswith("seq_"))
-        .groupBy(F.col("conv_id").alias("conv"))
+        viol.where("startswith(rule, 'seq_')")
+        .groupBy(F.expr("conv_id AS conv"))
         .agg(
-            F.sum(F.when(F.col("rule") == "seq_dup_idx", 1).otherwise(0))
-            .cast("long")
-            .alias("n_dup_idx"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("rule") == "seq_idx_gap", F.col("value").cast("long")
-                    )
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("n_missing"),
-            F.sum(F.when(F.col("rule") == "seq_below_start", 1).otherwise(0))
-            .cast("long")
-            .alias("n_below_start"),
-            *[
-                F.sum(F.when(F.col("rule") == f"seq_{r}", 1).otherwise(0))
-                .cast("long")
-                .alias(f"n_{r}")
-                for r in ("transition", "null_state", "ts_regression", "first_state")
-            ],
+            F.expr(
+                "coalesce(sum(CASE WHEN rule = 'seq_idx_gap' THEN CAST(value AS BIGINT) END), 0L)"
+                " AS n_missing"
+            ),
+            *rule_counts(
+                ("dup_idx", "below_start", "transition", "null_state", "ts_regression", "first_state"),
+                "seq_",
+            ),
         )
     )
-    turns = df.groupBy(F.col("conv_id").alias("conv")).agg(F.count(F.lit(1)).alias("n_turns"))
+    turns = df.groupBy(F.expr("conv_id AS conv")).agg(F.expr("count(1) AS n_turns"))
     return assemble_conversation_report(turns, density)
 
 
@@ -238,11 +223,11 @@ def _uniqueness_rows(df: DataFrame) -> DataFrame:
     one row per key with its count: :func:`uniqueness_violations`, a
     key-only ``groupBy`` (map-side partial counts, then an exchange of
     key tuples alone)."""
-    return uniqueness_violations(df, KEY_COLS).select(
+    return uniqueness_violations(df, KEY_COLS).selectExpr(
         *KEY_COLS,
-        F.lit("(conv_id,turn_idx)").alias("field"),
-        F.lit("unique").alias("rule"),
-        F.col("n_dup").cast("string").alias("value"),
+        "'(conv_id,turn_idx)' AS field",
+        "'unique' AS rule",
+        "CAST(n_dup AS STRING) AS value",
     )
 
 
@@ -285,47 +270,40 @@ def _all_violations(
 ) -> tuple[DataFrame, list[tuple[str, str]]]:
     """:func:`all_violations` over an already compiled rule set, and
     every (field, rule) pair its rows can carry."""
-    tool = F.col("tool")
-    orphan = tool.isNotNull() & ~tool.isin([name for name, _, _ in TOOLS])
-    row_checks = CompiledRuleSet(ruleset.rules + [CompiledRule("tool", "referential", orphan)])
+    orphan = f"(tool IS NOT NULL AND NOT {sql_in('tool', [name for name, _, _ in TOOLS])})"
+    row_checks = CompiledRuleSet(ruleset.rules + [CompiledRule("tool", "referential", orphan, "tool")])
     unique_pair = ("(conv_id,turn_idx)", "unique")
     pairs = [(r.field, r.rule) for r in row_checks.rules]
     if not sequence_checks:
         rows = _violation_rows(df, row_checks.rules).unionAll(_uniqueness_rows(df))
         return rows, pairs + [unique_pair]
-    narrow = df.select(
+    narrow = df.selectExpr(
         *KEY_COLS,
         "role",
         "ts",
-        F.when(row_checks.any_violated(), _violation_array(row_checks)).alias("_row_v"),
+        f"CASE WHEN {row_checks.any_violated()} THEN {row_checks.violation_array()} END AS _row_v",
     )
     windowed, seq = _sequence_checks(narrow)
     # which row of a duplicated key reports it does not matter (the
     # sink row is the key and its count); ordering by ts keeps the
     # required sort a prefix of the conv window's, so no second Sort
-    key = Window.partitionBy(*KEY_COLS)
-    windowed = windowed.withColumn("_key_n", F.count(F.lit(1)).over(key)).withColumn(
-        "_key_rn", F.row_number().over(key.orderBy("ts"))
+    windowed = windowed.selectExpr(
+        "*",
+        "count(1) OVER (PARTITION BY conv_id, turn_idx) AS _key_n",
+        "row_number() OVER (PARTITION BY conv_id, turn_idx ORDER BY ts) AS _key_rn",
     )
-    unique = (F.col("_key_n") > 1) & (F.col("_key_rn") == 1)
-    window_checks = CompiledRuleSet(seq + [CompiledRule(*unique_pair, unique, F.col("_key_n"))])
-    row_v = F.col("_row_v")
-    rows = _sink_rows(
-        windowed,
-        row_v.isNotNull() | window_checks.any_violated(),
-        F.concat(F.coalesce(row_v, F.array().cast(_VIOLATION_ARRAY)), _violation_array(window_checks)),
+    unique = CompiledRule(*unique_pair, "(_key_n > 1 AND _key_rn = 1)", "_key_n")
+    window_checks = CompiledRuleSet(seq + [unique])
+    rows = windowed.where(f"_row_v IS NOT NULL OR {window_checks.any_violated()}").selectExpr(
+        *KEY_COLS,
+        f"inline(concat(coalesce(_row_v, CAST(array() AS {VIOLATION_ARRAY})), "
+        f"{window_checks.violation_array()}))",
     )
     return rows, pairs + [(r.field, r.rule) for r in window_checks.rules]
 
 
-def _sql_str(s: str) -> str:
-    """``s`` as a Spark SQL string literal."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _median_ts() -> Column:
-    """The self-baseline drift split: the approximate median ``ts``."""
-    return F.percentile_approx("ts", F.lit(0.5), F.lit(10000)).alias("_split")
+#: the self-baseline drift split: the approximate median ``ts``
+_MEDIAN_TS = "percentile_approx(ts, 0.5D, 10000) AS _split"
 
 
 def drift_reports(df: DataFrame, baseline: DataFrame | None = None) -> DataFrame:
@@ -346,7 +324,7 @@ def drift_reports(df: DataFrame, baseline: DataFrame | None = None) -> DataFrame
     :func:`drift_report` over the same two sides; an empty side gives
     NULL kl/psi.
     """
-    split = df.agg(_median_ts()).collect()[0]["_split"] if baseline is None else None
+    split = df.agg(F.expr(_MEDIAN_TS)).collect()[0]["_split"] if baseline is None else None
     return _drift(df, baseline, split)
 
 
@@ -358,16 +336,16 @@ def _drift(df: DataFrame, baseline: DataFrame | None, split: Any) -> DataFrame:
     from cerberus_spark.checks.drift import EPS, numeric_bin_expr
 
     bins = [
-        F.coalesce(F.col("role"), F.lit("__null__")).alias("role_bin"),
-        F.coalesce(F.col("tool"), F.lit("__null__")).alias("tool_bin"),
-        numeric_bin_expr(F.length("text"), TEXT_LEN_EDGES).alias("len_bin"),
+        "coalesce(role, '__null__') AS role_bin",
+        "coalesce(tool, '__null__') AS tool_bin",
+        f"{numeric_bin_expr('length(text)', TEXT_LEN_EDGES)} AS len_bin",
     ]
     if baseline is None:
-        is_cur = F.col("ts") >= F.lit(split)
-        tagged = df.filter(is_cur.isNotNull()).select(is_cur.alias("is_cur"), *bins)
+        is_cur = f"(ts >= {sql_literal(split)})"
+        tagged = df.where(f"{is_cur} IS NOT NULL").selectExpr(f"{is_cur} AS is_cur", *bins)
     else:
-        tagged = baseline.select(F.lit(False).alias("is_cur"), *bins).unionByName(
-            df.select(F.lit(True).alias("is_cur"), *bins)
+        tagged = baseline.selectExpr("FALSE AS is_cur", *bins).unionByName(
+            df.selectExpr("TRUE AS is_cur", *bins)
         )
     gs = tagged.groupingSets(
         [["is_cur", "role_bin"], ["is_cur", "len_bin"], ["is_cur", "tool_bin"]],
@@ -375,7 +353,7 @@ def _drift(df: DataFrame, baseline: DataFrame | None, split: Any) -> DataFrame:
         "role_bin",
         "len_bin",
         "tool_bin",
-    ).agg(F.count(F.lit(1)).alias("n"), F.grouping_id().alias("gid"))
+    ).agg(F.expr("count(1) AS n"), F.expr("grouping_id() AS gid"))
     # grouping_id bits follow groupBy order (is_cur, role_bin, len_bin,
     # tool_bin), MSB first; a set's missing columns are 1-bits:
     #   {is_cur, role_bin} -> 0b0011 = 3
@@ -435,18 +413,10 @@ def _stats_aggs() -> list[Column]:
     HLL distinct per column, text-length quantile sketch."""
     aggs = []
     for c in STATS_COLS:
-        aggs.append(
-            F.try_divide(F.count_if(F.col(c).isNull()), F.count(F.lit(1))).alias(
-                f"__null_rate_{c}"
-            )
-        )
-        aggs.append(F.approx_count_distinct(c).alias(f"__nd_{c}"))
-    aggs.append(
-        F.percentile_approx(
-            F.length("text"), F.array(F.lit(0.5), F.lit(0.95), F.lit(0.99)), F.lit(2000)
-        ).alias("__tl_q")
-    )
-    return aggs
+        aggs.append(f"try_divide(count_if({c} IS NULL), count(1)) AS __null_rate_{c}")
+        aggs.append(f"approx_count_distinct({c}) AS __nd_{c}")
+    aggs.append("percentile_approx(length(text), array(0.5D, 0.95D, 0.99D), 2000) AS __tl_q")
+    return [F.expr(a) for a in aggs]
 
 
 def transcript_stats(df: DataFrame) -> DataFrame:
@@ -455,14 +425,13 @@ def transcript_stats(df: DataFrame) -> DataFrame:
     column, plus text-length percentile sketch — all partial-aggregated
     map-side, unpivoted with a struct explode (no extra scan per
     column)."""
-    structs = [
-        F.struct(
-            F.lit(c).alias("column_name"),
-            *[F.col(a.format(c=c)).alias(k) for k, a in _STATS_FIELDS.items()],
-        )
+    structs = ", ".join(
+        f"named_struct('column_name', '{c}', "
+        + ", ".join(f"'{k}', {a.format(c=c)}" for k, a in _STATS_FIELDS.items())
+        + ")"
         for c in STATS_COLS
-    ]
-    return df.agg(*_stats_aggs()).select(F.explode(F.array(*structs)).alias("p")).select("p.*")
+    )
+    return df.agg(*_stats_aggs()).selectExpr(f"inline(array({structs}))")
 
 
 def _stats_rows(wide: dict[str, Any]) -> list[Row]:
@@ -478,7 +447,15 @@ def _passed_summary(df: DataFrame, ruleset: CompiledRuleSet) -> DataFrame:
     """:meth:`ValidationResult.partition_summary` of ``validate(df)``,
     from the plain ``_passed`` boolean alone: the summary never reads
     the violation-struct array, so it is not built."""
-    return partition_summary(df.withColumn(PASSED_COL, ~ruleset.any_violated()))
+    return partition_summary(df.withColumn(PASSED_COL, F.expr(f"NOT {ruleset.any_violated()}")))
+
+
+def _observed(obs: Observation) -> dict[str, Any] | None:
+    """The metrics of ``obs``, or None when no plan node reported them:
+    the optimizer (for an input it proves empty) and adaptive execution
+    (for a stage that ran empty) replace the plan with an empty
+    relation, observed node included."""
+    return obs.get if obs._jo.getRow().size() else None
 
 
 #: the summary-sized outputs :func:`run_full_validation` returns as
@@ -541,24 +518,18 @@ def run_full_validation(
     ruleset = compile_schema(rules or TRANSCRIPT_RULES, df.schema)
     violations, pairs = _all_violations(df, ruleset, sequence_checks)
     counts = Observation()
-    # one parsed expression per pair: a tenth of the driver time of the
-    # same aggregate built from Column operators
-    observed_violations = violations.observe(
-        counts,
-        *[
-            F.expr(f"count_if(field = {_sql_str(f)} AND rule = {_sql_str(r)}) AS _n{i}")
-            for i, (f, r) in enumerate(pairs)
-        ],
+    # one parsed array of the per-pair counts, in ``pairs`` order
+    per_pair = ", ".join(
+        f"count_if(field = {sql_literal(f)} AND rule = {sql_literal(r)})" for f, r in pairs
     )
+    observed_violations = violations.observe(counts, F.expr(f"array({per_pair}) AS n"))
     out: dict[str, list[Row]] = {}
 
     def sink_task() -> None:
         observed_violations.write.mode("overwrite").parquet(f"{sink_dir}/violations")
-        n = counts.get
+        n = (_observed(counts) or {"n": []})["n"]
         out["rule_summary"] = [
-            Row(field=f, rule=r, n_violations=n[f"_n{i}"])
-            for i, (f, r) in enumerate(pairs)
-            if n[f"_n{i}"]
+            Row(field=f, rule=r, n_violations=k) for (f, r), k in zip(pairs, n) if k
         ]
         if sequence_checks:
             # the written schema is known: no schema-inference job
@@ -569,9 +540,13 @@ def run_full_validation(
 
     def summaries_task() -> None:
         stats = Observation()
-        observed = _stats_aggs() + ([_median_ts()] if baseline is None else [])
+        observed = _stats_aggs() + ([F.expr(_MEDIAN_TS)] if baseline is None else [])
         out["partition_summary"] = _passed_summary(df.observe(stats, *observed), ruleset).collect()
-        wide = stats.get
+        # no row reached the observation: a count of no rows is 0,
+        # every other aggregate NULL
+        wide = _observed(stats) or defaultdict(
+            lambda: None, {f"__nd_{c}": 0 for c in STATS_COLS}
+        )
         out["column_stats"] = _stats_rows(wide)
         out["drift"] = _drift(df, baseline, wide["_split"] if baseline is None else None).collect()
 

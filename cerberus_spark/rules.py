@@ -5,11 +5,13 @@ cascades (reference: internal/monitor/monitor.go:80-188 — allowed port
 sets, bitmask tests, value equality, enum dispatch, prefix matching,
 byte-range predicates).  We generalize those shapes into a declarative,
 Cerberus-style rule vocabulary and compile each rule ONCE on the driver
-into a Spark ``Column`` predicate, evaluated columnarly for every row —
-no per-row Python, no shuffle.  ``CompiledRuleSet.any_violated`` ORs
-the predicates into one plain boolean that stays inside whole-stage
-codegen; the per-rule violation structs are built only for the rows it
-flags.
+into Spark SQL text, evaluated columnarly for every row — no per-row
+Python, no shuffle.  Text, not ``Column`` trees: every ``Column``
+method costs several py4j round trips through PySpark's call-site
+capture, while a stage built from text is one parse on the JVM.
+``CompiledRuleSet.any_violated`` ORs the predicates into one plain
+boolean that stays inside whole-stage codegen; the per-rule violation
+structs (``violation_array``) are built only for the rows it flags.
 
 Rule vocabulary (per field):
     type:         logical type name; checked against the DataFrame
@@ -31,20 +33,22 @@ Rule vocabulary (per field):
     dependencies: {"other_field": value-or-list} — this field may be
                   non-null only when every dependency holds (reference:
                   ARP src==dst cross-field rule monitor.go:121-134)
-    custom:       callable(Column) -> Column returning True when VALID
-                  (escape hatch; still a Catalyst expression)
+    custom:       a SQL lambda over the value returning True when
+                  VALID, e.g. ``"v -> length(v) % 2 = 0"`` (escape
+                  hatch; still a Catalyst expression)
     vcheck:       name of a registered Arrow-vectorized checker
-                  (pandas_udf; the designated slow path for semantics
-                  Catalyst can't express)
+                  (pandas_udf registered as a session function; the
+                  designated slow path for semantics Catalyst can't
+                  express)
     schema:       nested field rules for dict (struct/map) fields —
-                  compiled to ``col.getField(sub)`` / ``col.getItem``
+                  compiled to ``parent.`sub``` / ``parent['sub']``
                   predicates, violations reported as "parent.sub"; the
                   reference's analog is composed kernel pre-classifiers
                   checking port AND payload-content predicates on one
                   packet (ebpf/cerberus_tc.c:90-122).  Recurses: a
                   subfield may itself carry schema/items/anyof.
     items:        element rules for list fields, evaluated via
-                  ``F.exists`` (a row violates "items.<rule>" when ANY
+                  ``exists`` (a row violates "items.<rule>" when ANY
                   element violates <rule>) — no explode, no shuffle;
                   an element-level ``schema`` handles arrays of structs
                   ("items.<sub>.<rule>").
@@ -55,13 +59,13 @@ Rule vocabulary (per field):
                   full.  Compiled to an exact-count of per-alternative
                   conjunctions — still one Catalyst predicate.
     contains:     the array value must contain ALL the given members
-                  (``F.array_except`` against the literal set)
+                  (``array_except`` against the literal set)
     excludes:     this field may be non-null only when every named
                   sibling field is null (mutual exclusion — the
                   cross-field inverse of ``dependencies``)
     keysrules / valuesrules:
                   value rules applied to every key / value of a dict
-                  (map) field via ``F.exists`` over ``map_keys`` /
+                  (map) field via ``exists`` over ``map_keys`` /
                   ``map_values`` — violations "keysrules.<rule>" /
                   "valuesrules.<rule>", no explode, no shuffle.
 
@@ -72,15 +76,15 @@ the engine's analog of the reference's CommunicationPattern finding rows
 
 from __future__ import annotations
 
+import datetime
 import math
 import re
 from dataclasses import dataclass, field as dc_field
-from functools import reduce
-from operator import or_
+from decimal import Decimal
 from typing import Any, Callable
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -157,6 +161,53 @@ VCHECKS: dict[str, Callable[[pd.Series], pd.Series]] = {
 
 
 # ---------------------------------------------------------------------------
+# SQL text
+# ---------------------------------------------------------------------------
+
+#: the type of a row's violation array (:meth:`CompiledRuleSet.violation_array`)
+VIOLATION_ARRAY = "array<struct<field:string,rule:string,value:string>>"
+
+#: the element variable of the compiler's SQL lambdas
+_ELEM = "_e"
+
+
+def ident(name: str) -> str:
+    """``name`` as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_literal(v: Any) -> str:
+    """``v`` as a Spark SQL literal that selects back equal: str, int
+    (``L``-suffixed beyond int32), float (inf/nan included), bool, date,
+    datetime (naive means local time, as ``F.lit`` reads it) and
+    Decimal."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
+    if isinstance(v, float):
+        return repr(v) + "D" if math.isfinite(v) else f"CAST('{v}' AS DOUBLE)"
+    if isinstance(v, Decimal):
+        return format(v, "f") + "BD"
+    if isinstance(v, datetime.datetime):
+        return f"TIMESTAMP '{v.astimezone().isoformat(sep=' ')}'"
+    if isinstance(v, datetime.date):
+        return f"DATE '{v.isoformat()}'"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"no Spark SQL literal for {type(v).__name__} {v!r}")
+
+
+def sql_in(expr: str, values) -> str:
+    """``expr IN (values)``; FALSE for no values."""
+    if not values:
+        return "FALSE"
+    return f"({expr} IN ({', '.join(sql_literal(v) for v in values)}))"
+
+
+# ---------------------------------------------------------------------------
 # compiled form
 # ---------------------------------------------------------------------------
 
@@ -164,8 +215,8 @@ VCHECKS: dict[str, Callable[[pd.Series], pd.Series]] = {
 class CompiledRule:
     field: str
     rule: str
-    violated: Column  # boolean Column: True when the row VIOLATES the rule
-    value_col: Column | None = None  # reported value; defaults to col(field)
+    violated: str  # SQL boolean: TRUE when the row VIOLATES the rule
+    value: str  # SQL expression of the reported value
 
 
 @dataclass
@@ -173,83 +224,82 @@ class CompiledRuleSet:
     rules: list[CompiledRule]
     schema_errors: list[str] = dc_field(default_factory=list)
 
-    def violation_structs(self) -> list[Column]:
-        """One nullable struct<field,rule,value> per compiled rule."""
-        out = []
-        for r in self.rules:
-            vcol = r.value_col if r.value_col is not None else F.col(r.field)
-            out.append(
-                F.when(
-                    r.violated,
-                    F.struct(
-                        F.lit(r.field).alias("field"),
-                        F.lit(r.rule).alias("rule"),
-                        vcol.cast("string").alias("value"),
-                    ),
-                )
-            )
-        return out
+    def violation_array(self) -> str:
+        """SQL: the struct<field,rule,value> of every rule the row
+        violates, one ``CASE WHEN`` per compiled rule."""
+        if not self.rules:
+            return f"CAST(array() AS {VIOLATION_ARRAY})"
+        structs = ", ".join(
+            f"CASE WHEN {r.violated} THEN named_struct('field', {sql_literal(r.field)}, "
+            f"'rule', {sql_literal(r.rule)}, 'value', CAST({r.value} AS STRING)) END"
+            for r in self.rules
+        )
+        return f"array_compact(array({structs}))"
 
-    def any_violated(self) -> Column:
-        """Plain boolean: the row violates at least one rule.  A NULL
-        predicate counts as not violated, as in
-        :meth:`violation_structs`.  Cheap to evaluate on every row, so
+    def any_violated(self) -> str:
+        """SQL plain boolean: the row violates at least one rule.  A
+        NULL predicate counts as not violated, as in
+        :meth:`violation_array`.  Cheap to evaluate on every row, so
         callers filter on it before building the struct array."""
         if not self.rules:
-            return F.lit(False)
-        return F.coalesce(reduce(or_, (r.violated for r in self.rules)), F.lit(False))
+            return "FALSE"
+        return f"coalesce({' OR '.join(r.violated for r in self.rules)}, FALSE)"
 
 
-def _null_gate(col: Column, pred: Column) -> Column:
+def _null_gate(col: str, pred: str) -> str:
     """Value rules only fire on non-null values (null-ness has its own
     rules); mirrors the reference's bounds-check-before-read discipline
     (ebpf/cerberus_tc.c:129-139)."""
-    return col.isNotNull() & pred
+    return f"({col} IS NOT NULL AND {pred})"
 
 
-def _length_fn(dtype: T.DataType | None, want: str | None):
-    """strings/binary use F.length; arrays/maps use F.size (F.length on
-    an ArrayType raises AnalysisException at plan time).  Decide from
-    the actual type when known, else from the declared logical type."""
+def _length_fn(dtype: T.DataType | None, want: str | None) -> str:
+    """strings/binary use length; arrays/maps use size (length on an
+    ArrayType raises AnalysisException at plan time).  Decide from the
+    actual type when known, else from the declared logical type."""
     if dtype is not None:
-        return F.size if isinstance(dtype, (T.ArrayType, T.MapType)) else F.length
-    return F.size if want in ("list", "dict") else F.length
+        return "size" if isinstance(dtype, (T.ArrayType, T.MapType)) else "length"
+    return "size" if want in ("list", "dict") else "length"
 
 
-def _value_pred(col: Column, rname: str, rval: Any, length_fn) -> Column:
+def _value_pred(col: str, rname: str, rval: Any, length_fn: str) -> str:
     """Raw (un-null-gated) violation predicate for one value rule
-    evaluated against an arbitrary Column expression — shared by
-    top-level fields, nested schema paths, array elements (inside
-    F.exists lambdas) and anyof/oneof alternatives."""
+    evaluated against an arbitrary SQL expression — shared by top-level
+    fields, nested schema paths, array elements (inside ``exists``
+    lambdas) and anyof/oneof alternatives."""
     if rname == "allowed":
-        return ~col.isin(list(rval))
+        return f"(NOT {sql_in(col, list(rval))})"
     if rname == "forbidden":
-        return col.isin(list(rval))
+        return sql_in(col, list(rval))
     if rname == "contains":
         # Cerberus semantics: the collection must contain ALL the given
         # values (scalar rval = one required member); array columns only
         req = rval if isinstance(rval, (list, tuple, set)) else [rval]
-        return F.size(F.array_except(F.array(*[F.lit(x) for x in req]), col)) > 0
+        members = ", ".join(sql_literal(x) for x in req)
+        return f"(size(array_except(array({members}), {col})) > 0)"
     if rname == "min":
-        return col < F.lit(rval)
+        return f"({col} < {sql_literal(rval)})"
     if rname == "max":
-        return col > F.lit(rval)
+        return f"({col} > {sql_literal(rval)})"
     if rname == "minlength":
-        return length_fn(col) < int(rval)
+        return f"({length_fn}({col}) < {int(rval)})"
     if rname == "maxlength":
-        return length_fn(col) > int(rval)
+        return f"({length_fn}({col}) > {int(rval)})"
     if rname == "regex":
         # Cerberus semantics: the WHOLE value must match (re.fullmatch
         # in the python twin).  Anchor with a non-capturing group:
         # "^" + "cat|dog" + "$" would parse as (^cat)|(dog$) because
         # alternation binds looser than the anchors.
-        return ~col.rlike(f"^(?:{rval})$")
+        return f"(NOT {col} RLIKE {sql_literal(f'^(?:{rval})$')})"
     if rname == "empty":
         # only `empty: False` compiles to a rule; uses length_fn so it
         # works on arrays/maps too (not just strings)
-        return length_fn(col) == 0
+        return f"({length_fn}({col}) = 0)"
     if rname == "custom":
-        return ~rval(col)
+        if not isinstance(rval, str):
+            raise SchemaError("custom must be a SQL lambda string, e.g. 'v -> length(v) > 0'")
+        # a one-element exists applies the user's lambda to the value
+        return f"(NOT exists(array({col}), {rval}))"
     raise SchemaError(f"rule {rname!r} is not a value rule")
 
 
@@ -273,7 +323,7 @@ def _iter_value_rules(fr: dict[str, Any]):
         yield "custom", fr["custom"]
 
 
-def _alternative_ok(col: Column, alt: dict[str, Any], length_fn) -> Column:
+def _alternative_ok(col: str, alt: dict[str, Any], length_fn: str) -> str:
     """True when ``col`` (non-null) fully satisfies one anyof/oneof
     alternative."""
     if not isinstance(alt, dict) or not alt:
@@ -283,24 +333,42 @@ def _alternative_ok(col: Column, alt: dict[str, Any], length_fn) -> Column:
         raise SchemaError(
             f"rule(s) {sorted(unknown)} not allowed inside anyof/oneof"
         )
-    ok = F.lit(True)
-    for rname, rval in _iter_value_rules(alt):
-        ok = ok & ~F.coalesce(_value_pred(col, rname, rval, length_fn), F.lit(False))
-    return ok
+    oks = [
+        f"NOT coalesce({_value_pred(col, rname, rval, length_fn)}, FALSE)"
+        for rname, rval in _iter_value_rules(alt)
+    ]
+    return f"({' AND '.join(oks) or 'TRUE'})"
+
+
+def _sibling(
+    path: str, what: str, name: str, parent: tuple[str, T.DataType | None] | None,
+    schema_errors: list[str],
+) -> str | None:
+    """The column a ``dependencies``/``excludes`` entry names: top-level,
+    or a subfield of the same struct/map parent (None, with a schema
+    error, when the parent schema lacks it)."""
+    if parent is None:
+        return ident(name)
+    scol, _, known = _resolve_sub(parent[0], parent[1], name)
+    if not known:
+        schema_errors.append(f"field {path!r}: {what} {name!r} not in parent schema")
+        return None
+    return scol
 
 
 def _compile_field(
     path: str,
-    col: Column,
+    col: str,
     fr: dict[str, Any],
     dtype: T.DataType | None,
     rules: list[CompiledRule],
     schema_errors: list[str],
-    parent: tuple[Column, T.DataType | None] | None = None,
+    parent: tuple[str, T.DataType | None] | None = None,
 ) -> None:
     """Compile one field's rules (recursing into schema/items/anyof).
 
-    ``parent`` is (parent_col, parent_dtype) for nested paths — nested
+    ``col`` is the field's SQL expression.  ``parent`` is
+    (parent_expr, parent_dtype) for nested paths — nested
     required/nullable only fire when the parent itself is non-null, and
     ``dependencies`` resolve against sibling subfields.
     """
@@ -325,7 +393,7 @@ def _compile_field(
                 return
 
     null_violated = (
-        col.isNull() if parent is None else parent[0].isNotNull() & col.isNull()
+        f"({col} IS NULL)" if parent is None else f"({parent[0]} IS NOT NULL AND {col} IS NULL)"
     )
     if fr.get("required", False):
         rules.append(CompiledRule(path, "required", null_violated, col))
@@ -348,30 +416,24 @@ def _compile_field(
             dep = {d: None for d in dep}
         conds = []
         for dfield, dval in dep.items():
-            if parent is None:
-                dcol = F.col(dfield)
-            else:  # sibling subfield of the same struct/map parent
-                dcol, _, known = _resolve_sub(parent[0], parent[1], dfield)
-                if not known:
-                    schema_errors.append(
-                        f"field {path!r}: dependency {dfield!r} not in parent schema"
-                    )
-                    continue
+            dcol = _sibling(path, "dependency", dfield, parent, schema_errors)
+            if dcol is None:
+                continue
             if dval is None:
-                conds.append(dcol.isNotNull())
+                conds.append(f"{dcol} IS NOT NULL")
             elif isinstance(dval, (list, tuple, set)):
-                # coalesce(False): a NULL dependency column must mean
+                # coalesce(FALSE): a NULL dependency column must mean
                 # NOT-met (three-valued logic would otherwise turn the
                 # whole predicate NULL and swallow the violation)
-                conds.append(F.coalesce(dcol.isin(list(dval)), F.lit(False)))
+                conds.append(f"coalesce({sql_in(dcol, list(dval))}, FALSE)")
             else:
-                conds.append(F.coalesce(dcol == F.lit(dval), F.lit(False)))
+                conds.append(f"coalesce({dcol} = {sql_literal(dval)}, FALSE)")
         if conds:
-            deps_met = conds[0]
-            for c in conds[1:]:
-                deps_met = deps_met & c
             # field may only be non-null when all dependencies hold
-            rules.append(CompiledRule(path, "dependencies", col.isNotNull() & ~deps_met, col))
+            met = " AND ".join(conds)
+            rules.append(
+                CompiledRule(path, "dependencies", f"({col} IS NOT NULL AND NOT ({met}))", col)
+            )
 
     if "excludes" in fr:
         # mutual exclusion: this field may only be non-null when every
@@ -379,26 +441,22 @@ def _compile_field(
         exc = fr["excludes"]
         if isinstance(exc, str):
             exc = [exc]
-        present = None
-        for efield in exc:
-            if parent is None:
-                ecol = F.col(efield)
-            else:
-                ecol, _, known = _resolve_sub(parent[0], parent[1], efield)
-                if not known:
-                    schema_errors.append(
-                        f"field {path!r}: excludes {efield!r} not in parent schema"
-                    )
-                    continue
-            t = ecol.isNotNull()
-            present = t if present is None else present | t
-        if present is not None:
-            rules.append(CompiledRule(path, "excludes", col.isNotNull() & present, col))
+        present = [
+            f"{ecol} IS NOT NULL"
+            for ecol in (_sibling(path, "excludes", e, parent, schema_errors) for e in exc)
+            if ecol is not None
+        ]
+        if present:
+            rules.append(
+                CompiledRule(
+                    path, "excludes", f"({col} IS NOT NULL AND ({' OR '.join(present)}))", col
+                )
+            )
 
     # --- map-element rules: keysrules / valuesrules ------------------
     for mrule, getter, side in (
-        ("keysrules", F.map_keys, "key"),
-        ("valuesrules", F.map_values, "value"),
+        ("keysrules", "map_keys", "key"),
+        ("valuesrules", "map_values", "value"),
     ):
         if mrule not in fr:
             continue
@@ -419,19 +477,15 @@ def _compile_field(
         if isinstance(dtype, T.MapType):
             elem_dtype = dtype.keyType if side == "key" else dtype.valueType
         elem_len = _length_fn(elem_dtype, None)
-        arr = getter(col)
-
-        def map_rule_factory(rname, rval, lf):
-            # NULL map value -> NULL pred; F.exists skips it (keys are
-            # never null) — same null-gate discipline as items
-            return lambda e: _value_pred(e, rname, rval, lf)
-
         for rname, rval in _iter_value_rules(mfr):
+            # NULL map value -> NULL pred; exists skips it (keys are
+            # never null) — same null-gate discipline as items
+            pred = _value_pred(_ELEM, rname, rval, elem_len)
             rules.append(
                 CompiledRule(
                     path,
                     f"{mrule}.{rname}",
-                    _null_gate(col, F.exists(arr, map_rule_factory(rname, rval, elem_len))),
+                    _null_gate(col, f"exists({getter}({col}), {_ELEM} -> {pred})"),
                     col,
                 )
             )
@@ -441,9 +495,11 @@ def _compile_field(
         fn = VCHECKS.get(name)
         if fn is None:
             raise SchemaError(f"unknown vcheck {name!r} for field {path!r}")
-        checker = F.pandas_udf(fn, T.BooleanType())
+        # a session function, so the predicate stays SQL text
+        udf_name = f"cerberus_vcheck_{name}"
+        SparkSession.active().udf.register(udf_name, F.pandas_udf(fn, T.BooleanType()))
         rules.append(
-            CompiledRule(path, f"vcheck:{name}", _null_gate(col, ~checker(col)), col)
+            CompiledRule(path, f"vcheck:{name}", _null_gate(col, f"NOT {udf_name}({col})"), col)
         )
 
     # --- combinators: anyof / oneof / allof / noneof -----------------
@@ -453,17 +509,11 @@ def _compile_field(
         alts = fr[comb]
         if not isinstance(alts, (list, tuple)) or not alts:
             raise SchemaError(f"{comb} for field {path!r} must be a non-empty list")
-        oks = [_alternative_ok(col, alt, length_fn) for alt in alts]
-        n_ok = oks[0].cast("int")
-        for o in oks[1:]:
-            n_ok = n_ok + o.cast("int")
-        violated = {
-            "anyof": n_ok == F.lit(0),
-            "oneof": n_ok != F.lit(1),
-            "allof": n_ok != F.lit(len(oks)),
-            "noneof": n_ok != F.lit(0),
-        }[comb]
-        rules.append(CompiledRule(path, comb, _null_gate(col, violated), col))
+        n_ok = " + ".join(
+            f"CAST({_alternative_ok(col, alt, length_fn)} AS INT)" for alt in alts
+        )
+        want_ok = {"anyof": "= 0", "oneof": "!= 1", "allof": f"!= {len(alts)}", "noneof": "!= 0"}
+        rules.append(CompiledRule(path, comb, _null_gate(col, f"(({n_ok}) {want_ok[comb]})"), col))
 
     # --- nested: schema over struct/map subfields --------------------
     if "schema" in fr:
@@ -503,29 +553,29 @@ def _compile_field(
 
 
 def _resolve_sub(
-    parent_col: Column, parent_dtype: T.DataType | None, sub: str
-) -> tuple[Column, T.DataType | None, bool]:
+    parent_col: str, parent_dtype: T.DataType | None, sub: str
+) -> tuple[str, T.DataType | None, bool]:
     """Resolve a subfield access: struct fields are compile-time
     checked; map keys are dynamic (absent key -> NULL, so `required`
     doubles as key-presence); unknown parent type assumes struct."""
     if isinstance(parent_dtype, T.StructType):
         if sub in parent_dtype.fieldNames():
-            return parent_col.getField(sub), parent_dtype[sub].dataType, True
+            return f"{parent_col}.{ident(sub)}", parent_dtype[sub].dataType, True
         return parent_col, None, False
     if isinstance(parent_dtype, T.MapType):
-        return parent_col.getItem(sub), parent_dtype.valueType, True
-    return parent_col.getField(sub), None, True
+        return f"{parent_col}[{sql_literal(sub)}]", parent_dtype.valueType, True
+    return f"{parent_col}.{ident(sub)}", None, True
 
 
 def _compile_items(
     path: str,
-    col: Column,
+    col: str,
     ifr: dict[str, Any],
     dtype: T.DataType | None,
     rules: list[CompiledRule],
     schema_errors: list[str],
 ) -> None:
-    """Element rules via F.exists — a row violates "items.<rule>" when
+    """Element rules via ``exists`` — a row violates "items.<rule>" when
     ANY element violates it; no explode, no shuffle.  NULL elements
     skip value rules (same null-gate discipline as fields)."""
     elem_dtype = dtype.elementType if isinstance(dtype, T.ArrayType) else None
@@ -536,22 +586,12 @@ def _compile_items(
         )
     elem_len = _length_fn(elem_dtype, None)
 
-    def exists_pred(make):
+    def exists_rule(rule: str, pred: str) -> CompiledRule:
         # NULL element -> NULL pred; exists treats it as not-a-match
-        return _null_gate(col, F.exists(col, make))
-
-    # factories, not default-arg lambdas: F.exists inspects the
-    # callable's arity and would pass the element INDEX into a second
-    # (defaulted) parameter
-    def value_rule_factory(rname, rval):
-        return lambda e: _value_pred(e, rname, rval, elem_len)
+        return CompiledRule(path, rule, _null_gate(col, f"exists({col}, {_ELEM} -> {pred})"), col)
 
     for rname, rval in _iter_value_rules(ifr):
-        rules.append(
-            CompiledRule(
-                path, f"items.{rname}", exists_pred(value_rule_factory(rname, rval)), col
-            )
-        )
+        rules.append(exists_rule(f"items.{rname}", _value_pred(_ELEM, rname, rval, elem_len)))
 
     if "schema" in ifr:
         # arrays of structs: per-element subfield rules
@@ -575,29 +615,16 @@ def _compile_items(
                     continue
                 sub_dtype = elem_dtype[sub].dataType
             sub_len = _length_fn(sub_dtype, sfr.get("type"))
-
-            def req_factory(s):
-                return lambda e: e.isNotNull() & e.getField(s).isNull()
-
-            def sub_rule_factory(s, rname, rval, lf):
-                def make(e):
-                    sc = e.getField(s)
-                    return sc.isNotNull() & _value_pred(sc, rname, rval, lf)
-                return make
-
+            sc = f"{_ELEM}.{ident(sub)}"
             if sfr.get("required", False):
                 rules.append(
-                    CompiledRule(
-                        path, f"items.{sub}.required", exists_pred(req_factory(sub)), col
-                    )
+                    exists_rule(f"items.{sub}.required", f"({_ELEM} IS NOT NULL AND {sc} IS NULL)")
                 )
             for rname, rval in _iter_value_rules(sfr):
                 rules.append(
-                    CompiledRule(
-                        path,
+                    exists_rule(
                         f"items.{sub}.{rname}",
-                        exists_pred(sub_rule_factory(sub, rname, rval, sub_len)),
-                        col,
+                        f"({sc} IS NOT NULL AND {_value_pred(sc, rname, rval, sub_len)})",
                     )
                 )
 
@@ -657,8 +684,6 @@ def compile_schema(
             schema_errors.append(f"field {fname!r} not present in input schema")
             continue
         dtype = fields_by_name[fname].dataType if df_schema is not None else None
-        _compile_field(
-            fname, F.col(fname), fr, dtype, rules, schema_errors,
-        )
+        _compile_field(fname, ident(fname), fr, dtype, rules, schema_errors)
 
     return CompiledRuleSet(rules=rules, schema_errors=schema_errors)

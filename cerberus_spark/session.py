@@ -13,16 +13,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of ``MemAvailable`` in whole GiB, at least 1g and at most
+    24g, so the default heap fits the machine it starts on; 24g when
+    ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    return f"{max(1, min(24, kib // 2**21))}g"
+
+
 def get_spark(
     parallelism: int | None = None,
     app_name: str = "cerberus_spark",
-    driver_memory: str = "24g",
+    driver_memory: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for ``local[parallelism]``;
     ``parallelism`` defaults to ``$SPARK_GRAFT_CPUS``, else the cores
-    this process may run on.
+    this process may run on; ``driver_memory`` defaults to
+    :func:`default_driver_memory`.
 
     On a real cluster the same configs apply; only ``master`` changes
     (spark-submit supplies it, so we honor an externally-set master).
@@ -41,7 +54,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", driver_memory)
+        .config("spark.driver.memory", driver_memory or default_driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

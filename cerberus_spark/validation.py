@@ -23,7 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cerberus_spark.rules import CompiledRuleSet, compile_schema
+from cerberus_spark.rules import CompiledRuleSet, compile_schema, ident
 
 VIOLATIONS_COL = "_violations"
 PASSED_COL = "_passed"
@@ -50,20 +50,10 @@ class ValidationResult:
     def violations(self) -> DataFrame:
         """Normalized violation rows: (*keys, field, rule, value).  The
         struct array is built only for the rows that fail."""
-        v = F.explode(F.col(VIOLATIONS_COL)).alias("v")
-        return (
-            self.failed()
-            .select(*self.key_cols, v)
-            .select(
-                *self.key_cols,
-                F.col("v.field").alias("field"),
-                F.col("v.rule").alias("rule"),
-                F.col("v.value").alias("value"),
-            )
-        )
+        return self.failed().selectExpr(*map(ident, self.key_cols), f"inline({VIOLATIONS_COL})")
 
     def failed(self) -> DataFrame:
-        return self.annotated.filter(~F.col(PASSED_COL))
+        return self.annotated.where(f"NOT {PASSED_COL}")
 
     def summary(self) -> DataFrame:
         """Global (field, rule) violation counts + grand total rows.
@@ -74,7 +64,7 @@ class ValidationResult:
         return (
             self.violations()
             .groupBy("field", "rule")
-            .agg(F.count(F.lit(1)).alias("n_violations"))
+            .agg(F.expr("count(1) AS n_violations"))
         )
 
     def partition_summary(self) -> DataFrame:
@@ -98,14 +88,16 @@ def partition_summary(annotated: DataFrame) -> DataFrame:
     # against a file listing — input_file_name() is illegal above a
     # plan with two file sources, so it must be captured below the
     # join and carried through)
-    file = F.col("_file") if "_file" in annotated.columns else F.input_file_name()
+    file = "_file" if "_file" in annotated.columns else "input_file_name()"
     return (
-        annotated.groupBy(F.spark_partition_id().alias("partition_id"), file.alias("file"))
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.when(F.col(PASSED_COL), 1).otherwise(0)).alias("n_pass"),
+        annotated.groupBy(
+            F.expr("spark_partition_id() AS partition_id"), F.expr(f"{file} AS file")
         )
-        .withColumn("n_fail", F.col("rows") - F.col("n_pass"))
+        .agg(
+            F.expr("count(1) AS `rows`"),
+            F.expr(f"sum(CASE WHEN {PASSED_COL} THEN 1 ELSE 0 END) AS n_pass"),
+        )
+        .selectExpr("*", "`rows` - n_pass AS n_fail")
     )
 
 
@@ -121,7 +113,7 @@ def validate(
 
     Entry point analog of the reference's ``TrackEvent`` hot path
     (cmd/cerberus/main.go:209 -> monitor.go:197) minus the mutex: the
-    rule set is compiled to Column predicates on the driver and shipped
+    rule set is compiled to SQL predicates on the driver and shipped
     inside the plan, never per-row.
     """
     key_cols = key_cols or []
@@ -135,12 +127,10 @@ def validate(
         for c in df.columns:
             if c not in schema and c not in key_cols:
                 ruleset.schema_errors.append(f"unknown field {c!r}")
-    structs = ruleset.violation_structs()
-    if structs:
-        arr = F.array_compact(F.array(*structs))
-    else:
-        arr = F.array().cast("array<struct<field:string,rule:string,value:string>>")
-    annotated = df.withColumn(VIOLATIONS_COL, arr).withColumn(
-        PASSED_COL, ~ruleset.any_violated()
+    annotated = df.withColumns(
+        {
+            VIOLATIONS_COL: F.expr(ruleset.violation_array()),
+            PASSED_COL: F.expr(f"NOT {ruleset.any_violated()}"),
+        }
     )
     return ValidationResult(annotated, key_cols, ruleset)

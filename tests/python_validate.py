@@ -87,10 +87,6 @@ def python_validate(
                         met = met and dv == dval
                 if not met:
                     out.append((path, "dependencies", v))
-            if "custom" in fr:
-                # python twin expects a plain predicate here
-                if not fr["custom"](v):
-                    out.append((path, "custom", v))
             if "vcheck" in fr:
                 fn = VCHECKS[fr["vcheck"]]
                 ok = bool(fn(pd.Series([v])).iloc[0])

@@ -670,3 +670,69 @@ def test_conversation_health_null_conv(spark, tmp_path):
     run_full_validation(spark, dirty, sink_dir=sink, sequence_checks=True)
     sunk = {r.conv: tuple(r) for r in spark.read.parquet(f"{sink}/conversation_health").collect()}
     assert rolled == direct == sunk
+
+
+@pytest.fixture(scope="module")
+def transcripts_parquet(spark, transcripts, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("pipeline") / "transcripts")
+    transcripts.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+#: inputs with no rows: Catalyst proves the first two empty; the last
+#: reads parquet and its pushed-down filter passes no row
+EMPTY_INPUTS = {
+    "limit_0": lambda df: df.limit(0),
+    "false_filter": lambda df: df.filter(F.lit(False)),
+    "pushdown": lambda df: df.filter(F.col("turn_idx") < -(10**9)),
+}
+
+
+@pytest.mark.parametrize("sequence_checks", [True, False])
+@pytest.mark.parametrize("shape", sorted(EMPTY_INPUTS))
+def test_run_full_validation_empty_input(spark, transcripts_parquet, tmp_path, shape, sequence_checks):
+    """An input with no rows validates to empty sinks, no rule or
+    partition rows, the column stats of no rows and NULL drift, even
+    where adaptive execution drops the observed aggregates."""
+    empty = EMPTY_INPUTS[shape](transcripts_parquet)
+    sink = str(tmp_path / "sink")
+    got = run_full_validation(spark, empty, sink_dir=sink, sequence_checks=sequence_checks)
+    assert spark.read.parquet(f"{sink}/violations").count() == 0
+    if sequence_checks:
+        assert spark.read.parquet(f"{sink}/conversation_health").count() == 0
+    assert got["rule_summary"] == [] and got["partition_summary"] == []
+    assert got["column_stats"] == transcript_stats(empty).collect()
+    assert sorted((r.column_name, r.kl, r.psi) for r in got["drift"]) == [
+        ("role", None, None), ("text_len", None, None), ("tool", None, None)
+    ]
+
+
+def test_validator_plans_in_few_py4j_commands(spark, transcripts, count_jobs):
+    """Planning the violations sink and its health rollup from SQL text
+    costs a handful of py4j commands and runs no Spark job.  Built from
+    ``Column`` operators, where every method pays PySpark's call-site
+    capture, the rule compile and the two plans sent 4,158 commands on
+    this input; from SQL text they send 120.  The budget is a tenth of
+    the former.  Proxy deletions (``m d``) are not counted: the Python
+    garbage collector sends them when it pleases."""
+    from cerberus_spark.pipeline import _all_violations, conversation_health_from_violations
+    from cerberus_spark.rules import compile_schema
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        with count_jobs() as jobs:
+            viol, _ = _all_violations(transcripts, compile_schema(TRANSCRIPT_RULES, transcripts.schema), True)
+            conversation_health_from_violations(transcripts, viol)
+    finally:
+        client.send_command = send
+    assert jobs.n == 0
+    assert len(sent) <= 415, len(sent)

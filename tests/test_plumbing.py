@@ -178,3 +178,21 @@ def test_no_package_def_is_reached_only_from_tests():
     unreached = sorted(set(defs) - reached - _TEST_REFERENCE_DEFS)
     assert unreached == []
     assert _TEST_REFERENCE_DEFS <= set(defs) - reached  # no stale exemption
+
+
+def test_default_driver_memory_fits_the_machine(tmp_path):
+    """The default heap is half of MemAvailable in whole GiB, between 1g
+    and 24g; 24g when the kernel does not report it."""
+    from cerberus_spark.session import default_driver_memory
+
+    meminfo = tmp_path / "meminfo"
+
+    def heap(text: str) -> str:
+        meminfo.write_text(text)
+        return default_driver_memory(str(meminfo))
+
+    assert heap("MemTotal:       15728640 kB\nMemAvailable:   14680064 kB\n") == "7g"
+    assert heap("MemAvailable:   134217728 kB\n") == "24g"
+    assert heap("MemAvailable:   1048576 kB\n") == "1g"
+    assert heap("MemTotal:       15728640 kB\n") == "24g"
+    assert default_driver_memory(str(tmp_path / "absent")) == "24g"

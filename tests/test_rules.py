@@ -3,9 +3,13 @@ reference validator on the same rows (SURVEY.md §5.1)."""
 
 from __future__ import annotations
 
-import pytest
+import math
 
-from cerberus_spark.rules import SchemaError, compile_schema
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from cerberus_spark.rules import SchemaError, compile_schema, sql_literal
 from cerberus_spark.validation import validate
 from python_validate import python_validate
 
@@ -136,14 +140,37 @@ def test_null_gating(spark):
 
 
 def test_custom_rule(spark):
-    from pyspark.sql import functions as F
-
-    rules = {"text": {"custom": lambda c: F.length(c) % 2 == 0}}
+    rules = {"text": {"custom": "v -> length(v) % 2 = 0"}}
     got = spark_violations(spark, rules)
     for row in as_dicts():
         expected_violated = row["text"] is not None and len(row["text"]) % 2 == 1
         present = (row["conv_id"], row["turn_idx"], "text", "custom") in got
         assert present == expected_violated
+
+
+#: scalars of every type the compiler renders as a SQL literal; the
+#: strings lean on quotes, backslashes and regex metacharacters
+LITERALS = st.one_of(
+    st.text(),
+    st.text(alphabet="'\\\"^$.*+?()[]{}|-é字😀 "),
+    st.integers(min_value=-(2**63), max_value=2**63 - 1),
+    st.floats(),
+    st.booleans(),
+    st.dates(),
+    st.datetimes(),
+    st.decimals(allow_nan=False, allow_infinity=False, places=6, min_value=-(10**20), max_value=10**20),
+)
+
+
+@settings(max_examples=40, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(values=st.lists(LITERALS, min_size=1, max_size=12))
+def test_sql_literal_round_trips(spark, values):
+    """Every value :func:`sql_literal` renders selects back equal, and
+    of the same Python type."""
+    got = spark.range(1).selectExpr(*[f"{sql_literal(v)} AS c{i}" for i, v in enumerate(values)])
+    for v, g in zip(values, got.collect()[0]):
+        assert type(g) is type(v), (v, g)
+        assert g == v or (isinstance(v, float) and math.isnan(v) and math.isnan(g)), (v, g)
 
 
 def test_vcheck_json(spark):

@@ -189,13 +189,11 @@ def test_sequence_violations_idx_density_matches_contiguity_report(spark):
     allowed = {("user", "user")}
     base = sequence_window(df, "conv", "st", "t", ["idx", "t"], "idx")
     rules = {r.rule: r for r in sequence_rules("st", "t", allowed, idx_col="idx")}
+    gap = rules["idx_gap"]
     counts = base.groupBy("conv").agg(
-        F.count_if(rules["dup_idx"].violated).alias("dup"),
-        F.coalesce(
-            F.sum(F.when(rules["idx_gap"].violated, rules["idx_gap"].value_col)),
-            F.lit(0),
-        ).alias("gap"),
-        F.count_if(rules["below_start"].violated).alias("below"),
+        F.expr(f"count_if({rules['dup_idx'].violated}) AS dup"),
+        F.expr(f"coalesce(sum(CASE WHEN {gap.violated} THEN {gap.value} END), 0) AS gap"),
+        F.expr(f"count_if({rules['below_start'].violated}) AS below"),
     )
     got = {
         r.conv: {"dup": r.dup, "gap": r.gap, "below": r.below}
